@@ -586,8 +586,9 @@ def q_x2_bm25_hybrid(spark, sf_dir):
     idf/length normalization → ranked window) and the fusion arithmetic
     are re-derived in the DuckDB oracle; the vector leg rides the same
     cosine/tiebreak form the x2_topk_cosine oracle already pins. Query
-    time never shuffles the postings side — the index scan flows into a
-    broadcast join (plan-asserted in tests/test_retrieval.py)."""
+    time never shuffles the postings side — the query terms reach the
+    index scan as a pushed ``term IN`` filter (plan-asserted in
+    tests/test_retrieval.py)."""
     from datamunging_spark.operators.retrieval import (
         bm25_topk,
         index_stats,
@@ -868,9 +869,10 @@ def q_x2_bm25_persisted(spark, sf_dir):
     parquet index — what SCALE.md's 'persisted table in real use' note
     promises, benched per-round instead of probed once. The first rep
     pays the one-time index build (folded out by the median-of-3
-    protocol); steady state is the pure query path: one pushed postings
-    scan semi-joined to the broadcast query terms, broadcast df/stats,
-    one matched-sized score aggregate, per-query window — ZERO
+    protocol); steady state is the pure query path: the query batch and
+    the query terms' df/stats collected to the driver, one postings scan
+    with the terms pushed as a literal ``term IN`` filter, one
+    matched-sized score aggregate, per-query window — ZERO
     corpus-sized exchanges (the build exchange is gone; contrast
     x2_bm25_hybrid, which rebuilds inline). No stopword valve here: the
     synthetic corpus draws from a ~31-word vocabulary, so every term's

@@ -649,7 +649,12 @@ def minhash_lsh_pairs(
     # signature pass). With the cache warm, both sides read
     # InMemoryTableScan.
     sig = sig.persist()
-    sig.count()
+    try:
+        sig.count()
+    except BaseException:
+        # the cache is the caller's only on success (_return_sig)
+        sig.unpersist()
+        raise
     # Band rows carry ONLY (id, band, key) — the signature arrays stay out
     # of the self-join shuffle (they re-join onto the tiny distinct pair set
     # afterwards instead of riding every banded row twice).
@@ -1042,8 +1047,8 @@ def incremental_minhash_dedup(
     # each compute the cold signature aggregation (the
     # minhash_lsh_pairs twin-stage race, r17); one count of the
     # batch-sized cache removes the duplicate pass
-    new_sig.count()
     try:
+        new_sig.count()
         new_bands = _band_rows(new_sig, id_col, num_hashes, bands).select(
             F.col(id_col).alias("_nid"), "_b", "_k"
         )
@@ -1577,8 +1582,8 @@ def simhash_dedup(
     # exchange subtrees materialize concurrently under AQE and would both
     # compute the cold simhash aggregation — the minhash_lsh_pairs twin-
     # stage race (r17)
-    sh.count()
     try:
+        sh.count()
         pairs = simhash_pairs(
             df,
             text_col,

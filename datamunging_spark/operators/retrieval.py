@@ -28,18 +28,25 @@ Scale shapes (the 100 TB story):
   writes to parquet once. ``doc_len`` is denormalized into the
   postings row (8 bytes) so query-time scoring never joins back to a
   corpus-grain table — the Lucene norms-in-the-postings trade.
-- **Query time never shuffles the index.** :func:`bm25_topk` semi-joins
-  postings to the (broadcast) query-term list — one pushed-down scan,
-  no exchange on the postings side — and every later join input is
-  query-sized and broadcast. The only shuffle is the per-(query, doc)
-  score aggregate over MATCHED postings.
+- **Query time never shuffles the index.** :func:`bm25_topk` and
+  :func:`phrase_topk` collect the (small) query batch to the driver
+  ONCE, tokenized in Spark, and read the query terms' df and
+  (n_docs, avgdl) back as driver scalars in one more small collect.
+  The query side then rides the plan as literals: a pushed
+  ``term IN (...)`` filter on the one postings scan and a literal map
+  from term to its queries. No join touches the postings side, so
+  nothing exchanges on term; the shuffles are the per-(query, doc)
+  aggregate over MATCHED postings and the per-query top-k window. A
+  single-query request is five Spark jobs for BM25 with ``dfreq`` and
+  four for a phrase (pinned by a test budget; under AQE each shuffle
+  stage is its own job).
 - **df/N/avgdl are index-build artifacts.** :func:`term_stats` and
   :func:`index_stats` are computed once with the index; pass them in
-  (the 100 TB path) and query-time df needs no second index scan. If
-  ``dfreq`` is omitted, :func:`bm25_topk` derives it on the fly from
-  the matched postings — correct (the semi-join keeps every posting of
-  each query term) but it re-reads the postings branch; fine
-  interactively, wasteful in a query loop.
+  (the 100 TB path) and query-time df is a ``term IN`` read of the df
+  table, never a postings pass. If ``dfreq`` is omitted,
+  :func:`bm25_topk` derives it from one filtered aggregate over the
+  query terms' postings — exact, but it re-reads those postings;
+  fine interactively, wasteful in a query loop.
 - **Scores are decimal sums.** Each per-term contribution is cast to
   ``decimal(28,7)`` before the aggregate (the DSIR discipline), so the
   total is reduction-order-free and byte-reproducible in any engine —
@@ -266,49 +273,49 @@ def bm25_topk(
 
     ``postings`` is an :func:`inverted_index` table (term, id, tf,
     doc_len); ``stats`` the matching one-row :func:`index_stats`;
-    ``queries`` a SMALL batch (query_id, query text) — the broadcast
-    side by contract, like ``brute_force_topk``'s probe batch.
+    ``queries`` a SMALL batch (query_id, query text) — collected to the
+    driver by contract, like ``brute_force_topk``'s probe batch.
 
-    Plan: tokenize queries → distinct (query, term) pairs (term SETS —
-    the Lucene qtf=1 convention) → broadcast-semi-join postings on term
-    (ONE pushed scan of the index, no exchange on the postings side) →
-    broadcast df + (n_docs, avgdl) onto the matched rows → per-term
+    Plan: the query batch is tokenized by :func:`search_terms` (in
+    Spark) and collected ONCE; each query becomes a term SET (the
+    Lucene qtf=1 convention). The query terms' df and (n_docs, avgdl)
+    come back as driver scalars in ONE small collect (see
+    :func:`_term_scalars`). The query side then rides the plan as
+    literals: a pushed ``term IN (...)`` filter on the postings scan
+    and one literal map term → (n_docs, avgdl, df, [query ids]) that
+    fans each matched posting out to its queries → per-term
     contributions cast ``decimal(28,7)`` → ONE (query, doc) hash
-    aggregate (the only shuffle, sized by matched postings) → top-k
-    window per query (WindowGroupLimit pre-filters per partition).
-    Ties break on ascending doc id — a total order, so ranks are
-    deterministic on any engine and any partitioning.
+    aggregate (sized by matched postings) → top-k window per query
+    (WindowGroupLimit pre-filters per partition). No join touches the
+    postings side, so nothing repartitions by term. With ``dfreq``
+    passed one request is five Spark jobs: the query collect, the
+    scalar collect, the aggregate and window shuffle stages, and the
+    result. Ties break on ascending doc id — a total order, so ranks
+    are deterministic on any engine and any partitioning.
 
-    ``dfreq``: pass :func:`term_stats`'s table to skip the on-the-fly
-    df derivation (which is exact — the semi-join keeps EVERY posting
-    of each query term — but costs a second pass over the matched
-    branch). Query terms absent from the corpus match nothing and
-    contribute nothing; queries with no surviving term return no rows.
+    ``dfreq``: pass :func:`term_stats`'s table so df is a filtered read
+    of the index-build artifact. Without it, df derives from one
+    filtered aggregate over the query terms' postings (exact — every
+    posting of each query term is counted) inside the same scalar
+    collect; that re-reads the query terms' postings once — fine
+    interactively, wasteful in a query loop. Query terms absent from
+    the corpus match nothing and contribute nothing; queries with no
+    surviving term return no rows.
 
     ``max_df_frac``: the stopword valve — drop query terms whose
     document frequency exceeds this fraction of ``n_docs`` (Lucene's
     ``maxDocFreq`` MoreLikeThis guard). A hot term ("the") matches a
     corpus-sized posting slice, so one careless query term can turn
     the score aggregate into a corpus shuffle; such terms also carry
-    near-zero idf, so dropping them barely moves the ranking. The cut
-    happens on the (broadcast-sized) df table BEFORE the contribution
-    rows flow into the aggregate — the 100 TB protection. With the
-    precomputed ``dfreq`` it also prunes the matched-postings branch
-    itself (df is known before the scan); on the on-the-fly path the
-    scan still reads the hot term's postings once to count them.
-    Default None (off) — the parity/oracle configuration.
+    near-zero idf, so dropping them barely moves the ranking. df is
+    known on the driver before the scan, so a cut term never enters
+    the ``term IN`` filter and its postings are never scored — the
+    100 TB protection. Default None (off) — the parity/oracle
+    configuration.
 
-    ``pin``: on the convenience (``dfreq=None``) path the matched
-    postings feed TWO branches (df derivation + scoring), so they are
-    pinned with a LAZY ``localCheckpoint(eager=False)`` — no job fires
-    at query-construction time; the pin materializes with the first
-    action and is reused by both branches. Local checkpoints store
-    unreplicated executor-local blocks: lose an executor and the
-    truncated lineage cannot recompute them, failing downstream
-    actions (the simhash-precedent fragility). On a cluster where
-    that matters, either pass ``dfreq`` (no pin exists on that path)
-    or ``pin=False`` to keep full lineage and accept recomputing the
-    matched branch per consumer.
+    ``pin``: accepted for call compatibility and ignored. The scoring
+    plan reads the matched postings once, so there is no shared branch
+    to pin.
 
     ``group_col``: per-corpus search over a grouped index (built with
     :func:`inverted_index`'s ``group_col``; ``stats`` and ``dfreq``
@@ -316,19 +323,23 @@ def bm25_topk(
     search ONLY their own group's postings with that group's N/avgdl/
     df — NULL-safely (the NULL group searches the NULL corpus); the
     group rides the output. ``query_id`` must be unique ACROSS groups
-    (it alone keys the final ranks). Same plan shape: the group key
-    joins are still broadcasts against the one pushed postings scan.
+    (it alone keys the final ranks). Same plan: the literal map is
+    keyed by (group, term), so a posting of another group finds no
+    entry and is dropped.
 
     ``term_boosts``: Lucene-style per-term query boosts — a SMALL
-    (query_id, term, boost) table (broadcast by contract; query_id is
+    (query_id, term, boost) table (collected by contract; query_id is
     globally unique, so it keys boosts on the grouped face too). Each
     listed pair's contribution is multiplied by its boost BEFORE the
     decimal cast; unlisted pairs default to 1.0, so ``None`` (the
     parity/oracle configuration) and an all-1.0 table are identical.
-    This is the weighted-query face :func:`prf_expand`'s
-    ``return_terms`` output feeds (RM3-style down-weighted expansion
-    terms). Boosts scale scoring only — term matching, the valve, and
-    df are boost-blind.
+    Duplicate (query, term) rows resolve to the MAX boost (the
+    retrieval_metrics duplicate-judgment convention). This is the
+    weighted-query face :func:`prf_expand`'s ``return_terms`` output
+    feeds (RM3-style down-weighted expansion terms). Boosts scale
+    scoring only — term matching, the valve, and df are boost-blind.
+    The boosts ride the literal map beside each query id; reading them
+    costs one more small collect.
 
     ``filter_ids``: predicate-constrained search (``WHERE lang='en'``
     top-k) — a doc-id table (or (group, id) on the grouped face) cut
@@ -336,107 +347,86 @@ def bm25_topk(
     allowed sub-corpus; df/N/avgdl stay CORPUS-level (the Lucene
     filter-query contract — allowed docs score identically to the
     unfiltered run; pinned by test). See :func:`_apply_lex_filter`
-    for the join shape and why the valve stays corpus-level.
+    for the join shape.
     """
+    from datamunging_spark.operators.relational import top_k_per_group
+
     gb = [group_col] if group_col else []
-    jk = (["_gk"] if group_col else []) + ["term"]
-    if group_col:
-        stats = stats.withColumn("_gk", _gkey(group_col)).drop(group_col)
-
-    def _df_valve(d):
-        # stopword valve: cut on the broadcast-sized df table, never
-        # on the posting rows themselves (per-group n_docs when grouped)
-        if group_col:
-            cut = d.join(F.broadcast(stats), "_gk")
-        else:
-            cut = d.crossJoin(F.broadcast(stats))
-        return cut.filter(
-            F.col("df") <= F.lit(float(max_df_frac)) * F.col("n_docs")
-        ).select(*jk, "df")
-
-    qt = (
-        queries.select(
-            F.col(query_id_col).alias("query_id"),
-            *gb,
-            F.explode(search_terms(query_col, lowercase)).alias("term"),
-        )
-        .distinct()
-    )
-    if group_col:
-        qt = qt.withColumn("_gk", _gkey(group_col)).drop(group_col)
-    qterms = qt.select(*jk).distinct()
-    if dfreq is not None:
-        # a term_stats table spans the WHOLE corpus vocabulary —
-        # semi-join it down to the query terms before anything
-        # broadcasts it, or the scale path would broadcast 10^8+ rows
-        if group_col:
-            dfreq = dfreq.withColumn("_gk", _gkey(group_col)).drop(
-                group_col
+    qtype = queries.schema[query_id_col].dataType
+    # (group key, term) → {query id: boost}; term SETS per query
+    keys: dict = {}
+    for r in _collect_queries(
+        queries, query_col, query_id_col, lowercase, group_col
+    ):
+        for t in r["_t"]:
+            keys.setdefault((r["_gk"], t), {})[r["_q"]] = 1.0
+    if term_boosts is not None and keys:
+        boosts = {
+            (r["query_id"], r["term"]): r["_b"]
+            for r in term_boosts.filter(
+                F.col("term").isin(sorted({t for _, t in keys}))
             )
-        dfreq = dfreq.join(F.broadcast(qterms), jk)
-        if max_df_frac is not None:
-            # df known BEFORE the scan: hot terms never reach the
-            # postings join at all
-            dfreq = _df_valve(dfreq)
-            qterms = qterms.join(F.broadcast(dfreq.select(*jk)), jk)
+            .groupBy("query_id", "term")
+            .agg(F.max(F.col("boost").cast("double")).alias("_b"))
+            .collect()
+            if r["_b"] is not None
+        }
+        for (_, t), qids in keys.items():
+            for q in qids:
+                qids[q] = boosts.get((q, t), 1.0)
+    scalars, dfs = _term_scalars(postings, stats, dfreq, keys, group_col)
+    entries = {}
+    for key, qids in keys.items():
+        if key not in dfs or key[0] not in scalars:
+            continue  # term absent from the corpus / group without stats
+        n_docs, avgdl = scalars[key[0]]
+        if max_df_frac is not None and not (
+            dfs[key] <= float(max_df_frac) * n_docs
+        ):
+            continue  # the stopword valve, cut before the scan
+        entries[key] = F.struct(
+            F.lit(n_docs).cast("long").alias("n_docs"),
+            F.lit(avgdl).cast("double").alias("avgdl"),
+            F.lit(dfs[key]).cast("long").alias("df"),
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(q).cast(qtype).alias("query_id"),
+                        F.lit(float(bst)).alias("boost"),
+                    )
+                    for q, bst in qids.items()
+                ]
+            ).alias("q"),
+        )
+    qmap = _query_map(
+        entries,
+        group_col,
+        "struct<n_docs:bigint,avgdl:double,df:bigint,q:array<struct<"
+        f"query_id:{qtype.simpleString()},boost:double>>>",
+    )
     if group_col:
         postings = postings.withColumn("_gk", _gkey(group_col))
-    matched = postings.join(F.broadcast(qterms), jk)
-    if dfreq is None:
-        # the convenience path reads the matched branch twice (df
-        # derivation + scoring) — pin it so an inline-built index is
-        # not recomputed (the simhash localCheckpoint precedent); the
-        # pinned table is query-term postings only, not the corpus.
-        # LAZY (eager=False): no job at construction time; see the
-        # docstring for the executor-loss trade and the pin= hatch
-        if pin:
-            matched = matched.localCheckpoint(eager=False)
-        dfreq = matched.groupBy(*jk).agg(F.count(F.lit(1)).alias("df"))
-        if max_df_frac is not None:
-            dfreq = _df_valve(dfreq)
-    # the filter cuts the SCORING branch only — df above is already
-    # captured from the unfiltered matched rows (corpus-level stats)
     matched = _apply_lex_filter(
-        matched, filter_ids, group_col, id_col, "bm25_topk"
+        postings.filter(F.col("term").isin(sorted({t for _, t in entries}))),
+        filter_ids, group_col, id_col, "bm25_topk",
     )
-    # df/qt/stats are all query-sized: broadcast every one of them so
-    # the matched-postings branch flows shuffle-free into the score agg.
-    scored = matched.join(
-        F.broadcast(qt.select("query_id", *jk)), jk
-    ).join(F.broadcast(dfreq), jk)
-    if group_col:
-        scored = scored.join(F.broadcast(stats), "_gk")
-    else:
-        scored = scored.crossJoin(F.broadcast(stats))
+    scored = matched.select(
+        *gb, id_col, "tf", "doc_len",
+        F.element_at(qmap, _query_key(group_col)).alias("_k"),
+    ).select(
+        *gb, id_col, "tf", "doc_len", "_k.n_docs", "_k.avgdl", "_k.df",
+        F.explode("_k.q").alias("_q"),
+    )
     idf, tfn = _bm25_parts(k1, b)
     contrib = idf * tfn
     if term_boosts is not None:
-        scored = scored.join(
-            F.broadcast(
-                term_boosts.select(
-                    F.col("query_id"),
-                    F.col("term"),
-                    F.col("boost").cast("double").alias("_boost"),
-                )
-                # duplicate (query, term) rows resolve to the MAX boost
-                # (the retrieval_metrics duplicate-judgment convention)
-                # — a bare left join would fan the scored rows out and
-                # silently double-count the term
-                .groupBy("query_id", "term")
-                .agg(F.max("_boost").alias("_boost"))
-            ),
-            ["query_id", "term"],
-            "left",
-        )
-        contrib = contrib * F.coalesce(F.col("_boost"), F.lit(1.0))
+        contrib = contrib * F.col("_q.boost")
     per_doc = scored.select(
-        "query_id",
+        F.col("_q.query_id").alias("query_id"),
         *gb,
         F.col(id_col),
         contrib.cast(_CONTRIB_DECIMAL).alias("_c"),
     ).groupBy("query_id", *gb, id_col).agg(F.sum("_c").alias("_s"))
-    from datamunging_spark.operators.relational import top_k_per_group
-
     return top_k_per_group(
         per_doc,
         ["query_id"],
@@ -885,8 +875,8 @@ def phrase_topk(
     phrase by phrase frequency: (query_id, ``id_col``, rank,
     phrase_freq). ``postings`` must come from
     :func:`inverted_index(..., positions=True) <inverted_index>`;
-    ``phrases`` is a SMALL (query_id, phrase text) batch, broadcast by
-    contract like :func:`bm25_topk`'s queries.
+    ``phrases`` is a SMALL (query_id, phrase text) batch, collected to
+    the driver by contract like :func:`bm25_topk`'s queries.
 
     ``max_df_frac`` (with ``stats``, and ideally ``dfreq`` =
     :func:`term_stats`) arms the hot-term GUARD: phrase semantics
@@ -899,8 +889,8 @@ def phrase_topk(
     ``max_df_frac=None`` with the index-build artifacts in hand arms
     the warn tier at the generous 0.5 threshold (an operator who wired
     up the stats tables gets hot-term visibility without reading this
-    docstring), and the check is then a broadcast-sized df lookup — no
-    postings scan, no new job shape. With ``dfreq`` absent the default
+    docstring), and the check is then one query-sized df/stats
+    collect — no postings scan. With ``dfreq`` absent the default
     stays OFF (r15-close advice: auto-arming without dfreq ran an
     eager corpus-grain postings aggregate plus a driver collect at
     every query construction — a latency regression for existing
@@ -908,10 +898,14 @@ def phrase_topk(
     into the on-the-fly derivation. With ``stats=None`` the guard
     stays fully off — the parity configuration.
 
-    The classic positional-intersection algorithm, relational: explode
-    each phrase into (offset, term) pairs → broadcast-join postings on
-    term (ONE index scan, no exchange on the postings side) → shift
-    each matched posting's position list left by its phrase offset →
+    The classic positional-intersection algorithm, relational: the
+    phrase batch is tokenized in Spark and collected ONCE; each phrase
+    becomes (offset, term) pairs that ride the plan as literals — a
+    pushed ``term IN (...)`` filter on the postings scan (ONE index
+    scan, no join and no exchange on the postings side) and a literal
+    map term → [(query, offset, phrase length)] that fans each matched
+    posting out to its phrase positions → shift each matched posting's
+    position list left by its phrase offset →
     per (query, doc), a doc contains the phrase at start p iff p
     survives the INTERSECTION of all shifted lists — intersection is
     commutative, so the ``collect_list`` fold needs no ordering and the
@@ -920,8 +914,11 @@ def phrase_topk(
     (duplicate terms in the phrase are distinct offsets, handled
     exactly: "a a" demands a at p AND p+1). ``phrase_freq`` =
     |intersection| = occurrence count; ranks break ties on ascending
-    doc id. The only shuffle is the matched-postings (query, doc)
-    aggregate — phrase search at 100 TB costs one pushed index scan,
+    doc id. The shuffles are the matched-postings (query, doc)
+    aggregate and the per-query top-k window, so a request with the
+    guard off is four Spark jobs: the phrase collect, the two shuffle
+    stages and the result (an armed guard adds its one collect);
+    phrase search at 100 TB costs one pushed index scan,
     like BM25. ``group_col``: the grouped face over a grouped
     positional index (same contract as :func:`bm25_topk`'s — phrases
     carry the group, NULL-safe, group rides the output).
@@ -936,44 +933,59 @@ def phrase_topk(
             "with inverted_index(..., positions=True)"
         )
     gb = [group_col] if group_col else []
-    jk = (["_gk"] if group_col else []) + ["term"]
-    qp = phrases.select(
-        F.col(query_id_col).alias("query_id"),
-        *gb,
-        F.posexplode(search_terms(query_col, lowercase)).alias(
-            "_off", "term"
-        ),
-    )
-    if group_col:
-        qp = qp.withColumn("_gk", _gkey(group_col)).drop(group_col)
-        postings = postings.withColumn("_gk", _gkey(group_col))
+    qtype = phrases.schema[query_id_col].dataType
+    # (group key, term) → one (query, offset, phrase length) entry per
+    # phrase position: a repeated term is one entry per offset
+    keys: dict = {}
+    for r in _collect_queries(
+        phrases, query_col, query_id_col, lowercase, group_col
+    ):
+        for off, t in enumerate(r["_t"]):
+            keys.setdefault((r["_gk"], t), []).append(
+                F.struct(
+                    F.lit(r["_q"]).cast(qtype).alias("query_id"),
+                    F.lit(off).alias("off"),
+                    F.lit(len(r["_t"])).alias("n"),
+                )
+            )
     if max_df_frac is None and stats is not None and dfreq is not None:
-        # default-armed warn tier, broadcast-sized check only (see
+        # default-armed warn tier, query-sized check only (see
         # docstring; r15-close advice)
         max_df_frac, on_hot = 0.5, "warn"
     _positional_hot_guard(
-        qp.select(*jk).distinct(), postings, stats, dfreq, max_df_frac,
-        jk, group_col, "phrase_topk", on_hot,
+        keys, postings, stats, dfreq, max_df_frac, group_col,
+        "phrase_topk", on_hot,
     )
-    qn = qp.groupBy("query_id").agg(F.count(F.lit(1)).alias("_n_terms"))
+    qmap = _query_map(
+        {key: F.array(*v) for key, v in keys.items()},
+        group_col,
+        f"array<struct<query_id:{qtype.simpleString()},off:int,n:int>>",
+    )
+    if group_col:
+        postings = postings.withColumn("_gk", _gkey(group_col))
     hits = _apply_lex_filter(
-        postings.join(F.broadcast(qp), jk),
+        postings.filter(F.col("term").isin(sorted({t for _, t in keys}))),
         filter_ids, group_col, id_col, "phrase_topk",
     ).select(
-        "query_id",
+        *gb,
+        id_col,
+        "positions",
+        F.explode(F.element_at(qmap, _query_key(group_col))).alias("_q"),
+    ).select(
+        F.col("_q.query_id").alias("query_id"),
+        F.col("_q.n").alias("_n_terms"),
         *gb,
         id_col,
         F.transform(
-            "positions", lambda x: x - F.col("_off")
+            "positions", lambda x: x - F.col("_q.off")
         ).alias("_shifted"),
     )
     grouped = (
-        hits.groupBy("query_id", *gb, id_col)
+        hits.groupBy("query_id", "_n_terms", *gb, id_col)
         .agg(
             F.count(F.lit(1)).alias("_n_matched"),
             F.collect_list("_shifted").alias("_arrs"),
         )
-        .join(F.broadcast(qn), "query_id")
         .filter(F.col("_n_matched") == F.col("_n_terms"))
         .select(
             "query_id",
@@ -1145,6 +1157,112 @@ def _gkey(col: str) -> Column:
     )
 
 
+def _collect_queries(
+    queries: DataFrame,
+    query_col: str,
+    query_id_col: str,
+    lowercase: bool,
+    group_col: str | None,
+) -> list:
+    """The query batch on the driver, collected ONCE: rows of (``_q``
+    query id, ``_gk`` group key — None when ungrouped, ``_t`` terms).
+    Tokenization stays Spark's (:func:`search_terms` runs in the
+    select), so the literal plans built from these rows match the
+    index byte for byte. Small by contract, like every query batch
+    of the search operators."""
+    gk = _gkey(group_col) if group_col else F.lit(None).cast("string")
+    return queries.select(
+        F.col(query_id_col).alias("_q"),
+        gk.alias("_gk"),
+        search_terms(query_col, lowercase).alias("_t"),
+    ).collect()
+
+
+def _term_scalars(
+    postings: DataFrame,
+    stats: DataFrame,
+    dfreq: DataFrame | None,
+    keys,
+    group_col: str | None,
+) -> tuple[dict, dict]:
+    """Driver scalars for literal query keys ((group key, term) pairs,
+    group key None when ungrouped), read in ONE small collect:
+    ``{group key: (n_docs, avgdl)}`` from ``stats`` and
+    ``{(group key, term): df}`` for the query terms. df is a
+    ``term IN (...)`` read of ``dfreq`` (:func:`term_stats`, the
+    index-build artifact), or — without it — one filtered aggregate
+    over the query terms' postings. Both sides are query- or
+    groups-sized, so they ride one union into one job."""
+    if not keys:
+        return {}, {}
+    terms = sorted({t for _, t in keys})
+    gk = (
+        _gkey(group_col) if group_col else F.lit(None).cast("string")
+    ).alias("_gk")
+    if dfreq is None:
+        dfreq = postings.groupBy(
+            *([group_col] if group_col else []), "term"
+        ).agg(F.count(F.lit(1)).alias("df"))
+    side = stats.select(
+        gk,
+        F.lit(None).cast("string").alias("term"),
+        F.col("n_docs").cast("long").alias("_n"),
+        F.col("avgdl").cast("double").alias("_x"),
+    ).unionByName(
+        dfreq.filter(F.col("term").isin(terms)).select(
+            gk,
+            "term",
+            F.col("df").cast("long").alias("_n"),
+            F.lit(None).cast("double").alias("_x"),
+        )
+    )
+    scalars, dfs = {}, {}
+    for r in side.collect():
+        if r["term"] is None:
+            scalars[r["_gk"]] = (r["_n"], r["_x"])
+        else:
+            dfs[(r["_gk"], r["term"])] = r["_n"]
+    return scalars, dfs
+
+
+def _query_key(group_col: str | None, key: str = "term") -> Column:
+    """The in-plan lookup key of an index row into a :func:`_query_map`
+    — the ``key`` column (term, or IVF cell), or (``_gk``, key) on the
+    grouped face."""
+    if group_col:
+        return F.struct(F.col("_gk"), F.col(key))
+    return F.col(key)
+
+
+def _query_map(
+    entries: dict,
+    group_col: str | None,
+    value_ddl: str,
+    key: str = "term",
+    key_ddl: str = "string",
+) -> Column:
+    """A plan-literal map from driver-side query keys ((group key,
+    ``key`` value) pairs) to per-key value Columns of type
+    ``value_ddl`` — how the query side of the search operators rides
+    the plan instead of a broadcast subplan. An empty dict is a typed
+    NULL map, so a batch with no surviving key plans to an empty
+    result."""
+    if group_col:
+        key_ddl = f"struct<_gk:string,{key}:{key_ddl}>"
+    ddl = f"map<{key_ddl},{value_ddl}>"
+    if not entries:
+        return F.lit(None).cast(ddl)
+    kv = []
+    for (g, k), v in entries.items():
+        kv += [
+            F.struct(F.lit(g).alias("_gk"), F.lit(k).alias(key))
+            if group_col
+            else F.lit(k),
+            v,
+        ]
+    return F.create_map(*kv).cast(ddl)
+
+
 def _apply_lex_filter(
     matched: DataFrame,
     filter_ids: DataFrame | None,
@@ -1165,9 +1283,10 @@ def _apply_lex_filter(
     top-k. Plan: a LEFT SEMI join on the query-term-sized matched
     branch — no broadcast hint, because a predicate set can be
     corpus-scale (``lang='en'``); AQE picks a broadcast when the set
-    is small. The filter sits AFTER the postings⋈terms join, so a hot
-    term's corpus slice still flows into this semi-join — the
-    valve/guard stays corpus-level and stays necessary."""
+    is small. The filter sits AFTER the query-term cut of the
+    postings, so a hot term's corpus slice still flows into this
+    semi-join — the valve/guard stays corpus-level and stays
+    necessary."""
     if filter_ids is None:
         return matched
     cols = filter_ids.columns
@@ -1193,12 +1312,11 @@ def _apply_lex_filter(
 
 
 def _positional_hot_guard(
-    qterms: DataFrame,
+    keys,
     postings: DataFrame,
     stats: DataFrame | None,
     dfreq: DataFrame | None,
     max_df_frac: float | None,
-    jk: list[str],
     group_col: str | None,
     op: str,
     on_hot: str,
@@ -1215,14 +1333,14 @@ def _positional_hot_guard(
     the (query, doc) aggregate, the one adversarial-input scale hazard
     of the positional family.
 
-    The check is one bounded driver-side action at query-construction
-    time over the query-term-pruned df table (broadcast-sized: ≤ the
-    distinct query terms). Pass ``dfreq`` (:func:`term_stats`, the
-    index-build artifact — the 100 TB path) so the check never touches
-    the postings; without it, df derives from one slim postings
-    aggregate (term column only — column pruning keeps the position
-    arrays unread on a parquet index, but it is still a corpus-grain
-    scan, fine interactively).
+    ``keys`` are the driver-side (group key, term) query keys. The
+    check is one bounded driver-side collect at query-construction
+    time (:func:`_term_scalars`: ≤ the distinct query terms plus the
+    stats rows). Pass ``dfreq`` (:func:`term_stats`, the index-build
+    artifact — the 100 TB path) so the check never touches the
+    postings; without it, df derives from one slim ``term IN``-filtered
+    postings aggregate (column pruning keeps the position arrays
+    unread on a parquet index; fine interactively).
 
     The Lucene-world fix for a workload that legitimately needs hot
     terms in phrases is analysis-side, not query-side: index
@@ -1240,33 +1358,18 @@ def _positional_hot_guard(
             f"{op}: max_df_frac needs stats (index_stats — per-group "
             "when grouped) to judge hotness against n_docs"
         )
-    if dfreq is None:
-        dfreq = postings.join(F.broadcast(qterms), jk).groupBy(*jk).agg(
-            F.count(F.lit(1)).alias("df")
-        )
-    else:
-        if group_col:
-            dfreq = dfreq.withColumn("_gk", _gkey(group_col)).drop(
-                group_col
-            )
-        dfreq = dfreq.join(F.broadcast(qterms), jk)
-    if group_col:
-        stats = stats.withColumn("_gk", _gkey(group_col)).drop(group_col)
-        cut = dfreq.join(F.broadcast(stats), "_gk")
-    else:
-        cut = dfreq.crossJoin(F.broadcast(stats))
-    hot = (
-        cut.filter(
-            F.col("df") > F.lit(float(max_df_frac)) * F.col("n_docs")
-        )
-        .select("term")
-        .distinct()
-        .sort("term")
-        .limit(20)
-        .collect()
-    )
+    scalars, dfs = _term_scalars(postings, stats, dfreq, keys, group_col)
+    hot = sorted(
+        {
+            t
+            for (g, t), d in dfs.items()
+            if (g, t) in keys
+            and g in scalars
+            and d > float(max_df_frac) * scalars[g][0]
+        }
+    )[:20]
     if hot:
-        terms = ", ".join(repr(r.term) for r in hot)
+        terms = ", ".join(repr(t) for t in hot)
         msg = (
             f"{op}: query term(s) exceed max_df_frac="
             f"{max_df_frac:g} of the corpus: {terms}. A hot term joins "
@@ -2342,8 +2445,14 @@ def near_topk(
         # docstring; r15-close advice)
         max_df_frac, on_hot = 0.5, "warn"
     _positional_hot_guard(
-        qp.select(*jk).distinct(), postings, stats, dfreq, max_df_frac,
-        jk, group_col, "near_topk", on_hot,
+        {
+            (r["_gk"] if group_col else None, r["term"])
+            for r in qp.select(*jk).distinct().collect()
+        }
+        if max_df_frac is not None
+        else set(),
+        postings, stats, dfreq, max_df_frac, group_col, "near_topk",
+        on_hot,
     )
     qn = qp.groupBy("query_id").agg(F.count(F.lit(1)).alias("_n"))
     hits = _apply_lex_filter(

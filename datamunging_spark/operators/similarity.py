@@ -653,15 +653,24 @@ def ivf_search(
     filter_ids: DataFrame | None = None,
 ) -> DataFrame:
     """Search a built :class:`IvfIndex`: each probe vector visits only its
-    ``n_probe`` nearest cells. Candidate generation is an equi-join on the
-    cell id, so the index is scanned once and shuffled on a bounded-
-    cardinality key; recall/cost is tuned by n_probe (n_probe = n_clusters
-    degrades gracefully to exact). Centroids ride to executors inside the
-    probe pandas_udf closure.
+    ``n_probe`` nearest cells; recall/cost is tuned by n_probe (n_probe =
+    n_clusters degrades gracefully to exact).
+
+    Plan: the query batch (small by contract) is collected to the driver
+    ONCE, and each query's probe cells are computed there with numpy
+    against ``index.centers``, which already live on the driver. The
+    query side then rides the plan as literals: a ``_cell IN (...)``
+    filter on the one scan of ``assigned`` and a literal map cell →
+    [(query id, query vector)] that fans each candidate out to the
+    queries probing its cell. Candidates are rescored with the
+    Arrow-batched cosine and ranked by a per-query window. No join and
+    no exchange touches the index side; a single-query request is three
+    Spark jobs: the query collect, the window's shuffle stage and the
+    result.
 
     GROUPED index: queries must carry the index's ``group_col``; each
-    query probes ITS group's centroids only and candidates join on
-    (group, cell) — per-group search in one plan, group rides the
+    query probes ITS group's centroids only and the literal map is keyed
+    by (group, cell) — per-group search in one plan, group rides the
     output. Query ids are the output key (one group per query row, the
     grouped-retrieval contract).
 
@@ -680,115 +689,98 @@ def ivf_search(
     broadcast-sized or pre-partitioned; a corpus-scale filter belongs
     upstream of the index build."""
     import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import ArrayType, IntegerType
 
-    centers = index.centers
-    grouped = index.group_col is not None
-    gb = [index.group_col] if grouped else []
+    from datamunging_spark.operators.retrieval import (
+        _gkey,
+        _query_key,
+        _query_map,
+    )
 
-    if grouped:
-        from datamunging_spark.operators.retrieval import _gkey
-
-        if index.group_col not in queries.columns:
+    gcol = index.group_col
+    gb = [gcol] if gcol else []
+    if gcol:
+        if gcol not in queries.columns:
             raise ValueError(
-                f"ivf_search: grouped index (group_col="
-                f"{index.group_col!r}) but the query batch has no "
-                "such column — queries must carry their group"
+                f"ivf_search: grouped index (group_col={gcol!r}) but "
+                "the query batch has no such column — queries must "
+                "carry their group"
             )
-        _check_group_type(queries, index.group_col, "ivf_search")
-        prepped = {
-            _pygkey(g): c.astype(np.float64)
-            for g, c in centers.items()
-        }
-        n_probe_i = int(n_probe)
-
-        @pandas_udf(ArrayType(IntegerType()))
-        def probe_cells_g(vecs: pd.Series, gks: pd.Series) -> pd.Series:
-            if len(vecs) == 0:
-                return pd.Series([], dtype=object)
-            x = np.stack(vecs.to_numpy()).astype(np.float64)
-            # factorize, not numpy string ==: the "\x00" NULL-group
-            # sentinel breaks numpy object-array equality (see
-            # _grouped_assign_udf)
-            codes, uniques = pd.factorize(gks)
-            out = [None] * len(x)
-            for ci, gk in enumerate(uniques):
-                c = prepped[gk]
-                m = np.flatnonzero(codes == ci)
-                d = ((x[m][:, None, :] - c[None, :, :]) ** 2).sum(axis=2)
-                near = np.argsort(d, axis=1)[
-                    :, : min(n_probe_i, len(c))
-                ].astype(np.int32)
-                for i, row in zip(m, near):
-                    out[i] = row
-            return pd.Series(out)
-
-        qgk = queries.select(
-            F.col(query_id), F.col(vec_col), F.col(index.group_col)
-        )
-        known = {_pygkey(g) for g in centers}
-        batch_groups = [
-            r[index.group_col]
-            for r in qgk.select(index.group_col).distinct().collect()
-        ]
-        unknown = sorted(
-            str(g) for g in batch_groups if _pygkey(g) not in known
-        )
-        if unknown:
-            raise ValueError(
-                f"ivf_search: query group(s) {unknown} have no "
-                "centroids in this index — the group was never built; "
-                "rebuild ivf_build over a corpus containing it"
-            )
-        q = qgk.select(
-            F.col(query_id).alias("query_id"),
-            F.col(vec_col).alias("_qv"),
-            F.col(index.group_col),
-            F.explode(
-                probe_cells_g(F.col(vec_col), _gkey(index.group_col))
-            ).alias("_cell"),
-        ).withColumn("_gk", _gkey(index.group_col))
-        cand = index.assigned.withColumn(
-            "_gk", _gkey(index.group_col)
-        ).select("neighbor_id", "_cv", "_cell", "_gk")
-        jk = ["_gk", "_cell"]
+        _check_group_type(queries, gcol, "ivf_search")
+        centers = {_pygkey(g): c for g, c in index.centers.items()}
     else:
-        n_probe_eff = min(n_probe, index.n_clusters)
-
-        @pandas_udf(ArrayType(IntegerType()))
-        def probe_cells(vecs: pd.Series) -> pd.Series:
-            if len(vecs) == 0:
-                return pd.Series([], dtype=object)
-            x = np.stack(vecs.to_numpy()).astype(np.float64)
-            d = ((x[:, None, :] - centers[None, :, :]) ** 2).sum(axis=2)
-            nearest = np.argsort(d, axis=1)[:, :n_probe_eff].astype(
-                np.int32
+        centers = {None: index.centers}
+    qtype = queries.schema[query_id].dataType
+    vtype = queries.schema[vec_col].dataType
+    batch: dict = {}
+    for r in queries.select(
+        F.col(query_id).alias("_q"),
+        F.col(vec_col).alias("_v"),
+        (F.col(gcol) if gcol else F.lit(None)).alias("_g"),
+    ).collect():
+        batch.setdefault(_pygkey(r["_g"]) if gcol else None, []).append(r)
+    unknown = sorted(
+        str(rows[0]["_g"]) for g, rows in batch.items() if g not in centers
+    )
+    if unknown:
+        raise ValueError(
+            f"ivf_search: query group(s) {unknown} have no "
+            "centroids in this index — the group was never built; "
+            "rebuild ivf_build over a corpus containing it"
+        )
+    # (group key, cell) → the queries probing it, vectors as literals
+    probes: dict = {}
+    for g, rows in batch.items():
+        c = np.asarray(centers[g], dtype=np.float64)
+        x = np.stack([np.asarray(r["_v"]) for r in rows]).astype(np.float64)
+        d = ((x[:, None, :] - c[None, :, :]) ** 2).sum(axis=2)
+        near = np.argsort(d, axis=1)[:, : min(int(n_probe), len(c))]
+        for r, cells in zip(rows, near):
+            q = F.struct(
+                F.lit(r["_q"]).cast(qtype).alias("query_id"),
+                F.array(*[F.lit(float(v)) for v in r["_v"]])
+                .cast(vtype)
+                .alias("qv"),
             )
-            return pd.Series(list(nearest))
-
-        q = queries.select(
-            F.col(query_id).alias("query_id"),
-            F.col(vec_col).alias("_qv"),
-            F.explode(probe_cells(F.col(vec_col))).alias("_cell"),
-        )
-        cand = index.assigned
-        jk = ["_cell"]
-
-    scored = F.broadcast(q).join(cand, jk).drop("_cell")
+            for cell in cells:
+                probes.setdefault((g, int(cell)), []).append(q)
+    qmap = _query_map(
+        {key: F.array(*qs) for key, qs in probes.items()},
+        gcol,
+        f"array<struct<query_id:{qtype.simpleString()},"
+        f"qv:{vtype.simpleString()}>>",
+        key="_cell",
+        key_ddl=index.assigned.schema["_cell"].dataType.simpleString(),
+    )
+    cand = index.assigned
+    if gcol:
+        cand = cand.withColumn("_gk", _gkey(gcol))
+    cand = cand.filter(
+        F.col("_cell").isin(sorted({cell for _, cell in probes}))
+    )
     if filter_ids is not None:
-        flt, fjk = _filter_id_set(
-            filter_ids, index.group_col, "ivf_search"
-        )
-        scored = scored.join(flt, fjk, "semi")
+        flt, fjk = _filter_id_set(filter_ids, gcol, "ivf_search")
+        cand = cand.join(flt, fjk, "semi")
+    # the group rides the output in the query batch's type
+    gout = (
+        [F.col(gcol).cast(queries.schema[gcol].dataType).alias(gcol)]
+        if gcol
+        else []
+    )
     scored = (
-        scored.filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
+        cand.select(
             *gb,
             "neighbor_id",
-            _cosine_udf()(F.col("_qv"), F.col("_cv")).alias("cosine"),
+            "_cv",
+            F.explode(
+                F.element_at(qmap, _query_key(gcol, "_cell"))
+            ).alias("_q"),
+        )
+        .filter(F.col("_q.query_id") != F.col("neighbor_id"))
+        .select(
+            F.col("_q.query_id").alias("query_id"),
+            *gout,
+            "neighbor_id",
+            _cosine_udf()(F.col("_q.qv"), F.col("_cv")).alias("cosine"),
         )
     )
     w = Window.partitionBy("query_id").orderBy(

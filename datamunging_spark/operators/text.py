@@ -241,6 +241,8 @@ def _softmax_fit_np(
     n = len(row_ptr) - 1
     C, Fdim = n_classes, num_features
     row_len = np.diff(row_ptr)
+    nonempty = row_len > 0
+    starts = np.asarray(row_ptr[:-1])[nonempty]
     Y = np.zeros((n, C))
     Y[np.arange(n), y] = 1.0
 
@@ -251,10 +253,12 @@ def _softmax_fit_np(
         logits = np.empty((n, C))
         for c in range(C):
             vals = W[c, flat_idx]
-            seg = np.add.reduceat(vals, row_ptr[:-1]) if len(vals) else (
-                np.zeros(n)
-            )
-            seg[row_len == 0] = 0.0
+            # reduceat over the non-empty rows' starts only: they are
+            # strictly increasing and in range, while a trailing
+            # zero-length row would start at len(vals) (IndexError)
+            seg = np.zeros(n)
+            if len(vals):
+                seg[nonempty] = np.add.reduceat(vals, starts)
             logits[:, c] = seg + b[c]
         logits -= logits.max(axis=1, keepdims=True)
         ex = np.exp(logits)
@@ -458,8 +462,12 @@ def lang_classifier_score(
     name used at fit time (the quality_classifier contract)."""
     import pyspark.sql.types as T
 
+    from datamunging_spark.operators.relational import _reserved_tmp_guard
     from datamunging_spark.sources.io import local_table
 
+    _reserved_tmp_guard(
+        df, ("_lid_w", "_lid_b", "_lid_logits"), "lang_classifier_score"
+    )
     params: LangModelParams = clf.model
     spark = df.sparkSession
     gram = params.gram

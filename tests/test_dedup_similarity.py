@@ -1992,6 +1992,136 @@ def test_grouped_ivf_build_matches_per_slice_fits(spark, grouped_vecs):
     assert bad.count() == 0
 
 
+@pytest.mark.parametrize(
+    "op", ["minhash_lsh_pairs", "incremental_minhash_dedup", "simhash_dedup"]
+)
+def test_signature_cache_released_when_eager_fill_fails(
+    spark, monkeypatch, op
+):
+    """The eager fill of the persisted signature cache runs inside the
+    operator's cleanup path: when that count fails after the cache is
+    built, no persisted RDD is left behind."""
+    from datamunging_spark.operators import dedup
+
+    docs = spark.createDataFrame(
+        [(1, "a b c d e"), (2, "f g h i j")], "doc_id long, text string"
+    )
+    hist_sig = dedup.minhash_signatures_df(docs).localCheckpoint()
+    calls = {
+        "minhash_lsh_pairs": lambda: dedup.minhash_lsh_pairs(docs),
+        "incremental_minhash_dedup": lambda: dedup.incremental_minhash_dedup(
+            docs, hist_sig
+        ),
+        "simhash_dedup": lambda: dedup.simhash_dedup(docs),
+    }
+    count = type(docs).count
+
+    def failing_count(self):
+        count(self)  # the cache is filled, then the action fails
+        raise RuntimeError("boom")
+
+    def persisted():
+        # ids, not a count: the context cleaner may release unrelated
+        # RDDs meanwhile, but never adds one
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    before = persisted()
+    monkeypatch.setattr(type(docs), "count", failing_count)
+    with pytest.raises(RuntimeError, match="boom"):
+        calls[op]()
+    monkeypatch.undo()
+    assert persisted() - before == set()
+
+
+def _np_ivf(assigned, centers, queries, k, n_probe, allowed=None):
+    """numpy IVF reference: per query (id, group or None, vector), probe
+    the ``n_probe`` nearest centroids of its group (``centers`` is a
+    dict keyed by group, None when ungrouped), score every candidate
+    in those cells — (id, group, vector, cell) rows of ``assigned`` —
+    by exact cosine, drop the query's own id and ids outside
+    ``allowed`` ((group, id) keys), rank by (-cosine, id). Returns
+    sorted (query_id, rank, neighbor_id, cosine)."""
+    import numpy as np
+
+    out = []
+    for qid, g, v in queries:
+        x = np.asarray(v, dtype=np.float64)
+        c = np.asarray(centers[g], dtype=np.float64)
+        cells = set(np.argsort(((c - x) ** 2).sum(axis=1))[:n_probe])
+        scored = []
+        for nid, ng, cv, cell in assigned:
+            if ng != g or cell not in cells or nid == qid:
+                continue
+            if allowed is not None and (ng, nid) not in allowed:
+                continue
+            y = np.asarray(cv, dtype=np.float64)
+            den = np.linalg.norm(x) * np.linalg.norm(y)
+            scored.append((float(x @ y / den) if den > 0 else 0.0, nid))
+        scored.sort(key=lambda t: (-t[0], t[1]))
+        out += [
+            (qid, r + 1, nid, cos)
+            for r, (cos, nid) in enumerate(scored[:k])
+        ]
+    return sorted(out)
+
+
+@pytest.mark.parametrize("face", ["plain", "filter", "grouped"])
+def test_ivf_search_matches_numpy_reference(spark, grouped_vecs, face):
+    """ivf_search against the numpy IVF reference at 1e-6: a multi-query
+    batch whose ids are corpus ids (query_id == neighbor_id is
+    excluded), a planted duplicate vector (the cosine tie breaks on
+    ascending neighbor id), the filtered and grouped faces, and an
+    empty batch (no rows)."""
+    from datamunging_spark.operators.similarity import ivf_build, ivf_search
+
+    first = grouped_vecs.filter(F.col("vec_id") == 3).first()
+    corpus = grouped_vecs.unionByName(
+        spark.createDataFrame(
+            [(900001, first.embedding, first.grp),
+             (900000, first.embedding, first.grp)],
+            grouped_vecs.schema,
+        )
+    ).localCheckpoint()
+    gc = "grp" if face == "grouped" else None
+    idx = ivf_build(corpus, n_clusters=4, group_col=gc)
+    idx.assigned = idx.assigned.localCheckpoint()
+    queries = corpus.filter(F.col("vec_id").isin(0, 1, 2, 3, 4, 5))
+    kw, allowed = {}, None
+    if face == "filter":
+        keep = [
+            r.vec_id for r in corpus.collect()
+            if r.vec_id % 4 != 1 or r.vec_id >= 900000
+        ]
+        kw["filter_ids"] = spark.createDataFrame(
+            [(i,) for i in keep], "vec_id long"
+        )
+        allowed = {(None, i) for i in keep}
+    got = sorted(
+        (r["query_id"], r["rank"], r["neighbor_id"], r["cosine"])
+        for r in ivf_search(queries, idx, k=5, n_probe=2, **kw).collect()
+    )
+    rows = idx.assigned.collect()
+    centers = idx.centers if gc else {None: idx.centers}
+    want = _np_ivf(
+        [(r["neighbor_id"], r[gc] if gc else None, r["_cv"], r["_cell"])
+         for r in rows],
+        centers,
+        [(r.vec_id, r.grp if gc else None, r.embedding)
+         for r in queries.collect()],
+        5, 2, allowed,
+    )
+    assert [g[:3] for g in got] == [w[:3] for w in want]
+    assert [g[3] for g in got] == pytest.approx(
+        [w[3] for w in want], abs=1e-6
+    )
+    assert all(g[0] != g[2] for g in got)
+    # query 3's duplicates tie at cosine 1.0 and rank by id
+    assert [g[2] for g in got if g[0] == 3][:2] == [900000, 900001]
+    assert ivf_search(
+        queries.limit(0), idx, k=5, n_probe=2, **kw
+    ).collect() == []
+
+
 def test_grouped_ivf_search_equals_per_slice_runs(spark, grouped_vecs):
     """The grouped search face ≡ running ungrouped ivf_search per group
     slice (same centers, same assigned rows) — exact row equality,

@@ -12,6 +12,7 @@ from datamunging_spark.operators.retrieval import (
     index_stats,
     inverted_index,
     rrf_fuse,
+    search_terms,
     stats_from_postings,
     term_stats,
 )
@@ -80,10 +81,13 @@ def test_bm25_matches_duckdb_and_precomputed_dfreq(spark):
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     post, stats = inverted_index(docs), index_stats(docs)
-    queries = docs.filter(F.col("doc_id") < 3).select(
-        F.col("doc_id").alias("query_id"),
-        F.substring("text", 1, 40).alias("query"),
-    )
+    # doc-prefix queries plus a repeated term, an absent term and an
+    # all-empty query (no rows) in the same batch
+    qrows = [
+        (r.doc_id, r.text[:40])
+        for r in docs.filter(F.col("doc_id") < 3).collect()
+    ] + [(100, "join JOIN join spark"), (101, "xyzzy spark"), (102, " ")]
+    queries = spark.createDataFrame(qrows, "query_id long, query string")
     out = bm25_topk(post, queries, stats, k=5)
     got = sorted(
         (r.query_id, r.doc_id, r.rank, round(r.bm25, 6))
@@ -104,6 +108,8 @@ def test_bm25_matches_duckdb_and_precomputed_dfreq(spark):
         f"CREATE VIEW documents AS SELECT * "
         f"FROM '{SF}/documents.parquet'"
     )
+    con.sql("CREATE TABLE queries (query_id BIGINT, query VARCHAR)")
+    con.executemany("INSERT INTO queries VALUES (?, ?)", qrows)
     want = sorted(
         (qid, did, rank, round(s, 6))
         for qid, did, rank, s in con.sql(
@@ -125,11 +131,11 @@ def test_bm25_matches_duckdb_and_precomputed_dfreq(spark):
                        / count(*) AS avgdl
               FROM documents
             ), qt AS (
-              SELECT DISTINCT doc_id AS query_id,
+              SELECT DISTINCT query_id,
                      unnest(list_filter(
-                         string_split(lower(substring(text, 1, 40)), ' '),
+                         string_split(lower(query), ' '),
                          x -> x != '')) AS term
-              FROM documents WHERE doc_id < 3
+              FROM queries
             ), dfreq AS (
               SELECT term, count(*) AS df FROM post
               WHERE term IN (SELECT DISTINCT term FROM qt) GROUP BY term
@@ -158,6 +164,154 @@ def test_bm25_matches_duckdb_and_precomputed_dfreq(spark):
         ).fetchall()
     )
     assert got == want
+    answered = {g[0] for g in got}
+    assert {100, 101} <= answered and 102 not in answered
+
+
+def _py_bm25(docs, queries, k, max_df_frac=None, boosts=None,
+             allowed=None, grouped=False, k1=1.2, b=0.75):
+    """Pure-Python BM25 reference over raw (doc_id, group, text) rows
+    and (query_id, group, query) rows: per-corpus (per-group when
+    ``grouped``) N/avgdl/df, term SETS, the stopword valve, MAX of
+    duplicate boosts, a filter that cuts candidates but not stats, and
+    per-term contributions rounded half-up to 7 decimals before the
+    sum (the decimal(28,7) contract). Returns sorted (query_id,
+    doc_id, rank, score)."""
+    from collections import Counter
+    from decimal import ROUND_HALF_UP, Decimal
+
+    def toks(t):
+        return [w for w in (t or "").lower().split(" ") if w]
+
+    corp = {}
+    for did, g, text in docs:
+        corp.setdefault(g if grouped else None, []).append((did, toks(text)))
+    bmax = {}
+    for qid, term, bst in boosts or []:
+        bmax[(qid, term)] = max(bst, bmax.get((qid, term), bst))
+    out = []
+    for qid, g, text in queries:
+        key = g if grouped else None
+        rows = corp.get(key, [])
+        n = len(rows)
+        avgdl = sum(len(t) for _, t in rows) / max(n, 1)
+        df = Counter()
+        for _, t in rows:
+            df.update(set(t))
+        terms = {t for t in toks(text) if df[t]}
+        if max_df_frac is not None:
+            terms = {t for t in terms if df[t] <= max_df_frac * n}
+        scores = {}
+        for did, t in rows:
+            if allowed is not None and (key, did) not in allowed:
+                continue
+            tf = Counter(t)
+            hits = [w for w in terms if tf[w]]
+            if not hits:
+                continue
+            total = Decimal(0)
+            for w in hits:
+                idf = math.log(1.0 + (n - df[w] + 0.5) / (df[w] + 0.5))
+                tfn = (tf[w] * (k1 + 1.0)) / (
+                    tf[w] + k1 * ((1.0 - b) + b * (len(t) / avgdl))
+                )
+                c = idf * tfn * bmax.get((qid, w), 1.0)
+                total += Decimal(repr(c)).quantize(
+                    Decimal("1e-7"), ROUND_HALF_UP
+                )
+            scores[did] = total
+        ranked = sorted(scores.items(), key=lambda x: (-x[1], x[0]))[:k]
+        out += [
+            (qid, did, i + 1, float(sc))
+            for i, (did, sc) in enumerate(ranked)
+        ]
+    return sorted(out)
+
+
+def _parity_corpus(spark):
+    """The sf0.001 documents grouped by ``lang`` plus planted rows: two
+    identical docs (a score tie that must break on doc id), one empty
+    doc, and a NULL-group doc."""
+    docs = spark.read.parquet(f"{SF}/documents.parquet").select(
+        "doc_id", "lang", "text"
+    )
+    planted = spark.createDataFrame(
+        [
+            (10002, "en", "quux quux spark"),
+            (10001, "en", "quux quux spark"),
+            (10003, "en", ""),
+            (10004, None, "quux spark rows"),
+        ],
+        "doc_id long, lang string, text string",
+    )
+    return docs.unionByName(planted)
+
+
+@pytest.mark.parametrize(
+    "face",
+    ["plain", "dfreq", "valve", "valve_dfreq", "boosts", "filter",
+     "grouped", "grouped_all"],
+)
+def test_bm25_faces_match_python_reference(spark, face):
+    """Every bm25_topk face against the pure-Python reference at 1e-6,
+    on one multi-query batch carrying a repeated term, a term absent
+    from the corpus, two all-empty queries (no rows), a planted score
+    tie (breaks on ascending doc id) and a hot term for the valve."""
+    corpus = _parity_corpus(spark)
+    raw = [(r.doc_id, r.lang, r.text) for r in corpus.collect()]
+    qrows = [
+        (0, "en", raw[0][2][:40]),
+        (1, "en", "spark SPARK spark"),
+        (2, "en", "quux"),
+        (3, "fr", "xyzzy plugh"),
+        (4, "fr", ""),
+        (5, "de", "   "),
+        (6, "de", "the join quux nosuch"),
+        (7, None, "quux rows"),
+    ]
+    queries = spark.createDataFrame(
+        qrows, "query_id long, lang string, query string"
+    )
+    grouped = face.startswith("grouped")
+    gc = "lang" if grouped else None
+    post = inverted_index(corpus, group_col=gc)
+    stats = index_stats(corpus, group_col=gc)
+    kw, ref = {}, {}
+    if face in ("dfreq", "valve_dfreq", "grouped_all"):
+        kw["dfreq"] = term_stats(post, group_col=gc)
+    if face.startswith("valve") or face == "grouped_all":
+        kw["max_df_frac"] = ref["max_df_frac"] = 0.3
+    if face in ("boosts", "grouped_all"):
+        boosts = [(1, "spark", 2.0), (6, "join", 0.5), (6, "join", 0.7),
+                  (2, "quux", 1.5), (0, "absent", 3.0)]
+        kw["term_boosts"] = spark.createDataFrame(
+            boosts, "query_id long, term string, boost double"
+        )
+        ref["boosts"] = boosts
+    if face in ("filter", "grouped_all"):
+        keep = [(g, d) for d, g, _ in raw if d % 3 == 0 or d == 10002]
+        ref["allowed"] = set(keep) if grouped else {(None, d) for _, d in keep}
+        kw["filter_ids"] = (
+            spark.createDataFrame(keep, "lang string, doc_id long")
+            if grouped
+            else spark.createDataFrame([(d,) for _, d in keep], "doc_id long")
+        )
+    out = bm25_topk(post, queries, stats, k=4, group_col=gc, **kw)
+    got = sorted(
+        (r.query_id, r.doc_id, r.rank, r.bm25) for r in out.collect()
+    )
+    want = _py_bm25(raw, qrows, 4, grouped=grouped, **ref)
+    assert [g[:3] for g in got] == [w[:3] for w in want]
+    assert [g[3] for g in got] == pytest.approx(
+        [w[3] for w in want], abs=1e-6
+    )
+    qids = {g[0] for g in got}
+    assert not qids & {3, 4, 5}  # absent / all-empty queries: no rows
+    if face in ("plain", "dfreq"):
+        # the planted tie: equal scores, ascending doc id
+        tie = [g for g in got if g[0] == 2][:2]
+        assert [t[1] for t in tie] == [10001, 10002]
+        assert tie[0][3] == tie[1][3]
 
 
 def test_bm25_deterministic_under_repartition(spark):
@@ -182,8 +336,8 @@ def test_bm25_query_time_never_shuffles_on_term(spark, tmp_path):
     """With the index-build artifacts precomputed (postings + term df +
     stats — the 100 TB configuration), the query plan's exchanges are
     only the (query, doc) score aggregate and the per-query window:
-    nothing repartitions by term, so the postings scan flows straight
-    into a broadcast join."""
+    nothing repartitions by term, and the query terms reach the
+    postings scan as a pushed ``In(term, ...)`` filter."""
     import contextlib
     import io
 
@@ -206,7 +360,89 @@ def test_bm25_query_time_never_shuffles_on_term(spark, tmp_path):
     for frag in plan.split("Exchange hashpartitioning(")[1:]:
         keys = frag.split(")")[0]
         assert "term" not in keys, plan
-    assert "BroadcastHashJoin" in plan, plan
+    # query terms the index knows (substring cuts leave partial words
+    # that match nothing and never reach the scan)
+    qterms = {
+        t
+        for r in queries.select(search_terms("query")).collect()
+        for t in r[0]
+    }
+    terms = sorted(
+        r.term
+        for r in term_stats(post).filter(F.col("term").isin(qterms)).collect()
+    )
+    pushed = [
+        ln for ln in plan.splitlines() if ln.startswith("PushedFilters")
+    ]
+    assert pushed == [
+        f"PushedFilters: [In(term, [{','.join(terms)}])]"
+    ], plan
+
+
+def _jobs_of(spark, fn, group):
+    """Spark jobs started by ``fn()``, counted under one job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+#: Spark jobs of one single-query request, call plus result collect:
+#: one collect of the query batch, the df/stats scalar collect (BM25
+#: only), the aggregate and window shuffle stages (one job each under
+#: AQE; IVF has no aggregate) and the result.
+SEARCH_JOB_BUDGET = {"bm25": 5, "phrase": 4, "ivf": 3}
+
+
+def test_search_request_job_budget(spark, tmp_path):
+    """A job-count regression on the search request path fails here:
+    each operator is called once on a materialized index with a
+    one-row query batch built the way a serving client builds it, and
+    its jobs (the call's collects plus the result collect) must stay
+    within ``SEARCH_JOB_BUDGET``."""
+    from datamunging_spark.operators.retrieval import phrase_topk
+    from datamunging_spark.operators.similarity import ivf_build, ivf_search
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    inverted_index(docs, positions=True).write.parquet(
+        str(tmp_path / "post")
+    )
+    post = spark.read.parquet(str(tmp_path / "post"))
+    stats = index_stats(docs).localCheckpoint()
+    dfreq = term_stats(post).localCheckpoint()
+    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
+    idx = ivf_build(emb, n_clusters=8)
+    idx.assigned = idx.assigned.localCheckpoint()
+    vec = [float(v) for v in emb.first().embedding]
+
+    def q(text):
+        return spark.createDataFrame(
+            [(0, text)], "query_id long, query string"
+        )
+
+    jobs = {
+        "bm25": _jobs_of(spark, lambda: bm25_topk(
+            post, q("spark join window"), stats, k=10, dfreq=dfreq
+        ).collect(), "budget-bm25"),
+        "phrase": _jobs_of(spark, lambda: phrase_topk(
+            post, q("batch batch"), k=10
+        ).collect(), "budget-phrase"),
+        "ivf": _jobs_of(spark, lambda: ivf_search(
+            spark.createDataFrame(
+                [(-1, vec)], "vec_id long, embedding array<float>"
+            ),
+            idx, k=10, n_probe=4,
+        ).collect(), "budget-ivf"),
+    }
+    over = {
+        op: (n, SEARCH_JOB_BUDGET[op])
+        for op, n in jobs.items()
+        if n > SEARCH_JOB_BUDGET[op]
+    }
+    assert not over, f"jobs over budget (got, budget): {over}"
 
 
 def test_rrf_fuse_hand_math_and_outer_union(spark):
@@ -551,47 +787,89 @@ def test_phrase_topk_planted_and_duplicate_terms(spark):
         phrase_topk(inverted_index(docs), q)
 
 
+def _py_phrase(rows, phrases, k, allowed=None, grouped=False):
+    """Pure-Python phrase reference: (query_id, doc_id, rank, freq) by
+    sliding-window token match over (doc_id, group, text) rows, per
+    group when ``grouped``; ``allowed`` holds (group or None, doc_id)
+    keys. An all-empty phrase matches nothing."""
+    out = []
+    for qid, g, ph in phrases:
+        terms = [w for w in ph.lower().split(" ") if w]
+        scored = []
+        for did, dg, text in rows:
+            key = dg if grouped else None
+            if not terms or (grouped and dg != g):
+                continue
+            if allowed is not None and (key, did) not in allowed:
+                continue
+            toks = [w for w in text.lower().split(" ") if w]
+            freq = sum(
+                1
+                for p in range(len(toks) - len(terms) + 1)
+                if toks[p:p + len(terms)] == terms
+            )
+            if freq:
+                scored.append((did, freq))
+        scored.sort(key=lambda x: (-x[1], x[0]))
+        out += [
+            (qid, did, r + 1, f) for r, (did, f) in enumerate(scored[:k])
+        ]
+    return sorted(out)
+
+
 def test_phrase_topk_matches_python_reference_and_repartition(spark):
     from datamunging_spark.operators.retrieval import phrase_topk
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
-    rows = [(r.doc_id, r.text) for r in docs.collect()]
-    # phrases drawn from real doc prefixes so matches exist
-    phrases = [(i, " ".join(t.split(" ")[:2])) for i, t in rows[:3]]
+    rows = [(r.doc_id, r.lang, r.text) for r in docs.collect()]
+    # phrases drawn from real doc prefixes so matches exist, plus a
+    # repeated-term phrase ("a a": repeated offsets), a case-folded
+    # one, an absent term, a single term (ties break on doc id) and
+    # an all-empty phrase (no rows)
+    phrases = [(i, g, " ".join(t.split(" ")[:2])) for i, g, t in rows[:3]]
+    phrases += [
+        (100, "en", "batch batch"),
+        (101, "en", "Batch BATCH batch"),
+        (102, "fr", "spark nosuch"),
+        (103, "de", "spark"),
+        (104, "en", "  "),
+    ]
+    q = spark.createDataFrame(
+        phrases, "query_id long, lang string, query string"
+    )
 
-    def ref():
-        out = []
-        for qid, ph in phrases:
-            terms = [w for w in ph.lower().split(" ") if w]
-            scored = []
-            for did, text in rows:
-                toks = [w for w in text.lower().split(" ") if w]
-                freq = sum(
-                    1
-                    for p in range(len(toks) - len(terms) + 1)
-                    if toks[p:p + len(terms)] == terms
-                )
-                if freq:
-                    scored.append((did, freq))
-            scored.sort(key=lambda x: (-x[1], x[0]))
-            out += [
-                (qid, did, r + 1, f)
-                for r, (did, f) in enumerate(scored[:5])
-            ]
-        return sorted(out)
-
-    q = spark.createDataFrame(phrases, "query_id long, query string")
-
-    def run(d):
+    def run(d, **kw):
         return sorted(
             (r.query_id, r.doc_id, r.rank, r.phrase_freq)
             for r in phrase_topk(
-                inverted_index(d, positions=True), q, k=5
+                inverted_index(
+                    d, positions=True, group_col=kw.get("group_col")
+                ),
+                q, k=5, **kw,
             ).collect()
         )
 
-    assert run(docs) == ref()
-    assert run(docs.repartition(17)) == ref()
+    want = _py_phrase(rows, phrases, 5)
+    assert {w[0] for w in want} >= {100, 101, 103}
+    assert not {w[0] for w in want} & {102, 104}
+    assert run(docs) == want
+    assert run(docs.repartition(17)) == want
+    # the grouped and filtered faces on the same batch
+    keep = [(g, d) for d, g, _ in rows if d % 2 == 0]
+    assert run(docs, group_col="lang") == _py_phrase(
+        rows, phrases, 5, grouped=True
+    )
+    assert run(
+        docs,
+        filter_ids=spark.createDataFrame(
+            [(d,) for _, d in keep], "doc_id long"
+        ),
+    ) == _py_phrase(rows, phrases, 5, allowed={(None, d) for _, d in keep})
+    assert run(
+        docs,
+        group_col="lang",
+        filter_ids=spark.createDataFrame(keep, "lang string, doc_id long"),
+    ) == _py_phrase(rows, phrases, 5, allowed=set(keep), grouped=True)
 
 
 def test_boolean_topk_must_should_not(spark):

@@ -754,6 +754,23 @@ def test_softmax_fit_np_contract():
     # stronger L2 shrinks the solution
     W3, _, _ = _softmax_fit_np(flat, row_ptr, y, 3, 40, 1.0, 100)
     assert np.linalg.norm(W3) < np.linalg.norm(W1)
+    # zero-length rows, a trailing one included, are empty count rows:
+    # the fit lands on a stationary point of the dense objective
+    rows_e = rows[:60] + [[]] + rows[60:] + [[]]
+    y_e = np.array(list(y[:60]) + [0] + list(y[60:]) + [1])
+    ptr_e = np.zeros(len(rows_e) + 1, dtype=np.int64)
+    ptr_e[1:] = np.cumsum([len(r) for r in rows_e])
+    flat_e = np.fromiter((f for r in rows_e for f in r), dtype=np.int32)
+    We, be, _ = _softmax_fit_np(flat_e, ptr_e, y_e, 3, 40, 0.01, 200)
+    X = np.zeros((len(rows_e), 40))
+    for i, r in enumerate(rows_e):
+        np.add.at(X[i], r, 1.0)
+    z = X @ We.T + be
+    P = np.exp(z - z.max(axis=1, keepdims=True))
+    P /= P.sum(axis=1, keepdims=True)
+    A = (P - np.eye(3)[y_e]) / len(rows_e)
+    grad = np.concatenate([(A.T @ X + 0.01 * We).ravel(), A.sum(axis=0)])
+    assert np.abs(grad).max() < 1e-4
 
 
 def test_lang_classifier_beats_marker_heuristic(spark):
@@ -821,6 +838,11 @@ def test_lang_classifier_beats_marker_heuristic(spark):
         [(900, None), (901, "")], "doc_id long, text string"
     )
     assert lang_classifier_score(clf, nulls).count() == 2
+    # the scorer's temp columns are reserved: an input carrying one is
+    # refused instead of being overwritten or made ambiguous
+    for col in ("_lid_w", "_lid_b", "_lid_logits"):
+        with pytest.raises(ValueError, match="reserved"):
+            lang_classifier_score(clf, nulls.withColumn(col, F.lit(1.0)))
 
 
 def test_c4_clean_lines_published_rules(spark):
