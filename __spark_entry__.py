@@ -2848,68 +2848,66 @@ def q_x4_lang_model(spark, sf_dir):
 def q_x8_quantiles(spark, sf_dir):
     """X8 mergeable quantile sketch (bench-only, new r9; guarantees
     pinned by tests/test_sketch.py + hypothesis): the rank/quantile leg
-    of the sketch trio — price quantiles over lineitem via MRL/KLL
-    level compactors (one Arrow pass, ≤ k items per level; exchanges
-    carry summaries, never the data column; operators/sketch.py module
-    header has the bounds). In-query invariants, all REAL checks of the
-    sketch guarantees at bench scale:
+    of the sketch trio — price quantiles over lineitem from Spark's
+    built-in KLL sketch (one hash aggregate; exchanges carry partial
+    sketches, never the data column; operators/sketch.py module header
+    has the bounds). In-query checks against one exact recount (a
+    |qs|-row broadcast against the column — the x8_heavy_hitters
+    recount shape):
 
-    - ``bracket_ok``: each reported value's true count ≤ value is
-      re-counted EXACTLY (a ≤|qs|-row broadcast against the column —
-      the x8_heavy_hitters recount shape) and must sit within the
-      carried rank-error budget of ``est_rank``;
-    - ``mass_ok``: Σ retained cnt·2^level == n exactly (compaction
-      conserves mass by construction);
-    - ``within_budget``: the carried budget obeys the worst-case
-      n·L/k for the summary's own occupied-level count L."""
-    from datamunging_spark.operators.sketch import (
-        quantile_report,
-        quantile_summary,
-    )
+    - ``bracket_ok``: the exact counts of price < value and price ≤
+      value put each answer in the tie-aware nearest-rank bracket
+      ``count(<) − max_rank_err < rank_target ≤ count(≤) +
+      max_rank_err`` (KLL's 99%-confidence bound; exact when
+      ``max_rank_err`` is 0);
+    - ``mass_ok``: ``n_total`` equals the exact non-null count."""
+    from datamunging_spark.operators.sketch import quantiles_sketch
 
-    k = 512
     li = _t(spark, sf_dir, "lineitem").select(
         F.col("l_extendedprice").cast("double").alias("price")
     )
-    s = quantile_summary(li, "price", k=k)  # localCheckpointed state
-    rep = quantile_report(s, [0.01, 0.25, 0.5, 0.75, 0.99])
-    exact = (
-        li.crossJoin(
-            F.broadcast(rep.select("q", F.col("value").alias("_v")))
-        )
-        .filter(F.col("price") <= F.col("_v"))
-        .groupBy("q")
-        .agg(F.count(F.lit(1)).alias("_true_le"))
+    # checkpointed: KLL answers are randomized, so the recount must read
+    # the very rows it reports, not a second evaluation of the sketch
+    rep = quantiles_sketch(
+        li, "price", [0.01, 0.25, 0.5, 0.75, 0.99], k=512
+    ).localCheckpoint()
+    exact = _exact_rank_counts(
+        li.crossJoin(F.broadcast(rep.select("q", F.col("value").alias("_v")))),
+        "price", ["q"],
     )
-    mass = s.filter(F.col("meta").isNull()).agg(
-        F.coalesce(
-            F.sum(F.expr("cnt * shiftleft(1L, level)")), F.lit(0)
-        ).alias("_mass"),
-        (F.max("level") + 1).alias("_levels"),
+    return rep.join(exact, "q", "left").select(
+        "q",
+        "value",
+        "rank_target",
+        "n_total",
+        "max_rank_err",
+        _bracket_ok(F.col("_lt"), F.col("_le")).alias("bracket_ok"),
+        F.coalesce(F.col("n_total") == F.col("_n"), F.lit(False)).alias(
+            "mass_ok"
+        ),
     )
-    return (
-        rep.join(exact, "q", "left")
-        .crossJoin(F.broadcast(mass))
-        .select(
-            "q",
-            "value",
-            "rank_target",
-            "est_rank",
-            "n_total",
-            "max_rank_err",
-            (
-                F.col("_true_le").isNotNull()
-                & (
-                    F.abs(F.col("est_rank") - F.col("_true_le"))
-                    <= F.col("max_rank_err")
-                )
-            ).alias("bracket_ok"),
-            (F.col("_mass") == F.col("n_total")).alias("mass_ok"),
-            (
-                F.col("max_rank_err")
-                <= F.col("n_total") * F.col("_levels") / F.lit(k)
-            ).alias("within_budget"),
-        )
+
+
+def _exact_rank_counts(probed, col, group):
+    """Exact recount for the quantile entries: per ``group`` (one row
+    per reported answer ``_v``), the counts of ``col`` < ``_v`` and
+    ≤ ``_v`` and the non-null, non-NaN count the sketch's n must
+    equal."""
+    c = F.col(col)
+    return probed.groupBy(*group).agg(
+        F.count(F.when(c < F.col("_v"), 1)).alias("_lt"),
+        F.count(F.when(c <= F.col("_v"), 1)).alias("_le"),
+        F.count(F.when(c.isNotNull() & ~F.isnan(c), 1)).alias("_n"),
+    )
+
+
+def _bracket_ok(lt, le, prefix=""):
+    """Tie-aware nearest-rank bracket of a quantile report row against
+    exact counts ``lt`` (< value) and ``le`` (≤ value)."""
+    err = F.col(f"{prefix}max_rank_err")
+    target = F.col(f"{prefix}rank_target")
+    return F.coalesce(
+        (lt - err < target) & (target <= le + err), F.lit(False)
     )
 
 
@@ -2927,17 +2925,19 @@ def q_x8_grouped_sketch(spark, sf_dir):
       bounded by the report size, not the vocabulary — and requires
       count_lo ≤ exact ≤ count_hi; ``within_budget`` pins each KEY's
       error floor max_err ≤ n_key/(k+1)+1 (the per-key Agarwal bound).
-    - ``face='q'``: MRL/KLL doc-length quantiles PER SOURCE
+    - ``face='q'``: KLL doc-length quantiles PER SOURCE
       (grouped_quantile_summary→report, k=256). ``bracket_ok``
-      re-counts true rank within each key (≤|keys|·|qs| broadcast
-      probe rows) against the carried per-key rank-error budget;
-      ``within_budget`` pins per-key mass conservation
-      (Σ cnt·2^level == n_key) AND the n_key·L_key/k budget bound.
+      re-counts the exact counts of values < and ≤ each answer within
+      its key (≤|keys|·|qs| broadcast probe rows) and requires the
+      tie-aware bracket ``count(<) − max_rank_err < rank_target ≤
+      count(≤) + max_rank_err``; ``within_budget`` pins that
+      ``n_total`` equals the key's exact non-null count.
 
     Shuffle shape: both faces exchange summaries only (≤ keys×(k+2)
-    counter rows / per-key compactor levels); the recount probes are
-    report-sized broadcasts — same scale story as the ungrouped x8
-    entries, now auditable per key in PLAN_AUDIT/BENCH history."""
+    counter rows / one partial KLL sketch per key per partition); the
+    recount probes are report-sized broadcasts — same scale story as
+    the ungrouped x8 entries, now auditable per key in
+    PLAN_AUDIT/BENCH history."""
     from datamunging_spark.functions import tokenize
     from datamunging_spark.operators.sketch import (
         grouped_heavy_hitters,
@@ -2954,22 +2954,22 @@ def q_x8_grouped_sketch(spark, sf_dir):
     words = d.select(
         "lang", F.explode(tokenize(F.lower(F.col("text")))).alias("word")
     )
-    # hh's checkpoint and the q face's summary checkpoint (below) are
+    # hh's checkpoint and the q face's report checkpoint (below) are
     # independent — both derive straight from the documents scan — so
     # they materialize CONCURRENTLY (guide §2.6, the Phase 6 pattern);
     # the thunks are exactly the two actions this query ran serially.
-    k_q = 256
-    d_vals = d.select(
-        "source", F.col("n_chars").cast("double").alias("nc")
-    )
-    hh, summ = _co_materialize(
+    qs_list = [0.25, 0.5, 0.75, 0.99]
+    vals = d.select("source", F.col("n_chars").cast("double").alias("nc"))
+    hh, rep = _co_materialize(
         lambda: grouped_heavy_hitters(
             words, ["lang"], "word", k=k_hh, min_share=0.002
         ).localCheckpoint(),  # report feeds probe + output join
-        # summ checkpointed: rep AND mass both read it — without this
-        # the grouped Arrow build pass runs twice per bench rep (r11)
-        lambda: grouped_quantile_summary(
-            d_vals, ["source"], "nc", k=k_q
+        # rep checkpointed: KLL answers are randomized, so the recount
+        # must read the very rows it reports
+        lambda: grouped_quantile_report(
+            grouped_quantile_summary(vals, ["source"], "nc", k=256),
+            ["source"],
+            qs_list,
         ).localCheckpoint(),
     )
     # recounts join NULL-SAFE on the key (NULL keys are real groups in
@@ -3013,36 +3013,18 @@ def q_x8_grouped_sketch(spark, sf_dir):
         )
     )
 
-    qs_list = [0.25, 0.5, 0.75, 0.99]
-    # not checkpointed (r16): two-column projection of the scan — both
-    # consumers re-read the pruned parquet columns for less than the
-    # checkpoint's materialize+job cost (summ was materialized above,
-    # concurrently with hh)
-    vals = d_vals
-    rep = grouped_quantile_report(summ, ["source"], qs_list).localCheckpoint()
-    exact_q = (
-        vals.alias("v")
-        .join(
+    # the recount re-reads the pruned two-column scan rather than
+    # checkpointing it (r16)
+    exact_q = _exact_rank_counts(
+        vals.alias("v").join(
             F.broadcast(
                 rep.select(
                     "source", "q", F.col("value").alias("_v")
                 ).alias("p")
             ),
             F.col("v.source").eqNullSafe(F.col("p.source")),
-        )
-        .filter(F.col("v.nc") <= F.col("p._v"))
-        .groupBy("v.source", "p.q")
-        .agg(F.count(F.lit(1)).alias("_true_le"))
-    )
-    mass = (
-        summ.filter(F.col("meta").isNull())
-        .groupBy("source")
-        .agg(
-            F.coalesce(
-                F.sum(F.expr("cnt * shiftleft(1L, level)")), F.lit(0)
-            ).alias("_mass"),
-            (F.max("level") + 1).alias("_levels"),
-        )
+        ),
+        "nc", ["p.source", "p.q"],
     )
     q_rows = (
         rep.alias("r")
@@ -3052,11 +3034,6 @@ def q_x8_grouped_sketch(spark, sf_dir):
             & (F.col("r.q") == F.col("x.q")),
             "left",
         )
-        .join(
-            mass.alias("m"),
-            F.col("r.source").eqNullSafe(F.col("m.source")),
-            "left",
-        )
         .select(
             F.lit("q").alias("face"),
             F.col("r.source").alias("key"),
@@ -3064,19 +3041,11 @@ def q_x8_grouped_sketch(spark, sf_dir):
             F.col("r.value").alias("est"),
             "r.n_total",
             F.col("r.max_rank_err").alias("max_err"),
-            (
-                F.col("x._true_le").isNotNull()
-                & (
-                    F.abs(F.col("r.est_rank") - F.col("x._true_le"))
-                    <= F.col("r.max_rank_err")
-                )
-            ).alias("bracket_ok"),
-            (
-                (F.col("m._mass") == F.col("r.n_total"))
-                & (
-                    F.col("r.max_rank_err")
-                    <= F.col("r.n_total") * F.col("m._levels") / F.lit(k_q)
-                )
+            _bracket_ok(F.col("x._lt"), F.col("x._le"), "r.").alias(
+                "bracket_ok"
+            ),
+            F.coalesce(
+                F.col("r.n_total") == F.col("x._n"), F.lit(False)
             ).alias("within_budget"),
         )
     )
@@ -4352,7 +4321,7 @@ def oracle_sql() -> dict[str, str]:
         "x4_gopher_gates": """
             WITH w AS (
               SELECT doc_id, coalesce(text, '') AS c,
-                     list_filter(regexp_split_to_array(coalesce(text, ''), '\s+'),
+                     list_filter(regexp_split_to_array(coalesce(text, ''), '\\s+'),
                                  x -> x <> '') AS words
               FROM documents
             ), s AS (
@@ -4360,7 +4329,7 @@ def oracle_sql() -> dict[str, str]:
                      CASE WHEN len(words) > 0
                           THEN list_aggregate(list_transform(words, x -> length(x)), 'sum') / len(words)
                           ELSE 0.0 END AS mean_len,
-                     len(regexp_extract_all(c, '#|\.\.\.|…')) AS n_symbols,
+                     len(regexp_extract_all(c, '#|\\.\\.\\.|…')) AS n_symbols,
                      CASE WHEN len(words) > 0
                           THEN len(list_filter(words, x -> regexp_matches(x, '[A-Za-z]'))) / len(words)
                           ELSE 0.0 END AS alpha_frac,
@@ -4449,7 +4418,7 @@ def oracle_sql() -> dict[str, str]:
         "x4_census": """
             WITH n AS (
               SELECT source, coalesce(text, '') AS c,
-                     trim(regexp_replace(lower(coalesce(text, '')), '\s+', ' ', 'g')) AS t
+                     trim(regexp_replace(lower(coalesce(text, '')), '\\s+', ' ', 'g')) AS t
               FROM documents
             )
             SELECT source, count(*) AS n_docs,
@@ -4462,7 +4431,7 @@ def oracle_sql() -> dict[str, str]:
         "x4_lm_quality": """
             WITH n AS (
               SELECT doc_id,
-                     trim(regexp_replace(lower(coalesce(text, '')), '\s+', ' ', 'g')) AS t
+                     trim(regexp_replace(lower(coalesce(text, '')), '\\s+', ' ', 'g')) AS t
               FROM documents
             ), tok AS (
               SELECT doc_id, unnest(string_split(t, ' ')) AS token

@@ -42,7 +42,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     DoubleType,
-    IntegerType,
+    FloatType,
     LongType,
     StringType,
     StructField,
@@ -432,375 +432,150 @@ def hot_keys_sketch(
 
 
 # ---------------------------------------------------------------------------
-# Mergeable quantile summaries (MRL/KLL-family level compactors)
+# Mergeable quantile summaries (DataSketches KLL via Spark built-ins)
 # ---------------------------------------------------------------------------
 #
 # The third leg of the sketch family: frequency (Misra-Gries, above),
-# distinct (HLL, above), and now rank/quantiles — "what is the p99
-# document length per crawl batch, maintained incrementally?" without
-# sorting or shuffling the data column. The exact face already exists
+# distinct (HLL, above), and rank/quantiles — "what is the p99 document
+# length per crawl batch, maintained incrementally?" without sorting or
+# shuffling the data column. The exact face already exists
 # (`relational.grouped_percentiles`, R15): correct whenever a full sort
 # of the group fits the cluster; this is the engine's scale/streaming
 # path for when it doesn't.
 #
-# Design (Manku-Rajagopalan-Lindsay '98 uniform-capacity compactors, the
-# simple member of the KLL family; mergeability per Agarwal et al.,
-# "Mergeable Summaries", PODS 2012): a summary is a weighted point set —
-# retained items at LEVEL ℓ each stand for 2^ℓ original values. Inserts
-# land in level 0; whenever a level holds > k items it is COMPACTED:
-# sort, keep every other item of an even-length prefix (alternating
-# parity), promote the kept items to level ℓ+1.
+# Design: Spark's built-in KLL aggregate (Karnin, Lang & Liberty,
+# "Optimal Quantile Approximation in Streams", FOCS 2016; the
+# DataSketches KllDoublesSketch). A summary is one row per key group,
+# ``(keys..., sketch, k)``: ``sketch`` is the compact binary KLL state
+# and ``k`` the smallest k that went into it. Build is one hash
+# aggregate (map-side partial sketches, so the exchange carries one
+# sketch per key per partition, never the data column); merge is
+# ``kll_merge_agg_double`` plus ``min(k)``; a report reads quantiles
+# off the stored state with no job beyond the one that produces it.
 #
-# - **mass is conserved exactly**: 2m items of weight w become m items
-#   of weight 2w (the odd leftover stays put), so Σ cnt·2^level == n at
-#   all times — an exact in-query invariant, pinned by hypothesis.
-# - **rank error is carried exactly**: one compaction at level ℓ shifts
-#   the weighted count-below-t of any threshold t by ≤ 2^ℓ, so the
-#   summed budget (meta row 'err', the sibling of MG's 'dec') brackets
-#   every rank estimate: |est_rank(t) − true_rank(t)| ≤ err_total.
-#   Worst case err_total ≤ n·L/k for L ≈ log2(n/k) occupied levels
-#   (each compaction consumes ≥ k·2^ℓ mass and charges 2^ℓ), i.e.
-#   ~0.7% of n at k=4096 even for n = 10^12 — but consumers should read
-#   the CARRIED value, which is exact for the actual fold history.
-# - **merging adds budgets**: a merge unions the point sets (groupBy on
-#   (level, value) — mass and 'err'/'n' meta rows sum) and re-compacts
-#   overfull levels, charging those compactions to the budget like any
-#   other. Associative/commutative; parameter drift in k between folds
-#   only changes future tightness, never bracket truth (the hh_summary
-#   lesson).
+# Guarantees (DataSketches' documented single-query bound):
 #
-# Scale shape: the build is one Arrow pass (≤ k items per level per
-# partition, levels grow logarithmically); the exchange carries
-# summaries (≤ partitions × k × L rows), never data. The re-bound pass
-# repartitionByRange's the pooled summary by VALUE, so each task
-# compacts a disjoint value range independently — valid because rank
-# decomposes over disjoint ranges (mass outside a range is conserved by
-# that range's compactions) and each event still charges its 2^ℓ to the
-# global budget; no single task ever holds the whole pooled summary.
+# - NULL and NaN are not counted; ``n_total`` is the exact count of the
+#   rest, and merges add it exactly.
+# - while ``n_total ≤ k`` nothing was ever compacted and every answer is
+#   the exact nearest-rank quantile (``max_rank_err`` 0);
+# - above k, with 99% confidence per query, the returned value's true
+#   rank is within ``ε(k)·n`` of the target, ε(k) = 2.296 / k^0.9723
+#   (1.33% at k=200, 0.07% at k=4096). The bound is PROBABILISTIC and
+#   the answers are randomized — reruns can differ. Merging sketches of
+#   different k keeps the smaller k, and so does the bound.
 
-_META_ERR = "err"  # meta row: cnt = summed rank-error budget
-
-_Q_SCHEMA = StructType(
-    [
-        StructField("value", DoubleType()),
-        StructField("level", IntegerType()),
-        StructField("cnt", LongType()),
-        StructField("meta", StringType()),
-    ]
-)
+_KLL_K_MIN, _KLL_K_MAX = 8, 65535
 
 
-def _compact_levels(levels, parity, k, err):
-    """Compact every level holding > k items (cascading); mutates
-    ``levels``/``parity`` in place, returns the grown error budget.
-    ``levels[l]`` is a float64 array of items with weight 2**l."""
-    import numpy as np
-
-    l = 0
-    while l < len(levels):
-        if len(levels[l]) <= k:
-            l += 1
-            continue
-        buf = np.sort(levels[l])
-        m = (len(buf) // 2) * 2  # even-length prefix: mass conserved
-        promoted = buf[parity[l] : m : 2]
-        parity[l] ^= 1
-        if l + 1 == len(levels):
-            levels.append(np.empty(0, dtype="float64"))
-            parity.append(0)
-        levels[l] = buf[m:]  # odd leftover (0 or 1 items) stays
-        levels[l + 1] = np.concatenate([levels[l + 1], promoted])
-        err += 1 << l  # one compaction event at weight 2^l
-        # the promotion may overfill l+1 — loop continues upward
-        l += 1
-    return err
-
-
-def _emit_summary(levels, err, n):
-    """Render compactor state + meta rows into the summary frame."""
-    import pandas as pd
-
-    frames = []
-    for lvl, arr in enumerate(levels):
-        if not len(arr):
-            continue
-        vc = pd.Series(arr).value_counts()  # collapse duplicate values
-        frames.append(
-            pd.DataFrame(
-                {
-                    "value": vc.index.astype("float64"),
-                    "level": lvl,
-                    "cnt": vc.to_numpy(dtype="int64"),
-                    "meta": None,
-                }
-            )
+def _check_kll_k(k: int) -> None:
+    """Fail fast, before any job, on a k outside KLL's range (Spark
+    would only reject it at analysis)."""
+    if not (_KLL_K_MIN <= int(k) <= _KLL_K_MAX):
+        raise ValueError(
+            f"k must be in [{_KLL_K_MIN}, {_KLL_K_MAX}] (KLL's range), "
+            f"got {k}"
         )
-    frames.append(
-        pd.DataFrame(
-            {
-                # NaN, not None: keeps the column float64 through the
-                # concat so Arrow sees one clean double column
-                "value": [float("nan"), float("nan")],
-                "level": [0, 0],
-                "cnt": [err, n],
-                "meta": [_META_ERR, _META_N],
-            }
-        )
-    )
-    return pd.concat(frames, ignore_index=True)
 
 
-def _q_build_partition(k: int):
-    """Per-partition compactor build over an iterator of Arrow batches
-    of raw ``value`` doubles (NULL/NaN dropped, like the MG pass)."""
-
-    def run(batches):
-        import numpy as np
-
-        levels = [np.empty(0, dtype="float64")]
-        parity = [0]
-        err = 0
-        n = 0
-        for pdf in batches:
-            vals = pdf["value"].dropna().to_numpy(dtype="float64")
-            if not len(vals):
-                continue
-            n += len(vals)
-            levels[0] = np.concatenate([levels[0], vals])
-            err = _compact_levels(levels, parity, k, err)
-        yield _emit_summary(levels, err, n)
-
-    return run
-
-
-def _recompact_frame(data, meta, k: int):
-    """ONE home for the expand → compact → emit → drop-stubs re-bound
-    body (the grouped face wraps it per key — a fix to the compaction
-    or err-delta accounting must not have to land twice): expand
-    (value, level, cnt) data rows back into per-level item arrays
-    (bounded — inputs are summary-sized), compact overfull levels, and
-    return the re-bounded data rows + an 'err' DELTA meta row when this
-    call compacted + the pass-through ``meta`` rows. The consumer
-    re-aggregates meta by sum."""
-    import numpy as np
-    import pandas as pd
-
-    levels = []
-    parity = []
-    for lvl, grp in data.groupby("level"):
-        lvl = int(lvl)
-        while len(levels) <= lvl:
-            levels.append(np.empty(0, dtype="float64"))
-            parity.append(0)
-        levels[lvl] = np.repeat(
-            grp["value"].to_numpy(dtype="float64"),
-            grp["cnt"].to_numpy(dtype="int64"),
-        )
-    if not levels:
-        levels, parity = [np.empty(0, dtype="float64")], [0]
-    delta = _compact_levels(levels, parity, k, 0)
-    out = _emit_summary(levels, delta, 0)
-    # drop the 'n'=0 stub; keep the err delta only when this call
-    # actually compacted (meta rows must stay sparse)
-    out = out[out["meta"] != _META_N]
-    if delta == 0:
-        out = out[out["meta"].isna()]
-    return pd.concat(
-        [out, meta[["value", "level", "cnt", "meta"]]], ignore_index=True
+def _kll_summary(df: DataFrame, keys: list[str], col: str, k: int):
+    _check_kll_k(k)
+    return df.groupBy(*keys).agg(
+        F.kll_sketch_agg_double(F.col(col).cast("double"), int(k)).alias(
+            "sketch"
+        ),
+        F.lit(int(k)).alias("k"),
     )
 
 
-def _q_recompact_partition(k: int):
-    """Re-bound a pooled summary's value-range shard via
-    :func:`_recompact_frame`; 'n'/'err' meta rows pass through (they
-    ride in whatever shard range-partitioning sent their NaN values
-    to)."""
-
-    def run(batches):
-        import pandas as pd
-
-        pooled = [b for b in batches]
-        pdf = (
-            pd.concat(pooled, ignore_index=True)
-            if pooled
-            else pd.DataFrame(columns=["value", "level", "cnt", "meta"])
-        )
-        yield _recompact_frame(
-            pdf[pdf["meta"].isna()], pdf[pdf["meta"].notna()], k
-        )
-
-    return run
-
-
-def _rebound(pooled: DataFrame, k: int, rebound_partitions: int) -> DataFrame:
-    """Shared re-bound tail of build/merge: checkpoint the pooled
-    summary FIRST — ``repartitionByRange`` computes its range bounds
-    with a separate sampling job over the upstream plan, which for the
-    build path is the full corpus-wide Arrow scan; checkpointing makes
-    the sample read summary-sized rows instead of scanning twice (the
-    r9 probe caught the build running every input stage two times).
-    With one shard there is nothing to range-split, so a plain
-    ``repartition(1)`` skips the sampling job entirely — and with no
-    sampling pass to protect, the default path also skips the
-    checkpoint (one fewer eager job per build/merge/streaming fold;
-    the single scan feeds the one-shard exchange lazily)."""
-    shards = (
-        pooled.repartition(1)
-        if rebound_partitions == 1
-        else pooled.localCheckpoint().repartitionByRange(
-            rebound_partitions, "value"
-        )
-    )
-    rebound = shards.mapInPandas(_q_recompact_partition(k), schema=_Q_SCHEMA)
+def _kll_merge(a: DataFrame, b: DataFrame | None, keys: list[str]):
+    if b is None:
+        return a
     return (
-        rebound.groupBy("meta", "level", "value")
-        .agg(F.sum("cnt").alias("cnt"))
-        .localCheckpoint()
+        a.unionByName(b)
+        .groupBy(*keys)
+        .agg(
+            F.kll_merge_agg_double("sketch").alias("sketch"),
+            F.min("k").alias("k"),
+        )
     )
 
 
-def quantile_summary(
-    df: DataFrame,
-    col: str,
-    k: int = 4096,
-    rebound_partitions: int = 1,
-    rebound: bool = True,
-) -> DataFrame:
-    """Build a mergeable QUANTILE summary of numeric ``col``: rows
-    ``(value, level, cnt, meta)`` — data rows (``meta`` NULL) are
-    retained items, ``cnt`` items of weight ``2^level`` each; meta rows
-    carry the non-null count (``meta='n'``) and the exact accumulated
-    rank-error budget (``meta='err'``). One Arrow build pass per
-    partition (≤ ``k`` items per level), a summary-sized groupBy, then
-    one range-sharded re-compaction so the stored state holds ≤ ``k``
-    items per level per re-bound shard — TOTAL with the default single
-    shard (the pooled union of per-partition summaries
-    would otherwise grow with partition count — the hh_summary /
-    merge_hh_summaries split, fused here because unlike MG the re-bound
-    needs a sort and is cheapest while the summary is already in Arrow).
-    NULL and NaN values are excluded from ``n`` (same contract as the
-    MG pass). ``rebound_partitions`` sizes the range shuffle — 1 is
-    right up to ~10^2 partitions; at larger cluster scale raise it so
-    no task holds the whole pooled summary (module header: range shards
-    compact independently and the budget stays exact either way).
-    ``rebound=False`` returns the LAZY pooled per-partition union
-    instead (data rows can exceed k per level, exactly like
-    hh_summary's contract) — for feeding straight into
-    :func:`merge_quantile_summaries`, which pools and re-bounds anyway:
-    the streaming fold uses it to skip a redundant checkpoint +
-    re-compaction per micro-batch (and the skipped compactions don't
-    charge the budget twice).
-    """
-    if k < 2:
-        raise ValueError("k must be >= 2")
-    if rebound_partitions < 1:
-        # validate BEFORE the corpus-wide Arrow build scan (the
-        # shared_span_pairs fail-fast lesson)
-        raise ValueError("rebound_partitions must be >= 1")
-    vals = df.select(F.col(col).cast("double").alias("value"))
-    rows = vals.mapInPandas(_q_build_partition(int(k)), schema=_Q_SCHEMA)
-    pooled = rows.groupBy("meta", "level", "value").agg(
-        F.sum("cnt").alias("cnt")
-    )
-    if not rebound:
-        return pooled
-    return _rebound(pooled, int(k), int(rebound_partitions))
-
-
-def merge_quantile_summaries(
-    a: DataFrame, b: DataFrame | None, k: int = 4096,
-    rebound_partitions: int = 1,
-) -> DataFrame:
-    """Merge two quantile summaries into one with ≤ ``k`` items per
-    level: union the weighted point sets (groupBy sums duplicate
-    (level, value) mass and the 'n'/'err' meta budgets), then
-    re-compact overfull levels, charging the new compactions to the
-    budget — everything summary-sized. ``b=None`` re-bounds ``a`` alone
-    (the first-batch seed). Associative and commutative up to
-    compaction parity (brackets and mass are exact either way), so
-    batches fold in any order — the stored-state step of the
-    incremental/streaming loop, exactly like :func:`merge_hh_summaries`.
-    Build-``k`` drift between the sides is SAFE: budgets are carried
-    explicitly, k only tunes future tightness.
-    """
-    if k < 2:
-        raise ValueError("k must be >= 2")
-    if rebound_partitions < 1:
-        raise ValueError("rebound_partitions must be >= 1")
-    u = a if b is None else a.unionByName(b)
-    pooled = u.groupBy("meta", "level", "value").agg(
-        F.sum("cnt").alias("cnt")
-    )
-    return _rebound(pooled, int(k), int(rebound_partitions))
-
-
-def quantile_report(summary: DataFrame, qs: list[float]) -> DataFrame:
-    """Render a quantile summary at probe points ``qs`` (each in
-    [0, 1]): for each q, the retained value at weighted nearest-rank
-    ``max(1, ceil(q·n))`` — columns ``(q, value, rank_target, est_rank,
-    n_total, max_rank_err)`` with the guarantee ``|est_rank −
-    true_count_le(value)| ≤ max_rank_err`` (module header; ``est_rank``
-    is the summary's weighted count ≤ value, ``true_count_le`` the
-    data's). The window cumsum and the qs join run over SUMMARY-sized
-    rows (≤ k·L + |qs|) — the single-partition window is fine here for
-    the same reason merge_hh_summaries' k-row collect is. An empty
-    summary (n=0) returns every q with NULL value and est_rank 0."""
-    spark = summary.sparkSession
+def _kll_report(summary: DataFrame, keys: list[str], qs: list[float]):
+    """One row per (key group, q): ``(keys..., q, value, rank_target,
+    n_total, max_rank_err)``. ``qs`` rides the plan as one literal array
+    (``kll_sketch_get_quantile_double`` accepts literal ranks only) and
+    is exploded with its position, so an empty sketch — no non-null
+    value, where the built-in would raise — still reports every q, with
+    a NULL ``value``. ``rank_target`` is the nearest rank
+    ``max(1, ceil(q·n))``, with q·n rounded to 8 decimals first as the
+    sketch itself does (0.07·100 is 7.000000000000001 in doubles)."""
     if not qs:
         raise ValueError("qs must be non-empty")
     for q in qs:
         if not (0.0 <= float(q) <= 1.0):
             raise ValueError(f"quantile {q} outside [0, 1]")
-    meta = (
-        summary.filter(F.col("meta").isNotNull())
-        .groupBy()
-        .pivot("meta", [_META_ERR, _META_N])
-        .sum("cnt")
+    ranks = F.lit([float(q) for q in qs])
+    n = F.col("n_total")
+    return (
+        summary.select(
+            *keys,
+            "k",
+            "sketch",
+            F.kll_sketch_get_n_double("sketch").alias("n_total"),
+        )
         .select(
-            F.coalesce(F.col(_META_ERR), F.lit(0)).alias("max_rank_err"),
-            F.coalesce(F.col(_META_N), F.lit(0)).alias("n_total"),
+            *keys,
+            "k",
+            "n_total",
+            F.when(
+                n > 0, F.kll_sketch_get_quantile_double("sketch", ranks)
+            ).alias("_v"),
+            F.posexplode(ranks).alias("_i", "q"),
+        )
+        .select(
+            *keys,
+            "q",
+            F.get("_v", "_i").alias("value"),
+            F.greatest(
+                F.lit(1).cast("long"), F.ceil(F.round(F.col("q") * n, 8))
+            ).alias("rank_target"),
+            n,
+            F.when(n <= F.col("k"), F.lit(0).cast("long"))
+            .otherwise(F.ceil(F.lit(2.296) / F.pow("k", 0.9723) * n))
+            .alias("max_rank_err"),
         )
     )
-    w = Window.orderBy("value").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    data = (
-        summary.filter(F.col("meta").isNull())
-        # python-API shiftleft takes a literal shift only — SQL form
-        # accepts the level column (1L keeps it 64-bit)
-        .withColumn("_w", F.expr("cnt * shiftleft(1L, level)"))
-        # one row per VALUE before the cumsum: the same value can be
-        # retained at several levels, and a mid-tie crossing row would
-        # understate est_rank (= the summary's full count ≤ value)
-        .groupBy("value")
-        .agg(F.sum("_w").alias("_w"))
-        .withColumn("_cum", F.sum("_w").over(w))
-    )
-    from datamunging_spark.sources.io import local_table
 
-    qdf = local_table(spark, [(float(q),) for q in qs], "q double")
-    targets = qdf.crossJoin(F.broadcast(meta)).withColumn(
-        "rank_target",
-        F.greatest(
-            F.lit(1).cast("long"),
-            F.ceil(F.col("q") * F.col("n_total")).cast("long"),
-        ),
-    )
-    hits = (
-        targets.join(
-            data.select("value", "_cum"),
-            F.col("_cum") >= F.col("rank_target"),
-            "left",
-        )
-        .groupBy("q", "rank_target", "n_total", "max_rank_err")
-        .agg(
-            F.min_by("value", "_cum").alias("value"),
-            F.coalesce(F.min("_cum"), F.lit(0)).alias("est_rank"),
-        )
-    )
-    return hits.select(
-        "q", "value", "rank_target", "est_rank", "n_total", "max_rank_err"
-    )
+
+def quantile_summary(df: DataFrame, col: str, k: int = 4096) -> DataFrame:
+    """Build a mergeable QUANTILE summary of numeric ``col``: one row
+    ``(sketch, k)`` — a KLL sketch of the non-null, non-NaN values
+    (module header has the bounds). One lazy hash aggregate; the
+    exchange carries one partial sketch per partition. ``k`` must be in
+    [8, 65535]."""
+    return _kll_summary(df, [], col, k)
+
+
+def merge_quantile_summaries(a: DataFrame, b: DataFrame | None) -> DataFrame:
+    """Merge two quantile summaries: ``n`` adds exactly and the result
+    answers for the union, at the smaller of the two k. ``b=None``
+    returns ``a`` (the first-batch seed). Everything is summary-sized —
+    the stored-state step of the incremental/streaming fold, like
+    :func:`merge_hh_summaries`."""
+    return _kll_merge(a, b, [])
+
+
+def quantile_report(summary: DataFrame, qs: list[float]) -> DataFrame:
+    """Render a quantile summary at probe points ``qs`` (each in
+    [0, 1]): one row per q, ``(q, value, rank_target, n_total,
+    max_rank_err)``. ``value`` is the sketch's answer for nearest rank
+    ``rank_target``; with 99% confidence (exactly when
+    ``max_rank_err`` is 0) it satisfies
+    ``count(x < value) − max_rank_err < rank_target ≤ count(x ≤ value)
+    + max_rank_err``. An empty summary (n=0) returns every q with a
+    NULL value, ``n_total`` 0 and ``max_rank_err`` 0."""
+    return _kll_report(summary, [], qs)
 
 
 def quantiles_sketch(
@@ -816,14 +591,45 @@ def quantiles_sketch(
 # --- grouped quantile profiles -------------------------------------------
 #
 # The keyed sibling ("doc-length p50/p99 PER SOURCE, maintained
-# incrementally") — same compactor math per key group, same meta-row
-# budget accounting per key. Scale shape: the build pass holds one
-# compactor (≤ k items per level) per key PRESENT IN ITS PARTITION —
-# per-task memory is distinct-keys-per-partition × k items, the same
-# cardinality trade distinct_sketch documents (keys × 2^lgk bytes); the
-# re-bound hash-partitions the pooled summary BY KEY (no range sampling
-# to protect, so no checkpoint either), each key's whole summary
-# compacting in one task. Exchanges carry summaries only.
+# incrementally"): the same KLL aggregate grouped by key, so every
+# guarantee holds per key group. The exchange carries one partial
+# sketch per key per partition, never data. NULL keys are real groups
+# (plain groupBy semantics, no join anywhere).
+
+
+def grouped_quantile_summary(
+    df: DataFrame, keys: list[str], col: str, k: int = 4096
+) -> DataFrame:
+    """Per-key quantile summary: :func:`quantile_summary`'s contract per
+    key group — rows ``(keys..., sketch, k)``. Float/double KEY columns
+    are rejected up front like every grouped sketch face (see
+    :func:`_check_q_keys`); cast to a discrete type first. The exact
+    face is `relational.grouped_percentiles`."""
+    _check_q_keys(keys, df)
+    return _kll_summary(df, keys, col, k)
+
+
+def merge_grouped_quantile_summaries(
+    a: DataFrame, b: DataFrame | None, keys: list[str]
+) -> DataFrame:
+    """Merge two per-key summaries, outer on keys: a key on one side
+    passes through; on both, the sketches merge. ``b=None`` returns
+    ``a``."""
+    _check_q_keys(keys, a)
+    return _kll_merge(a, b, keys)
+
+
+def grouped_quantile_report(
+    summary: DataFrame, keys: list[str], qs: list[float]
+) -> DataFrame:
+    """Render a per-key summary at probe points ``qs``: one row per
+    (key group, q) — ``(keys..., q, value, rank_target, n_total,
+    max_rank_err)`` with :func:`quantile_report`'s bracket per key."""
+    _check_q_keys(keys)
+    return _kll_report(summary, keys, qs)
+
+
+# --- shared helpers of the grouped faces ----------------------------------
 
 
 def _norm_key(kt):
@@ -859,93 +665,16 @@ def _nullsafe_key_cond(left_alias: str, right_alias: str, keys):
     return cond
 
 
-def _grouped_schema(df: DataFrame, keys: list[str]) -> StructType:
-    return StructType(
-        [df.schema[name] for name in keys] + list(_Q_SCHEMA.fields)
-    )
-
-
-def _q_grouped_build_partition(keys: list[str], k: int):
-    """Per-partition keyed compactor build: dict key-tuple → state."""
-
-    def run(batches):
-        import numpy as np
-        import pandas as pd
-
-        states = {}  # key tuple -> [levels, parity, err, n]
-        for pdf in batches:
-            for kt, grp in pdf.groupby(keys, dropna=False, sort=False):
-                kt = _norm_key(kt)
-                vals = grp["value"].dropna().to_numpy(dtype="float64")
-                if not len(vals):
-                    continue
-                st = states.get(kt)
-                if st is None:
-                    st = [[np.empty(0, dtype="float64")], [0], 0, 0]
-                    states[kt] = st
-                st[3] += len(vals)
-                st[0][0] = np.concatenate([st[0][0], vals])
-                st[2] = _compact_levels(st[0], st[1], k, st[2])
-        frames = []
-        for kt, (levels, _parity, err, n) in states.items():
-            out = _emit_summary(levels, err, n)
-            for name, kv in zip(keys, kt):
-                out.insert(0, name, [kv] * len(out))
-            frames.append(out[keys + ["value", "level", "cnt", "meta"]])
-        if frames:
-            yield pd.concat(frames, ignore_index=True)
-
-    return run
-
-
-def _q_grouped_recompact_partition(keys: list[str], k: int):
-    """Re-bound each key group of a hash-by-key shard independently;
-    per-key meta rows ride the same hash so they pass through here."""
-
-    def run(batches):
-        import pandas as pd
-
-        pooled = [b for b in batches]
-        if not pooled:
-            return
-        pdf = pd.concat(pooled, ignore_index=True)
-        frames = []
-        for kt, grp in pdf.groupby(keys, dropna=False, sort=False):
-            kt = _norm_key(kt)
-            out = _recompact_frame(
-                grp[grp["meta"].isna()], grp[grp["meta"].notna()], k
-            )
-            for name, kv in zip(keys, kt):
-                out.insert(0, name, [kv] * len(out))
-            frames.append(out[keys + ["value", "level", "cnt", "meta"]])
-        yield pd.concat(frames, ignore_index=True)
-
-    return run
-
-
-def _grouped_rebound(pooled: DataFrame, keys: list[str], k: int) -> DataFrame:
-    shards = pooled.repartition(*[F.col(c) for c in keys])
-    rebound = shards.mapInPandas(
-        _q_grouped_recompact_partition(keys, k),
-        schema=_grouped_schema(pooled, keys),
-    )
-    return (
-        rebound.groupBy(*keys, "meta", "level", "value")
-        .agg(F.sum("cnt").alias("cnt"))
-        .localCheckpoint()
-    )
-
-
 _RESERVED_Q_COLS = frozenset(
     {
-        # summary columns (both grouped families)
-        "value", "level", "cnt", "meta",
+        # summary columns (heavy-hitter and quantile families)
+        "value", "cnt", "meta", "sketch", "k",
         # report output columns (quantile + heavy-hitter surfaces)
-        "q", "rank_target", "est_rank", "n_total", "max_rank_err",
+        "q", "rank_target", "n_total", "max_rank_err",
         "count_lo", "count_hi", "max_err",
         # meta pivot labels (become columns in the reports) and the
         # internal temp columns of the re-bound/report plans
-        "dec", "n", "err", "_rk", "_t", "_w", "_cum",
+        "dec", "n", "_rk", "_t", "_v", "_i",
     }
 )
 
@@ -977,8 +706,6 @@ def _check_q_keys(keys, df: DataFrame | None = None) -> None:
             f"columns {sorted(_RESERVED_Q_COLS)} — rename before grouping"
         )
     if df is not None:
-        from pyspark.sql.types import DoubleType, FloatType
-
         floaty = [
             c for c in keys
             if isinstance(df.schema[c].dataType, (FloatType, DoubleType))
@@ -990,136 +717,6 @@ def _check_q_keys(keys, df: DataFrame | None = None) -> None:
                 "conflate with NULL in the Arrow passes, diverging "
                 "from Spark groupBy); cast to string/decimal/int first"
             )
-
-
-def grouped_quantile_summary(
-    df: DataFrame, keys: list[str], col: str, k: int = 4096,
-    rebound: bool = True,
-) -> DataFrame:
-    """Per-key quantile summary: :func:`quantile_summary`'s contract
-    with every guarantee (exact mass conservation, carried rank-error
-    budget, ≤ k items per level after re-bound) holding PER KEY GROUP —
-    rows ``(keys..., value, level, cnt, meta)``. NULL keys are real
-    groups (null-safe throughout, the incremental_rollup lesson);
-    float/double KEY columns are rejected up front — NaN would
-    conflate with NULL inside the Arrow passes (see
-    :func:`_check_q_keys`), cast to a discrete type first. Use
-    for per-source / per-language corpus profiles; at very high key
-    cardinality note the per-task build state is
-    distinct-keys-per-partition × k items (pre-partition by key or fall
-    back to `relational.grouped_percentiles` when each group fits a
-    sort)."""
-    if k < 2:
-        raise ValueError("k must be >= 2")
-    _check_q_keys(keys, df)
-    vals = df.select(
-        *[F.col(c) for c in keys], F.col(col).cast("double").alias("value")
-    )
-    rows = vals.mapInPandas(
-        _q_grouped_build_partition(keys, int(k)),
-        schema=_grouped_schema(vals, keys),
-    )
-    pooled = rows.groupBy(*keys, "meta", "level", "value").agg(
-        F.sum("cnt").alias("cnt")
-    )
-    if not rebound:
-        return pooled  # lazy merge input, same contract as the ungrouped
-    return _grouped_rebound(pooled, keys, int(k))
-
-
-def merge_grouped_quantile_summaries(
-    a: DataFrame, b: DataFrame | None, keys: list[str], k: int = 4096
-) -> DataFrame:
-    """Merge two per-key summaries (outer on keys — a key on one side
-    passes through re-bounded; on both, masses and budgets add and
-    overfull levels re-compact). ``b=None`` re-bounds ``a`` alone."""
-    if k < 2:
-        raise ValueError("k must be >= 2")
-    _check_q_keys(keys, a)
-    u = a if b is None else a.unionByName(b)
-    pooled = u.groupBy(*keys, "meta", "level", "value").agg(
-        F.sum("cnt").alias("cnt")
-    )
-    return _grouped_rebound(pooled, keys, int(k))
-
-
-def grouped_quantile_report(
-    summary: DataFrame, keys: list[str], qs: list[float]
-) -> DataFrame:
-    """Render a per-key summary at probe points ``qs``: one row per
-    (key group, q) — ``(keys..., q, value, rank_target, est_rank,
-    n_total, max_rank_err)`` with the per-key bracket guarantee. The
-    window and joins are summary-sized and partitioned BY KEY (no
-    single-partition window here, unlike the ungrouped report)."""
-    spark = summary.sparkSession
-    _check_q_keys(keys)
-    if not qs:
-        raise ValueError("qs must be non-empty")
-    for q in qs:
-        if not (0.0 <= float(q) <= 1.0):
-            raise ValueError(f"quantile {q} outside [0, 1]")
-    meta = (
-        summary.filter(F.col("meta").isNotNull())
-        .groupBy(*keys)
-        .pivot("meta", [_META_ERR, _META_N])
-        .sum("cnt")
-        .select(
-            *keys,
-            F.coalesce(F.col(_META_ERR), F.lit(0)).alias("max_rank_err"),
-            F.coalesce(F.col(_META_N), F.lit(0)).alias("n_total"),
-        )
-    )
-    w = (
-        Window.partitionBy(*[F.col(c) for c in keys])
-        .orderBy("value")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    data = (
-        summary.filter(F.col("meta").isNull())
-        .withColumn("_w", F.expr("cnt * shiftleft(1L, level)"))
-        .groupBy(*keys, "value")
-        .agg(F.sum("_w").alias("_w"))
-        .withColumn("_cum", F.sum("_w").over(w))
-        .select(*keys, "value", "_cum")
-        .alias("d")
-    )
-    from datamunging_spark.sources.io import local_table
-
-    qdf = local_table(spark, [(float(q),) for q in qs], "q double")
-    targets = (
-        meta.crossJoin(F.broadcast(qdf))
-        .withColumn(
-            "rank_target",
-            F.greatest(
-                F.lit(1).cast("long"),
-                F.ceil(F.col("q") * F.col("n_total")).cast("long"),
-            ),
-        )
-        .alias("t")
-    )
-    hits = (
-        targets.join(
-            data,
-            _nullsafe_key_cond("t", "d", keys)
-            & (F.col("d._cum") >= F.col("t.rank_target")),
-            "left",
-        )
-        .groupBy(
-            *[F.col(f"t.{c}") for c in keys],
-            "t.q",
-            "t.rank_target",
-            "t.n_total",
-            "t.max_rank_err",
-        )
-        .agg(
-            F.min_by("d.value", "d._cum").alias("value"),
-            F.coalesce(F.min("d._cum"), F.lit(0)).alias("est_rank"),
-        )
-    )
-    return hits.select(
-        *keys, "q", "value", "rank_target", "est_rank",
-        "n_total", "max_rank_err",
-    )
 
 
 # --- grouped heavy hitters -------------------------------------------------

@@ -2165,44 +2165,41 @@ def streaming_quantiles(
     :func:`streaming_heavy_hitters`, distinct =
     :func:`streaming_distinct_counts`): each micro-batch is summarized
     by :func:`~datamunging_spark.operators.sketch.quantile_summary`
-    (one Arrow compactor pass, ≤ k items per level) and folded into the
+    (one KLL sketch, built by a JVM hash aggregate) and folded into the
     stored summary with
     :func:`~datamunging_spark.operators.sketch.merge_quantile_summaries`
-    (summary-sized union + re-compaction; stored state stays ≤ k items
-    per level forever). Mass conservation and the carried rank-error
-    budget survive every fold, so
+    (a summary-sized sketch merge; the stored state stays one O(k)-item
+    sketch forever). ``n`` adds exactly across folds and
+    the KLL bound holds for the merged sketch, so
     ``quantile_report(read_table_version(...), qs)`` over any committed
-    version brackets the TRUE stream-so-far ranks.
+    version answers for the stream so far.
 
     ``keys`` switches to the PER-KEY profile (grouped_quantile_summary
     / merge_grouped_quantile_summaries — "p99 doc length per source over
     the whole crawl"); render with ``grouped_quantile_report``.
 
     Exactly-once mirrors :func:`streaming_heavy_hitters`: the fold is
-    NOT replay-idempotent (re-merging a batch's summary double-counts
-    its mass), so each committed version carries its micro-batch tag
-    and a replayed batch no-ops; versions vacuum to ``keep_last``.
-    Drains with ``availableNow``; returns the latest committed version.
+    NOT replay-idempotent (re-merging a batch's sketch double-counts
+    it), so each committed version carries its micro-batch tag and a
+    replayed batch no-ops; versions vacuum to ``keep_last``. Drains
+    with ``availableNow``; returns the latest committed version.
     """
     from datamunging_spark.operators.sketch import (
+        _check_kll_k,
         grouped_quantile_summary,
         merge_grouped_quantile_summaries,
         merge_quantile_summaries,
         quantile_summary,
     )
 
-    # rebound=False: the merge pools and re-bounds anyway, so the batch
-    # side skips its own checkpoint + re-compaction (one fewer eager job
-    # per fold, and the budget isn't charged for a compaction the merge
-    # would redo — the r9 second-review finding)
+    _check_kll_k(k)  # before the stream starts, not inside a batch
     if keys:
         fold = lambda state, batch: merge_grouped_quantile_summaries(  # noqa: E731
-            grouped_quantile_summary(batch, keys, col, k, rebound=False),
-            state, keys, k,
+            grouped_quantile_summary(batch, keys, col, k), state, keys
         )
     else:
         fold = lambda state, batch: merge_quantile_summaries(  # noqa: E731
-            quantile_summary(batch, col, k, rebound=False), state, k
+            quantile_summary(batch, col, k), state
         )
     return _versioned_stream_fold(
         values_stream,
@@ -2210,5 +2207,5 @@ def streaming_quantiles(
         fold,
         checkpoint_path,
         keep_last,
-        skip_applied=True,  # summary mass double-counts on re-apply
+        skip_applied=True,  # a re-merged sketch double-counts
     )

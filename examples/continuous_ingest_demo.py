@@ -207,8 +207,8 @@ def main() -> None:
     )
 
     # 7. streaming quantiles: the feed's latency profile as a mergeable
-    # compactor summary — p50/p99 over the whole stream so far, with the
-    # carried rank-error budget printed next to the estimates
+    # KLL sketch — p50/p99 over the whole stream so far, with the rank
+    # error bound (99% confidence; 0 while n <= k) printed next to them
     from datamunging_spark.operators.sketch import quantile_report
     from datamunging_spark.streaming import streaming_quantiles
 

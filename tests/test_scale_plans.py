@@ -395,33 +395,52 @@ def test_quantile_summary_never_sorts_or_shuffles_the_data_column(
     spark, tables
 ):
     """X8 quantile sketch scale shape: the ONLY thing that crosses an
-    exchange is the summary (value/level/cnt rows out of the Arrow
-    compactor pass) — the raw column is never globally sorted (that
-    would be the exact-percentile plan) and never hashed into a
-    data-sized shuffle. Pinned on the lazy plan BEFORE construction
-    materializes it: the build's input side must show the Arrow eval
-    directly over the scan with no Sort/Exchange between."""
-    from datamunging_spark.operators.sketch import quantile_summary
+    exchange is the partial KLL sketch state — the raw column is never
+    globally sorted (that would be the exact-percentile plan), never
+    hashed into a data-sized shuffle, and never leaves the JVM for a
+    Python or Arrow worker. Pinned on the ungrouped and grouped
+    summaries and on the report over them."""
+    import re
 
-    # rebound=False returns the REAL lazy build plan (the default path
-    # localCheckpoints eagerly, which would hide the build side from
-    # explain) — this pins quantile_summary itself, not a hand-rolled
-    # lookalike (r9 second-review finding)
-    rows = quantile_summary(
-        tables["lineitem"], "l_extendedprice", k=64, rebound=False
+    from datamunging_spark.operators.sketch import (
+        grouped_quantile_report,
+        grouped_quantile_summary,
+        quantile_report,
+        quantile_summary,
     )
-    plan = _plan(rows)
-    assert "MapInPandas" in plan
-    # no sort anywhere (a global sort would be the exact-percentile
-    # plan), and the only exchange is the summary-sized aggregate ABOVE
-    # the Arrow pass — never a data-sized shuffle below it
-    assert "Sort " not in plan and "SortExec" not in plan
-    # tree section only (the node-detail section re-mentions every
-    # operator); in the tree, children print BELOW their parent, so
-    # nothing after the MapInPandas line may be an Exchange
-    tree = plan.split("\n\n")[0]
-    below_arrow = tree.split("MapInPandas")[-1]
-    assert "Exchange" not in below_arrow
+
+    li = tables["lineitem"]
+    plans = [
+        quantile_summary(li, "l_extendedprice", k=64),
+        grouped_quantile_summary(
+            li, ["l_returnflag"], "l_extendedprice", k=64
+        ),
+        quantile_report(
+            quantile_summary(li, "l_extendedprice", k=64), [0.5, 0.99]
+        ),
+        grouped_quantile_report(
+            grouped_quantile_summary(
+                li, ["l_returnflag"], "l_extendedprice", k=64
+            ),
+            ["l_returnflag"],
+            [0.5],
+        ),
+    ]
+    for df in plans:
+        plan = _plan(df)
+        assert not re.search(r"Sort|Python|Arrow|MapInPandas", plan), plan
+        # tree section only (the node-detail section re-mentions every
+        # operator); in the tree a child prints on the line below its
+        # parent, so each Exchange's input is the next line
+        tree = plan.split("\n\n")[0].splitlines()
+        exchanges = [i for i, line in enumerate(tree) if "Exchange" in line]
+        assert len(exchanges) == 1, plan
+        child = tree[exchanges[0] + 1]
+        assert "ObjectHashAggregate" in child, plan
+        node = re.search(r"\((\d+)\)", child).group(1)
+        detail = plan.split(f"({node}) ObjectHashAggregate")[1]
+        detail = detail.split("\n\n")[0]
+        assert "partial_kll_sketch_agg_double" in detail, detail
 
 
 def test_executed_plan_rows_reads_runtime_metrics(spark, tables):

@@ -2,6 +2,9 @@
 Misra-Gries guarantees (superset of exact, count bracketing, error
 floor), exactness below k, empty-input robustness."""
 
+import math
+
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -476,71 +479,83 @@ def test_ngram_sketch_valve_matches_exact(spark):
 
 
 # ---------------------------------------------------------------------------
-# Quantile summaries (MRL/KLL-family compactors)
+# Quantile summaries (Spark's built-in KLL sketch)
 # ---------------------------------------------------------------------------
 
 
-def _true_count_le(values, v):
-    return sum(1 for x in values if x <= v)
+def _kll_err(n, k):
+    """DataSketches' single-query KLL rank error at 99% confidence, in
+    ranks: 0 while the sketch is exact (n <= k), else ceil(eps(k)*n)."""
+    return 0 if n <= k else math.ceil(2.296 / k**0.9723 * n)
+
+
+def _assert_quantile_row(values, r, k):
+    """Check one report row against numpy exact ranks of ``values`` (the
+    non-NULL, non-NaN inputs): n and the rank target are exact, the
+    budget is eps(k)*n (never wider), and the answer sits in the
+    tie-aware bracket count(x < v) - err < rank_target <= count(x <= v)
+    + err — the exact nearest-rank check when err is 0."""
+    sv = np.sort(np.asarray(values, dtype="float64"))
+    n = len(sv)
+    assert r.n_total == n
+    assert r.rank_target == max(1, math.ceil(round(r.q * n, 8)))
+    assert r.max_rank_err == _kll_err(n, k)
+    lt = int(np.searchsorted(sv, r.value, "left"))
+    le = int(np.searchsorted(sv, r.value, "right"))
+    err = r.max_rank_err
+    assert lt - err < r.rank_target <= le + err, (r.q, r.value, lt, le, err)
 
 
 def test_quantile_sketch_exact_below_k(spark):
-    """n <= k and one partition: no compaction ever fires, the budget is
-    zero, and every probe returns the exact nearest-rank quantile."""
-    import math
-
+    """n <= k: nothing is ever compacted, even across partial sketches
+    merged from several partitions, so the budget is zero and every
+    probe returns the exact nearest-rank quantile (ties included)."""
     from datamunging_spark.operators.sketch import quantiles_sketch
 
     vals = [float(x) for x in [7, 1, 9, 3, 3, 5, 2, 8, 4, 6]]
-    df = spark.createDataFrame([(v,) for v in vals], "x double").coalesce(1)
+    df = spark.createDataFrame([(v,) for v in vals], "x double").repartition(3)
     qs = [0.0, 0.1, 0.25, 0.5, 0.9, 1.0]
     out = {r.q: r for r in quantiles_sketch(df, "x", qs, k=64).collect()}
+    assert sorted(out) == qs
     s = sorted(vals)
     for q in qs:
         r = out[q]
         assert r.max_rank_err == 0
-        assert r.n_total == 10
         target = max(1, math.ceil(q * 10))
         assert r.rank_target == target
         assert r.value == s[target - 1], q
+    # the boundary: exactly k values over 4 partitions is still exact
+    k = 64
+    edge = [float((i * 37) % k) for i in range(k)]
+    df = spark.createDataFrame([(v,) for v in edge], "x double").repartition(4)
+    for r in quantiles_sketch(df, "x", [0.07, 0.5, 0.93], k=k).collect():
+        assert r.max_rank_err == 0
+        _assert_quantile_row(edge, r, k)
 
 
 def test_quantile_summary_mass_is_conserved(spark):
-    """Sum(cnt * 2^level) == n exactly — compaction promotes pairs and
-    parks the odd leftover, it never loses mass (module invariant)."""
+    """The summary is one (sketch, k) row whose total weight n is the
+    exact non-NULL count — partial sketches merged across partitions
+    never lose or double mass."""
     from datamunging_spark.operators.sketch import quantile_summary
 
     df = spark.range(0, 5000).select(
         (F.col("id") % 997).cast("double").alias("x")
     ).repartition(8)
     s = quantile_summary(df, "x", k=32)
-    mass = (
-        s.filter(F.col("meta").isNull())
-        .agg(F.sum(F.expr("cnt * shiftleft(1L, level)")).alias("m"))
-        .collect()[0]["m"]
-    )
-    n = s.filter(F.col("meta") == "n").agg(F.sum("cnt")).collect()[0][0]
-    assert mass == n == 5000
-    # the stored state is re-bounded: <= k items per level
-    per_level = {
-        r.level: r.items
-        for r in s.filter(F.col("meta").isNull())
-        .groupBy("level")
-        .agg(F.sum("cnt").alias("items"))
-        .collect()
-    }
-    assert all(items <= 32 for items in per_level.values()), per_level
+    assert [f.name for f in s.schema.fields] == ["sketch", "k"]
+    rows = s.select(
+        F.kll_sketch_get_n_double("sketch").alias("n"), "k"
+    ).collect()
+    assert [(r.n, r.k) for r in rows] == [(5000, 32)]
 
 
 def test_quantile_sketch_rank_bracket_holds(spark):
-    """The carried budget is a true bracket: for every reported value,
-    |est_rank - true count<=value| <= max_rank_err, and the budget obeys
-    the n*L/k worst case."""
-    import math
-
+    """Adversarially lumpy data (two dense tie clusters and a sparse
+    tail) far above k: every answer sits in the tie-aware bracket of
+    the exact ranks within eps(k)*n."""
     from datamunging_spark.operators.sketch import quantiles_sketch
 
-    # adversarially lumpy: two dense clusters + a sparse tail
     vals = (
         [float(i % 50) for i in range(4000)]
         + [1000.0 + (i % 25) for i in range(4000)]
@@ -550,20 +565,16 @@ def test_quantile_sketch_rank_bracket_holds(spark):
     k = 64
     qs = [0.01, 0.25, 0.5, 0.75, 0.99]
     rows = quantiles_sketch(df, "x", qs, k=k).collect()
-    n = len(vals)
-    levels = math.ceil(math.log2(max(n / k, 2))) + 2
+    assert sorted(r.q for r in rows) == qs
     for r in rows:
-        assert r.n_total == n
-        true_le = _true_count_le(vals, r.value)
-        assert abs(r.est_rank - true_le) <= r.max_rank_err, (r.q, r.value)
-        # first-crossing pick: est_rank reaches the target
-        assert r.est_rank >= r.rank_target
-        assert r.max_rank_err <= n * levels / k
+        assert r.max_rank_err > 0
+        _assert_quantile_row(vals, r, k)
 
 
 def test_merge_quantile_summaries_budget_covers_union(spark):
-    """sketch(A) merged with sketch(B): mass adds (n = nA + nB) and the
-    report still brackets the true ranks of A UNION B."""
+    """sketch(A) merged with sketch(B): n adds (n = nA + nB), the
+    merged report answers for A UNION B, and the merged state carries
+    the smaller k (its bound is the smaller k's)."""
     from datamunging_spark.operators.sketch import (
         merge_quantile_summaries,
         quantile_report,
@@ -575,56 +586,77 @@ def test_merge_quantile_summaries_budget_covers_union(spark):
     a = spark.createDataFrame([(v,) for v in a_vals], "x double").repartition(4)
     b = spark.createDataFrame([(v,) for v in b_vals], "x double").repartition(4)
     merged = merge_quantile_summaries(
-        quantile_summary(a, "x", k=32), quantile_summary(b, "x", k=32), k=32
+        quantile_summary(a, "x", k=32), quantile_summary(b, "x", k=64)
     )
+    assert merged.select("k").collect()[0].k == 32
     union = a_vals + b_vals
     rows = quantile_report(merged, [0.1, 0.5, 0.6, 0.9]).collect()
     for r in rows:
-        assert r.n_total == len(union)
-        true_le = _true_count_le(union, r.value)
-        assert abs(r.est_rank - true_le) <= r.max_rank_err, r.q
-    # per-level item bound survives the merge
-    per_level = (
-        merged.filter(F.col("meta").isNull())
-        .groupBy("level")
-        .agg(F.sum("cnt").alias("items"))
-        .collect()
-    )
-    assert all(r.items <= 32 for r in per_level)
+        _assert_quantile_row(union, r, 32)
+    # b=None is the first-batch seed: the summary itself
+    seed = quantile_summary(a, "x", k=32)
+    assert merge_quantile_summaries(seed, None) is seed
 
 
 def test_quantile_sketch_nulls_empty_and_validation(spark):
     from datamunging_spark.operators.sketch import (
+        grouped_quantile_summary,
         quantile_report,
         quantile_summary,
         quantiles_sketch,
     )
 
     df = spark.createDataFrame(
-        [(1.0,), (None,), (3.0,), (None,), (2.0,)], "x double"
+        [(1.0,), (None,), (3.0,), (float("nan"),), (None,), (2.0,)],
+        "x double",
     )
     out = {r.q: r for r in quantiles_sketch(df, "x", [0.5, 1.0], k=16).collect()}
-    assert out[0.5].n_total == 3  # NULLs excluded from n
+    assert out[0.5].n_total == 3  # NULL and NaN excluded from n
     assert out[0.5].value == 2.0
     assert out[1.0].value == 3.0
 
+    # empty and all-NULL inputs report every q with a NULL value
     empty = spark.createDataFrame([], "x double")
-    rows = {r.q: r for r in quantiles_sketch(empty, "x", [0.5], k=16).collect()}
-    assert rows[0.5].value is None
-    assert rows[0.5].n_total == 0
-    assert rows[0.5].est_rank == 0
+    nulls = spark.createDataFrame([(None,), (float("nan"),)], "x double")
+    for frame in (empty, nulls):
+        rows = quantiles_sketch(frame, "x", [0.0, 0.5, 1.0], k=16).collect()
+        assert sorted(r.q for r in rows) == [0.0, 0.5, 1.0]
+        for r in rows:
+            assert r.value is None
+            assert r.n_total == 0
+            assert r.max_rank_err == 0
 
-    with pytest.raises(ValueError):
-        quantile_summary(df, "x", k=1)
-    with pytest.raises(ValueError):
-        quantile_report(quantile_summary(df, "x", k=16), [1.5])
+    # bad k or q raises ValueError before any Spark job runs
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    s = quantile_summary(df, "x", k=16)
+    bad_calls = [
+        lambda: quantile_summary(df, "x", k=1),
+        lambda: quantile_summary(df, "x", k=7),
+        lambda: quantile_summary(df, "x", k=65536),
+        lambda: quantiles_sketch(df, "x", [0.5], k=7),
+        lambda: grouped_quantile_summary(
+            df.withColumn("g", F.lit("a")), ["g"], "x", k=65536
+        ),
+        lambda: quantile_report(s, [1.5]),
+        lambda: quantile_report(s, [-0.1]),
+        lambda: quantile_report(s, []),
+    ]
+    for call in bad_calls:
+        with pytest.raises(ValueError):
+            call()
+    assert set(tracker.getJobIdsForGroup(None)) == before
+    # both ends of KLL's k range are accepted
+    for k in (8, 65535):
+        r = quantiles_sketch(df, "x", [0.5], k=k).collect()[0]
+        assert (r.value, r.n_total, r.max_rank_err) == (2.0, 3, 0)
 
 
 @pytest.mark.slow
 def test_streaming_quantiles_folds_and_replays(spark, tmp_path):
-    """foreachBatch quantile maintenance: two micro-batch folds bracket
-    the full-stream truth; a lost checkpoint replay no-ops (batch tags
-    -- the fold double-counts mass if re-applied); retention vacuums."""
+    """foreachBatch quantile maintenance: two micro-batch folds answer
+    for the full stream within the bracket; a lost checkpoint replay
+    no-ops (batch tags — the fold double-counts if re-applied)."""
     from datamunging_spark.operators.sketch import quantile_report
     from datamunging_spark.sources.versioned import read_table_version
     from datamunging_spark.streaming import streaming_quantiles
@@ -656,19 +688,20 @@ def test_streaming_quantiles_folds_and_replays(spark, tmp_path):
     rows = quantile_report(
         read_table_version(spark, table), [0.25, 0.5, 0.75]
     ).collect()
+    assert len(rows) == 3
     for r in rows:
-        assert r.n_total == 2000
-        true_le = _true_count_le(union, r.value)
-        assert abs(r.est_rank - true_le) <= r.max_rank_err
+        _assert_quantile_row(union, r, 64)
     # lost checkpoint: replays no-op (n_total would double otherwise)
     assert drain("q_ckpt2") == 2
     rows2 = quantile_report(read_table_version(spark, table), [0.5]).collect()
     assert rows2[0].n_total == 2000
+    with pytest.raises(ValueError):
+        streaming_quantiles(None, "x", table, k=4)
 
 
 def test_grouped_quantile_sketch_exact_below_k(spark):
-    """Two key groups with disjoint distributions, n <= k each, one
-    partition: zero budget and exact per-key nearest-rank quantiles."""
+    """Two key groups with disjoint distributions, n <= k each: zero
+    budget and exact per-key nearest-rank quantiles."""
     from datamunging_spark.operators.sketch import (
         grouped_quantile_report,
         grouped_quantile_summary,
@@ -677,7 +710,7 @@ def test_grouped_quantile_sketch_exact_below_k(spark):
     rows = [("a", float(v)) for v in range(100)] + [
         ("b", 1000.0 + v) for v in range(50)
     ]
-    df = spark.createDataFrame(rows, "src string, x double").coalesce(1)
+    df = spark.createDataFrame(rows, "src string, x double").repartition(3)
     s = grouped_quantile_summary(df, ["src"], "x", k=256)
     out = {
         (r.src, r.q): r
@@ -693,9 +726,9 @@ def test_grouped_quantile_sketch_exact_below_k(spark):
 
 
 def test_grouped_quantile_bracket_and_mass_per_key(spark):
-    """Per-key guarantees on multi-partition data: mass == n_key
-    exactly, bracket within the per-key carried budget, state <= k
-    items per level per key."""
+    """Per-key guarantees on multi-partition data far above k: n is the
+    exact per-key count, one summary row per key, and every answer sits
+    in that key's tie-aware bracket within eps(k)*n_key."""
     from datamunging_spark.operators.sketch import (
         grouped_quantile_report,
         grouped_quantile_summary,
@@ -706,33 +739,25 @@ def test_grouped_quantile_bracket_and_mass_per_key(spark):
     ]
     df = spark.createDataFrame(rows, "src string, x double").repartition(8)
     s = grouped_quantile_summary(df, ["src"], "x", k=32)
-    mass = {
-        r.src: r.m
-        for r in s.filter(F.col("meta").isNull())
-        .groupBy("src")
-        .agg(F.sum(F.expr("cnt * shiftleft(1L, level)")).alias("m"))
-        .collect()
+    assert [f.name for f in s.schema.fields] == ["src", "sketch", "k"]
+    n_key = {
+        r.src: r.n
+        for r in s.select(
+            "src", F.kll_sketch_get_n_double("sketch").alias("n")
+        ).collect()
     }
-    assert mass == {"a": 6000, "b": 3000}
-    per_level = (
-        s.filter(F.col("meta").isNull())
-        .groupBy("src", "level")
-        .agg(F.sum("cnt").alias("items"))
-        .collect()
-    )
-    assert all(r.items <= 32 for r in per_level)
-    truth = {"a": sorted(float(i % 500) for i in range(6000)),
-             "b": sorted(float(2000 + i % 100) for i in range(3000))}
-    for r in grouped_quantile_report(s, ["src"], [0.25, 0.5, 0.9]).collect():
-        vals = truth[r.src]
-        true_le = sum(1 for x in vals if x <= r.value)
-        assert abs(r.est_rank - true_le) <= r.max_rank_err, (r.src, r.q)
-        assert r.n_total == len(vals)
+    assert n_key == {"a": 6000, "b": 3000}
+    truth = {"a": [float(i % 500) for i in range(6000)],
+             "b": [float(2000 + i % 100) for i in range(3000)]}
+    rep = grouped_quantile_report(s, ["src"], [0.25, 0.5, 0.9]).collect()
+    assert len(rep) == 6
+    for r in rep:
+        _assert_quantile_row(truth[r.src], r, 32)
 
 
 def test_merge_grouped_quantile_summaries_outer_on_keys(spark):
-    """A key on one side passes through; a shared key's masses and
-    budgets add and the merged bracket covers the union."""
+    """A key on one side passes through; a shared key's sketches merge
+    and the merged answer covers the union."""
     from datamunging_spark.operators.sketch import (
         grouped_quantile_report,
         grouped_quantile_summary,
@@ -752,21 +777,17 @@ def test_merge_grouped_quantile_summaries_outer_on_keys(spark):
         grouped_quantile_summary(a, ["src"], "x", k=32),
         grouped_quantile_summary(b, ["src"], "x", k=32),
         ["src"],
-        k=32,
     )
     rep = {
         (r.src, r.q): r
         for r in grouped_quantile_report(m, ["src"], [0.5]).collect()
     }
-    assert rep[("only_a", 0.5)].n_total == 300
-    shared = rep[("shared", 0.5)]
-    assert shared.n_total == 3000
-    union = sorted(
-        [float(i % 100) for i in range(2000)]
-        + [500.0 + i % 100 for i in range(1000)]
-    )
-    true_le = sum(1 for x in union if x <= shared.value)
-    assert abs(shared.est_rank - true_le) <= shared.max_rank_err
+    assert set(rep) == {("only_a", 0.5), ("shared", 0.5)}
+    _assert_quantile_row([float(i) for i in range(300)], rep[("only_a", 0.5)], 32)
+    union = [float(i % 100) for i in range(2000)] + [
+        500.0 + i % 100 for i in range(1000)
+    ]
+    _assert_quantile_row(union, rep[("shared", 0.5)], 32)
 
 
 def test_grouped_quantile_null_key_group_and_validation(spark):
@@ -776,7 +797,8 @@ def test_grouped_quantile_null_key_group_and_validation(spark):
     )
 
     df = spark.createDataFrame(
-        [("a", 1.0), (None, 10.0), (None, 20.0), ("a", 3.0)],
+        [("a", 1.0), (None, 10.0), (None, 20.0), ("a", 3.0),
+         ("c", None), ("c", float("nan"))],
         "src string, x double",
     )
     s = grouped_quantile_summary(df, ["src"], "x", k=16)
@@ -787,6 +809,9 @@ def test_grouped_quantile_null_key_group_and_validation(spark):
     assert out[(None, 1.0)].value == 20.0  # NULL key is a real group
     assert out[(None, 1.0)].n_total == 2
     assert out[("a", 1.0)].value == 3.0
+    # a group with no countable value still reports, with a NULL value
+    c = out[("c", 1.0)]
+    assert (c.value, c.n_total, c.max_rank_err) == (None, 0, 0)
     with pytest.raises(ValueError):
         grouped_quantile_summary(df, [], "x")
     with pytest.raises(ValueError):
@@ -796,7 +821,8 @@ def test_grouped_quantile_null_key_group_and_validation(spark):
 @pytest.mark.slow
 def test_streaming_grouped_quantiles_folds(spark, tmp_path):
     """keys= switches the streaming fold to the per-key profile; two
-    folds bracket the per-key stream truth and replays no-op."""
+    folds answer for the per-key stream within the bracket and replays
+    no-op."""
     from datamunging_spark.operators.sketch import grouped_quantile_report
     from datamunging_spark.sources.versioned import read_table_version
     from datamunging_spark.streaming import streaming_quantiles
@@ -831,77 +857,15 @@ def test_streaming_grouped_quantiles_folds(spark, tmp_path):
             read_table_version(spark, table), ["src"], [0.5]
         ).collect()
     }
-    a = rep[("a", 0.5)]
-    assert a.n_total == 800  # both micro-batches folded
-    truth_a = sorted([float(i) for i in range(400)] + [400.0 + i for i in range(400)])
-    true_le = sum(1 for x in truth_a if x <= a.value)
-    assert abs(a.est_rank - true_le) <= a.max_rank_err
-    assert rep[("b", 0.5)].n_total == 200
-    # lost checkpoint: replays no-op (mass would double otherwise)
+    truth_a = [float(i) for i in range(400)] + [400.0 + i for i in range(400)]
+    _assert_quantile_row(truth_a, rep[("a", 0.5)], 64)  # both batches
+    _assert_quantile_row([1000.0 + i for i in range(200)], rep[("b", 0.5)], 64)
+    # lost checkpoint: replays no-op (n would double otherwise)
     assert drain("gq_ckpt2") == 2
     rep2 = grouped_quantile_report(
         read_table_version(spark, table), ["src"], [0.5]
     ).collect()
     assert {r.src: r.n_total for r in rep2} == {"a": 800, "b": 200}
-
-
-def test_quantile_ranged_rebound_path(spark):
-    """rebound_partitions > 1 (the cluster-scale range-sharded re-bound:
-    checkpointed sampling input, per-shard err-delta emission, meta rows
-    riding the NaN shard) preserves every guarantee — this is the path
-    the default never takes, pinned here so it cannot rot silently."""
-    from datamunging_spark.operators.sketch import (
-        merge_quantile_summaries,
-        quantile_report,
-        quantile_summary,
-    )
-
-    vals = [float(i % 700) for i in range(8000)]
-    df = spark.createDataFrame([(v,) for v in vals], "x double").repartition(8)
-    s = quantile_summary(df, "x", k=32, rebound_partitions=3)
-    mass = (
-        s.filter(F.col("meta").isNull())
-        .agg(F.sum(F.expr("cnt * shiftleft(1L, level)")))
-        .first()[0]
-    )
-    assert mass == 8000
-    for r in quantile_report(s, [0.1, 0.5, 0.9]).collect():
-        true_le = sum(1 for x in vals if x <= r.value)
-        assert abs(r.est_rank - true_le) <= r.max_rank_err
-        assert r.n_total == 8000
-    # a ranged MERGE too (both sides sharded, budgets add)
-    m = merge_quantile_summaries(s, s, k=32, rebound_partitions=3)
-    r = quantile_report(m, [0.5]).collect()[0]
-    assert r.n_total == 16000
-    true_le = 2 * sum(1 for x in vals if x <= r.value)
-    assert abs(r.est_rank - true_le) <= r.max_rank_err
-
-
-def test_quantile_summary_rebound_false_is_valid_merge_input(spark):
-    """rebound=False returns the lazy pooled union (data rows may exceed
-    k per level, like hh_summary); feeding it to merge gives the same
-    bracket with NO double-charged budget — merge's budget must be <=
-    the rebound-then-merge form's."""
-    from datamunging_spark.operators.sketch import (
-        merge_quantile_summaries,
-        quantile_report,
-        quantile_summary,
-    )
-
-    vals = [float(i % 300) for i in range(5000)]
-    df = spark.createDataFrame([(v,) for v in vals], "x double").repartition(8)
-    raw = quantile_summary(df, "x", k=32, rebound=False)
-    merged = merge_quantile_summaries(raw, None, k=32)
-    r = quantile_report(merged, [0.5]).collect()[0]
-    true_le = sum(1 for x in vals if x <= r.value)
-    assert abs(r.est_rank - true_le) <= r.max_rank_err
-    assert r.n_total == 5000
-    rebound_first = merge_quantile_summaries(
-        quantile_summary(df, "x", k=32), None, k=32
-    )
-    err_direct = quantile_report(merged, [0.5]).collect()[0].max_rank_err
-    err_double = quantile_report(rebound_first, [0.5]).collect()[0].max_rank_err
-    assert err_direct <= err_double
 
 
 def test_grouped_quantile_reserved_key_names_fail_fast(spark):
@@ -919,8 +883,10 @@ def test_grouped_quantile_reserved_key_names_fail_fast(spark):
     s = grouped_quantile_summary(
         df.withColumnRenamed("value", "x"), ["src"], "x", k=16
     )
+    with pytest.raises(ValueError, match="reserved"):
+        grouped_quantile_summary(s, ["sketch"], "k")
     with pytest.raises(ValueError, match="non-empty"):
-        merge_grouped_quantile_summaries(s, None, [], k=16)
+        merge_grouped_quantile_summaries(s, None, [])
     with pytest.raises(ValueError, match="non-empty"):
         grouped_quantile_report(s, [], [0.5])
     with pytest.raises(ValueError, match="reserved"):
@@ -1080,14 +1046,13 @@ def test_grouped_passes_consolidate_na_key_across_batches():
     NA group label on every call; without normalization the keyed Arrow
     passes would grow one separate state per BATCH for the NULL key
     (O(batches x k) memory — the bound the sketch exists to prevent).
-    Drive the pass functions directly with multiple fake batches and
+    Drive the pass function directly with multiple fake batches and
     require exactly ONE consolidated state per key."""
     import pandas as pd
 
     from datamunging_spark.operators.sketch import (
         _META_N,
         _mg_grouped_partition,
-        _q_grouped_build_partition,
     )
 
     b1 = pd.DataFrame({"src": [None, None, "a"], "value": ["x", "y", "z"]})
@@ -1101,16 +1066,6 @@ def test_grouped_passes_consolidate_na_key_across_batches():
     assert len(n_rows) == 2
     null_n = n_rows[n_rows["src"].isna()]["cnt"].tolist()
     assert null_n == [3]  # both batches' NULL-key rows in one state
-
-    q1 = pd.DataFrame({"src": [None, None], "value": [1.0, 2.0]})
-    q2 = pd.DataFrame({"src": [None], "value": [3.0]})
-    qout = pd.concat(
-        list(_q_grouped_build_partition(["src"], 8)(iter([q1, q2]))),
-        ignore_index=True,
-    )
-    qn = qout[qout["meta"] == _META_N]
-    assert len(qn) == 1
-    assert qn["cnt"].tolist() == [3]
 
 
 def test_grouped_faces_reject_float_double_keys(spark):
@@ -1131,11 +1086,11 @@ def test_grouped_faces_reject_float_double_keys(spark):
         "fkey double, skey string, v double",
     )
     for face in (
-        lambda: grouped_quantile_summary(df, ["fkey"], "v", k=4),
+        lambda: grouped_quantile_summary(df, ["fkey"], "v", k=8),
         lambda: grouped_hh_summary(df, ["fkey"], "skey", k=4),
         lambda: grouped_quantile_summary(
             df.withColumn("fkey", F.col("fkey").cast("float")),
-            ["fkey"], "v", k=4,
+            ["fkey"], "v", k=8,
         ),
         # mixed key list: the float member alone must trip it
         lambda: grouped_hh_summary(df, ["skey", "fkey"], "v", k=4),
@@ -1144,11 +1099,11 @@ def test_grouped_faces_reject_float_double_keys(spark):
             face()
     # merge faces reject a hand-built summary with a float key column
     qsum = grouped_quantile_summary(
-        df.withColumn("k2", F.col("fkey").cast("string")), ["k2"], "v", k=4
+        df.withColumn("k2", F.col("fkey").cast("string")), ["k2"], "v", k=8
     )
     bad = qsum.withColumn("k2", F.col("k2").cast("double"))
     with pytest.raises(ValueError, match="float/double grouping"):
-        merge_grouped_quantile_summaries(bad, None, ["k2"], k=4)
+        merge_grouped_quantile_summaries(bad, None, ["k2"])
     hsum = grouped_hh_summary(
         df.withColumn("k2", F.col("fkey").cast("string")), ["k2"], "skey",
         k=4,

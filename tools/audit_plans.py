@@ -266,7 +266,7 @@ _JUSTIFY: dict[str, str] = {
     "x8_distinct_users": "per-key HLL sketch rows (750) — "
     "summary-sized by construction.",
     "x8_grouped_sketch": "per-key summary rows (keys × (k+2) / "
-    "compactor levels) + report-sized recount probes — "
+    "one KLL sketch per key) + report-sized recount probes — "
     "summary-sized by construction.",
     "x1_strip_boilerplate": "mined template/fp rows (195 max) — "
     "report-sized.",
@@ -291,10 +291,7 @@ def main() -> None:
         "totals (the unigram_lm_fit subplan), and",
         "x5_decontaminate's capped substring-probe anti-join,",
         "x8_heavy_hitters' 1-row error/total meta broadcast,",
-        "x8_quantiles' |qs|-row recount probe + 1-row mass broadcast,",
-        "x8_grouped_sketch's summary-sized per-key rank-probe join",
-        "(grouped_quantile_report: key-equality + rank range — both",
-        "sides ≤ keys×|qs| / summary rows),",
+        "x8_quantiles' |qs|-row recount probe,",
         "and x1_strip_boilerplate's 1-row corpus-count broadcast +",
         "max_templates-bounded template verify/strip broadcasts).",
         "Composites that materialize eagerly during construction",
