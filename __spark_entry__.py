@@ -622,9 +622,10 @@ def q_x2_boolean(spark, sf_dir):
     trio over the inverted index — must (strict AND, unseen terms
     included), should (≥1 fallback when must is empty, BM25 boost
     otherwise), must_not (left-anti exclusion) — ranked by BM25 with
-    decimal(28,7) sums. One postings scan for all three roles (term
-    union broadcast into a pinned semi-join); pinned to a pure-Python
-    reference in tests/test_retrieval.py."""
+    decimal(28,7) sums. One postings scan for all three roles (the
+    collected batch rides the plan as a pushed term IN filter plus a
+    literal term → role-flag map); pinned to a pure-Python reference
+    in tests/test_retrieval.py."""
     from datamunging_spark.operators.retrieval import (
         boolean_topk,
         index_stats,

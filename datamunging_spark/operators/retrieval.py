@@ -28,18 +28,21 @@ Scale shapes (the 100 TB story):
   writes to parquet once. ``doc_len`` is denormalized into the
   postings row (8 bytes) so query-time scoring never joins back to a
   corpus-grain table — the Lucene norms-in-the-postings trade.
-- **Query time never shuffles the index.** :func:`bm25_topk` and
-  :func:`phrase_topk` collect the (small) query batch to the driver
-  ONCE, tokenized in Spark, and read the query terms' df and
-  (n_docs, avgdl) back as driver scalars in one more small collect.
+- **Query time never shuffles the index.** Every lexical face
+  (:func:`bm25_topk`, :func:`boolean_topk`, :func:`bm25f_topk`,
+  :func:`phrase_topk`, :func:`near_topk`) collects the (small) query
+  batch to the driver ONCE, tokenized in Spark, and the scored faces
+  read the query terms' df and (n_docs, avgdl) back as driver scalars
+  in one more small collect.
   The query side then rides the plan as literals: a pushed
   ``term IN (...)`` filter on the one postings scan and a literal map
   from term to its queries. No join touches the postings side, so
   nothing exchanges on term; the shuffles are the per-(query, doc)
   aggregate over MATCHED postings and the per-query top-k window. A
-  single-query request is five Spark jobs for BM25 with ``dfreq`` and
-  four for a phrase (pinned by a test budget; under AQE each shuffle
-  stage is its own job).
+  single-query request is five Spark jobs for BM25 and boolean with
+  ``dfreq``, six for BM25F (one more aggregate) and four for a phrase
+  or near query (pinned by a test budget; under AQE each shuffle stage
+  is its own job).
 - **df/N/avgdl are index-build artifacts.** :func:`term_stats` and
   :func:`index_stats` are computed once with the index; pass them in
   (the 100 TB path) and query-time df is a ``term IN`` read of the df
@@ -95,6 +98,20 @@ __all__ = [
 _CONTRIB_DECIMAL = "decimal(28,7)"
 
 
+def _idf() -> Column:
+    """The Lucene "+1" idf over (n_docs, df) columns — BM25's idf (via
+    :func:`_bm25_parts`), :func:`bm25f_topk`'s doc-grain idf, and the
+    term-SELECTION ranking weight of :func:`more_like_this` /
+    :func:`prf_expand`."""
+    return F.log(
+        F.lit(1.0)
+        + (
+            (F.col("n_docs") - F.col("df") + F.lit(0.5))
+            / (F.col("df") + F.lit(0.5))
+        )
+    )
+
+
 def _bm25_parts(k1: float, b: float) -> tuple[Column, Column]:
     """The (idf, tfn) column pair of the BM25 contribution — ONE home
     for the formula both :func:`bm25_topk` and :func:`boolean_topk`
@@ -103,19 +120,12 @@ def _bm25_parts(k1: float, b: float) -> tuple[Column, Column]:
     (tf, doc_len, avgdl). Callers multiply idf * tfn and cast
     ``_CONTRIB_DECIMAL`` — keep that grouping; the oracle SQL is
     parenthesized to match it."""
-    idf = F.log(
-        F.lit(1.0)
-        + (
-            (F.col("n_docs") - F.col("df") + F.lit(0.5))
-            / (F.col("df") + F.lit(0.5))
-        )
-    )
     tfn = (F.col("tf") * F.lit(k1 + 1.0)) / (
         F.col("tf")
         + F.lit(k1)
         * (F.lit(1.0 - b) + F.lit(b) * (F.col("doc_len") / F.col("avgdl")))
     )
-    return idf, tfn
+    return _idf(), tfn
 
 
 def search_terms(col: Column | str, lowercase: bool = True) -> Column:
@@ -264,7 +274,6 @@ def bm25_topk(
     lowercase: bool = True,
     dfreq: DataFrame | None = None,
     max_df_frac: float | None = None,
-    pin: bool = True,
     group_col: str | None = None,
     term_boosts: DataFrame | None = None,
     filter_ids: DataFrame | None = None,
@@ -312,10 +321,6 @@ def bm25_topk(
     the ``term IN`` filter and its postings are never scored — the
     100 TB protection. Default None (off) — the parity/oracle
     configuration.
-
-    ``pin``: accepted for call compatibility and ignored. The scoring
-    plan reads the matched postings once, so there is no shared branch
-    to pin.
 
     ``group_col``: per-corpus search over a grouped index (built with
     :func:`inverted_index`'s ``group_col``; ``stats`` and ``dfreq``
@@ -592,7 +597,6 @@ def boolean_topk(
     dfreq: DataFrame | None = None,
     max_df_frac: float | None = None,
     min_should_match: int = 0,
-    pin: bool = True,
     group_col: str | None = None,
     filter_ids: DataFrame | None = None,
 ) -> DataFrame:
@@ -608,23 +612,35 @@ def boolean_topk(
     and NO ``must_not`` term; qualified docs are scored by BM25 over
     their matched must+should terms (must clauses score too, the
     Lucene convention; a term listed in both roles scores ONCE).
+    ``queries`` is a SMALL batch, collected to the driver by contract
+    like :func:`bm25_topk`'s.
 
-    One postings scan: the union of all three roles' terms broadcasts
-    into a single semi-join, then everything downstream is
-    matched-postings-sized — the same 100 TB shape as
-    :func:`bm25_topk` UNDER THE SAME CONDITIONS: pass ``dfreq`` (a
-    :func:`term_stats` table, pruned here to the query terms before
-    anything broadcasts it) and ``max_df_frac``. Without the valve a
-    hot term in ANY role (``must_not='the'``) drags a corpus-scale
-    postings slice through the pin and the banned-pairs distinct —
-    the valve cuts hot terms on the broadcast-sized df table BEFORE
-    they reach any downstream join. It applies to ALL THREE roles,
-    i.e. hot terms are treated as stopwords exactly as a Lucene
-    stop-filtered analyzer would at parse time: a hot ``must`` term is
-    no longer required (a query whose every must term is valved
-    degrades to should-matching), a hot ``should`` term no longer
-    scores, and a hot ``must_not`` term no longer excludes — by
-    design, since excluding every doc containing "the" is almost
+    Plan: the batch is collected ONCE with all three role columns
+    tokenized by :func:`search_terms`, and the per-(group, term) role
+    flags are built on the driver. df and (n_docs, avgdl) come back in
+    one :func:`_term_scalars` collect, so every per-query rule is
+    settled on the driver before the scan: the valve cut, the
+    absent-must rule, the required must count and the (degraded)
+    ``min_should_match``. The query side then rides the plan as
+    literals — the :func:`bm25_topk` shape: a pushed ``term IN (...)``
+    filter on the one postings scan, a literal map (group, term) →
+    (n_docs, avgdl, df, [(query, role flags, required counts)]), and
+    ONE (query, doc) aggregate that sums the decimal(28,7)
+    contributions, counts ``n_must``/``n_should``, flags any
+    ``must_not`` hit, and filters on the per-query literals before the
+    top-k window. With ``dfreq`` a request is five Spark jobs, like
+    BM25's.
+
+    ``dfreq`` / ``max_df_frac``: as in :func:`bm25_topk` — df is a
+    ``term IN`` read of a :func:`term_stats` table or, without it, one
+    filtered aggregate over the query terms' postings; the valve cuts
+    hot terms on the driver, so their postings are never scanned. It
+    applies to ALL THREE roles, i.e. hot terms are treated as stopwords
+    exactly as a Lucene stop-filtered analyzer would at parse time: a
+    hot ``must`` term is no longer required (a query whose every must
+    term is valved degrades to should-matching), a hot ``should`` term
+    no longer scores, and a hot ``must_not`` term no longer excludes —
+    by design, since excluding every doc containing "the" is almost
     always a query bug; leave ``max_df_frac=None`` (the parity/oracle
     default) if literal exclusion semantics matter. A ``must`` term
     absent from the corpus matches nothing, so its query returns no
@@ -638,209 +654,130 @@ def boolean_topk(
     degrades to must-only matching instead of silently matching
     nothing.
 
-    ``pin``: the matched postings feed the scoring AND banned-pairs
-    branches on every path (plus the df derivation when
-    ``dfreq=None``), so they are pinned with a LAZY
-    ``localCheckpoint(eager=False)`` on both — same trade and same
-    escape hatch as :func:`bm25_topk`.
-    Exclusion is a left-anti join on the (query, doc) pairs
-    any surviving must_not term hits. Deterministic: decimal(28,7)
-    score sums, (score desc, doc asc) ranks. ``group_col``: the
-    grouped face over a grouped index — same contract as
-    :func:`bm25_topk`'s (queries carry the group, per-group stats/df,
-    NULL-safe, the group rides the output; hotness is judged against
-    the query's OWN group's df/n_docs). ``filter_ids``: predicate-
-    constrained search — the :func:`bm25_topk` contract (doc-id or
-    (group, id) table, corpus-level df, k fills from the allowed
-    sub-corpus); the cut lands before EVERY doc-grain branch
-    (scoring, must-counting, banned pairs), which is sound because
-    boolean evaluation is per-doc: a doc outside the filter can
-    neither qualify nor be banned."""
+    Deterministic: decimal(28,7) score sums, (score desc, doc asc)
+    ranks. ``group_col``: the grouped face over a grouped index — same
+    contract as :func:`bm25_topk`'s (queries carry the group, per-group
+    stats/df, NULL-safe, the group rides the output; hotness is judged
+    against the query's OWN group's df/n_docs). ``filter_ids``:
+    predicate-constrained search — the :func:`bm25_topk` contract
+    (doc-id or (group, id) table, corpus-level df, k fills from the
+    allowed sub-corpus); the cut lands on the matched postings before
+    the aggregate, which is sound because boolean evaluation is
+    per-doc: a doc outside the filter can neither qualify nor be
+    banned."""
+    from datamunging_spark.operators.relational import top_k_per_group
+
     gb = [group_col] if group_col else []
-    jk = (["_gk"] if group_col else []) + ["term"]
-    if group_col:
-        stats = stats.withColumn("_gk", _gkey(group_col)).drop(group_col)
+    qtype = queries.schema[query_id_col].dataType
+    # (group key, query id) → {term: its roles among "m", "s", "x"}
+    roles: dict = {}
+    for r in _collect_queries(
+        queries,
+        {"m": must_col, "s": should_col, "x": must_not_col},
+        query_id_col, lowercase, group_col,
+    ):
+        q = roles.setdefault((r["_gk"], r["_q"]), {})
+        for role in "msx":
+            for t in r[role]:
+                q.setdefault(t, set()).add(role)
+    scalars, dfs = _term_scalars(
+        postings, stats, dfreq,
+        {(g, t) for (g, _), q in roles.items() for t in q}, group_col,
+    )
 
-    def _role(col, tag):
-        # no distinct — the roles groupBy below dedups everything
-        return queries.select(
-            F.col(query_id_col).alias("query_id"),
-            *gb,
-            F.explode(search_terms(col, lowercase)).alias("term"),
-            F.lit(tag).alias("_role"),
+    def hot(key):
+        return (
+            max_df_frac is not None
+            and key in dfs
+            and key[0] in scalars
+            and dfs[key] > float(max_df_frac) * scalars[key[0]][0]
         )
 
-    # collapse the three roles to per-(query, term) FLAGS before any
-    # postings row exists — the join output is then (query, doc,
-    # term)-unique by construction, so one doc-grain aggregate
-    # suffices (no matched-postings×roles intermediate grain)
-    roles = (
-        _role(must_col, "m")
-        .unionByName(_role(should_col, "s"))
-        .unionByName(_role(must_not_col, "x"))
-    )
-    if group_col:
-        roles = roles.withColumn("_gk", _gkey(group_col)).drop(group_col)
-    roles = roles.groupBy("query_id", *jk[:-1], "term").agg(
-        F.max(F.col("_role") == "m").alias("_is_m"),
-        F.max(F.col("_role") == "s").alias("_is_s"),
-        F.max(F.col("_role") == "x").alias("_is_x"),
-    )
-    # valve×msm interplay: a valved should term can no longer be
-    # matched, so msm degrades per query by the number of should terms
-    # the valve removed (the stop-filter analogy — the clause is gone,
-    # not unmatched); capture the pre-valve counts now. Skipped when
-    # either knob is off, keeping the common plan untouched.
-    degrade_msm = max_df_frac is not None and int(min_should_match) > 0
-    if degrade_msm:
-        given_s = roles.groupBy("query_id").agg(
-            F.sum(F.when(F.col("_is_s"), 1).otherwise(0)).alias(
-                "_given_s"
+    msm = int(min_should_match)
+    flags: dict = {}  # (group key, term) → [per-query flag structs]
+    for (g, qid), q in roles.items():
+        live = {t: rl for t, rl in q.items() if not hot((g, t))}
+        must = [t for t, rl in live.items() if "m" in rl]
+        if g not in scalars or any((g, t) not in dfs for t in must):
+            continue  # no stats, or a must term absent from the corpus
+        # a valved should clause is gone, not unmatched: msm degrades
+        cut_s = sum("s" in rl for t, rl in q.items() if t not in live)
+        eff = max(0, msm - cut_s)
+        for t, rl in live.items():
+            # a should term without df neither scores nor counts
+            m, s, x = "m" in rl, "s" in rl and (g, t) in dfs, "x" in rl
+            if m or s or x:
+                flags.setdefault((g, t), []).append(
+                    F.struct(
+                        F.lit(qid).cast(qtype).alias("query_id"),
+                        F.lit(m).alias("m"),
+                        F.lit(s).alias("s"),
+                        F.lit(x).alias("x"),
+                        F.lit(len(must)).alias("req"),
+                        F.lit(eff if must else max(1, eff)).alias("need"),
+                    )
+                )
+    qmap = _query_map(
+        {
+            (g, t): F.struct(
+                F.lit(scalars[g][0]).cast("long").alias("n_docs"),
+                F.lit(scalars[g][1]).cast("double").alias("avgdl"),
+                F.lit(dfs.get((g, t))).cast("long").alias("df"),
+                F.array(*v).alias("q"),
             )
-        )
-
-    def _hot_terms(d):
-        # the valve's cut list, derived on the broadcast-sized df
-        # table — never on posting rows (per-group n_docs when grouped)
-        if group_col:
-            cut = d.join(F.broadcast(stats), "_gk")
-        else:
-            cut = d.crossJoin(F.broadcast(stats))
-        return cut.filter(
-            F.col("df") > F.lit(float(max_df_frac)) * F.col("n_docs")
-        ).select(*jk)
-
-    terms = roles.select(*jk).distinct()
-    if dfreq is not None:
-        # a term_stats table spans the WHOLE corpus vocabulary — prune
-        # it to the query terms before anything broadcasts it
-        if group_col:
-            dfreq = dfreq.withColumn("_gk", _gkey(group_col)).drop(
-                group_col
-            )
-        dfreq = dfreq.join(F.broadcast(terms), jk)
-        if max_df_frac is not None:
-            # df known BEFORE the scan: hot terms never reach the
-            # postings join in any role
-            hot = _hot_terms(dfreq)
-            roles = roles.join(F.broadcast(hot), jk, "left_anti")
-            dfreq = dfreq.join(F.broadcast(hot), jk, "left_anti")
-            terms = roles.select(*jk).distinct()
+            for (g, t), v in flags.items()
+        },
+        group_col,
+        "struct<n_docs:bigint,avgdl:double,df:bigint,q:array<struct<"
+        f"query_id:{qtype.simpleString()},m:boolean,s:boolean,"
+        "x:boolean,req:int,need:int>>>",
+    )
     if group_col:
         postings = postings.withColumn("_gk", _gkey(group_col))
-    matched = postings.join(F.broadcast(terms), jk)
-    # the matched branch fans into scoring AND the banned-pairs
-    # distinct on BOTH df paths (plus the df derivation on the
-    # on-the-fly one) — pin it so the postings scan runs once
-    if pin:
-        matched = matched.localCheckpoint(eager=False)
-    if dfreq is None:
-        dfreq = matched.groupBy(*jk).agg(F.count(F.lit(1)).alias("df"))
-        if max_df_frac is not None:
-            # on-the-fly df: the scan reads a hot term's postings once
-            # to count them, but the valved roles join below keeps them
-            # out of every downstream branch (scoring, banned, req)
-            hot = _hot_terms(dfreq)
-            roles = roles.join(F.broadcast(hot), jk, "left_anti")
-            dfreq = dfreq.join(F.broadcast(hot), jk, "left_anti")
-    # df above is captured pre-filter (corpus-level stats); the cut
-    # here feeds every doc-grain branch — scoring, req, banned
     matched = _apply_lex_filter(
-        matched, filter_ids, group_col, id_col, "boolean_topk"
+        postings.filter(F.col("term").isin(sorted({t for _, t in flags}))),
+        filter_ids, group_col, id_col, "boolean_topk",
     )
-    hits = matched.join(F.broadcast(roles), jk)
-
-    # BM25 over the matched (query, doc, term) scoring rows
-    scoring = hits.filter(F.col("_is_m") | F.col("_is_s")).join(
-        F.broadcast(dfreq), jk
+    hits = matched.select(
+        *gb, id_col, "tf", "doc_len",
+        F.element_at(qmap, _query_key(group_col)).alias("_k"),
+    ).select(
+        *gb, id_col, "tf", "doc_len", "_k.n_docs", "_k.avgdl", "_k.df",
+        F.explode("_k.q").alias("_q"),
     )
-    if group_col:
-        scoring = scoring.join(F.broadcast(stats), "_gk")
-    else:
-        scoring = scoring.crossJoin(F.broadcast(stats))
     idf, tfn = _bm25_parts(k1, b)
     per_doc = (
-        scoring.select(
-            "query_id",
+        hits.select(
+            F.col("_q.query_id").alias("query_id"),
+            F.col("_q.req").alias("_req"),
+            F.col("_q.need").alias("_need"),
             *gb,
             id_col,
-            (idf * tfn).cast(_CONTRIB_DECIMAL).alias("_c"),
-            "_is_m",
-            "_is_s",
+            F.when(
+                F.col("_q.m") | F.col("_q.s"),
+                (idf * tfn).cast(_CONTRIB_DECIMAL),
+            ).alias("_c"),
+            F.col("_q.m").alias("_is_m"),
+            F.col("_q.s").alias("_is_s"),
+            F.col("_q.x").alias("_is_x"),
         )
-        .groupBy("query_id", *gb, id_col)
+        .groupBy("query_id", "_req", "_need", *gb, id_col)
         .agg(
             F.sum("_c").alias("_s"),
             F.sum(F.when(F.col("_is_m"), 1).otherwise(0)).alias("n_must"),
             F.sum(F.when(F.col("_is_s"), 1).otherwise(0)).alias(
                 "n_should"
             ),
+            F.max("_is_x").alias("_banned"),
         )
-    )
-    msm = int(min_should_match)
-    if degrade_msm:
-        # ONE post-valve aggregate covers every query that can still
-        # hit anything (must-only, should-only, both): surviving must
-        # count AND surviving should count together; the pre-valve
-        # should counts join LEFT (queries whose every role was valved
-        # produce no hits rows, so their absence here is harmless).
-        # effective msm = msm − (should terms the valve removed), ≥ 0;
-        # the no-must fallback still demands ≥ 1 actual should match.
-        req = (
-            roles.groupBy("query_id")
-            .agg(
-                F.sum(F.when(F.col("_is_m"), 1).otherwise(0)).alias(
-                    "_req_must"
-                ),
-                F.sum(F.when(F.col("_is_s"), 1).otherwise(0)).alias(
-                    "_surv_s"
-                ),
-            )
-            .join(F.broadcast(given_s), "query_id", "left")
-        )
-        msm_col = F.greatest(
-            F.lit(0),
-            F.lit(msm)
-            - (
-                F.coalesce(F.col("_given_s"), F.lit(0))
-                - F.coalesce(F.col("_surv_s"), F.lit(0))
-            ),
-        )
-        helper_cols = ["_req_must", "_given_s", "_surv_s"]
-    else:
-        # per-query required must count (distinct terms, unseen incl.)
-        req = (
-            roles.filter(F.col("_is_m"))
-            .groupBy("query_id")
-            .agg(F.count(F.lit(1)).alias("_req_must"))
-        )
-        msm_col = F.lit(msm)
-        helper_cols = ["_req_must"]
-    qualified = (
-        per_doc.join(F.broadcast(req), "query_id", "left")
         .filter(
-            F.when(
-                F.coalesce(F.col("_req_must"), F.lit(0)) > 0,
-                (F.col("n_must") == F.col("_req_must"))
-                & (F.col("n_should") >= msm_col),
-            ).otherwise(
-                F.col("n_should") >= F.greatest(F.lit(1), msm_col)
-            )
+            (F.col("n_must") == F.col("_req"))
+            & (F.col("n_should") >= F.col("_need"))
+            & ~F.col("_banned")
         )
-        .drop(*helper_cols)
     )
-    banned = (
-        hits.filter(F.col("_is_x"))
-        .select("query_id", id_col)
-        .distinct()
-    )
-    survivors = qualified.join(
-        banned, ["query_id", id_col], "left_anti"
-    )
-    from datamunging_spark.operators.relational import top_k_per_group
-
     return top_k_per_group(
-        survivors,
+        per_doc,
         ["query_id"],
         [F.col("_s").desc(), F.col(id_col).asc()],
         k,
@@ -1159,22 +1096,25 @@ def _gkey(col: str) -> Column:
 
 def _collect_queries(
     queries: DataFrame,
-    query_col: str,
+    query_col: str | dict[str, str],
     query_id_col: str,
     lowercase: bool,
     group_col: str | None,
 ) -> list:
     """The query batch on the driver, collected ONCE: rows of (``_q``
     query id, ``_gk`` group key — None when ungrouped, ``_t`` terms).
-    Tokenization stays Spark's (:func:`search_terms` runs in the
-    select), so the literal plans built from these rows match the
-    index byte for byte. Small by contract, like every query batch
-    of the search operators."""
+    A dict ``query_col`` (output name → text column) tokenizes several
+    columns in the same collect, each under its own name. Tokenization
+    stays Spark's (:func:`search_terms` runs in the select), so the
+    literal plans built from these rows match the index byte for byte.
+    Small by contract, like every query batch of the search
+    operators."""
     gk = _gkey(group_col) if group_col else F.lit(None).cast("string")
+    cols = query_col if isinstance(query_col, dict) else {"_t": query_col}
     return queries.select(
         F.col(query_id_col).alias("_q"),
         gk.alias("_gk"),
-        search_terms(query_col, lowercase).alias("_t"),
+        *[search_terms(c, lowercase).alias(n) for n, c in cols.items()],
     ).collect()
 
 
@@ -1184,6 +1124,7 @@ def _term_scalars(
     dfreq: DataFrame | None,
     keys,
     group_col: str | None,
+    by: str | None = None,
 ) -> tuple[dict, dict]:
     """Driver scalars for literal query keys ((group key, term) pairs,
     group key None when ungrouped), read in ONE small collect:
@@ -1192,7 +1133,9 @@ def _term_scalars(
     ``term IN (...)`` read of ``dfreq`` (:func:`term_stats`, the
     index-build artifact), or — without it — one filtered aggregate
     over the query terms' postings. Both sides are query- or
-    groups-sized, so they ride one union into one job."""
+    groups-sized, so they ride one union into one job. ``by`` names a
+    further ``stats`` key column (``field`` for :func:`field_stats`);
+    the stats scalars are then keyed ``(group key, by value)``."""
     if not keys:
         return {}, {}
     terms = sorted({t for _, t in keys})
@@ -1206,22 +1149,26 @@ def _term_scalars(
     side = stats.select(
         gk,
         F.lit(None).cast("string").alias("term"),
+        *([F.col(by).cast("string").alias("_by")] if by else []),
         F.col("n_docs").cast("long").alias("_n"),
         F.col("avgdl").cast("double").alias("_x"),
     ).unionByName(
         dfreq.filter(F.col("term").isin(terms)).select(
             gk,
             "term",
+            *([F.lit(None).cast("string").alias("_by")] if by else []),
             F.col("df").cast("long").alias("_n"),
             F.lit(None).cast("double").alias("_x"),
         )
     )
     scalars, dfs = {}, {}
     for r in side.collect():
-        if r["term"] is None:
-            scalars[r["_gk"]] = (r["_n"], r["_x"])
-        else:
+        if r["term"] is not None:
             dfs[(r["_gk"], r["term"])] = r["_n"]
+        else:
+            scalars[(r["_gk"], r["_by"]) if by else r["_gk"]] = (
+                r["_n"], r["_x"],
+            )
     return scalars, dfs
 
 
@@ -1411,7 +1358,6 @@ def bm25f_topk(
     lowercase: bool = True,
     dfreq: DataFrame | None = None,
     max_df_frac: float | None = None,
-    pin: bool = True,
     group_col: str | None = None,
     filter_ids: DataFrame | None = None,
 ) -> DataFrame:
@@ -1434,21 +1380,27 @@ def bm25f_topk(
     :func:`field_stats`; ``weights`` maps field → w_f and also SELECTS
     the searched fields (postings rows of unlisted fields are filtered
     at the scan); ``b`` is one value or a per-field dict (per-field
-    length normalization is the second BM25F knob). ``dfreq`` /
-    ``max_df_frac`` / ``pin`` behave exactly as in :func:`bm25_topk`
-    (same valve, same lazy pin on the convenience path, same
-    escape hatch) — and idf's df is DOC-grain over ALL indexed fields
-    on both paths (the on-the-fly derivation runs before the weights
-    filter), so a weights subset reweights scoring without changing
-    df.
+    length normalization is the second BM25F knob). ``queries`` is a
+    SMALL batch, collected to the driver by contract like
+    :func:`bm25_topk`'s. ``dfreq`` / ``max_df_frac`` behave exactly as
+    in :func:`bm25_topk` (same valve, cut on the driver before the
+    scan) — and idf's df is DOC-grain over ALL indexed fields on both
+    paths (the on-the-fly :func:`fielded_term_stats` derivation reads
+    the query terms' postings before the weights filter), so a weights
+    subset reweights scoring without changing df.
 
     Output (query_id, ``id_col``, rank, bm25f), ranks tie-broken on
-    ascending doc id. Plan shape = :func:`bm25_topk` with one extra
-    matched-sized hash aggregate: broadcast-semi-join the index once,
-    per-(query, doc, term) decimal(28,7) field fold (reduction-order-
-    free), idf·saturation on the exact fold, then the (query, doc)
-    decimal sum and the per-query window. Nothing repartitions by
-    term; every join input beyond the index scan is query-sized.
+    ascending doc id. Plan: the :func:`bm25_topk` literal shape with
+    one extra matched-sized hash aggregate. The query batch is
+    collected once; per-(group, field) avgdl, per-group n_docs and the
+    query terms' doc-grain df come back in ONE small collect
+    (:func:`_term_scalars`). Then one pushed ``term IN (...)`` postings
+    scan, a literal map (group, term) → (n_docs, df, [query ids]) and
+    a literal map (group, field) → avgdl, the per-(query, doc, term)
+    decimal(28,7) field fold (reduction-order-free), idf·saturation on
+    the exact fold, the (query, doc) decimal sum and the per-query
+    window. Nothing joins the postings side, so nothing repartitions by
+    term. With ``dfreq`` a request is six Spark jobs.
 
     ``group_col``: the grouped face over a grouped fielded index
     (:func:`fielded_index` / :func:`field_stats` /
@@ -1457,8 +1409,8 @@ def bm25f_topk(
     contract as :func:`bm25_topk`'s: queries carry the group and search
     ONLY their own group's postings with that group's per-field
     avgdl / N / doc-grain df, NULL-safely; ``query_id`` unique ACROSS
-    groups; the group rides the output; every group-key join stays a
-    broadcast against the one pushed postings scan.
+    groups; the group rides the output; both literal maps are keyed by
+    the group, so a posting of another group finds no entry.
 
     Build-arg validation: per-field ``b`` keys must be a subset of
     ``weights`` (checked at construction), and a postings (group,)
@@ -1486,84 +1438,75 @@ def bm25f_topk(
         if not isinstance(b, dict)
         else {f: float(b.get(f, 0.75)) for f in weights}
     )
+    from datamunging_spark.operators.relational import top_k_per_group
+
     gb = [group_col] if group_col else []
-    gk = ["_gk"] if group_col else []
-    jk = gk + ["term"]
-    fk = gk + ["field"]
-    if group_col:
-        fstats = fstats.withColumn("_gk", _gkey(group_col)).drop(
-            group_col
+    qtype = queries.schema[query_id_col].dataType
+    # (group key, term) → the query ids holding it (term SETS)
+    keys: dict = {}
+    for r in _collect_queries(
+        queries, query_col, query_id_col, lowercase, group_col
+    ):
+        for t in r["_t"]:
+            keys.setdefault((r["_gk"], t), {})[r["_q"]] = None
+    if dfreq is None:
+        # doc-grain df over ALL indexed fields, before the weights cut
+        dfreq = fielded_term_stats(
+            postings.filter(
+                F.col("term").isin(sorted({t for _, t in keys}))
+            ),
+            id_col, group_col,
         )
-        # per-group corpus N (n_docs identical within a group's rows)
-        nstats = fstats.groupBy("_gk").agg(
-            F.max("n_docs").alias("n_docs")
-        )
-    else:
-        # one-row corpus N (n_docs is identical on every fstats row)
-        nstats = fstats.agg(F.max("n_docs").alias("n_docs"))
-
-    def _df_valve(d):
-        cut = (
-            d.join(F.broadcast(nstats), "_gk")
-            if group_col
-            else d.crossJoin(F.broadcast(nstats))
-        )
-        return cut.filter(
-            F.col("df") <= F.lit(float(max_df_frac)) * F.col("n_docs")
-        ).select(*jk, "df")
-
-    qt = (
-        queries.select(
-            F.col(query_id_col).alias("query_id"),
-            *gb,
-            F.explode(search_terms(query_col, lowercase)).alias("term"),
-        )
-        .distinct()
+    fscal, dfs = _term_scalars(
+        postings, fstats, dfreq, keys, group_col, by="field"
     )
-    if group_col:
-        qt = qt.withColumn("_gk", _gkey(group_col)).drop(group_col)
-    qterms = qt.select(*jk).distinct()
-    if dfreq is not None:
-        if group_col:
-            dfreq = dfreq.withColumn("_gk", _gkey(group_col)).drop(
-                group_col
-            )
-        dfreq = dfreq.join(F.broadcast(qterms), jk)
-        if max_df_frac is not None:
-            dfreq = _df_valve(dfreq)
-            qterms = qterms.join(
-                F.broadcast(dfreq.select(*jk)), jk
-            )
-    # df is DOC-grain over ALL indexed fields (fielded_term_stats'
-    # convention) — derive it BEFORE the weights filter, or a weights
-    # subset would shrink df and diverge from the precomputed path
+    n_docs: dict = {}  # per-group corpus N (identical on a group's rows)
+    for (g, _), (n, _) in fscal.items():
+        if n is not None:
+            n_docs[g] = max(n_docs.get(g, n), n)
+    entries = {}
+    for key, qids in keys.items():
+        if key not in dfs:
+            continue  # term absent from the corpus
+        n = n_docs.get(key[0])
+        if max_df_frac is not None and not (
+            n is not None and dfs[key] <= float(max_df_frac) * n
+        ):
+            continue  # the stopword valve, cut before the scan
+        entries[key] = F.struct(
+            F.lit(n).cast("long").alias("n_docs"),
+            F.lit(dfs[key]).cast("long").alias("df"),
+            F.array(*[F.lit(q).cast(qtype) for q in qids]).alias("q"),
+        )
+    qmap = _query_map(
+        entries,
+        group_col,
+        f"struct<n_docs:bigint,df:bigint,q:array<{qtype.simpleString()}>>",
+    )
+    amap = _query_map(
+        {
+            key: F.lit(avgdl).cast("double")
+            for key, (_, avgdl) in fscal.items()
+            if key[1] in weights
+        },
+        group_col, "double", key="field",
+    )
     if group_col:
         postings = postings.withColumn("_gk", _gkey(group_col))
-    all_matched = postings.join(F.broadcast(qterms), jk)
-    if dfreq is None:
-        if pin:
-            all_matched = all_matched.localCheckpoint(eager=False)
-        dfreq = fielded_term_stats(
-            all_matched, id_col, group_col=("_gk" if group_col else None)
-        )
-        if max_df_frac is not None:
-            dfreq = _df_valve(dfreq)
-    matched = all_matched.filter(F.col("field").isin(*weights))
-    # df above derives from the UNFILTERED all_matched branch — the
-    # filter constrains candidate docs only (corpus-level stats, the
-    # bm25_topk filter_ids contract)
     matched = _apply_lex_filter(
-        matched, filter_ids, group_col, id_col, "bm25f_topk"
+        postings.filter(
+            F.col("term").isin(sorted({t for _, t in entries}))
+            & F.col("field").isin(*weights)
+        ),
+        filter_ids, group_col, id_col, "bm25f_topk",
     )
-    favg = fstats.select(*fk, F.col("avgdl").alias("_avgdl"))
     w_f = _field_ladder(weights)
     b_f = _field_ladder(bmap)
     # Build-arg validation, lazily INSIDE the scoring expression (no
-    # construction-time job): favg joins LEFT, and a posting whose
-    # field is missing from fstats — or carries avgdl <= 0 — raises at
-    # execution instead of silently dropping that field's postings
-    # from scoring / dividing by zero. Inner-join pruning can't elide
-    # the check because it produces the avgdl the score divides by.
+    # construction-time job): a posting whose field is missing from
+    # fstats — or carries avgdl <= 0 — raises at execution instead of
+    # silently dropping that field's postings from scoring / dividing
+    # by zero.
     avgdl_ok = F.when(
         F.col("_avgdl").isNull() | (F.col("_avgdl") <= 0),
         F.raise_error(
@@ -1595,40 +1538,36 @@ def bm25f_topk(
         .cast(_CONTRIB_DECIMAL)
         .alias("_wtf")
     )
+    # the check runs AFTER the explode, on postings some query holds
     per_term = (
-        matched.join(F.broadcast(qt), jk)
-        .join(F.broadcast(favg), fk, "left")
-        .select("query_id", *gb, *gk, F.col(id_col), "term", wtf)
-        .groupBy("query_id", *gb, *gk, id_col, "term")
+        matched.select(
+            *gb, id_col, "field", "term", "tf", "field_len",
+            F.element_at(qmap, _query_key(group_col)).alias("_k"),
+            F.element_at(amap, _query_key(group_col, "field")).alias(
+                "_avgdl"
+            ),
+        )
+        .select(
+            *gb, id_col, "field", "term", "tf", "field_len", "_avgdl",
+            "_k.n_docs", "_k.df", F.explode("_k.q").alias("query_id"),
+        )
+        .select("query_id", *gb, id_col, "term", "n_docs", "df", wtf)
+        .groupBy("query_id", *gb, id_col, "term", "n_docs", "df")
         .agg(F.sum("_wtf").alias("_tfw"))
     )
-    idf = F.log(
-        F.lit(1.0)
-        + (
-            (F.col("n_docs") - F.col("df") + F.lit(0.5))
-            / (F.col("df") + F.lit(0.5))
-        )
-    )
     tfw = F.col("_tfw").cast("double")
-    scored = per_term.join(F.broadcast(dfreq), jk)
-    if group_col:
-        scored = scored.join(F.broadcast(nstats), "_gk")
-    else:
-        scored = scored.crossJoin(F.broadcast(nstats))
     per_doc = (
-        scored.select(
+        per_term.select(
             "query_id",
             *gb,
             F.col(id_col),
-            (idf * (tfw / (F.lit(float(k1)) + tfw)))
+            (_idf() * (tfw / (F.lit(float(k1)) + tfw)))
             .cast(_CONTRIB_DECIMAL)
             .alias("_c"),
         )
         .groupBy("query_id", *gb, id_col)
         .agg(F.sum("_c").alias("_s"))
     )
-    from datamunging_spark.operators.relational import top_k_per_group
-
     return top_k_per_group(
         per_doc,
         ["query_id"],
@@ -1791,19 +1730,6 @@ def _candidate_df(
     return cdf
 
 
-def _selection_idf() -> Column:
-    """The Lucene "+1" idf over (n_docs, df) — the term-SELECTION
-    ranking weight of :func:`more_like_this` / :func:`prf_expand`
-    (final SCORING goes through :func:`_bm25_parts`)."""
-    return F.log(
-        F.lit(1.0)
-        + (
-            (F.col("n_docs") - F.col("df") + F.lit(0.5))
-            / (F.col("df") + F.lit(0.5))
-        )
-    )
-
-
 def more_like_this(
     postings: DataFrame,
     doc_ids: DataFrame,
@@ -1880,7 +1806,7 @@ def more_like_this(
         postings, src.select(*jk).distinct(), stats, dfreq,
         min_df, max_df_frac, gk=bool(group_col),
     )
-    idf = _selection_idf()
+    idf = _idf()
     scored_terms = src.join(F.broadcast(dfreq), jk)
     if group_col:
         scored_terms = scored_terms.join(
@@ -2050,7 +1976,7 @@ def prf_expand(
         postings, fb_post.select(*jk).distinct(), stats, dfreq,
         min_df, max_df_frac, gk=bool(group_col),
     )
-    idf = _selection_idf()
+    idf = _idf()
     scored = fb_post.join(F.broadcast(cdf), jk)
     if group_col:
         scored = scored.join(
@@ -2365,10 +2291,16 @@ def near_topk(
     descending query offset so a chain never reuses one position —
     the standard dominance argument makes latest-start optimal).
     O(total positions · n_terms) per doc, all expression-level. Plan
-    shape identical to :func:`phrase_topk`: one pushed postings scan
-    broadcast-joined to the query terms; the only shuffle is the
-    matched (query, doc) aggregate. ``group_col``: the grouped face
-    over a grouped positional index (the :func:`bm25_topk` contract —
+    shape identical to :func:`phrase_topk`: the SMALL query batch is
+    collected once (by contract, like :func:`bm25_topk`'s) and rides
+    the plan as a pushed ``term IN (...)`` filter on the one postings
+    scan plus a literal map (group, term) → [(query, tag, n_terms)] —
+    the tag is the negated query offset when ordered, the term's index
+    among the query's sorted distinct terms when not. The shuffles are
+    the matched (query, doc) aggregate and the per-query window, so a
+    request with the guard off is four Spark jobs (an armed guard adds
+    its one collect). ``group_col``: the grouped face over a grouped
+    positional index (the :func:`bm25_topk` contract —
     queries carry the group, NULL-safe, group rides the output).
 
     ``max_df_frac`` (with ``stats``, and ideally ``dfreq`` =
@@ -2379,8 +2311,8 @@ def near_topk(
     through the aggregate; see :func:`_positional_hot_guard`.
     DEFAULT-ARMED at the warn tier (``max_df_frac=0.5``) when
     ``stats`` AND ``dfreq`` are both provided, like
-    :func:`phrase_topk` (the check is then broadcast-sized; without
-    dfreq the default stays off rather than auto-running a postings
+    :func:`phrase_topk` (the check is then one query-sized collect;
+    without dfreq the default stays off rather than auto-running a postings
     aggregate per construction); fully off — the parity configuration
     — when stats are absent.
     ``filter_ids``: predicate-constrained search — the
@@ -2392,73 +2324,64 @@ def near_topk(
             "with inverted_index(..., positions=True)"
         )
     gb = [group_col] if group_col else []
-    jk = (["_gk"] if group_col else []) + ["term"]
+    qtype = queries.schema[query_id_col].dataType
     big = F.lit(2**31 - 1)
-    if ordered:
-        # query token SEQUENCE, duplicates kept; tag = -offset so the
-        # (pos asc, tag asc) array sort processes equal positions in
-        # DESCENDING offset order (a chain never reuses one position)
-        qp = queries.select(
-            F.col(query_id_col).alias("query_id"),
-            *gb,
-            F.posexplode(search_terms(query_col, lowercase)).alias(
-                "_off", "term"
-            ),
-        )
-        tag = F.transform(
-            "positions",
-            lambda p: F.struct(
-                p.cast("int").alias("pos"),
-                (-F.col("_off")).cast("int").alias("nt"),
-            ),
-        )
-    else:
-        qp = (
-            queries.select(
-                F.col(query_id_col).alias("query_id"),
-                *gb,
-                F.explode(
-                    search_terms(query_col, lowercase)
-                ).alias("term"),
-            )
-            .distinct()
-            .withColumn(
-                "_tidx",
-                F.row_number().over(
-                    Window.partitionBy("query_id").orderBy("term")
+    # ordered: the query token SEQUENCE, duplicates kept, tag = -offset
+    # so the (pos asc, tag asc) array sort processes equal positions in
+    # DESCENDING offset order (a chain never reuses one position);
+    # unordered: the sorted term SET, tag = the term's index in it
+    tname = "nt" if ordered else "t"
+    seqs: dict = {}
+    for r in _collect_queries(
+        queries, query_col, query_id_col, lowercase, group_col
+    ):
+        seqs.setdefault((r["_gk"], r["_q"]), []).extend(r["_t"])
+    keys: dict = {}  # (group key, term) → [(query, tag, n_terms)]
+    for (g, qid), toks in seqs.items():
+        toks = toks if ordered else sorted(set(toks))
+        for i, t in enumerate(toks):
+            keys.setdefault((g, t), []).append(
+                F.struct(
+                    F.lit(qid).cast(qtype).alias("query_id"),
+                    F.lit(-i if ordered else i).alias("tag"),
+                    F.lit(len(toks)).alias("n"),
                 )
-                - 1,
             )
-        )
-        tag = F.transform(
-            "positions",
-            lambda p: F.struct(
-                p.cast("int").alias("pos"),
-                F.col("_tidx").cast("int").alias("t"),
-            ),
-        )
-    if group_col:
-        qp = qp.withColumn("_gk", _gkey(group_col)).drop(group_col)
-        postings = postings.withColumn("_gk", _gkey(group_col))
     if max_df_frac is None and stats is not None and dfreq is not None:
-        # default-armed warn tier, broadcast-sized check only (see
+        # default-armed warn tier, query-sized check only (see
         # docstring; r15-close advice)
         max_df_frac, on_hot = 0.5, "warn"
     _positional_hot_guard(
-        {
-            (r["_gk"] if group_col else None, r["term"])
-            for r in qp.select(*jk).distinct().collect()
-        }
-        if max_df_frac is not None
-        else set(),
-        postings, stats, dfreq, max_df_frac, group_col, "near_topk",
-        on_hot,
+        keys, postings, stats, dfreq, max_df_frac, group_col,
+        "near_topk", on_hot,
     )
-    qn = qp.groupBy("query_id").agg(F.count(F.lit(1)).alias("_n"))
+    qmap = _query_map(
+        {key: F.array(*v) for key, v in keys.items()},
+        group_col,
+        f"array<struct<query_id:{qtype.simpleString()},tag:int,n:int>>",
+    )
+    if group_col:
+        postings = postings.withColumn("_gk", _gkey(group_col))
     hits = _apply_lex_filter(
-        postings.join(F.broadcast(qp), jk),
+        postings.filter(F.col("term").isin(sorted({t for _, t in keys}))),
         filter_ids, group_col, id_col, "near_topk",
-    ).select("query_id", *gb, id_col, tag.alias("_tagged"))
+    ).select(
+        *gb,
+        id_col,
+        "positions",
+        F.explode(F.element_at(qmap, _query_key(group_col))).alias("_q"),
+    ).select(
+        F.col("_q.query_id").alias("query_id"),
+        F.col("_q.n").alias("_n"),
+        *gb,
+        id_col,
+        F.transform(
+            "positions",
+            lambda p: F.struct(
+                p.cast("int").alias("pos"), F.col("_q.tag").alias(tname)
+            ),
+        ).alias("_tagged"),
+    )
     final = lambda acc: F.struct(  # noqa: E731
         acc["best"].alias("best"), acc["bstart"].alias("bstart")
     )
@@ -2519,12 +2442,11 @@ def near_topk(
         scan = _covering_window_scan(F.col("_n"))
     merged = F.array_sort(F.flatten(F.collect_list("_tagged")))
     grouped = (
-        hits.groupBy("query_id", *gb, id_col)
+        hits.groupBy("query_id", "_n", *gb, id_col)
         .agg(
             F.count(F.lit(1)).alias("_n_matched"),
             merged.alias("_merged"),
         )
-        .join(F.broadcast(qn), "query_id")
         .filter(F.col("_n_matched") == F.col("_n"))
         .select(
             "query_id",

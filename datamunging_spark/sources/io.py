@@ -481,9 +481,10 @@ def local_table(
     ``parallelize`` RDD with ``defaultParallelism`` slices — a 3-row
     query table becomes 32 near-empty partitions, EACH needing a Python
     worker round-trip at every action. A query-construction helper that
-    embeds such a table in several broadcast subtrees (boolean_topk's
-    roles table feeds four) pays 32 Python tasks per subtree per action:
-    x2_boolean measured 119 s of executor CPU across 401 tasks at sf0.1,
+    embeds such a table in several broadcast subtrees (a parameter
+    table joined into every branch of a plan) pays 32 Python tasks per
+    subtree per action: the r16 boolean_topk plan, whose roles table
+    fed four, measured 119 s of executor CPU across 401 tasks at sf0.1,
     almost all of it Python-worker churn deserializing the SAME 3 rows.
     The pandas/Arrow conversion path instead lands the rows in the plan
     as a LocalTableScan: no RDD, no Python at action time, and Catalyst

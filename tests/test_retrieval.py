@@ -391,58 +391,167 @@ def _jobs_of(spark, fn, group):
 
 
 #: Spark jobs of one single-query request, call plus result collect:
-#: one collect of the query batch, the df/stats scalar collect (BM25
-#: only), the aggregate and window shuffle stages (one job each under
-#: AQE; IVF has no aggregate) and the result.
-SEARCH_JOB_BUDGET = {"bm25": 5, "phrase": 4, "ivf": 3}
+#: one collect of the query batch, the df/stats scalar collect (BM25,
+#: boolean and BM25F), the aggregate and window shuffle stages (one job
+#: each under AQE; IVF has no aggregate, BM25F has two) and the result.
+SEARCH_JOB_BUDGET = {
+    "bm25": 5, "phrase": 4, "ivf": 3, "boolean": 5, "bm25f": 6, "near": 4,
+}
 
 
-def test_search_request_job_budget(spark, tmp_path):
-    """A job-count regression on the search request path fails here:
-    each operator is called once on a materialized index with a
-    one-row query batch built the way a serving client builds it, and
-    its jobs (the call's collects plus the result collect) must stay
-    within ``SEARCH_JOB_BUDGET``."""
-    from datamunging_spark.operators.retrieval import phrase_topk
-    from datamunging_spark.operators.similarity import ivf_build, ivf_search
+@pytest.fixture(scope="module")
+def lexical_art(spark, tmp_path_factory):
+    """Materialized index-build artifacts, the serving configuration:
+    a positional index and a title/body fielded index written to
+    parquet, with their stats and df tables pinned."""
+    from datamunging_spark.operators.retrieval import (
+        field_stats,
+        fielded_index,
+        fielded_term_stats,
+    )
 
+    tmp_path = tmp_path_factory.mktemp("lexical")
     docs = spark.read.parquet(f"{SF}/documents.parquet")
+    tb = docs.select(
+        "doc_id",
+        F.substring("text", 1, 25).alias("title"),
+        F.col("text").alias("body"),
+    )
     inverted_index(docs, positions=True).write.parquet(
         str(tmp_path / "post")
     )
+    fielded_index(tb, ["title", "body"]).write.parquet(
+        str(tmp_path / "fpost")
+    )
     post = spark.read.parquet(str(tmp_path / "post"))
-    stats = index_stats(docs).localCheckpoint()
-    dfreq = term_stats(post).localCheckpoint()
-    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    idx = ivf_build(emb, n_clusters=8)
-    idx.assigned = idx.assigned.localCheckpoint()
-    vec = [float(v) for v in emb.first().embedding]
+    fpost = spark.read.parquet(str(tmp_path / "fpost"))
+    return {
+        "post": post,
+        "stats": index_stats(docs).localCheckpoint(),
+        "dfreq": term_stats(post).localCheckpoint(),
+        "fpost": fpost,
+        "fstats": field_stats(tb, ["title", "body"]).localCheckpoint(),
+        "fdfreq": fielded_term_stats(fpost).localCheckpoint(),
+    }
+
+
+def _lexical_request(spark, art, face):
+    """One single-query request of a lexical face, its query batch
+    built the way a serving client builds it: boolean and BM25F with
+    their ``dfreq`` tables, near with the hot-term guard off."""
+    from datamunging_spark.operators.retrieval import (
+        bm25f_topk,
+        boolean_topk,
+        near_topk,
+        phrase_topk,
+    )
 
     def q(text):
         return spark.createDataFrame(
             [(0, text)], "query_id long, query string"
         )
 
-    jobs = {
-        "bm25": _jobs_of(spark, lambda: bm25_topk(
-            post, q("spark join window"), stats, k=10, dfreq=dfreq
-        ).collect(), "budget-bm25"),
-        "phrase": _jobs_of(spark, lambda: phrase_topk(
-            post, q("batch batch"), k=10
-        ).collect(), "budget-phrase"),
-        "ivf": _jobs_of(spark, lambda: ivf_search(
+    if face == "bm25":
+        return bm25_topk(
+            art["post"], q("spark join window"), art["stats"], k=10,
+            dfreq=art["dfreq"],
+        )
+    if face == "phrase":
+        return phrase_topk(art["post"], q("batch batch"), k=10)
+    if face == "boolean":
+        return boolean_topk(
+            art["post"],
             spark.createDataFrame(
-                [(-1, vec)], "vec_id long, embedding array<float>"
+                [(0, "spark", "join window", "hash")],
+                "query_id long, must string, should string, "
+                "must_not string",
             ),
-            idx, k=10, n_probe=4,
-        ).collect(), "budget-ivf"),
+            art["stats"], k=10, dfreq=art["dfreq"],
+        )
+    if face == "bm25f":
+        return bm25f_topk(
+            art["fpost"], q("spark join window"), art["fstats"],
+            weights={"title": 2.5, "body": 1.0}, k=10,
+            dfreq=art["fdfreq"],
+        )
+    assert face == "near"
+    return near_topk(art["post"], q("spark join"), k=10, slop=2)
+
+
+def test_search_request_job_budget(spark, lexical_art):
+    """A job-count regression on the search request path fails here:
+    each operator is called once on a materialized index with a
+    one-row query batch built the way a serving client builds it, and
+    its jobs (the call's collects plus the result collect) must stay
+    within ``SEARCH_JOB_BUDGET``."""
+    from datamunging_spark.operators.similarity import ivf_build, ivf_search
+
+    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
+    idx = ivf_build(emb, n_clusters=8)
+    idx.assigned = idx.assigned.localCheckpoint()
+    vec = [float(v) for v in emb.first().embedding]
+
+    jobs = {
+        face: _jobs_of(
+            spark,
+            lambda: _lexical_request(spark, lexical_art, face).collect(),
+            f"budget-{face}",
+        )
+        for face in ("bm25", "phrase", "boolean", "bm25f", "near")
     }
+    jobs["ivf"] = _jobs_of(spark, lambda: ivf_search(
+        spark.createDataFrame(
+            [(-1, vec)], "vec_id long, embedding array<float>"
+        ),
+        idx, k=10, n_probe=4,
+    ).collect(), "budget-ivf")
     over = {
         op: (n, SEARCH_JOB_BUDGET[op])
         for op, n in jobs.items()
         if n > SEARCH_JOB_BUDGET[op]
     }
     assert not over, f"jobs over budget (got, budget): {over}"
+
+
+@pytest.mark.parametrize(
+    "face,pushed",
+    [
+        ("boolean", "In(term, [hash,join,spark,window])"),
+        (
+            "bm25f",
+            "In(term, [join,spark,window]), In(field, [body,title])",
+        ),
+        ("near", "In(term, [join,spark])"),
+    ],
+    ids=["boolean", "bm25f", "near"],
+)
+def test_lexical_faces_answer_with_one_pushed_scan(
+    spark, lexical_art, face, pushed
+):
+    """boolean, BM25F and near ride the literal query plan: the query
+    terms reach the one postings scan as a pushed ``In(term, ...)``
+    filter (BM25F also pushes its weights' field cut), nothing is
+    broadcast, and every exchange is keyed by the query — the (query,
+    doc) aggregate (BM25F's per-term fold adds the term AFTER query and
+    doc) and the per-query window — so nothing repartitions the
+    postings by term."""
+    import contextlib
+    import io
+
+    out = _lexical_request(spark, lexical_art, face)
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        out.explain("formatted")
+    plan = buf.getvalue()
+    assert "BroadcastExchange" not in plan, plan
+    for frag in plan.split("Exchange hashpartitioning(")[1:]:
+        keys = frag.split(")")[0]
+        assert keys.startswith("query_id#"), plan
+        if face != "bm25f":
+            assert "term" not in keys, plan
+    assert [
+        ln for ln in plan.splitlines() if ln.startswith("PushedFilters")
+    ] == [f"PushedFilters: [{pushed}]"], plan
 
 
 def test_rrf_fuse_hand_math_and_outer_union(spark):
@@ -1037,11 +1146,6 @@ def test_boolean_topk_valve_and_dfreq_paths(spark):
     assert sorted((r.query_id, r.doc_id) for r in full.collect()) == [
         (0, 1)
     ]
-    # pin=False (no localCheckpoint) is result-identical
-    unpinned = boolean_topk(post, q, stats, k=5, pin=False)
-    assert sorted(
-        (r.query_id, r.doc_id) for r in unpinned.collect()
-    ) == [(0, 1)]
 
 
 def test_boolean_topk_min_should_match(spark):
@@ -1072,21 +1176,6 @@ def test_boolean_topk_min_should_match(spark):
     )
     both = boolean_topk(post, qm, stats, k=5, min_should_match=2)
     assert [r.doc_id for r in both.collect()] == [1]
-
-
-def test_bm25_pin_flag_result_identical(spark):
-    docs = _docs(spark)
-    post, stats = inverted_index(docs), index_stats(docs)
-    q = spark.createDataFrame([Row(query_id=0, query="zebra fast")])
-    a = sorted(
-        (r.query_id, r.doc_id, r.rank, r.bm25)
-        for r in bm25_topk(post, q, stats, k=4).collect()
-    )
-    b = sorted(
-        (r.query_id, r.doc_id, r.rank, r.bm25)
-        for r in bm25_topk(post, q, stats, k=4, pin=False).collect()
-    )
-    assert a == b and a
 
 
 def test_advance_index_empty_text_update_is_delete(spark):

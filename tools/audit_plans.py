@@ -187,17 +187,19 @@ _JUSTIFY: dict[str, str] = {
     "top-k sized.",
     "x2_boolean": "same family shape as x2_bm25_hybrid: one corpus "
     "exchange is the inline index build (persisted table in real "
-    "use); the three boolean roles share ONE pinned postings "
-    "semi-join, and the qualification/exclusion/score exchanges are "
-    "matched-postings / top-k sized.",
+    "use); the three boolean roles ride ONE pushed term IN postings "
+    "scan as plan literals, and the one (query, doc) aggregate "
+    "(score, must/should counts, exclusion) and the window exchanges "
+    "are matched-postings / top-k sized.",
     "x2_bm25f": "same family shape as x2_bm25_hybrid with field "
     "grain: the C exchanges are the inline FIELDED index build "
     "(title+body postings — persisted table in real use) and the "
-    "matched branch it feeds on the convenience path; the M exchange "
-    "is the per-(query, doc, term) field fold, matched-postings sized "
+    "on-the-fly doc-grain df it feeds; the M exchange is the "
+    "per-(query, doc, term) field fold, matched-postings sized "
     "(corpus-proportional here only via the ~31-word synthetic "
-    "vocabulary, the x2_bm25_persisted note); the query-side joins "
-    "are all broadcasts and the S exchanges are top-k windows.",
+    "vocabulary, the x2_bm25_persisted note); the query side rides "
+    "the plan as literals (no join) and the S exchanges are top-k "
+    "windows.",
     "x2_bm25_persisted": "the PROOF row for the family's scale claim: "
     "C:0 — the build exchange is GONE (postings/dfreq/stats read from "
     "materialized parquet); the one M exchange is the matched-postings "
