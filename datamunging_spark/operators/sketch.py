@@ -29,6 +29,15 @@ batch merged into the bounded counter table; the decrement is one
 Ties at the (k+1)-th counter can keep slightly fewer than k counters
 after a decrement — harmless, the bound only improves.
 
+One implementation serves every face: the private helpers
+``_mg_partition`` (build pass), ``_hh_summary``, ``_hh_merge`` and
+``_hh_report`` are keyed by ``keys`` (empty means ungrouped), the shape
+of the quantile leg's ``_kll_*`` helpers, and the ``hh_*`` and
+``grouped_hh_*`` functions are thin wrappers over them. Every face is
+lazy — a one-shot ``heavy_hitters`` or ``grouped_heavy_hitters`` plus
+collect is three Spark jobs (build, summary aggregate, report window)
+— so a caller that reads one summary twice persists it itself.
+
 No reference-repo counterpart: the reference's frequency analyses are
 exact GROUP BY counts (README.md's census/word-count examples), which
 `heavy_hitters_exact` covers; the sketch is the engine's scale path.
@@ -79,159 +88,199 @@ def heavy_hitters_exact(
     )
 
 
-def _mg_partition(k: int):
-    """Batched Misra-Gries over an iterator of Arrow batches; at most
-    ``k`` counters held between batches. (A chunked-consolidation
-    variant — buffering value_counts and concat+groupby-ing every ~8k
-    rows — was measured at the 64M-row probe point and was no faster
-    than this per-batch ``Series.add``, so the simpler form stays.)"""
+def _norm_key(kt):
+    """Normalize a pandas groupby(dropna=False) group label: always a
+    tuple, with NA components replaced by None. CRITICAL for the keyed
+    build's memory bound — pandas returns a FRESH float nan object as
+    the NA label on every groupby call, and nan != nan with
+    identity-based hashing, so a dict keyed on the raw label would grow
+    one separate ≤k state per Arrow BATCH for the NULL key group
+    (O(batches × k), data-proportional) instead of one per key. This
+    WOULD conflate a float key's NaN with NULL (Spark's own groupBy
+    keeps them distinct), which is why :func:`_hh_summary` rejects
+    float/double key columns; the keys that reach here cannot carry
+    NaN."""
+    import pandas as pd
+
+    if not isinstance(kt, tuple):
+        kt = (kt,)
+    return tuple(None if pd.isna(v) else v for v in kt)
+
+
+def _mg_partition(keys: list[str], k: int):
+    """Batched Misra-Gries over an iterator of Arrow batches: one
+    counter table per key group present in the partition (with no
+    ``keys`` the whole partition is one group), at most ``k`` counters
+    held per group between batches. Each group emits its counters plus
+    a 'dec' and an 'n' meta row. (A chunked-consolidation variant —
+    buffering value_counts and concat+groupby-ing every ~8k rows — was
+    measured at the 64M-row probe point and was no faster than this
+    per-batch ``Series.add``, so the simpler form stays.)"""
 
     def run(batches):
         import numpy as np
         import pandas as pd
 
-        counters = pd.Series(dtype="int64")
-        dec = 0
-        n = 0
+        # key tuple -> [counters, dec, n]; the ungrouped pass reports
+        # its meta rows even for an empty partition
+        states = {} if keys else {(): [pd.Series(dtype="int64"), 0, 0]}
         for pdf in batches:
-            vals = pdf["value"].dropna()
-            if not len(vals):
-                continue
-            n += len(vals)
-            vc = vals.value_counts()  # vectorized per-batch exact counts
-            counters = counters.add(vc, fill_value=0).astype("int64")
-            if len(counters) > k:
-                arr = counters.to_numpy()
-                # (k+1)-th largest: while >k counters are >= t, subtract
-                # t from everything — one decrement event of weight t
-                # (each event removes >= (k+1)·t mass, so the summed
-                # dec stays <= n/(k+1))
-                # always >= 1: every live counter is >= 1 by
-                # construction, so the decrement always fires
-                t = int(np.partition(arr, -(k + 1))[-(k + 1)])
-                dec += t
-                counters = counters[counters > t] - t
-        out = pd.DataFrame(
-            {
-                "value": counters.index.astype(object),
-                "cnt": counters.to_numpy(dtype="int64"),
-                "meta": None,
-            }
-        )
-        meta = pd.DataFrame(
-            {
-                "value": [None, None],
-                "cnt": [dec, n],
-                "meta": [_META_DEC, _META_N],
-            }
-        )
-        yield pd.concat([out, meta], ignore_index=True)
+            groups = (
+                pdf.groupby(keys, dropna=False, sort=False)
+                if keys
+                else [((), pdf)]
+            )
+            for kt, grp in groups:
+                vals = grp["value"].dropna()
+                if not len(vals):
+                    continue
+                if keys:
+                    kt = _norm_key(kt)
+                st = states.get(kt)
+                if st is None:
+                    st = states[kt] = [pd.Series(dtype="int64"), 0, 0]
+                st[2] += len(vals)
+                vc = vals.value_counts()  # vectorized per-batch counts
+                st[0] = st[0].add(vc, fill_value=0).astype("int64")
+                if len(st[0]) > k:
+                    # (k+1)-th largest: while >k counters are >= t,
+                    # subtract t from everything — one decrement event
+                    # of weight t (each removes >= (k+1)·t mass, so the
+                    # summed dec stays <= n/(k+1)); always >= 1, since
+                    # every live counter is >= 1
+                    arr = st[0].to_numpy()
+                    t = int(np.partition(arr, -(k + 1))[-(k + 1)])
+                    st[1] += t
+                    st[0] = st[0][st[0] > t] - t
+        frames = []
+        for kt, (counters, dec, n) in states.items():
+            out = pd.DataFrame(
+                {
+                    "value": list(counters.index.astype(object))
+                    + [None, None],
+                    "cnt": np.append(counters.to_numpy(dtype="int64"),
+                                     [dec, n]),
+                    "meta": [None] * len(counters) + [_META_DEC, _META_N],
+                }
+            )
+            for name, kv in zip(keys, kt):
+                out[name] = [kv] * len(out)
+            frames.append(out[keys + ["value", "cnt", "meta"]])
+        if frames:
+            yield pd.concat(frames, ignore_index=True)
 
     return run
 
 
-def hh_summary(df: DataFrame, col: str, k: int = 4096) -> DataFrame:
-    """Build a Misra-Gries SUMMARY of ``col``: the mergeable/persistable
-    sketch state — rows ``(value, cnt, meta)`` where data rows carry
-    ``meta=NULL`` counters and the two meta rows carry the summed
-    decrement total (``meta='dec'``) and non-null row count
-    (``meta='n'``). One Arrow pass (≤ ``k`` counters per partition),
-    then a hash aggregate over ≤ partitions × (k+2) counter rows;
-    localCheckpointed because every consumer (report, merge) reads it
-    from several branches and the scan must run once. ``col`` is
-    stringified (one key space regardless of input type). Data rows can
-    exceed ``k`` here (union of per-partition summaries) — the bounds
-    hold regardless; :func:`merge_hh_summaries` re-bounds to ``k`` for
-    the stored-state loop.
-    """
+def _hh_summary(df: DataFrame, keys: list[str], col: str, k: int):
+    """The one Misra-Gries build: a mapInPandas pass (≤ ``k`` counters
+    per key group per partition), then the summary aggregate. Lazy."""
     if k < 1:
         raise ValueError("k must be >= 1")
-    vals = df.select(F.col(col).cast("string").alias("value"))
+    floaty = [
+        c for c in keys
+        if isinstance(df.schema[c].dataType, (FloatType, DoubleType))
+    ]
+    if floaty:
+        raise ValueError(
+            f"float/double grouping key(s) {floaty} are not supported by "
+            "the heavy-hitter build (pandas folds NaN into NULL, "
+            "diverging from Spark groupBy); cast to string/decimal/int "
+            "first"
+        )
+    vals = df.select(*keys, F.col(col).cast("string").alias("value"))
     schema = StructType(
-        [
+        [vals.schema[c] for c in keys]
+        + [
             StructField("value", StringType()),
             StructField("cnt", LongType()),
             StructField("meta", StringType()),
         ]
     )
-    rows = vals.mapInPandas(_mg_partition(int(k)), schema=schema)
     return (
-        rows.groupBy("meta", "value")
+        vals.mapInPandas(_mg_partition(keys, int(k)), schema=schema)
+        .groupBy(*keys, "meta", "value")
         .agg(F.sum("cnt").alias("cnt"))
-        .localCheckpoint()
     )
 
 
-def merge_hh_summaries(
-    a: DataFrame, b: DataFrame | None, k: int = 4096
-) -> DataFrame:
-    """Merge two summaries into one with ≤ ``k`` data rows — the
-    Agarwal et al. (PODS 2012) merge rule: sum counters pointwise, then
-    subtract the (k+1)-th largest counter from all and drop ≤ 0,
-    charging the subtraction to the decrement total so the count
-    bracket / error floor stay true of the COMBINED stream. Everything
-    here is summary-sized (≤ ``k`` + partitions × (k+2) rows): the
-    orderBy/limit that finds the cutoff collects k+1 longs on the
-    driver, the data-sized scan happened in :func:`hh_summary`.
-    Associative and commutative, so batches can fold in any order —
-    this is the stored-state step of the incremental/streaming loop.
-    ``b=None`` re-bounds ``a`` alone (the first-batch seed). Parameter
-    drift between the two summaries' build-k is SAFE here, unlike the
-    minhash snapshots: the error total is carried explicitly in the
-    'dec' meta row, so the reported bracket stays true whatever k each
-    side used — k only tunes how tight future bounds are.
-    """
+def _hh_merge(a: DataFrame, b: DataFrame | None, keys: list[str], k: int):
+    """The Agarwal et al. cut per key group: sum counters pointwise,
+    take t = the key's (k+1)-th largest counter (0 with ≤ k counters),
+    keep the counters above t minus t, and charge t to the key's 'dec'
+    row. One rank window reads the summed rows once: each key's meta
+    rows rank first (m of them, at most 'dec' and 'n'), then its
+    counters by count, so the (k+1)-th counter has rank m+k+1 ≤ k+3.
+    The rank filter comes first so Spark bounds the sort per key (a
+    partial ``WindowGroupLimit`` below the exchange; a top-k
+    ``TakeOrderedAndProject`` with no keys); counters ranked below it
+    are ≤ t and drop anyway. Everything is summary-sized."""
     if k < 1:
         raise ValueError("k must be >= 1")
     u = a if b is None else a.unionByName(b)
-    merged = (
-        u.groupBy("meta", "value")
+    data = F.col("meta").isNull()
+    rk = F.col("_rk")
+    wkey = Window.partitionBy(*keys)
+    return (
+        u.groupBy(*keys, "meta", "value")
         .agg(F.sum("cnt").alias("cnt"))
-        .localCheckpoint()
-    )
-    data = merged.filter(F.col("meta").isNull())
-    cuts = [
-        r.cnt
-        for r in data.select("cnt").orderBy(F.desc("cnt")).limit(k + 1).collect()
-    ]
-    if len(cuts) <= k:
-        return merged
-    t = cuts[-1]  # (k+1)-th largest
-    rebound = (
-        data.filter(F.col("cnt") > t)
-        .withColumn("cnt", F.col("cnt") - F.lit(t))
-    )
-    meta = merged.filter(F.col("meta").isNotNull()).withColumn(
-        "cnt",
-        F.when(F.col("meta") == _META_DEC, F.col("cnt") + F.lit(t)).otherwise(
-            F.col("cnt")
-        ),
-    )
-    return rebound.unionByName(meta)
-
-
-def hh_report(summary: DataFrame, min_share: float | None = None) -> DataFrame:
-    """Render a summary into the heavy-hitter report
-    ``(value, count_lo, count_hi, n_total, max_err)`` with
-    ``count_lo ≤ true count ≤ count_hi`` and ``max_err`` = the summed
-    decrement total (≤ n/(k+1) per the module bounds); ``min_share``
-    keeps only values whose count COULD reach ``min_share × n``
-    (supersets the exact answer by the no-false-negative guarantee)."""
-    meta = (
-        summary.filter(F.col("meta").isNotNull())
-        .groupBy()
-        .pivot("meta", [_META_DEC, _META_N])
-        .sum("cnt")
+        .withColumn(
+            "_rk",
+            F.row_number().over(
+                wkey.orderBy(F.asc_nulls_last("meta"), F.desc("cnt"))
+            ),
+        )
+        .filter(rk <= k + 3)
+        .withColumn("_m", F.count("meta").over(wkey))
+        .withColumn(
+            "_t",
+            F.coalesce(
+                F.max(F.when(rk == F.col("_m") + (k + 1), F.col("cnt"))).over(
+                    wkey
+                ),
+                F.lit(0),
+            ),
+        )
+        .filter(~data | (F.col("cnt") > F.col("_t")))
         .select(
-            F.coalesce(F.col(_META_DEC), F.lit(0)).alias("max_err"),
-            F.coalesce(F.col(_META_N), F.lit(0)).alias("n_total"),
+            *keys,
+            "meta",
+            "value",
+            (
+                F.col("cnt")
+                + F.when(data, -F.col("_t"))
+                .when(F.col("meta") == _META_DEC, F.col("_t"))
+                .otherwise(0)
+            ).alias("cnt"),
         )
     )
+
+
+def _hh_report(
+    summary: DataFrame, keys: list[str], min_share: float | None
+):
+    """One pass: a window per key group carries the group's 'dec' and
+    'n' totals onto its data rows."""
+    w = Window.partitionBy(*keys)
+
+    def total(tag):
+        return F.coalesce(
+            F.sum(F.when(F.col("meta") == tag, F.col("cnt"))).over(w),
+            F.lit(0),
+        )
+
     out = (
-        summary.filter(F.col("meta").isNull() & F.col("value").isNotNull())
-        .select("value", F.col("cnt").alias("count_lo"))
-        .crossJoin(F.broadcast(meta))
+        summary.select(
+            *keys,
+            "meta",
+            "value",
+            F.col("cnt").alias("count_lo"),
+            total(_META_DEC).alias("max_err"),
+            total(_META_N).alias("n_total"),
+        )
+        .filter(F.col("meta").isNull() & F.col("value").isNotNull())
         .select(
+            *keys,
             "value",
             "count_lo",
             (F.col("count_lo") + F.col("max_err")).alias("count_hi"),
@@ -244,6 +293,54 @@ def hh_report(summary: DataFrame, min_share: float | None = None) -> DataFrame:
             F.col("count_hi") >= F.col("n_total") * F.lit(float(min_share))
         )
     return out
+
+
+def hh_summary(df: DataFrame, col: str, k: int = 4096) -> DataFrame:
+    """Build a Misra-Gries SUMMARY of ``col``: the mergeable/persistable
+    sketch state — rows ``(meta, value, cnt)`` where data rows carry
+    ``meta=NULL`` counters and the two meta rows carry the summed
+    decrement total (``meta='dec'``) and non-null row count
+    (``meta='n'``). One Arrow pass (≤ ``k`` counters per partition),
+    then a hash aggregate over ≤ partitions × (k+2) counter rows. Lazy:
+    a caller that reads one summary more than once persists it itself.
+    ``col`` is stringified (one key space regardless of input type).
+    Data rows can exceed ``k`` here (union of per-partition summaries)
+    — the bounds hold regardless; :func:`merge_hh_summaries` re-bounds
+    to ``k`` for the stored-state loop.
+    """
+    return _hh_summary(df, [], col, k)
+
+
+def merge_hh_summaries(
+    a: DataFrame, b: DataFrame | None, k: int = 4096
+) -> DataFrame:
+    """Merge two summaries into one with ≤ ``k`` data rows — the
+    Agarwal et al. (PODS 2012) merge rule: sum counters pointwise, then
+    subtract the (k+1)-th largest counter from all and drop ≤ 0,
+    charging the subtraction to the decrement total so the count
+    bracket / error floor stay true of the COMBINED stream. Lazy and
+    summary-sized: the cut is a rank filter (the meta rows and the top
+    k+1 counters) and a window over what it keeps; nothing reaches the
+    driver. Associative and commutative, so batches
+    can fold in any order — this is the stored-state step of the
+    incremental/streaming loop. ``b=None`` re-bounds ``a`` alone (the
+    first-batch seed). Parameter drift between the two summaries'
+    build-k is SAFE here, unlike the minhash snapshots: the error total
+    is carried explicitly in the 'dec' meta row, so the reported
+    bracket stays true whatever k each side used — k only tunes how
+    tight future bounds are.
+    """
+    return _hh_merge(a, b, [], k)
+
+
+def hh_report(summary: DataFrame, min_share: float | None = None) -> DataFrame:
+    """Render a summary into the heavy-hitter report
+    ``(value, count_lo, count_hi, n_total, max_err)`` with
+    ``count_lo ≤ true count ≤ count_hi`` and ``max_err`` = the summed
+    decrement total (≤ n/(k+1) per the module bounds); ``min_share``
+    keeps only values whose count COULD reach ``min_share × n``
+    (supersets the exact answer by the no-false-negative guarantee)."""
+    return _hh_report(summary, [], min_share)
 
 
 def heavy_hitters(
@@ -284,26 +381,21 @@ def top_k_exact_via_sketch(
 
     Ties break deterministically (count desc, value asc — the
     ``build_vocab`` convention). Two data passes total, both with
-    bounded exchanges; certificate strictness makes boundary ties with
-    ``max_err`` fail closed.
+    bounded exchanges; the summary is read once, through its report,
+    whose rows carry ``max_err``. Certificate strictness makes boundary
+    ties with ``max_err`` fail closed.
     """
     if top_n < 1:
         raise ValueError("top_n must be >= 1")
-    s = hh_summary(df, col, k)
-    cand = s.filter(F.col("meta").isNull() & F.col("value").isNotNull()).select(
-        "value"
-    )
-    meta = (
-        s.filter(F.col("meta") == _META_DEC)
-        .groupBy()
-        .agg(F.coalesce(F.sum("cnt"), F.lit(0)).alias("max_err"))
-    )
+    # every candidate carries the error total, so the summary is read
+    # once (an empty candidate set returns no rows whatever max_err is)
+    cand = hh_report(hh_summary(df, col, k)).select("value", "max_err")
     vals = df.select(F.col(col).cast("string").alias("value")).filter(
         F.col("value").isNotNull()
     )
     exact = (
         vals.join(F.broadcast(cand), "value")
-        .groupBy("value")
+        .groupBy("value", "max_err")
         .agg(F.count(F.lit(1)).alias("count"))
     )
     top = exact.orderBy(F.desc("count"), F.asc("value")).limit(int(top_n))
@@ -315,8 +407,7 @@ def top_k_exact_via_sketch(
     # UNLESS max_err == 0, where no counter was ever decremented and the
     # candidate set is provably the COMPLETE key space.
     return (
-        top.crossJoin(F.broadcast(meta))
-        .crossJoin(F.broadcast(vth))
+        top.crossJoin(F.broadcast(vth))
         .select(
             "value",
             "count",
@@ -393,12 +484,13 @@ def hot_keys_sketch(
     """Hot keys at bounded shuffle — the detector behind the
     ``valve="sketch"`` mode of ``max_gram_df``/``max_fp_df``: one
     Misra-Gries Arrow pass (≤ ``k`` counters per partition) + a
-    summary-sized aggregate, RE-BOUNDED to ≤ ``k`` data rows via the
-    Agarwal merge rule (``merge_hh_summaries`` — the raw union of
-    per-partition summaries can reach partitions × k rows, and on a
-    heavy-tailed corpus the global error term would flag nearly all of
-    them), instead of the exact valve's one-shuffled-row-per-DISTINCT-
-    key groupBy. Returns a single-column frame (named ``col``, cast
+    summary-sized aggregate, RE-BOUNDED to ≤ ``k`` data rows by the
+    Agarwal cut of ``merge_hh_summaries`` (a top-(k+1) rank filter; the
+    one-shot faces skip it, but here the raw union of per-partition
+    summaries can reach partitions × k rows, and on a heavy-tailed
+    corpus the global error term would flag nearly all of them),
+    instead of the exact valve's one-shuffled-row-per-DISTINCT-key
+    groupBy. Returns a lazy single-column frame (named ``col``, cast
     back to its original type) of keys whose MG count UPPER bound
     exceeds ``threshold`` — genuinely ≤ k rows, always
     broadcast-anti-join-able. The re-bound adds its subtraction to the
@@ -422,10 +514,7 @@ def hot_keys_sketch(
       trade (drops lose detection recall, never correctness), priced
       per-corpus in SCALE.md.
     """
-    rep = hh_report(
-        merge_hh_summaries(hh_summary(df.select(F.col(col)), col, k=k),
-                           None, k=k)
-    )
+    rep = hh_report(merge_hh_summaries(hh_summary(df, col, k), None, k))
     return rep.filter(F.col("count_hi") > int(threshold)).select(
         F.col("value").cast(df.schema[col].dataType).alias(col)
     )
@@ -594,18 +683,17 @@ def quantiles_sketch(
 # incrementally"): the same KLL aggregate grouped by key, so every
 # guarantee holds per key group. The exchange carries one partial
 # sketch per key per partition, never data. NULL keys are real groups
-# (plain groupBy semantics, no join anywhere).
+# and a float key's NaN is its own group (plain groupBy semantics, no
+# join anywhere).
 
 
 def grouped_quantile_summary(
     df: DataFrame, keys: list[str], col: str, k: int = 4096
 ) -> DataFrame:
     """Per-key quantile summary: :func:`quantile_summary`'s contract per
-    key group — rows ``(keys..., sketch, k)``. Float/double KEY columns
-    are rejected up front like every grouped sketch face (see
-    :func:`_check_q_keys`); cast to a discrete type first. The exact
-    face is `relational.grouped_percentiles`."""
-    _check_q_keys(keys, df)
+    key group — rows ``(keys..., sketch, k)``. The exact face is
+    `relational.grouped_percentiles`."""
+    _check_q_keys(keys)
     return _kll_summary(df, keys, col, k)
 
 
@@ -615,7 +703,7 @@ def merge_grouped_quantile_summaries(
     """Merge two per-key summaries, outer on keys: a key on one side
     passes through; on both, the sketches merge. ``b=None`` returns
     ``a``."""
-    _check_q_keys(keys, a)
+    _check_q_keys(keys)
     return _kll_merge(a, b, keys)
 
 
@@ -632,39 +720,6 @@ def grouped_quantile_report(
 # --- shared helpers of the grouped faces ----------------------------------
 
 
-def _norm_key(kt):
-    """Normalize a pandas groupby(dropna=False) group label: always a
-    tuple, with NA components replaced by None. CRITICAL for the keyed
-    Arrow passes' memory bound — pandas returns a FRESH float nan
-    object as the NA label on every groupby call, and nan != nan with
-    identity-based hashing, so a dict keyed on the raw label would
-    grow one separate ≤k state per Arrow BATCH for the NULL key group
-    (O(batches × k), data-proportional — the r9 fourth-review catch)
-    instead of one per key. Spark-side note: this WOULD conflate a
-    float key's NaN with NULL (Spark's own groupBy keeps them
-    distinct) — which is why :func:`_check_q_keys` rejects
-    float/double key columns at every public grouped face; the keys
-    that reach here cannot carry NaN."""
-    import pandas as pd
-
-    if not isinstance(kt, tuple):
-        kt = (kt,)
-    return tuple(None if pd.isna(v) else v for v in kt)
-
-
-def _nullsafe_key_cond(left_alias: str, right_alias: str, keys):
-    """AND-fold of eqNullSafe over the key columns of two aliased
-    frames — NULL key groups must join with themselves (the
-    incremental_rollup lesson); one home for all grouped faces."""
-    cond = None
-    for c in keys:
-        eq = F.col(f"{left_alias}.{c}").eqNullSafe(
-            F.col(f"{right_alias}.{c}")
-        )
-        cond = eq if cond is None else (cond & eq)
-    return cond
-
-
 _RESERVED_Q_COLS = frozenset(
     {
         # summary columns (heavy-hitter and quantile families)
@@ -672,32 +727,21 @@ _RESERVED_Q_COLS = frozenset(
         # report output columns (quantile + heavy-hitter surfaces)
         "q", "rank_target", "n_total", "max_rank_err",
         "count_lo", "count_hi", "max_err",
-        # meta pivot labels (become columns in the reports) and the
-        # internal temp columns of the re-bound/report plans
-        "dec", "n", "_rk", "_t", "_v", "_i",
+        # internal temp columns of the merge/report plans
+        "_rk", "_m", "_t", "_v", "_i",
     }
 )
 
 
-def _check_q_keys(keys, df: DataFrame | None = None) -> None:
+def _check_q_keys(keys) -> None:
     """Shared fail-fast validation for the grouped faces: keys must be
-    non-empty (an empty key list would otherwise produce a silent
-    NULL-condition join in the report and a bare TypeError in the
-    merge), must not collide with the summary/report's own column
-    names (a key literally named 'value' would alias the data column
-    inside the Arrow pass), and — when a frame is supplied — must not
-    be float/double columns: the Arrow passes' pandas
-    ``groupby(dropna=False)`` labels NaN as NA, which
-    :func:`_norm_key` must fold to None for the memory bound, so a
-    float key's NaN group would silently merge into the NULL group —
-    diverging from Spark ``groupBy`` (NaN is its own group) and from
-    the exact faces. Rejected rather than normalized (r9 ADVICE):
-    sketch-grouping BY a float column is a smell — cast to a discrete
-    type first and the cast makes the binning explicit."""
+    non-empty (the ungrouped functions are the keyless face) and must
+    not collide with the summary/report's own column names (a key
+    literally named 'value' would alias the data column)."""
     if not keys:
         raise ValueError(
-            "keys must be non-empty (the quantile_* functions are the "
-            "ungrouped face)"
+            "keys must be non-empty (the ungrouped functions are the "
+            "keyless face)"
         )
     bad = sorted(set(keys) & _RESERVED_Q_COLS)
     if bad:
@@ -705,95 +749,17 @@ def _check_q_keys(keys, df: DataFrame | None = None) -> None:
             f"key column(s) {bad} collide with reserved summary/report "
             f"columns {sorted(_RESERVED_Q_COLS)} — rename before grouping"
         )
-    if df is not None:
-        floaty = [
-            c for c in keys
-            if isinstance(df.schema[c].dataType, (FloatType, DoubleType))
-        ]
-        if floaty:
-            raise ValueError(
-                f"float/double grouping key(s) {floaty} are not "
-                "supported by the grouped sketch faces (NaN would "
-                "conflate with NULL in the Arrow passes, diverging "
-                "from Spark groupBy); cast to string/decimal/int first"
-            )
 
 
 # --- grouped heavy hitters -------------------------------------------------
 #
 # Per-key frequent items ("top domains PER LANGUAGE at bounded shuffle")
-# — the keyed face of the MG leg, completing per-key coverage across the
-# sketch trio (distinct counts are keyed by construction, quantiles grew
-# grouped faces above). Exact face: `relational.top_k_per_group`. Same
-# cardinality trade as the other grouped faces: the build holds ≤ k
-# counters per key PRESENT IN ITS PARTITION. The per-key Agarwal
-# re-bound is pure DataFrame algebra — a rank window per key finds each
-# key's (k+1)-th counter, the subtraction is charged to that key's
-# 'dec' budget by EMITTING the cut as a dec-delta meta row and
-# re-aggregating (no null-unsafe key join anywhere).
-
-
-def _mg_grouped_partition(keys: list[str], k: int):
-    """Per-partition keyed Misra-Gries: dict key-tuple → counters."""
-
-    def run(batches):
-        import numpy as np
-        import pandas as pd
-
-        states = {}  # key tuple -> [counters Series, dec, n]
-        for pdf in batches:
-            for kt, grp in pdf.groupby(keys, dropna=False, sort=False):
-                kt = _norm_key(kt)
-                vals = grp["value"].dropna()
-                if not len(vals):
-                    continue
-                st = states.get(kt)
-                if st is None:
-                    st = [pd.Series(dtype="int64"), 0, 0]
-                    states[kt] = st
-                st[2] += len(vals)
-                vc = vals.value_counts()
-                st[0] = st[0].add(vc, fill_value=0).astype("int64")
-                if len(st[0]) > k:
-                    arr = st[0].to_numpy()
-                    t = int(np.partition(arr, -(k + 1))[-(k + 1)])
-                    st[1] += t
-                    st[0] = st[0][st[0] > t] - t
-        frames = []
-        for kt, (counters, dec, n) in states.items():
-            out = pd.DataFrame(
-                {
-                    "value": counters.index.astype(object),
-                    "cnt": counters.to_numpy(dtype="int64"),
-                    "meta": None,
-                }
-            )
-            meta = pd.DataFrame(
-                {
-                    "value": [None, None],
-                    "cnt": [dec, n],
-                    "meta": [_META_DEC, _META_N],
-                }
-            )
-            out = pd.concat([out, meta], ignore_index=True)
-            for name, kv in zip(keys, kt):
-                out.insert(0, name, [kv] * len(out))
-            frames.append(out[keys + ["value", "cnt", "meta"]])
-        if frames:
-            yield pd.concat(frames, ignore_index=True)
-
-    return run
-
-
-def _grouped_hh_schema(df: DataFrame, keys: list[str]) -> StructType:
-    return StructType(
-        [df.schema[name] for name in keys]
-        + [
-            StructField("value", StringType()),
-            StructField("cnt", LongType()),
-            StructField("meta", StringType()),
-        ]
-    )
+# — the keyed face of the MG leg, the same private helpers as the
+# ungrouped face with ``keys`` set. Exact face:
+# `relational.top_k_per_group`. Same cardinality trade as the other
+# grouped faces: the build holds ≤ k counters per key PRESENT IN ITS
+# PARTITION. Merge and report are windows partitioned by the keys, so
+# NULL keys are real groups with no null-safe join anywhere.
 
 
 def grouped_hh_summary(
@@ -801,88 +767,29 @@ def grouped_hh_summary(
 ) -> DataFrame:
     """Per-key Misra-Gries summary of ``col``: hh_summary's contract
     (count bracket, per-key n/(k+1) error floor, mergeable state,
-    budgets in per-key 'dec'/'n' meta rows) holding PER KEY GROUP.
-    NULL keys are real groups; NULL values excluded from each key's n;
-    float/double KEY columns are rejected up front (NaN/NULL
-    conflation hazard — see :func:`_check_q_keys`).
-    Data rows per key can exceed ``k`` here (union of per-partition
-    summaries) — :func:`merge_grouped_hh_summaries` re-bounds per key.
+    budgets in per-key 'dec'/'n' meta rows) holding PER KEY GROUP —
+    rows ``(keys..., meta, value, cnt)``. NULL keys are real groups;
+    NULL values excluded from each key's n; float/double KEY columns
+    are rejected up front (the pandas pass would fold NaN into NULL —
+    see :func:`_norm_key`). Lazy. Data rows per key can exceed ``k``
+    here (union of per-partition summaries) —
+    :func:`merge_grouped_hh_summaries` re-bounds per key.
     """
-    if k < 1:
-        raise ValueError("k must be >= 1")
-    _check_q_keys(keys, df)
-    vals = df.select(
-        *[F.col(c) for c in keys], F.col(col).cast("string").alias("value")
-    )
-    rows = vals.mapInPandas(
-        _mg_grouped_partition(keys, int(k)),
-        schema=_grouped_hh_schema(vals, keys),
-    )
-    return (
-        rows.groupBy(*keys, "meta", "value")
-        .agg(F.sum("cnt").alias("cnt"))
-        .localCheckpoint()
-    )
+    _check_q_keys(keys)
+    return _hh_summary(df, keys, col, k)
 
 
 def merge_grouped_hh_summaries(
     a: DataFrame, b: DataFrame | None, keys: list[str], k: int = 4096
 ) -> DataFrame:
     """Merge per-key summaries and re-bound EVERY key to ≤ ``k`` data
-    rows with the Agarwal rule applied per key: a rank window finds
-    each key's (k+1)-th counter t_key, all of that key's counters drop
-    by t_key (≤ 0 pruned), and t_key is charged to the key's 'dec'
-    budget by emitting it as a dec-delta meta row and re-aggregating —
-    no key join, so NULL keys need no special casing. Everything is
-    summary-sized; ``b=None`` re-bounds ``a`` alone (first-batch seed).
+    rows with the Agarwal rule applied per key: each key's (k+1)-th
+    counter t_key is subtracted from its counters (≤ 0 pruned) and
+    charged to its 'dec' budget. Lazy and summary-sized; ``b=None``
+    re-bounds ``a`` alone (first-batch seed).
     """
-    if k < 1:
-        raise ValueError("k must be >= 1")
-    _check_q_keys(keys, a)
-    u = a if b is None else a.unionByName(b)
-    merged = (
-        u.groupBy(*keys, "meta", "value")
-        .agg(F.sum("cnt").alias("cnt"))
-        .localCheckpoint()
-    )
-    data = merged.filter(F.col("meta").isNull())
-    meta = merged.filter(F.col("meta").isNotNull())
-    wrk = Window.partitionBy(*[F.col(c) for c in keys]).orderBy(
-        F.desc("cnt"), F.asc("value")
-    )
-    wall = Window.partitionBy(*[F.col(c) for c in keys]).rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    ranked = data.withColumn("_rk", F.row_number().over(wrk)).withColumn(
-        "_t",
-        F.coalesce(
-            F.max(F.when(F.col("_rk") == k + 1, F.col("cnt"))).over(wall),
-            F.lit(0),
-        ),
-    )
-    rebound = (
-        ranked.withColumn("cnt", F.col("cnt") - F.col("_t"))
-        .filter(F.col("cnt") > 0)
-        .drop("_rk", "_t")
-    )
-    # charge each key's cut to its dec budget WITHOUT a key join: emit
-    # one dec-delta meta row per cut key and let the groupBy fold it
-    dec_delta = (
-        ranked.filter(F.col("_rk") == k + 1)
-        .select(
-            *keys,
-            F.lit(None).cast("string").alias("value"),
-            F.col("cnt").alias("cnt"),
-            F.lit(_META_DEC).alias("meta"),
-        )
-    )
-    return (
-        rebound.unionByName(meta)
-        .unionByName(dec_delta)
-        .groupBy(*keys, "meta", "value")
-        .agg(F.sum("cnt").alias("cnt"))
-        .localCheckpoint()
-    )
+    _check_q_keys(keys)
+    return _hh_merge(a, b, keys, k)
 
 
 def grouped_hh_report(
@@ -892,40 +799,7 @@ def grouped_hh_report(
     count_hi, n_total, max_err)`` with per-key brackets; ``min_share``
     keeps values that COULD reach that share of THEIR key's rows."""
     _check_q_keys(keys)
-    meta = (
-        summary.filter(F.col("meta").isNotNull())
-        .groupBy(*keys)
-        .pivot("meta", [_META_DEC, _META_N])
-        .sum("cnt")
-        .select(
-            *keys,
-            F.coalesce(F.col(_META_DEC), F.lit(0)).alias("max_err"),
-            F.coalesce(F.col(_META_N), F.lit(0)).alias("n_total"),
-        )
-        .alias("m")
-    )
-    data = (
-        summary.filter(F.col("meta").isNull() & F.col("value").isNotNull())
-        .select(*keys, "value", F.col("cnt").alias("count_lo"))
-        .alias("d")
-    )
-    # no broadcast hint: meta is one row per KEY GROUP, which at the
-    # high-cardinality regimes this sketch targets can exceed the
-    # broadcast limit — let AQE pick (the ungrouped report's broadcast
-    # is safe only because its meta is a single row)
-    out = data.join(meta, _nullsafe_key_cond("d", "m", keys)).select(
-        *[F.col(f"d.{c}") for c in keys],
-        "d.value",
-        "d.count_lo",
-        (F.col("d.count_lo") + F.col("m.max_err")).alias("count_hi"),
-        "m.n_total",
-        "m.max_err",
-    )
-    if min_share is not None:
-        out = out.filter(
-            F.col("count_hi") >= F.col("n_total") * F.lit(float(min_share))
-        )
-    return out
+    return _hh_report(summary, keys, min_share)
 
 
 def grouped_heavy_hitters(
@@ -935,13 +809,12 @@ def grouped_heavy_hitters(
     k: int = 4096,
     min_share: float | None = None,
 ) -> DataFrame:
-    """One-shot per-key heavy hitters: summary → per-key re-bound →
-    report (split faces exist for the incremental/streaming fold;
-    `relational.top_k_per_group` is the exact face)."""
+    """One-shot per-key heavy hitters: :func:`grouped_hh_summary`
+    rendered by :func:`grouped_hh_report`, with no re-bound — a key can
+    report more than ``k`` rows, as with :func:`heavy_hitters`, and its
+    ``max_err`` is the build's decrement total (split faces exist for
+    the incremental/streaming fold; `relational.top_k_per_group` is the
+    exact face)."""
     return grouped_hh_report(
-        merge_grouped_hh_summaries(
-            grouped_hh_summary(df, keys, col, k), None, keys, k
-        ),
-        keys,
-        min_share,
+        grouped_hh_summary(df, keys, col, k), keys, min_share
     )

@@ -1060,21 +1060,21 @@ def streaming_heavy_hitters(
     keep_last: int = 2,
 ) -> int | None:
     """Continuous frequent-items maintenance via ``foreachBatch``: each
-    micro-batch is summarized by
-    :func:`~datamunging_spark.operators.sketch.hh_summary` (one Arrow
-    pass, ≤ k counters per partition) and folded into the stored
-    Misra-Gries summary with
-    :func:`~datamunging_spark.operators.sketch.merge_hh_summaries`
-    (summary-sized work only; the stored state stays ≤ k counter rows +
-    2 meta rows, so per-batch cost is batch-scan + an O(k) merge no
-    matter how long the stream has run). The mergeable-summaries bounds
-    survive every fold: the 'dec' meta row carries the exact error
-    budget, so :func:`~datamunging_spark.operators.sketch.hh_report`
-    over any committed version brackets the TRUE stream-so-far counts.
+    micro-batch is summarized by the Misra-Gries build of
+    :mod:`~datamunging_spark.operators.sketch` (one Arrow pass, ≤ k
+    counters per key group per partition) and folded into the stored
+    summary with the Agarwal merge (summary-sized work only; the stored
+    state stays ≤ k counter rows + 2 meta rows per key group, so
+    per-batch cost is batch-scan + an O(k) merge no matter how long the
+    stream has run). The mergeable-summaries bounds survive every fold:
+    the 'dec' meta row carries the exact error budget, so
+    :func:`~datamunging_spark.operators.sketch.hh_report` over any
+    committed version brackets the TRUE stream-so-far counts.
 
-    ``keys`` switches to the PER-KEY profile (grouped_hh_summary /
-    merge_grouped_hh_summaries — "top domains per language over the
-    whole stream"); render with ``grouped_hh_report``.
+    ``keys`` switches to the PER-KEY profile ("top domains per language
+    over the whole stream") — the same fold with the summary keyed by
+    ``keys``; render with ``grouped_hh_report``. The stored layout is
+    ``(keys..., meta, value, cnt)`` either way.
 
     Exactly-once mirrors :func:`streaming_rollup`: the fold is not
     replay-idempotent (re-folding double-counts), so each committed
@@ -1084,20 +1084,17 @@ def streaming_heavy_hitters(
     ``hh_report(read_table_version(spark, table_path))``.
     """
     from datamunging_spark.operators.sketch import (
-        grouped_hh_summary,
-        hh_summary,
-        merge_grouped_hh_summaries,
-        merge_hh_summaries,
+        _check_q_keys,
+        _hh_merge,
+        _hh_summary,
     )
 
+    keys = list(keys or [])
     if keys:
-        fold = lambda state, batch: merge_grouped_hh_summaries(  # noqa: E731
-            grouped_hh_summary(batch, keys, col, k), state, keys, k
-        )
-    else:
-        fold = lambda state, batch: merge_hh_summaries(  # noqa: E731
-            hh_summary(batch, col, k), state, k
-        )
+        _check_q_keys(keys)
+    fold = lambda state, batch: _hh_merge(  # noqa: E731
+        _hh_summary(batch, keys, col, k), state, keys, k
+    )
     return _versioned_stream_fold(
         values_stream,
         table_path,

@@ -391,6 +391,64 @@ def test_heavy_hitters_mg_guarantees(spark, values, k):
 @settings(max_examples=5, deadline=None)
 @given(
     st.lists(
+        st.tuples(
+            st.sampled_from(["en", "fr", None]),
+            st.sampled_from(
+                ["a", "b", "c", None] + [f"u{i}" for i in range(30)]
+            ),
+        ),
+        min_size=1,
+        max_size=300,
+    ),
+    st.integers(min_value=2, max_value=12),
+)
+def test_grouped_heavy_hitters_mg_guarantees(spark, rows, k):
+    """The Misra-Gries invariants per key group, NULL key included:
+    every reported value brackets its true count within its key,
+    n_total is the key's exact non-null count, no value whose true
+    count exceeds its key's 'dec' total is missing, and after
+    merge_grouped_hh_summaries every key holds at most k data rows
+    whose report still brackets the truth."""
+    from collections import Counter
+
+    from datamunging_spark.operators.sketch import (
+        grouped_hh_report,
+        grouped_hh_summary,
+        merge_grouped_hh_summaries,
+    )
+
+    df = spark.createDataFrame(rows, "lang string, value string").repartition(
+        3
+    )
+    truth = Counter((g, v) for g, v in rows if v is not None)
+    n_key = Counter(g for g, v in rows if v is not None)
+    summary = grouped_hh_summary(df, ["lang"], "value", k=k).localCheckpoint()
+    merged = merge_grouped_hh_summaries(
+        summary, None, ["lang"], k=k
+    ).localCheckpoint()
+    for s in (summary, merged):
+        state = s.collect()
+        meta = {(r.lang, r.meta): r.cnt for r in state if r.meta is not None}
+        assert {g: n for (g, m), n in meta.items() if m == "n"} == dict(n_key)
+        rep = {
+            (r.lang, r.value): r
+            for r in grouped_hh_report(s, ["lang"]).collect()
+        }
+        for (g, v), r in rep.items():
+            assert r.count_lo <= truth[(g, v)] <= r.count_hi, (g, v)
+            assert r.n_total == n_key[g]
+        for (g, v), f_true in truth.items():
+            if f_true > meta[(g, "dec")]:
+                assert (g, v) in rep, (g, v, f_true, meta[(g, "dec")])
+    per_key = Counter(
+        r.lang for r in merged.filter(F.col("meta").isNull()).collect()
+    )
+    assert all(c <= k for c in per_key.values()), per_key
+
+
+@settings(max_examples=5, deadline=None)
+@given(
+    st.lists(
         st.floats(allow_nan=False, allow_infinity=False, width=32),
         min_size=1,
         max_size=400,

@@ -1052,13 +1052,13 @@ def test_grouped_passes_consolidate_na_key_across_batches():
 
     from datamunging_spark.operators.sketch import (
         _META_N,
-        _mg_grouped_partition,
+        _mg_partition,
     )
 
     b1 = pd.DataFrame({"src": [None, None, "a"], "value": ["x", "y", "z"]})
     b2 = pd.DataFrame({"src": [None, "a"], "value": ["x", "z"]})
     out = pd.concat(
-        list(_mg_grouped_partition(["src"], 8)(iter([b1, b2]))),
+        list(_mg_partition(["src"], 8)(iter([b1, b2]))),
         ignore_index=True,
     )
     n_rows = out[out["meta"] == _META_N]
@@ -1069,13 +1069,17 @@ def test_grouped_passes_consolidate_na_key_across_batches():
 
 
 def test_grouped_faces_reject_float_double_keys(spark):
-    """r9 ADVICE (fixed r11): a float/double grouping key can carry NaN,
-    which the Arrow passes' _norm_key would fold into the NULL group —
-    diverging from Spark groupBy (NaN is its own group) and from the
-    exact faces. Every public grouped face fails fast instead; the cast
-    to a discrete type is the caller's explicit choice."""
+    """A float/double grouping key can carry NaN, which the heavy-hitter
+    build's pandas pass (_norm_key) would fold into the NULL group —
+    diverging from Spark groupBy (NaN is its own group). That build
+    fails fast; the cast to a discrete type is the caller's explicit
+    choice. The quantile faces and the heavy-hitter merge and report
+    group with Spark alone, so they take such keys and keep a NaN key
+    and a NULL key as separate groups with exact counts."""
     from datamunging_spark.operators.sketch import (
+        grouped_hh_report,
         grouped_hh_summary,
+        grouped_quantile_report,
         grouped_quantile_summary,
         merge_grouped_hh_summaries,
         merge_grouped_quantile_summaries,
@@ -1086,31 +1090,54 @@ def test_grouped_faces_reject_float_double_keys(spark):
         "fkey double, skey string, v double",
     )
     for face in (
-        lambda: grouped_quantile_summary(df, ["fkey"], "v", k=8),
         lambda: grouped_hh_summary(df, ["fkey"], "skey", k=4),
-        lambda: grouped_quantile_summary(
-            df.withColumn("fkey", F.col("fkey").cast("float")),
-            ["fkey"], "v", k=8,
-        ),
         # mixed key list: the float member alone must trip it
         lambda: grouped_hh_summary(df, ["skey", "fkey"], "v", k=4),
     ):
         with pytest.raises(ValueError, match="float/double grouping"):
             face()
-    # merge faces reject a hand-built summary with a float key column
+
+    def label(x):
+        return "NULL" if x is None else ("NaN" if math.isnan(x) else x)
+
+    def exact_n(frame, col):
+        return {
+            label(r[0]): r[1]
+            for r in frame.groupBy("fkey").agg(F.count(col)).collect()
+        }
+
+    def reported_n(rows, key):
+        return {label(r[key]): r.n_total for r in rows}
+
+    # quantile build, double and float keys
+    for frame in (df, df.withColumn("fkey", F.col("fkey").cast("float"))):
+        rep = grouped_quantile_report(
+            grouped_quantile_summary(frame, ["fkey"], "v", k=8),
+            ["fkey"], [0.5],
+        ).collect()
+        assert len(rep) == 3
+        assert reported_n(rep, "fkey") == exact_n(frame, "v")
+    both = df.unionByName(df)
+    # merges of summaries whose key column is a double
     qsum = grouped_quantile_summary(
         df.withColumn("k2", F.col("fkey").cast("string")), ["k2"], "v", k=8
     )
     bad = qsum.withColumn("k2", F.col("k2").cast("double"))
-    with pytest.raises(ValueError, match="float/double grouping"):
-        merge_grouped_quantile_summaries(bad, None, ["k2"])
+    rep = grouped_quantile_report(
+        merge_grouped_quantile_summaries(bad, bad, ["k2"]), ["k2"], [0.5]
+    ).collect()
+    assert len(rep) == 3
+    assert reported_n(rep, "k2") == exact_n(both, "v")
     hsum = grouped_hh_summary(
         df.withColumn("k2", F.col("fkey").cast("string")), ["k2"], "skey",
         k=4,
     )
     hbad = hsum.withColumn("k2", F.col("k2").cast("double"))
-    with pytest.raises(ValueError, match="float/double grouping"):
-        merge_grouped_hh_summaries(hbad, None, ["k2"], k=4)
+    rep = grouped_hh_report(
+        merge_grouped_hh_summaries(hbad, hbad, ["k2"], k=4), ["k2"]
+    ).collect()
+    assert len(rep) == 3
+    assert reported_n(rep, "k2") == exact_n(both, "skey")
     # the discrete-key path (the documented recourse) still works and
     # keeps NaN distinct from NULL: cast-to-string labels NaN "NaN"
     cast = df.withColumn("kc", F.col("fkey").cast("string"))
@@ -1152,3 +1179,72 @@ def test_grouped_sketch_bench_entry_nullsafe_recounts(spark, tmp_path):
     ]
     assert nullkeys, "planted NULL keys must surface as groups"
     assert not bad, bad[:5]
+
+
+def test_x8_heavy_hitters_bench_entry_invariants(spark):
+    """The x8_heavy_hitters bench entry's in-query Misra-Gries checks
+    hold at sf0.001: at least one word survives, every survivor's exact
+    recount sits in its count bracket, and the error total is within
+    the n/(k+1) floor."""
+    import __spark_entry__ as entry
+    from conftest import SF
+
+    rows = entry.q_x8_heavy_hitters(spark, SF).collect()
+    assert rows
+    bad = [
+        r for r in rows
+        if r["bracket_ok"] is not True or r["within_err_floor"] is not True
+    ]
+    assert not bad, bad[:5]
+
+
+#: Spark jobs of one sketch call plus its collect on the budget frame: a
+#: heavy-hitter face is the build stage, the summary aggregate and the
+#: report window (one job each under AQE); quantiles are one aggregate
+#: stage and its result.
+SKETCH_JOB_BUDGET = {
+    "heavy_hitters": 3, "grouped_heavy_hitters": 3, "quantiles_sketch": 2,
+}
+
+
+def test_sketch_job_budget(spark):
+    """A job-count regression on the sketch faces fails here: each face
+    is called once on a fixed 6,000-row frame (4 partitions, a NULL key
+    group, 5 heavy values over a 700-value tail) and its jobs, call
+    plus result collect, must stay within ``SKETCH_JOB_BUDGET``."""
+    from test_retrieval import _jobs_of
+
+    from datamunging_spark.operators.sketch import (
+        grouped_heavy_hitters,
+        quantiles_sketch,
+    )
+
+    i = F.col("id")
+    df = spark.range(0, 6000, 1, 4).select(
+        F.when(i % 5 == 0, F.lit(None))
+        .otherwise((i % 3).cast("string"))
+        .alias("lang"),
+        F.when(i % 4 == 0, F.concat(F.lit("h"), (i % 5).cast("string")))
+        .otherwise(F.concat(F.lit("t"), (i % 700).cast("string")))
+        .alias("value"),
+        (i % 97).cast("double").alias("x"),
+    )
+    calls = {
+        "heavy_hitters": lambda: heavy_hitters(df, "value", k=64),
+        "grouped_heavy_hitters": lambda: grouped_heavy_hitters(
+            df, ["lang"], "value", k=64
+        ),
+        "quantiles_sketch": lambda: quantiles_sketch(df, "x", [0.5, 0.9]),
+    }
+    jobs = {
+        face: _jobs_of(
+            spark, lambda: call().collect(), f"sketch-budget-{face}"
+        )
+        for face, call in calls.items()
+    }
+    over = {
+        face: (n, SKETCH_JOB_BUDGET[face])
+        for face, n in jobs.items()
+        if n > SKETCH_JOB_BUDGET[face]
+    }
+    assert not over, f"jobs over budget (got, budget): {over}"

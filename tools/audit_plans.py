@@ -264,11 +264,13 @@ _JUSTIFY: dict[str, str] = {
     "x7_event_suite": "funnel/retention per-user slim rows, one "
     "shuffle each by design (749 max).",
     "x8_heavy_hitters": "summary rows ≤ partitions × (k+2) — "
-    "constant-bounded sketch state; ratio artifact (33 rows).",
+    "constant-bounded sketch state, read once by the report's "
+    "window; ratio artifact.",
     "x8_distinct_users": "per-key HLL sketch rows (750) — "
     "summary-sized by construction.",
     "x8_grouped_sketch": "per-key summary rows (keys × (k+2) / "
-    "one KLL sketch per key) + report-sized recount probes — "
+    "one KLL sketch per key), the heavy-hitter report a window "
+    "partitioned by key, + report-sized recount probes — "
     "summary-sized by construction.",
     "x1_strip_boilerplate": "mined template/fp rows (195 max) — "
     "report-sized.",
@@ -292,7 +294,6 @@ def main() -> None:
         "r33_tfidf's + x4_lm_quality's + x4_bigram_lm's 1-row corpus",
         "totals (the unigram_lm_fit subplan), and",
         "x5_decontaminate's capped substring-probe anti-join,",
-        "x8_heavy_hitters' 1-row error/total meta broadcast,",
         "x8_quantiles' |qs|-row recount probe,",
         "and x1_strip_boilerplate's 1-row corpus-count broadcast +",
         "max_templates-bounded template verify/strip broadcasts).",
