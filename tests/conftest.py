@@ -9,7 +9,12 @@ import pytest
 # correctness cannot depend on core count (one test pins the
 # defaultParallelism fallback with an explicit stub). Respected only
 # when the caller didn't pin a master/core count of their own.
-os.environ.setdefault("SPARK_GRAFT_MASTER", "local[8]")
+# Never more task threads than the cores this process may run on: on a
+# 4-core host local[8] oversubscribes every stage, and local[4] ran
+# test_spandedup.py in 175 s against 258 s, results identical.
+os.environ.setdefault(
+    "SPARK_GRAFT_MASTER", f"local[{min(8, len(os.sched_getaffinity(0)))}]"
+)
 
 from datamunging_spark import get_spark  # noqa: E402
 
