@@ -1993,131 +1993,6 @@ class SemanticSnapshot(NamedTuple):
     mean_fit_dist: float
 
 
-def _frozen_assign_udf(centers):
-    """pandas_udf assigning vectors to the nearest FROZEN centroid;
-    returns [cell, squared_distance] as a 2-double array (one Arrow pass
-    yields both the assignment and the drift signal — a struct-returning
-    UDF would be two passes or awkward typing). No parameter type hints:
-    this module runs under ``from __future__ import annotations``, which
-    turns hints into strings that pandas_udf cannot resolve against
-    function-local imports — the explicit returnType carries the type."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    # hoisted: both depend only on the closed-over centers — per-batch
-    # recomputation paid a redundant copy + norm reduction on every
-    # Arrow batch of both the fit pass and every incremental batch
-    c = centers.astype(np.float64)
-    cnorm = (c * c).sum(axis=1)
-
-    @pandas_udf(T.ArrayType(T.DoubleType()))
-    def assign(vecs):
-        if len(vecs) == 0:
-            return pd.Series([], dtype=object)
-        x = np.stack(vecs.to_numpy()).astype(np.float64)
-        # ||x-c||² = ||x||² - 2x·cᵀ + ||c||² via ONE matmul — the naive
-        # (rows × clusters × dim) broadcast temporary is ~61 GB per
-        # 10k-row batch at the 1000-cluster/768-dim scale this operator
-        # targets (same identity as pq_fit, similarity.py)
-        xnorm = (x * x).sum(axis=1)
-        d = xnorm[:, None] - 2.0 * (x @ c.T) + cnorm[None, :]
-        cell = d.argmin(axis=1)
-        dist = np.maximum(d[np.arange(len(cell)), cell], 0.0)
-        # identity round-off is RELATIVE (~1e-16 × the cancelled norms,
-        # accumulating with dim), so snap near-zero distances to exact 0
-        # at a relative threshold: a duplicate-of-seed batch must measure
-        # 0.0 exactly like the fit baseline did, whatever the embedding
-        # magnitude — an absolute epsilon cannot cover O(1e9) norms
-        scale = xnorm + cnorm[cell]
-        dist = np.where(dist < 1e-12 * scale, 0.0, dist)
-        return pd.Series(
-            list(np.stack([cell.astype(np.float64), dist], axis=1))
-        )
-
-    return assign
-
-
-def assign_frozen_batch(
-    centers,
-    mean_fit_dist,
-    batch: DataFrame,
-    id_col: str,
-    vec_col: str,
-    max_drift,
-    refit_hint: str,
-    drop_null_vecs: bool = False,
-    pin: bool = True,
-) -> DataFrame:
-    """(neighbor_id, _cv, _cell, _dist) of a batch under FROZEN
-    centroids — ONE home for the dim probe + Arrow matmul-identity
-    assignment + centroid-drift valve that every frozen-cell consumer
-    shares (:func:`incremental_semantic_dedup` here; the vector
-    index's ``advance_ivf_index`` / ``streaming_ivf_ingest`` in
-    similarity/streaming). The valve compares the batch's mean squared
-    assignment distance against ``mean_fit_dist`` (the fit-time
-    baseline) and raises with ``refit_hint`` when the ratio exceeds
-    ``max_drift`` — the same relative-epsilon discipline in one place,
-    so a future tightening cannot silently diverge between callers.
-    ``drop_null_vecs``: treat NULL-vector rows as absent (the vector
-    index's delete convention); off for the dedup path, whose batches
-    carry no NULLs by contract. ``pin`` eagerly localCheckpoints the
-    assignment (it usually feeds several consumers); the drift
-    aggregate forces materialization anyway whenever the valve is
-    armed."""
-    src = (
-        batch.filter(F.col(vec_col).isNotNull())
-        if drop_null_vecs
-        else batch
-    )
-    # dimension probe (limit(1) — the advance_snapshot stamp pattern):
-    # a dim-mismatched batch would fail deep inside numpy broadcasting
-    probe = src.select(F.size(F.col(vec_col)).alias("_d")).limit(1).collect()
-    dim = centers.shape[1]
-    if probe and probe[0]["_d"] != dim:
-        raise ValueError(
-            f"embedding dimension drift: batch {vec_col} has "
-            f"{probe[0]['_d']} dims, the frozen centroids have {dim} "
-            f"— {refit_hint}"
-        )
-    ad = _frozen_assign_udf(centers)(F.col(vec_col))
-    assigned = src.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("_cv"),
-        ad.alias("_ad"),
-    ).select(
-        "neighbor_id",
-        "_cv",
-        F.element_at("_ad", 1).cast("int").alias("_cell"),
-        F.element_at("_ad", 2).alias("_dist"),
-    )
-    if pin or max_drift is not None:
-        assigned = assigned.localCheckpoint()
-    if max_drift is not None:
-        if mean_fit_dist is None:
-            raise ValueError(
-                "assign_frozen_batch: no mean_fit_dist baseline (the "
-                "index/snapshot predates the drift valve) — "
-                f"{refit_hint}, or pass max_drift=None to accept "
-                "unguarded recall decay"
-            )
-        m = assigned.agg(F.avg("_dist").alias("_m")).collect()[0]["_m"]
-        # a degenerate zero fit baseline (every seed vector at a
-        # centroid) must still refuse a genuinely distant batch — the
-        # tiny absolute epsilon only absorbs float round-off, it does
-        # not reopen the mean_fit_dist==0 bypass the r9 review caught
-        if m is not None and m > max_drift * mean_fit_dist + 1e-9:
-            raise ValueError(
-                f"centroid drift: batch mean squared assignment "
-                f"distance {m:.4g} exceeds {max_drift}x the frozen "
-                f"baseline {mean_fit_dist:.4g} — the frozen cells no "
-                "longer describe the embedding distribution; "
-                f"{refit_hint} (or raise/disable max_drift to accept "
-                "the recall loss)"
-            )
-    return assigned
-
-
 def semantic_snapshot(
     df: DataFrame,
     vec_col: str = "embedding",
@@ -2134,16 +2009,17 @@ def semantic_snapshot(
     the frozen centroids — this is what removes the ~36-of-53-jobs
     KMeans cost from the per-batch path (SCALE.md x1_semantic_dedup
     audit)."""
-    from datamunging_spark.operators.similarity import ivf_build
+    from datamunging_spark.operators.similarity import (
+        _frozen_assign,
+        ivf_build,
+    )
 
     idx = ivf_build(
         df, corpus_id=id_col, vec_col=vec_col,
         n_clusters=n_clusters, seed=seed, max_fit_rows=max_fit_rows,
     )
     assigned = idx.assigned.localCheckpoint()  # feeds dist agg + reuse
-    dist = F.element_at(
-        _frozen_assign_udf(idx.centers)(F.col("_cv")), 2
-    )
+    dist = F.element_at(_frozen_assign(idx.centers, "_cv"), 2)
     mean_fit = assigned.agg(F.avg(dist).alias("_m")).collect()[0]["_m"]
     return SemanticSnapshot(assigned, idx.centers, float(mean_fit or 0.0))
 
@@ -2193,19 +2069,26 @@ def incremental_semantic_dedup(
     (neighbor_id, _cv, _cell) rows — the exact increment
     :func:`advance_semantic_snapshot` appends, so the roll-forward
     re-uses this call's single assignment pass."""
-    # dim probe + frozen assignment + drift valve, shared with the
-    # vector index's advance face (pin: feeds drift agg + history join
-    # + within-batch)
-    assigned = assign_frozen_batch(
-        snapshot.centers,
-        snapshot.mean_fit_dist,
+    from datamunging_spark.operators.similarity import (
+        IvfIndex,
+        _assign_frozen,
+    )
+
+    # dim probe + frozen assignment + drift valve against the snapshot's
+    # own baseline, shared with the vector index's advance face (pin:
+    # feeds drift agg + history join + within-batch)
+    assigned = _assign_frozen(
+        IvfIndex(
+            snapshot.assigned,
+            snapshot.centers,
+            snapshot.centers.shape[0],
+            snapshot.mean_fit_dist,
+        ),
         batch,
         id_col,
         vec_col,
         max_drift,
-        refit_hint=(
-            "rebuild semantic_snapshot over the accumulated survivors"
-        ),
+        refit_hint="rebuild semantic_snapshot over the accumulated survivors",
     )
     bs = assigned.select(
         F.col("neighbor_id").alias("_nid"),
@@ -2235,8 +2118,6 @@ def incremental_semantic_dedup(
     )
     fresh = batch.join(losers, on=id_col, how="left_anti")
     if within_batch:
-        from datamunging_spark.operators.similarity import IvfIndex
-
         # same frozen clustering for the intra-batch pass: the batch was
         # assigned exactly once above; semantic_dedup's index path
         # semi-joins the assignment down to the surviving ids

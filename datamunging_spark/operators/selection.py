@@ -537,8 +537,8 @@ def cluster_balanced_sample(
     :func:`~datamunging_spark.operators.similarity.ivf_build`'s SAMPLED
     fit (its full assignment table is lazy and never consumed here);
     cluster attachment is ONE Arrow pass with the centroid matrix in
-    the UDF closure (``dedup._frozen_assign_udf`` — no join, nothing
-    corpus-sized shuffles); the cap is
+    the UDF closure (``similarity._frozen_assign``, the kernel the IVF
+    index assigns with — no join, nothing corpus-sized shuffles); the cap is
     :func:`~datamunging_spark.operators.sampling.cap_per_group`'s one
     window exchange on the bounded cell id (salted-md5 deterministic
     picks; ``id_col`` must uniquely identify rows for the cap's
@@ -555,9 +555,11 @@ def cluster_balanced_sample(
     with ``seed``. Pair with :func:`dsir_select` for the standard
     recipe: importance-select toward the target FIRST, then balance
     what remains across clusters."""
-    from datamunging_spark.operators.dedup import _frozen_assign_udf
     from datamunging_spark.operators.sampling import cap_per_group
-    from datamunging_spark.operators.similarity import ivf_build
+    from datamunging_spark.operators.similarity import (
+        _frozen_assign,
+        ivf_build,
+    )
 
     if cluster_col in df.columns:
         raise ValueError(
@@ -576,9 +578,8 @@ def cluster_balanced_sample(
         n_clusters=n_clusters,
         seed=seed,
     )
-    assign = _frozen_assign_udf(idx.centers)
     clustered = (
-        vecs_ok.withColumn("_cb", assign(F.col(vec_col)))
+        vecs_ok.withColumn("_cb", _frozen_assign(idx.centers, vec_col))
         .withColumn(cluster_col, F.col("_cb").getItem(0).cast("int"))
         .drop("_cb")
     )

@@ -230,7 +230,9 @@ class IvfIndex:
     each group with its own independently-fitted centroids and drift
     baseline; ``group_type`` records the column's Spark type for the
     relational round-trip. ``n_clusters`` is the REQUESTED k — a group
-    smaller than k gets ``min(k, group_rows)`` centroids."""
+    smaller than k gets ``min(k, group_rows)`` centroids. Both faces run
+    one code path keyed by group; the ungrouped index is its one group
+    None, unwrapped to the plain ndarray / float attributes."""
 
     def __init__(
         self,
@@ -249,58 +251,105 @@ class IvfIndex:
         self.group_type = group_type
 
 
-def _grouped_assign_udf(centers_by_group: dict):
-    """pandas_udf assigning (vector, gkey-string) rows to the nearest
-    FROZEN centroid OF THAT ROW'S GROUP; returns [cell,
-    squared_distance] — the grouped twin of
-    ``dedup._frozen_assign_udf`` (same matmul identity, same relative
-    snap-to-zero epsilon, so the drift-valve discipline cannot diverge
-    between the grouped and ungrouped faces). ``centers_by_group`` is
-    keyed by RAW group value (the :class:`IvfIndex` convention); the
-    closure re-keys to the ``_gkey`` string encoding the in-plan
-    column carries. Groups × n_clusters × dim floats ride the closure
-    — the broadcast-dimension analog (groups are bounded by the
-    :func:`ivf_build` ``max_groups`` contract)."""
+def _by_group(value, group_col: str | None) -> dict:
+    """An :class:`IvfIndex` per-group attribute (``centers`` or
+    ``mean_fit_dist``) as a dict keyed by RAW group value: the
+    ungrouped index is the one group None."""
+    return {None: value} if group_col is None else dict(value or {})
+
+
+def _gk(gval, group_col: str | None):
+    """The driver-side key of a raw group value: its ``_pygkey`` (the
+    in-plan ``_gkey`` string) on a grouped index, None for the one
+    group of an ungrouped index."""
+    return None if group_col is None else _pygkey(gval)
+
+
+def _by_gk(value, group_col: str | None) -> dict:
+    """:func:`_by_group` re-keyed by :func:`_gk` — how driver-side
+    state is matched against in-plan group keys."""
+    return {
+        _gk(g, group_col): v for g, v in _by_group(value, group_col).items()
+    }
+
+
+def _ivf_index(
+    assigned, centers: dict, n_clusters, mean_fit: dict, group_col, group_type
+) -> IvfIndex:
+    """An :class:`IvfIndex` from per-group dicts keyed by raw group
+    value; the ungrouped index unwraps its one group None into the
+    plain ndarray / float attributes."""
+    if group_col is None:
+        return IvfIndex(assigned, centers[None], n_clusters, mean_fit[None])
+    return IvfIndex(
+        assigned, centers, n_clusters, mean_fit,
+        group_col=group_col, group_type=group_type,
+    )
+
+
+def _frozen_assign(centers, vec_col: str, group_col: str | None = None):
+    """The frozen-centroid Arrow kernel: [cell, squared distance] of
+    each row's vector against the FROZEN centroids of its group, as a
+    2-double array column (one pass yields both the assignment and the
+    drift signal). Build, advance, the streaming fold, incremental
+    semantic dedup and cluster-balanced selection all assign through
+    it, so their cells and drift distances cannot disagree.
+    ``centers`` follows the :class:`IvfIndex` convention — an ndarray
+    when ``group_col`` is None, else a dict keyed by raw group value,
+    re-keyed here to the ``_gkey`` strings the in-plan column carries.
+    An ungrouped call ships no group column through Arrow. Groups ×
+    n_clusters × dim floats ride the closure (the broadcast-dimension
+    analog; groups are bounded by :func:`ivf_build`'s ``max_groups``)."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
     from pyspark.sql.types import ArrayType, DoubleType
 
-    prepped = {
-        _pygkey(g): (
-            c.astype(np.float64),
-            (c.astype(np.float64) ** 2).sum(axis=1),
-        )
-        for g, c in centers_by_group.items()
-    }
+    from datamunging_spark.operators.retrieval import _gkey
+
+    prepped = {}
+    for gk, c in _by_gk(centers, group_col).items():
+        c = np.asarray(c, dtype=np.float64)
+        prepped[gk] = (c, (c * c).sum(axis=1))
+
+    def nearest(x, gk):
+        c, cnorm = prepped[gk]
+        # ||x-c||² = ||x||² - 2x·cᵀ + ||c||² via ONE matmul — the naive
+        # (rows × clusters × dim) broadcast temporary is ~61 GB per
+        # 10k-row batch at 1000 clusters × 768 dims
+        xnorm = (x * x).sum(axis=1)
+        d = xnorm[:, None] - 2.0 * (x @ c.T) + cnorm[None, :]
+        cell = d.argmin(axis=1)
+        dist = np.maximum(d[np.arange(len(cell)), cell], 0.0)
+        # identity round-off is RELATIVE (~1e-16 × the cancelled norms,
+        # accumulating with dim), so snap near-zero distances to exact 0
+        # at a relative threshold: a duplicate-of-seed batch must measure
+        # 0.0 exactly like the fit baseline did, whatever the embedding
+        # magnitude — an absolute epsilon cannot cover O(1e9) norms
+        scale = xnorm + cnorm[cell]
+        return cell, np.where(dist < 1e-12 * scale, 0.0, dist)
 
     @pandas_udf(ArrayType(DoubleType()))
-    def assign(vecs: pd.Series, gks: pd.Series) -> pd.Series:
+    def assign(vecs: pd.Series, *gks: pd.Series) -> pd.Series:
         if len(vecs) == 0:
             return pd.Series([], dtype=object)
         x = np.stack(vecs.to_numpy()).astype(np.float64)
+        out = np.empty((len(x), 2))
+        if not gks:
+            out[:, 0], out[:, 1] = nearest(x, None)
+            return pd.Series(list(out))
         # factorize, NOT numpy string equality: the NULL group's
         # "\x00" gkey sentinel breaks numpy's elementwise == on object
-        # arrays (C-string truncation — the mask comes back all-False
-        # and those rows keep uninitialized garbage); pandas' hashing
-        # paths handle embedded null bytes correctly
-        codes, uniques = pd.factorize(gks)
-        out = np.full((len(x), 2), np.nan)
+        # arrays (C-string truncation); pandas' hashing handles it
+        codes, uniques = pd.factorize(gks[0])
         for ci, gk in enumerate(uniques):
             m = codes == ci
-            c, cnorm = prepped[gk]
-            xs = x[m]
-            xnorm = (xs * xs).sum(axis=1)
-            d = xnorm[:, None] - 2.0 * (xs @ c.T) + cnorm[None, :]
-            cell = d.argmin(axis=1)
-            dist = np.maximum(d[np.arange(len(cell)), cell], 0.0)
-            scale = xnorm + cnorm[cell]
-            dist = np.where(dist < 1e-12 * scale, 0.0, dist)
-            out[m, 0] = cell
-            out[m, 1] = dist
+            out[m, 0], out[m, 1] = nearest(x[m], gk)
         return pd.Series(list(out))
 
-    return assign
+    if group_col is None:
+        return assign(F.col(vec_col))
+    return assign(F.col(vec_col), _gkey(group_col))
 
 
 def _lloyd_refine(x, x_sq, centers, iters: int, early_stop: bool):
@@ -420,11 +469,10 @@ def ivf_build(
     distributed MLlib fit paid ~30 scheduled jobs per build to iterate
     over a sample that fits in one process). Cell ASSIGNMENT is still a
     single full pass, so every corpus vector lands in an inverted list —
-    through the same frozen-centroid Arrow kernel
-    :func:`advance_ivf_index` uses (``dedup._frozen_assign_udf``), so
-    build-time and advance-time assignment can never disagree. The
-    pre-sample count() is a parquet metadata-weight pass, not a full
-    scan.
+    through the frozen-centroid Arrow kernel :func:`advance_ivf_index`
+    uses (:func:`_frozen_assign`), so build-time and advance-time
+    assignment can never disagree. The pre-sample count() is a parquet
+    metadata-weight pass, not a full scan.
 
     .. note:: **r16 baseline shift.** The driver-side fit is a
        different (equally seeded) local optimum than the MLlib
@@ -437,90 +485,47 @@ def ivf_build(
        the valve by a hair against the old baseline can flip.
 
     ``group_col``: the GROUPED face — one independent index per group
-    value (per-language/per-tenant corpora; NULL is a real group). Each
-    group's KMeans fit is EXACTLY a per-slice :func:`ivf_build` fit
-    (same sampling fraction discipline, same seed — the pin tests
-    compare them verbatim), run driver-side per group, which is why
-    groups are bounded by ``max_groups`` (fit cost is O(groups); the
-    per-tenant norm is tens). A group with fewer rows than
-    ``n_clusters`` gets ``min`` centroids. Assignment stays ONE full
-    corpus pass — the grouped Arrow kernel with the per-group centers
-    dict in closure.
+    value (per-language/per-tenant corpora; NULL is a real group). The
+    ungrouped index is the one-group case of the same body: per-group
+    row counts, per-group sample collects (overlapped, guide §2.6),
+    one driver-side fit per group, one assignment pass. Each group's
+    fit is therefore EXACTLY the ungrouped fit of its slice (same
+    sampling fraction discipline, same seed — the pin tests compare
+    them verbatim), which is why groups are bounded by ``max_groups``
+    (fit cost is O(groups); the per-tenant norm is tens). A group with
+    fewer rows than ``n_clusters`` gets ``min`` centroids. An empty
+    corpus raises on both faces.
     """
     import numpy as np
 
-    from datamunging_spark.operators.dedup import _frozen_assign_udf
+    from datamunging_spark.parallel import co_materialize
 
-    if group_col is not None:
+    gb = [] if group_col is None else [group_col]
+    if gb:
         _check_group_type(corpus, group_col, "ivf_build")
-        return _ivf_build_grouped(
-            corpus, corpus_id, vec_col, n_clusters, seed, max_fit_rows,
-            group_col, max_groups,
-        )
     corp_v = corpus.select(
-        F.col(corpus_id).alias("neighbor_id"), F.col(vec_col).alias("_cv")
+        F.col(corpus_id).alias("neighbor_id"), F.col(vec_col).alias("_cv"), *gb
     )
-    # No persist: the driver-side fit reads the vectors ONCE (the sample
-    # collect below); the only other pass is the lazy assignment scan.
-    # The old distributed fit cached the corpus across ~30 iteration
-    # jobs — with those gone, pinning corpus-sized blocks would be pure
-    # memory pressure (guide §5).
-    n_corpus = corp_v.count()
-    fit_df = corp_v.select("_cv")
-    if n_corpus > max_fit_rows:
-        fit_df = fit_df.sample(
-            withReplacement=False,
-            fraction=min(1.0, max_fit_rows / n_corpus),
-            seed=seed,
-        )
-    sample = fit_df.collect()  # bounded by ~max_fit_rows (the pq_fit shape)
-    if not sample:
-        raise ValueError("ivf_build: empty corpus — nothing to fit")
-    x = np.stack([np.asarray(r["_cv"]) for r in sample]).astype(np.float64)
-    centers, mean_fit = _kmeans_fit_np(x, n_clusters, seed)
-    ad = _frozen_assign_udf(centers)(F.col("_cv"))
-    assigned = corp_v.select(
-        "neighbor_id",
-        "_cv",
-        F.element_at(ad, 1).cast("int").alias("_cell"),
-    )
-    return IvfIndex(assigned, centers, n_clusters, mean_fit)
-
-
-def _ivf_build_grouped(
-    corpus: DataFrame,
-    corpus_id: str,
-    vec_col: str,
-    n_clusters: int,
-    seed: int,
-    max_fit_rows: int,
-    group_col: str,
-    max_groups: int,
-) -> IvfIndex:
-    """The grouped :func:`ivf_build` body: per-group sampled KMeans
-    fits (driver loop — each one byte-for-byte the per-slice ungrouped
-    fit: same sample construction, same :func:`_kmeans_fit_np` seed),
-    then ONE grouped Arrow assignment pass over the whole corpus. See
-    :func:`ivf_build`'s docstring for the contract."""
-    import numpy as np
-
-    from datamunging_spark.operators.retrieval import _gkey
-
-    corp_v = corpus.select(
-        F.col(corpus_id).alias("neighbor_id"),
-        F.col(vec_col).alias("_cv"),
-        F.col(group_col),
-    )
-    # Cache across the per-group sample collects (one filtered pass per
-    # group, G+1 passes total); released before the lazy assignment plan
-    # is returned — the ungrouped contract.
-    corp_v.persist()
+    # The ungrouped fit reads the vectors ONCE (the sample collect), so
+    # it pins nothing (guide §5); the grouped fit caches across its
+    # per-group sample collects (G+1 passes), released before the lazy
+    # assignment plan is returned.
+    if gb:
+        corp_v.persist()
     try:
-        counts = (
-            corp_v.groupBy(group_col)
-            .agg(F.count(F.lit(1)).alias("_n"))
-            .collect()
+        # per-group row counts; ungrouped, the one global count
+        counts = sorted(
+            (
+                (r[group_col] if gb else None, r["_n"])
+                for r in corp_v.groupBy(*gb)
+                .agg(F.count(F.lit(1)).alias("_n"))
+                .collect()
+                if r["_n"]
+            ),
+            key=lambda t: _pygkey(t[0]),
         )
+        if not counts:
+            raise ValueError("ivf_build: empty corpus — nothing to fit")
         if len(counts) > max_groups:
             raise ValueError(
                 f"ivf_build: {len(counts)} distinct {group_col!r} "
@@ -529,13 +534,16 @@ def _ivf_build_grouped(
                 "O(groups) cost); raise max_groups if the cardinality "
                 "is intentional, or this is not a grouping column"
             )
+
         def _sample_rows(gval, n_g):
-            gslice = corp_v.filter(
-                F.col(group_col).isNull()
-                if gval is None
-                else F.col(group_col) == F.lit(gval)
-            )
-            fit_df = gslice.select("_cv")
+            fit_df = corp_v
+            if gb:
+                fit_df = fit_df.filter(
+                    F.col(group_col).isNull()
+                    if gval is None
+                    else F.col(group_col) == F.lit(gval)
+                )
+            fit_df = fit_df.select("_cv")
             if n_g > max_fit_rows:
                 fit_df = fit_df.sample(
                     withReplacement=False,
@@ -544,64 +552,43 @@ def _ivf_build_grouped(
                 )
             return fit_df.collect()  # bounded by ~max_fit_rows per group
 
-        # The per-group sample collects are independent Spark jobs
-        # (guide §2.6): overlap them so grouped-build latency stays
-        # ~flat in group count instead of paying one serial job wait
-        # per group; the fits themselves are in-process numpy and run
-        # in deterministic sorted-group order below. Sample
-        # construction per group is byte-identical to the serial loop
-        # (same filter, same fraction/seed), so the grouped ≡ per-slice
-        # fit pins are unaffected.
-        from datamunging_spark.parallel import co_materialize
-
-        sorted_rows = sorted(counts, key=lambda r: _pygkey(r[group_col]))
-        all_rows = co_materialize(
-            *[
-                (lambda gv=row[group_col], ng=row["_n"]:
-                 _sample_rows(gv, ng))
-                for row in sorted_rows
-            ],
+        # the per-group sample collects are independent jobs: overlap
+        # them so build latency stays ~flat in group count; the fits
+        # run in sorted-group order below
+        samples = co_materialize(
+            *[(lambda g=g, n=n: _sample_rows(g, n)) for g, n in counts],
             max_workers=8,
         )
         centers: dict = {}
         mean_fit: dict = {}
-        for row, rows in zip(sorted_rows, all_rows):
-            gval = row[group_col]
+        for (gval, _), rows in zip(counts, samples):
             if not rows:
                 # fraction-sampling can in principle return zero rows
-                # for a group with n_g >> max_fit_rows; fail with the
-                # ungrouped path's explicit message, not np.stack([])
+                # for a group with n_g >> max_fit_rows
                 raise ValueError(
                     f"ivf_build: empty fit sample for group {gval!r}"
                 )
-            x = np.stack(
-                [np.asarray(r["_cv"]) for r in rows]
-            ).astype(np.float64)
+            x = np.stack([np.asarray(r["_cv"]) for r in rows]).astype(
+                np.float64
+            )
             centers[gval], mean_fit[gval] = _kmeans_fit_np(
                 x, n_clusters, seed
             )
-        ad = _grouped_assign_udf(centers)(
-            F.col("_cv"), _gkey(group_col)
+        index = _ivf_index(
+            None, centers, n_clusters, mean_fit, group_col,
+            corpus.schema[group_col].dataType if gb else None,
         )
-        assigned = corp_v.select(
+        ad = _frozen_assign(index.centers, "_cv", group_col)
+        index.assigned = corp_v.select(
             "neighbor_id",
             "_cv",
             F.element_at(ad, 1).cast("int").alias("_cell"),
-            F.col(group_col),
+            *gb,
         )
     finally:
-        # cache covered the per-group sample collects; the returned
-        # assignment plan stays lazy over the corpus scan (the ungrouped
-        # contract) — persist/write `assigned` to reuse across jobs
-        corp_v.unpersist()
-    return IvfIndex(
-        assigned,
-        centers,
-        n_clusters,
-        mean_fit,
-        group_col=group_col,
-        group_type=corpus.schema[group_col].dataType,
-    )
+        if gb:
+            corp_v.unpersist()
+    return index
 
 
 def _filter_id_set(
@@ -641,6 +628,40 @@ def _filter_id_set(
         ).distinct(),
         ["neighbor_id"],
     )
+
+
+def _probe_cells(index: IvfIndex, groups: list, vecs: list, n_probe, op):
+    """Driver-side probe of a collected query batch: for each query
+    vector ``vecs[i]`` (raw group ``groups[i]``, None throughout on an
+    ungrouped index) the ``n_probe`` nearest cells of ITS group's
+    centroids, nearest first — one numpy distance matrix per group.
+    A query group the index never built raises."""
+    import numpy as np
+
+    centers = _by_gk(index.centers, index.group_col)
+    rows_by_gk: dict = {}
+    for i, g in enumerate(groups):
+        rows_by_gk.setdefault(_gk(g, index.group_col), []).append(i)
+    unknown = sorted(
+        str(groups[rows[0]])
+        for gk, rows in rows_by_gk.items()
+        if gk not in centers
+    )
+    if unknown:
+        raise ValueError(
+            f"{op}: query group(s) {unknown} have no centroids in this "
+            "index — the group was never built; rebuild ivf_build over "
+            "a corpus containing it"
+        )
+    out = [None] * len(vecs)
+    for gk, rows in rows_by_gk.items():
+        c = np.asarray(centers[gk], dtype=np.float64)
+        x = np.stack([np.asarray(vecs[i]) for i in rows]).astype(np.float64)
+        d = ((x[:, None, :] - c[None, :, :]) ** 2).sum(axis=2)
+        near = np.argsort(d, axis=1)[:, : min(int(n_probe), len(c))]
+        for i, cells in zip(rows, near):
+            out[i] = cells
+    return out
 
 
 def ivf_search(
@@ -688,8 +709,6 @@ def ivf_search(
     the planted test pins the difference). Keep the id-set
     broadcast-sized or pre-partitioned; a corpus-scale filter belongs
     upstream of the index build."""
-    import numpy as np
-
     from datamunging_spark.operators.retrieval import (
         _gkey,
         _query_key,
@@ -706,43 +725,28 @@ def ivf_search(
                 "carry their group"
             )
         _check_group_type(queries, gcol, "ivf_search")
-        centers = {_pygkey(g): c for g, c in index.centers.items()}
-    else:
-        centers = {None: index.centers}
     qtype = queries.schema[query_id].dataType
     vtype = queries.schema[vec_col].dataType
-    batch: dict = {}
-    for r in queries.select(
+    q_rows = queries.select(
         F.col(query_id).alias("_q"),
         F.col(vec_col).alias("_v"),
-        (F.col(gcol) if gcol else F.lit(None)).alias("_g"),
-    ).collect():
-        batch.setdefault(_pygkey(r["_g"]) if gcol else None, []).append(r)
-    unknown = sorted(
-        str(rows[0]["_g"]) for g, rows in batch.items() if g not in centers
+        *[F.col(g).alias("_g") for g in gb],
+    ).collect()
+    groups = [r["_g"] if gcol else None for r in q_rows]
+    cells = _probe_cells(
+        index, groups, [r["_v"] for r in q_rows], n_probe, "ivf_search"
     )
-    if unknown:
-        raise ValueError(
-            f"ivf_search: query group(s) {unknown} have no "
-            "centroids in this index — the group was never built; "
-            "rebuild ivf_build over a corpus containing it"
-        )
     # (group key, cell) → the queries probing it, vectors as literals
     probes: dict = {}
-    for g, rows in batch.items():
-        c = np.asarray(centers[g], dtype=np.float64)
-        x = np.stack([np.asarray(r["_v"]) for r in rows]).astype(np.float64)
-        d = ((x[:, None, :] - c[None, :, :]) ** 2).sum(axis=2)
-        near = np.argsort(d, axis=1)[:, : min(int(n_probe), len(c))]
-        for r, cells in zip(rows, near):
-            q = F.struct(
-                F.lit(r["_q"]).cast(qtype).alias("query_id"),
-                F.array(*[F.lit(float(v)) for v in r["_v"]])
-                .cast(vtype)
-                .alias("qv"),
-            )
-            for cell in cells:
-                probes.setdefault((g, int(cell)), []).append(q)
+    for r, g, near in zip(q_rows, groups, cells):
+        q = F.struct(
+            F.lit(r["_q"]).cast(qtype).alias("query_id"),
+            F.array(*[F.lit(float(v)) for v in r["_v"]])
+            .cast(vtype)
+            .alias("qv"),
+        )
+        for cell in near:
+            probes.setdefault((_gk(g, gcol), int(cell)), []).append(q)
     qmap = _query_map(
         {key: F.array(*qs) for key, qs in probes.items()},
         gcol,
@@ -822,82 +826,63 @@ def ivf_topk(
     )
 
 
+#: what the drift and dimension checks tell a vector-index caller to do
+_IVF_REFIT = (
+    "rebuild ivf_build over the accumulated corpus (and refit pq_fit if "
+    "PQ rides the index)"
+)
+
+
 def _assign_frozen(
     index: IvfIndex,
     batch: DataFrame,
-    corpus_id: str,
+    id_col: str,
     vec_col: str,
     max_drift,
+    refit_hint: str = _IVF_REFIT,
     pin: bool = True,
 ) -> DataFrame:
-    """The batch's (neighbor_id, _cv, _cell, _dist) rows under the
-    FROZEN centroids — a thin face over the shared
-    ``dedup.assign_frozen_batch`` (ONE home for the dim probe, Arrow
-    matmul-identity assignment, and centroid-drift valve, so the
-    epsilon discipline cannot diverge between the dedup and
-    vector-index callers). NULL-vector rows contribute nothing (they
-    are deletes under ``replace_ids``). ``pin=False`` skips the
-    localCheckpoint when the caller consumes the assignment exactly
-    once and the valve is off (no drift aggregate to re-read it)."""
-    # function-local import: dedup imports from this module
-    from datamunging_spark.operators.dedup import assign_frozen_batch
+    """The batch's (neighbor_id, _cv, _cell, _dist[, group]) rows under
+    the index's FROZEN centroids — the one home of the dimension probe,
+    the unknown-group check, the :func:`_frozen_assign` pass and the
+    centroid-drift valve for every frozen-cell consumer
+    (:func:`advance_ivf_index`, ``streaming_ivf_ingest`` and
+    ``dedup.incremental_semantic_dedup``). NULL-vector rows contribute
+    nothing (they are deletes under ``replace_ids``).
 
-    if index.mean_fit_dist is None and max_drift is not None:
-        raise ValueError(
-            "advance_ivf_index: the index carries no mean_fit_dist "
-            "baseline (built before the drift valve existed) — "
-            "rebuild with ivf_build, or pass max_drift=None to "
-            "accept unguarded recall decay"
-        )
-    return assign_frozen_batch(
-        index.centers,
-        index.mean_fit_dist,
-        batch,
-        corpus_id,
-        vec_col,
-        max_drift,
-        refit_hint=(
-            "rebuild ivf_build over the accumulated corpus (and refit "
-            "pq_fit if PQ rides the index)"
-        ),
-        drop_null_vecs=True,
-        pin=pin,
-    )
-
-
-def _assign_frozen_grouped(
-    index: IvfIndex,
-    batch: DataFrame,
-    corpus_id: str,
-    vec_col: str,
-    max_drift,
-    pin: bool = True,
-) -> DataFrame:
-    """Grouped twin of :func:`_assign_frozen`: the batch's
-    (neighbor_id, _cv, _cell, _dist, group) rows under each group's
-    FROZEN centroids, with a PER-GROUP centroid-drift valve (one
-    bounded groups-sized collect; a drifted tenant raises naming the
-    group — other tenants' ingest is not hostage to one shifted
-    distribution, but this call refuses to write the shifted one).
-    NULL-vector rows are deletes and contribute nothing. A batch group
-    absent from the index raises — the advance face cannot mint
-    centroids; bootstrap new groups with :func:`ivf_build` (or the
-    streaming loop, which fits them on first appearance)."""
-    from datamunging_spark.operators.retrieval import _gkey
-
+    The valve runs PER GROUP — the ungrouped index is the one group
+    None: a group whose batch mean squared assignment distance exceeds
+    ``max_drift`` × its fit-time baseline (``mean_fit_dist``) raises
+    naming the group and ``refit_hint``, so one drifted tenant cannot
+    write its shifted distribution while calm tenants are unaffected.
+    A batch group the index has never seen raises — this face cannot
+    mint centroids; bootstrap new groups with :func:`ivf_build` (or the
+    streaming loop, which fits them on first appearance). ``pin``
+    localCheckpoints the assignment for callers that read it more than
+    once; the drift aggregate forces that whenever the valve is
+    armed."""
     gcol = index.group_col
-    if gcol not in batch.columns:
+    gb = [gcol] if gcol else []
+    if gcol and gcol not in batch.columns:
         raise ValueError(
             f"advance_ivf_index: grouped index (group_col={gcol!r}) "
             "but the batch has no such column"
         )
     src = batch.filter(F.col(vec_col).isNotNull())
-    batch_groups = [
-        r[gcol] for r in src.select(gcol).distinct().collect()
+    dims = F.size(F.col(vec_col)).alias("_d")
+    # one bounded collect: the first row's dimension, or on a grouped
+    # index the distinct (group, dimension) pairs of the batch
+    seen = [
+        (r[gcol] if gcol else None, r["_d"])
+        for r in (
+            src.select(*gb, dims).distinct()
+            if gcol
+            else src.select(dims).limit(1)
+        ).collect()
     ]
-    known = {_pygkey(g) for g in index.centers}
+    centers = _by_gk(index.centers, gcol)
     unknown = sorted(
-        str(g) for g in batch_groups if _pygkey(g) not in known
+        {str(g) for g, _ in seen if _gk(g, gcol) not in centers}
     )
     if unknown:
         raise ValueError(
@@ -907,59 +892,63 @@ def _assign_frozen_grouped(
             "over its corpus (streaming_ivf_ingest fits new groups on "
             "first appearance)"
         )
-    probe = (
-        src.select(F.size(F.col(vec_col)).alias("_d")).limit(1).collect()
-    )
-    if probe and index.centers:
-        dim = next(iter(index.centers.values())).shape[1]
-        if probe[0]["_d"] != dim:
+    for g, d in seen:
+        dim = centers[_gk(g, gcol)].shape[1]
+        if d != dim:
             raise ValueError(
-                f"embedding dimension drift: batch {vec_col} has "
-                f"{probe[0]['_d']} dims, the frozen centroids have "
-                f"{dim} — rebuild ivf_build over the accumulated corpus"
+                f"embedding dimension drift: batch {vec_col} has {d} "
+                f"dims, the frozen centroids have {dim} — {refit_hint}"
             )
-    ad = _grouped_assign_udf(index.centers)(F.col(vec_col), _gkey(gcol))
+    base = _by_gk(index.mean_fit_dist, gcol)
+    if max_drift is not None:
+        missing = sorted(
+            {str(g) for g, _ in seen if base.get(_gk(g, gcol)) is None}
+        )
+        if missing:
+            raise ValueError(
+                "no mean_fit_dist drift baseline for "
+                + (f"group(s) {missing}" if gcol else "the index")
+                + " (built before the drift valve existed) — "
+                f"{refit_hint}, or pass max_drift=None to accept "
+                "unguarded recall decay"
+            )
+    ad = _frozen_assign(index.centers, vec_col, gcol)
     assigned = src.select(
-        F.col(corpus_id).alias("neighbor_id"),
+        F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).alias("_cv"),
-        F.element_at(ad, 1).cast("int").alias("_cell"),
-        F.element_at(ad, 2).alias("_dist"),
-        F.col(gcol),
+        ad.alias("_ad"),
+        *gb,
+    ).select(
+        "neighbor_id",
+        "_cv",
+        F.element_at("_ad", 1).cast("int").alias("_cell"),
+        F.element_at("_ad", 2).alias("_dist"),
+        *gb,
     )
     if pin or max_drift is not None:
         assigned = assigned.localCheckpoint()
-    if max_drift is not None:
-        means = assigned.groupBy(gcol).agg(
-            F.avg("_dist").alias("_m")
-        ).collect()
-        drifted = []
-        base_by_gk = {
-            _pygkey(g): v for g, v in index.mean_fit_dist.items()
-        }
-        for r in means:
-            base = base_by_gk.get(_pygkey(r[gcol]))
-            if base is None:
-                raise ValueError(
-                    f"advance_ivf_index: group {r[gcol]!r} carries no "
-                    "mean_fit_dist baseline (built before the drift "
-                    "valve existed) — rebuild, or pass max_drift=None"
-                )
-            m = r["_m"]
-            # same relative-epsilon discipline as assign_frozen_batch
-            if m is not None and m > max_drift * base + 1e-9:
-                drifted.append((r[gcol], m, base))
-        if drifted:
-            detail = "; ".join(
-                f"group {g!r}: batch mean {m:.4g} vs baseline {b:.4g}"
-                for g, m, b in drifted
+    if max_drift is None:
+        return assigned
+    drifted = []
+    for r in assigned.groupBy(*gb).agg(F.avg("_dist").alias("_m")).collect():
+        g = r[gcol] if gcol else None
+        m, b = r["_m"], base[_gk(g, gcol)]
+        # a degenerate zero fit baseline (every seed vector at a
+        # centroid) must still refuse a genuinely distant batch — the
+        # tiny absolute epsilon only absorbs float round-off
+        if m is not None and m > max_drift * b + 1e-9:
+            drifted.append(
+                (f"group {g!r}: " if gcol else "")
+                + f"batch mean squared assignment distance {m:.4g} vs "
+                f"baseline {b:.4g}"
             )
-            raise ValueError(
-                f"centroid drift above {max_drift}x the frozen "
-                f"per-group baseline — {detail}. The frozen cells no "
-                "longer describe those groups' embedding "
-                "distributions; rebuild ivf_build over the "
-                "accumulated corpus (or raise/disable max_drift)"
-            )
+    if drifted:
+        raise ValueError(
+            f"centroid drift above {max_drift}x the frozen baseline — "
+            f"{'; '.join(sorted(drifted))}. The frozen cells no longer "
+            f"describe the embedding distribution; {refit_hint} (or "
+            "raise/disable max_drift to accept the recall loss)"
+        )
     return assigned
 
 
@@ -1029,61 +1018,42 @@ def advance_ivf_index(
     unchanged: codebooks quantize vectors group-independently, so one
     GLOBAL codebook serves every group and ``encoded_cells`` carries
     the group column alongside the codes."""
-    # function-local import: dedup imports from this module
-    from datamunging_spark.operators.dedup import _frozen_assign_udf
+    from datamunging_spark.operators.retrieval import _gkey
 
     if (codebook is None) != (encoded_cells is None):
         raise ValueError(
             "advance_ivf_index: pass codebook AND encoded_cells "
             "together (the IVF-PQ roll-forward) or neither"
         )
-    grouped = index.group_col is not None
-    gb = [index.group_col] if grouped else []
+    gcol = index.group_col
+    gb = [gcol] if gcol else []
     row_cols = ["neighbor_id", "_cv", "_cell", *gb]
     code_cols = ["neighbor_id", "_cell", codes_col, *gb]
-    # pin only when something re-reads the assignment: the drift agg
-    # (valve armed) or the PQ encode leg — a plain append consumes it
+    if gcol and gcol in batch.columns:
+        _check_group_type(batch, gcol, "advance_ivf_index")
+    # pin only when something re-reads the assignment: the PQ encode
+    # leg (the armed valve pins anyway) — a plain append consumes it
     # once and stays lazy, the advance-family contract
-    if grouped:
-        # grouped ids are only unique within their group: the replace
-        # anti-join must key on (group, id) or one tenant's update
-        # would delete another's rows
-        from datamunging_spark.operators.retrieval import _gkey
+    assigned = _assign_frozen(
+        index, batch, corpus_id, vec_col, max_drift,
+        pin=codebook is not None,
+    )
+    # grouped ids are only unique within their group: the replace
+    # anti-join keys on (group, id) or one tenant's update would delete
+    # another's rows
+    gk = [_gkey(gcol).alias("_gk")] if gcol else []
+    key = (["_gk"] if gcol else []) + ["neighbor_id"]
 
-        if index.group_col in batch.columns:
-            _check_group_type(batch, index.group_col, "advance_ivf_index")
-        assigned = _assign_frozen_grouped(
-            index, batch, corpus_id, vec_col, max_drift,
-            pin=codebook is not None,
+    def _anti_replaced(hist: DataFrame, keep_cols: list) -> DataFrame:
+        ids = F.broadcast(
+            batch.select(*gk, F.col(corpus_id).alias("neighbor_id"))
+            .distinct()
         )
-
-        def _anti_replaced(hist: DataFrame, keep_cols: list) -> DataFrame:
-            ids = F.broadcast(
-                batch.select(
-                    _gkey(index.group_col).alias("_gk"),
-                    F.col(corpus_id).alias("neighbor_id"),
-                ).distinct()
-            )
-            return (
-                hist.withColumn("_gk", _gkey(index.group_col))
-                .join(ids, ["_gk", "neighbor_id"], "left_anti")
-                .select(*keep_cols)
-            )
-    else:
-        assigned = _assign_frozen(
-            index, batch, corpus_id, vec_col, max_drift,
-            pin=codebook is not None,
+        return (
+            hist.select(*keep_cols, *gk)
+            .join(ids, key, "left_anti")
+            .select(*keep_cols)
         )
-
-        def _anti_replaced(hist: DataFrame, keep_cols: list) -> DataFrame:
-            ids = F.broadcast(
-                batch.select(
-                    F.col(corpus_id).alias("neighbor_id")
-                ).distinct()
-            )
-            return hist.join(ids, "neighbor_id", "left_anti").select(
-                *keep_cols
-            )
 
     new_rows = assigned.select(*row_cols)
     history = index.assigned
@@ -1094,7 +1064,7 @@ def advance_ivf_index(
         index.centers,
         index.n_clusters,
         index.mean_fit_dist,
-        group_col=index.group_col,
+        group_col=gcol,
         group_type=index.group_type,
     )
     if codebook is None:
@@ -1122,39 +1092,26 @@ def ivf_centers_table(index: IvfIndex) -> DataFrame:
         ArrayType, DoubleType, IntegerType, StructField, StructType,
     )
 
-    spark = index.assigned.sparkSession
-    base_fields = [
-        StructField("cell", IntegerType()),
-        StructField("center", ArrayType(DoubleType())),
-        StructField("mean_fit_dist", DoubleType()),
-    ]
     from datamunging_spark.sources.io import local_table
 
-    if index.group_col is None:
-        mfd = index.mean_fit_dist
-        return local_table(
-            spark,
-            [
-                (int(i), [float(x) for x in row], mfd)
-                for i, row in enumerate(index.centers)
-            ],
-            StructType(base_fields),
-        )
-    # grouped: centers/mean_fit_dist are keyed by RAW group value
-    rows = []
-    for gval in sorted(index.centers, key=_pygkey):
-        c = index.centers[gval]
-        mfd = index.mean_fit_dist.get(gval)
-        for i, row in enumerate(c):
-            rows.append(
-                (gval, int(i), [float(x) for x in row], mfd)
-            )
+    gcol = index.group_col
+    centers = _by_group(index.centers, gcol)
+    mean_fit = _by_group(index.mean_fit_dist, gcol)
     return local_table(
-        spark,
-        rows,
+        index.assigned.sparkSession,
+        [
+            (*([gval] if gcol else []), i, [float(x) for x in row],
+             mean_fit.get(gval))
+            for gval in sorted(centers, key=_pygkey)
+            for i, row in enumerate(centers[gval])
+        ],
         StructType(
-            [StructField(index.group_col, index.group_type)]
-            + base_fields
+            ([StructField(gcol, index.group_type)] if gcol else [])
+            + [
+                StructField("cell", IntegerType()),
+                StructField("center", ArrayType(DoubleType())),
+                StructField("mean_fit_dist", DoubleType()),
+            ]
         ),
     )
 
@@ -1192,49 +1149,31 @@ def ivf_index_from_tables(
             "a grouped centers table has exactly one group column "
             "beside (cell, center, mean_fit_dist)"
         )
-    if extra:
-        gcol = extra[0]
+    gcol = extra[0] if extra else None
+    if gcol:
         _check_group_type(centers_table, gcol, "ivf_index_from_tables")
-        rows = centers_table.select(
-            gcol, "cell", "center", "mean_fit_dist"
-        ).collect()
-        if not rows:
-            raise ValueError(
-                "ivf_index_from_tables: empty centers table"
-            )
-        by_g: dict = {}
-        for r in rows:
-            by_g.setdefault(_pygkey(r[gcol]), []).append(r)
-        centers = {}
-        mean_fit = {}
-        n_max = 0
-        for grows in by_g.values():
-            grows.sort(key=lambda r: r["cell"])
-            gval = grows[0][gcol]
-            centers[gval] = np.stack(
-                [np.asarray(r["center"]) for r in grows]
-            )
-            mean_fit[gval] = grows[0]["mean_fit_dist"]
-            n_max = max(n_max, len(grows))
-        return IvfIndex(
-            assigned,
-            centers,
-            n_max,
-            mean_fit,
-            group_col=gcol,
-            group_type=centers_table.schema[gcol].dataType,
-        )
-    rows = sorted(
-        centers_table.select(
-            "cell", "center", "mean_fit_dist"
-        ).collect(),
-        key=lambda r: r["cell"],
-    )
+    rows = centers_table.select(
+        *extra, "cell", "center", "mean_fit_dist"
+    ).collect()
     if not rows:
         raise ValueError("ivf_index_from_tables: empty centers table")
-    centers = np.stack([np.asarray(r["center"]) for r in rows])
-    return IvfIndex(
-        assigned, centers, len(rows), rows[0]["mean_fit_dist"]
+    by_g: dict = {}
+    for r in rows:
+        by_g.setdefault(_gk(r[gcol] if gcol else None, gcol), []).append(r)
+    centers: dict = {}
+    mean_fit: dict = {}
+    for grows in by_g.values():
+        grows.sort(key=lambda r: r["cell"])
+        gval = grows[0][gcol] if gcol else None
+        centers[gval] = np.stack([np.asarray(r["center"]) for r in grows])
+        mean_fit[gval] = grows[0]["mean_fit_dist"]
+    return _ivf_index(
+        assigned,
+        centers,
+        max(len(c) for c in centers.values()),
+        mean_fit,
+        gcol,
+        centers_table.schema[gcol].dataType if gcol else None,
     )
 
 
@@ -2120,45 +2059,35 @@ def ivf_pq_topk(
         raise ValueError(
             f"ivf_pq_topk: refine_k={refine_k} must be >= k={k}"
         )
-    grouped = index.group_col is not None
-    gb = [index.group_col] if grouped else []
+    gcol = index.group_col
+    gb = [gcol] if gcol else []
     books = codebook.codebooks
     m = codebook.m
     sub = codebook.sub_dim
-    centers = index.centers
-    if grouped:
-        if index.group_col not in queries.columns:
+    if gcol:
+        if gcol not in queries.columns:
             raise ValueError(
-                f"ivf_pq_topk: grouped index (group_col="
-                f"{index.group_col!r}) but the query batch has no "
-                "such column — queries must carry their group"
+                f"ivf_pq_topk: grouped index (group_col={gcol!r}) but "
+                "the query batch has no such column — queries must "
+                "carry their group"
             )
-        if index.group_col not in encoded_cells.columns:
+        if gcol not in encoded_cells.columns:
             raise ValueError(
                 "ivf_pq_topk: grouped index but encoded_cells has no "
-                f"{index.group_col!r} column — encode with "
-                "pq_encode_cells on the grouped index"
+                f"{gcol!r} column — encode with pq_encode_cells on the "
+                "grouped index"
             )
-        _check_group_type(queries, index.group_col, "ivf_pq_topk")
-        _check_group_type(encoded_cells, index.group_col, "ivf_pq_topk")
-        q_rows = (
-            queries.select(
-                F.col(query_id).alias("query_id"),
-                F.col(vec_col).alias("_qv"),
-                F.col(index.group_col).alias("_g"),
-            )
-            .limit(_MAX_QUERY_BATCH + 1)
-            .collect()
+        _check_group_type(queries, gcol, "ivf_pq_topk")
+        _check_group_type(encoded_cells, gcol, "ivf_pq_topk")
+    q_rows = (
+        queries.select(
+            F.col(query_id).alias("query_id"),
+            F.col(vec_col).alias("_qv"),
+            *[F.col(g).alias("_g") for g in gb],
         )
-    else:
-        q_rows = (
-            queries.select(
-                F.col(query_id).alias("query_id"),
-                F.col(vec_col).alias("_qv"),
-            )
-            .limit(_MAX_QUERY_BATCH + 1)
-            .collect()
-        )
+        .limit(_MAX_QUERY_BATCH + 1)
+        .collect()
+    )
     if not q_rows:
         raise ValueError("empty query batch")
     if len(q_rows) > _MAX_QUERY_BATCH:
@@ -2185,54 +2114,23 @@ def ivf_pq_topk(
 
     spark = queries.sparkSession
     qid_type = queries.schema[query_id].dataType
-    if grouped:
-        centers_by_gk = {_pygkey(g): c for g, c in centers.items()}
-        cell_rows = []
-        for r, qv in zip(q_rows, qx):
-            gk = _pygkey(r["_g"])
-            c = centers_by_gk.get(gk)
-            if c is None:
-                raise ValueError(
-                    f"ivf_pq_topk: query group {r['_g']!r} has no "
-                    "centroids in this index — the group was never "
-                    "built"
-                )
-            d = ((qv[None, :] - c) ** 2).sum(axis=1)
-            for cell in np.argsort(d)[: min(int(n_probe), len(c))]:
-                cell_rows.append((r["query_id"], gk, int(cell)))
-        q_cells = local_table(
-            spark,
-            cell_rows,
-            StructType(
-                [
-                    StructField("query_id", qid_type),
-                    StructField("_gk", StringType()),
-                    StructField(
-                        "_cell", encoded_cells.schema["_cell"].dataType
-                    ),
-                ]
-            ),
-        )
-    else:
-        d = ((qx[:, None, :] - centers[None, :, :]) ** 2).sum(axis=2)
-        n_probe_eff = min(n_probe, index.n_clusters)
-        probed = np.argsort(d, axis=1)[:, :n_probe_eff]
-        q_cells = local_table(
-            spark,
-            [
-                (qid, int(c))
-                for qid, row in zip(q_ids, probed)
-                for c in row
-            ],
-            StructType(
-                [
-                    StructField("query_id", qid_type),
-                    StructField(
-                        "_cell", encoded_cells.schema["_cell"].dataType
-                    ),
-                ]
-            ),
-        )
+    groups = [r["_g"] if gcol else None for r in q_rows]
+    probed = _probe_cells(
+        index, groups, [r["_qv"] for r in q_rows], n_probe, "ivf_pq_topk"
+    )
+    q_cells = local_table(
+        spark,
+        [
+            (qid, *([_gk(g, gcol)] if gcol else []), int(c))
+            for qid, g, cells in zip(q_ids, groups, probed)
+            for c in cells
+        ],
+        StructType(
+            [StructField("query_id", qid_type)]
+            + ([StructField("_gk", StringType())] if gcol else [])
+            + [StructField("_cell", encoded_cells.schema["_cell"].dataType)]
+        ),
+    )
 
     schema = StructType(
         [
@@ -2270,19 +2168,15 @@ def ivf_pq_topk(
                 .head(k_adc + 1)
             )
 
-    if grouped:
+    if gcol:
         from datamunging_spark.operators.retrieval import _gkey
 
-        cand_enc = encoded_cells.withColumn(
-            "_gk", _gkey(index.group_col)
-        )
+        cand_enc = encoded_cells.withColumn("_gk", _gkey(gcol))
         joined = F.broadcast(q_cells).join(cand_enc, ["_gk", "_cell"])
     else:
         joined = F.broadcast(q_cells).join(encoded_cells, "_cell")
     if filter_ids is not None:
-        flt, fjk = _filter_id_set(
-            filter_ids, index.group_col, "ivf_pq_topk"
-        )
+        flt, fjk = _filter_id_set(filter_ids, gcol, "ivf_pq_topk")
         joined = joined.join(flt, fjk, "semi")
     local = joined.select(
         "query_id", "neighbor_id", codes_col
@@ -2303,7 +2197,7 @@ def ivf_pq_topk(
                 F.col(query_id).alias("query_id"), *gb
             ).distinct()
         )
-        if grouped
+        if gcol
         else None
     )
     if refine_k is None:
@@ -2311,24 +2205,24 @@ def ivf_pq_topk(
             "query_id", "neighbor_id", "rank",
             F.round("score", 6).alias("score"),
         )
-        if grouped:
+        if gcol:
             out = out.join(qgroups, "query_id").select(
                 "query_id", *gb, "neighbor_id", "rank", "score"
             )
         return out
     cands = adc.select("query_id", "neighbor_id")
     vecs = index.assigned.select("neighbor_id", "_cv")
-    if grouped:
+    if gcol:
         from datamunging_spark.operators.retrieval import _gkey
 
         cands = (
             cands.join(qgroups, "query_id")
-            .withColumn("_gk", _gkey(index.group_col))
+            .withColumn("_gk", _gkey(gcol))
             .select("query_id", "_gk", "neighbor_id")
         )
-        vecs = index.assigned.withColumn(
-            "_gk", _gkey(index.group_col)
-        ).select("_gk", "neighbor_id", "_cv")
+        vecs = index.assigned.withColumn("_gk", _gkey(gcol)).select(
+            "_gk", "neighbor_id", "_cv"
+        )
     return _exact_rerank(
         cands,
         queries.select(
@@ -2337,7 +2231,7 @@ def ivf_pq_topk(
         ),
         vecs,
         k,
-        gb=gb if grouped else None,
+        gb=gb or None,
         qgroups=qgroups,
     )
 

@@ -29,11 +29,12 @@ def co_materialize(*thunks, max_workers: int | None = None):
     for long thunk lists (the guide's 2-3-jobs-in-flight advice —
     enough to fill task tails, not enough to fight for executors);
     default = one thread per thunk, right for the 2-4-way overlaps the
-    entry composites use."""
+    entry composites use. One thunk runs on the calling thread and no
+    thunks return ``[]`` — no pool is built for either."""
     from pyspark import inheritable_thread_target
 
-    if len(thunks) == 1:
-        return [thunks[0]()]
+    if len(thunks) <= 1:
+        return [t() for t in thunks]
     with ThreadPoolExecutor(
         max_workers=min(max_workers or len(thunks), len(thunks))
     ) as ex:

@@ -1812,7 +1812,6 @@ def streaming_ivf_ingest(
     from datamunging_spark.operators.similarity import (
         IvfIndex,
         _assign_frozen,
-        _assign_frozen_grouped,
         _pq_encode_udf,
         _pygkey,
         ivf_build,
@@ -1979,13 +1978,9 @@ def streaming_ivf_ingest(
         return merged
 
     def _assign_rows(idx, bdf):
-        if group_col is not None:
-            return _assign_frozen_grouped(
-                idx, bdf, vec_id, vec_col, max_drift, pin=False
-            ).select("neighbor_id", "_cv", "_cell", group_col)
         return _assign_frozen(
             idx, bdf, vec_id, vec_col, max_drift, pin=False
-        ).select("neighbor_id", "_cv", "_cell")
+        ).drop("_dist")
 
     def _process(batch_df, batch_id):
         if not batch_df.head(1):

@@ -1957,7 +1957,7 @@ def test_kmeans_fit_np_contracts():
     # k > n clamps to n and the residual is (numerically) zero — the
     # matmul identity can leave a tiny positive min-distance under
     # BLAS-dependent rounding (no snap-to-zero epsilon in the fit,
-    # unlike _frozen_assign_udf), so approx, not exact equality
+    # unlike _frozen_assign), so approx, not exact equality
     ck, mk = _kmeans_fit_np(x[:5], 16, seed=7)
     assert ck.shape == (5, 4) and mk == pytest.approx(0.0, abs=1e-12)
     # duplicated points force empty clusters: the respawn path must
@@ -1990,6 +1990,106 @@ def test_grouped_ivf_build_matches_per_slice_fits(spark, grouped_vecs):
         (F.col("_cell") < 0) | (F.col("_cell") >= 4)
     )
     assert bad.count() == 0
+
+
+@pytest.mark.parametrize("grouped", [False, True], ids=["plain", "grouped"])
+def test_frozen_assign_kernel_matches_numpy_argmin(spark, grouped):
+    """The one frozen-centroid Arrow kernel against a brute-force numpy
+    argmin: cell and squared distance of every row under its group's
+    centroids, for one group and for three groups incl. the NULL group.
+    A vector equal to a centroid measures exactly 0.0, at unit and at
+    1e9 magnitude (the relative snap), and 1e9-magnitude vectors still
+    land in their nearest cell."""
+    import numpy as np
+
+    from datamunging_spark.operators.similarity import _frozen_assign
+
+    rng = np.random.RandomState(5)
+    gvals = ["a", "b", None] if grouped else [None]
+    centers = {}
+    for i, g in enumerate(gvals):
+        c = rng.randn(4, 8) + 3.0 * i
+        c[3] = 1e9 * rng.randn(8)  # a far, 1e9-magnitude centroid
+        centers[g] = c
+    rows = []
+    for g in gvals:
+        c = centers[g]
+        vecs = list(rng.randn(20, 8)) + [c[1], c[3]] + list(
+            1e9 * rng.randn(3, 8)
+        )
+        rows += [(len(rows) + j, g, [float(x) for x in v])
+                 for j, v in enumerate(vecs)]
+    df = spark.createDataFrame(rows, "id long, grp string, v array<double>")
+    ad = (
+        _frozen_assign(centers, "v", "grp")
+        if grouped
+        else _frozen_assign(centers[None], "v")
+    )
+    got = {
+        r["id"]: (r["ad"][0], r["ad"][1])
+        for r in df.select("id", ad.alias("ad")).collect()
+    }
+    assert len(got) == len(rows)
+    for rid, g, v in rows:
+        d = ((centers[g] - np.asarray(v)) ** 2).sum(axis=1)
+        cell, dist = got[rid]
+        assert cell == float(d.argmin())
+        if d.min() == 0.0:
+            assert dist == 0.0
+        else:
+            assert dist == pytest.approx(d.min(), rel=1e-9)
+
+
+#: Spark jobs of one ``ivf_build`` plus ``assigned.count()`` and of one
+#: ``advance_ivf_index`` (default drift valve) plus the same count, on
+#: ``grouped_vecs`` with ``n_clusters=4``. Build: the row count(s), the
+#: sample collect(s) and the assignment count; advance: the dimension
+#: (and group) probe, the localCheckpoint the armed valve reads, the
+#: valve's aggregate and the count.
+IVF_JOB_BUDGET = {
+    ("build", "plain"): 5,
+    ("build", "grouped"): 8,
+    ("advance", "plain"): 7,
+    ("advance", "grouped"): 7,
+}
+
+
+def test_ivf_job_budget(spark, grouped_vecs):
+    """A job-count regression on the IVF lifecycle fails here: build and
+    advance, ungrouped and grouped, must stay within
+    ``IVF_JOB_BUDGET``."""
+    from test_retrieval import _jobs_of
+
+    from datamunging_spark.operators.similarity import (
+        advance_ivf_index,
+        ivf_build,
+    )
+
+    batch = grouped_vecs.filter(F.col("vec_id") % 10 == 0).select(
+        (F.col("vec_id") + 100000).alias("vec_id"), "embedding", "grp"
+    )
+    jobs = {}
+    for face, gc in (("plain", None), ("grouped", "grp")):
+        jobs[("build", face)] = _jobs_of(
+            spark,
+            lambda: ivf_build(
+                grouped_vecs, n_clusters=4, group_col=gc
+            ).assigned.count(),
+            f"ivf-budget-build-{face}",
+        )
+        idx = ivf_build(grouped_vecs, n_clusters=4, group_col=gc)
+        idx.assigned = idx.assigned.localCheckpoint()
+        jobs[("advance", face)] = _jobs_of(
+            spark,
+            lambda: advance_ivf_index(idx, batch).assigned.count(),
+            f"ivf-budget-advance-{face}",
+        )
+    over = {
+        op: (n, IVF_JOB_BUDGET[op])
+        for op, n in jobs.items()
+        if n > IVF_JOB_BUDGET[op]
+    }
+    assert not over, f"jobs over budget (got, budget): {over} of {jobs}"
 
 
 @pytest.mark.parametrize(

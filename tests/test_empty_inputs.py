@@ -190,15 +190,19 @@ def test_session_new_ops_on_empty(spark, empty_docs):
 
 
 def test_vector_fit_ops_on_empty(spark):
-    """pq_fit / ivf-backed semantic ops on an empty vector table raise a
+    """pq_fit and both ivf_build faces on an empty vector table raise a
     clear error instead of a deep numpy/MLlib traceback."""
     import pytest
 
-    from datamunging_spark.operators.similarity import pq_fit
+    from datamunging_spark.operators.similarity import ivf_build, pq_fit
 
     empty_vec = spark.createDataFrame([], "vec_id long, embedding array<double>")
     with pytest.raises(ValueError, match="empty"):
         pq_fit(empty_vec)
+    empty_grouped = empty_vec.withColumn("grp", F.lit(None).cast("string"))
+    for group_col in (None, "grp"):
+        with pytest.raises(ValueError, match="empty corpus"):
+            ivf_build(empty_grouped, group_col=group_col)
 
 
 def test_history_family_on_empty(spark):
