@@ -648,16 +648,19 @@ def q_x2_boolean(spark, sf_dir):
 _ENTRY_CACHE: dict = {}
 
 
-def _persisted_artifact(sf_dir, table, tag, build):
+def _persisted_artifact(sf_dir, table, tag, build, modules=()):
     """A fingerprinted /tmp artifact directory shared by the persisted-
     index bench queries: keyed by a FINGERPRINT of the source table
-    (path + parquet size/mtime), so regenerating the fixture data under
-    the same sf_dir can never silently bench a stale artifact. The
-    build lands in a unique temp dir followed by an atomic rename — a
-    concurrent builder either wins the rename or discards its copy and
-    reads the winner's; no reader can observe a partially written
-    artifact. On a successful build, superseded siblings of the same
-    ``tag`` AND the same sf_dir (stale fingerprints) and ABANDONED
+    (path + parquet size/mtime) and of the code that writes it (the
+    source of ``build`` and of the library ``modules`` it calls), so
+    neither regenerating the fixture data under the same sf_dir nor
+    another checkout's older builder can silently bench a stale
+    artifact. The build lands in a unique temp dir followed by an
+    atomic rename — a concurrent builder either wins the rename or
+    discards its copy and reads the winner's; no reader can observe a
+    partially written artifact. On a successful build, superseded
+    siblings of the same ``tag`` AND the same sf_dir (stale
+    fingerprints, including another checkout's code) and ABANDONED
     ``.build.`` temps (>1h old — a live concurrent build is minutes
     old) are best-effort deleted so /tmp stays bounded across fixture
     regenerations. The directory name carries a stable per-sf_dir
@@ -668,6 +671,7 @@ def _persisted_artifact(sf_dir, table, tag, build):
     live artifact out from under a concurrent bench (r15-close
     advice)."""
     import hashlib
+    import inspect
     import os as _os
     import shutil
     import tempfile
@@ -689,6 +693,8 @@ def _persisted_artifact(sf_dir, table, tag, build):
             f"{_os.path.basename(p)}:{st.st_size}:{st.st_mtime_ns}"
             .encode()
         )
+    for code in (build, *modules):
+        h.update(inspect.getsource(code).encode())
     base = _os.path.join(
         tempfile.gettempdir(),
         f"spark_graft_{tag}_{sf8}_{h.hexdigest()[:12]}",
@@ -730,6 +736,7 @@ def _bm25_persisted_index(spark, sf_dir):
     :func:`_persisted_artifact`). Cached process-wide; the in-process
     cache keys on the fingerprinted path too, so regenerating the
     fixture mid-session invalidates both tiers."""
+    from datamunging_spark.operators import retrieval
     from datamunging_spark.operators.retrieval import (
         index_stats,
         inverted_index,
@@ -750,7 +757,9 @@ def _bm25_persisted_index(spark, sf_dir):
         ).write.mode("overwrite").parquet(f"{tmp}/dfreq")
         index_stats(d).write.mode("overwrite").parquet(f"{tmp}/stats")
 
-    base = _persisted_artifact(sf_dir, "documents", "bm25pos", build)
+    base = _persisted_artifact(
+        sf_dir, "documents", "bm25pos", build, (retrieval,)
+    )
     key = ("bm25_idx", base)
     if key in _ENTRY_CACHE:
         return _ENTRY_CACHE[key]
@@ -769,6 +778,7 @@ def _ivf_persisted_store(spark, sf_dir):
     table) — the artifact a vector deployment pays for at build time;
     the remaining 10% slice is the bench's ingest batch. Same
     fingerprint/atomic-rename/eviction story as the BM25 index."""
+    from datamunging_spark.operators import similarity
     from datamunging_spark.operators.similarity import (
         ivf_build,
         ivf_centers_table,
@@ -785,7 +795,9 @@ def _ivf_persisted_store(spark, sf_dir):
             f"{tmp}/centers"
         )
 
-    base = _persisted_artifact(sf_dir, "embeddings", "ivf", build)
+    base = _persisted_artifact(
+        sf_dir, "embeddings", "ivf", build, (similarity,)
+    )
     key = ("ivf_idx", base)
     if key in _ENTRY_CACHE:
         return _ENTRY_CACHE[key]

@@ -1,9 +1,14 @@
 """ML feature operators (SURVEY.md §2.7 R38-R41): Word2Vec, synonym search,
-PCA, projection — the reference's MLlib recipes (README.md:361-422) on the
-modern ml.feature API over DataFrames.
+PCA, projection — the reference's MLlib recipes (README.md:361-422) over
+DataFrames. Word2Vec runs on the ml.feature API. PCA needs only the d×d
+covariance, so :func:`fit_pca` computes it in one Arrow co-moment pass
+(P partition rows of d² doubles reach the driver) and eigendecomposes
+it in numpy; :func:`pca_project` is plain column expressions.
 """
 
 from __future__ import annotations
+
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -34,30 +39,165 @@ def find_synonyms(model, word: str, k: int = 10) -> DataFrame:
     return model.findSynonyms(word, k)
 
 
-def to_vector(df: DataFrame, array_col: str = "embedding", out: str = "features") -> DataFrame:
-    """array<float> column → ml.linalg Vector column (the ML boundary,
-    SURVEY.md §1.1)."""
+class PCAModel(NamedTuple):
+    """A fitted :func:`fit_pca`: ``pc`` is the d×k component matrix (an
+    ``ml.linalg.DenseMatrix``, columns in descending variance order, each
+    signed so that its largest-magnitude entry is positive) and
+    ``explainedVariance`` the k components' shares of the total variance
+    (a ``DenseVector``). Project with :func:`pca_project`; persist the
+    two as plain arrays."""
+
+    pc: object
+    explainedVariance: object
+
+
+def _comoments(batches):
+    """mapInArrow kernel over one array<double> column: one ``(n, mean,
+    m2, err)`` row per non-empty partition, where ``m2`` is the centered
+    co-moment matrix Σ(x−mean)(x−mean)ᵀ flattened row-major, its batches
+    merged by :func:`_merge_comoments`. ``err`` names the first
+    malformed input seen (a NULL array, a NULL element, or ragged
+    widths) so that the driver raises on it rather than a worker."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    acc, err = None, None
+    for b in batches:
+        arrs = b.column(0)
+        if err or not len(arrs):
+            continue
+        flat = arrs.flatten()
+        widths = pc.list_value_length(arrs).to_numpy(zero_copy_only=False)
+        if arrs.null_count:
+            err = "holds a NULL array"
+        elif flat.null_count:
+            err = "holds an array with a NULL element"
+        elif (widths != widths[0]).any() or (
+            acc is not None and widths[0] != len(acc[1])
+        ):
+            err = "holds arrays of different lengths"
+        else:
+            x = flat.to_numpy().reshape(len(arrs), int(widths[0]))
+            mean = x.mean(axis=0)
+            xc = x - mean
+            part = (len(x), mean, xc.T @ xc)
+            acc = part if acc is None else _merge_comoments(acc, part)
+    if acc is None and err is None:
+        return
+    n, mean, m2 = acc if err is None else (0, np.zeros(0), np.zeros(0))
+    yield pa.RecordBatch.from_pydict(
+        {
+            "n": [n],
+            "mean": [mean.tolist()],
+            "m2": [m2.ravel().tolist()],
+            "err": [err],
+        },
+        schema=pa.schema([
+            ("n", pa.int64()),
+            ("mean", pa.list_(pa.float64())),
+            ("m2", pa.list_(pa.float64())),
+            ("err", pa.string()),
+        ]),
+    )
+
+
+def _merge_comoments(a, b):
+    """Chan, Golub & LeVeque's pairwise update of (n, mean, M2): exact in
+    exact arithmetic and, unlike Σxxᵀ − n·μμᵀ, free of the cancellation
+    that large means cause."""
+    na, ma, m2a = a
+    nb, mb, m2b = b
+    n = na + nb
+    delta = mb - ma
+    return (
+        n,
+        ma + delta * (nb / n),
+        m2a + m2b + (na * nb / n) * (delta[:, None] * delta[None, :]),
+    )
+
+
+def fit_pca(df: DataFrame, array_col: str = "embedding", k: int = 20) -> PCAModel:
+    """R40 (README.md:410-418): top-k principal components, as
+    RowMatrix.computePrincipalComponents(k) defines them: the top-k
+    eigenvectors of the sample covariance, with explained variance =
+    eigenvalue / sum of all eigenvalues.
+
+    One Spark job: a mapInArrow pass over ``array_col`` (cast to
+    array<double>) computes each partition's count, mean and centered
+    co-moment matrix in numpy, merging batches pairwise; the driver
+    merges the partition rows the same way and runs
+    ``numpy.linalg.eigh`` on the d×d covariance. Components are signed
+    so that each one's largest-magnitude entry is positive, which makes
+    the fit deterministic.
+
+    Scale shape: one scan, no shuffle; P partition rows of d + d²
+    doubles reach the driver, independent of the row count.
+
+    Raises ``ValueError`` for fewer than 2 rows, ``k`` outside [1, d],
+    or a NULL array, NULL element or ragged widths in ``array_col``."""
+    import numpy as np
+    from pyspark.ml.linalg import DenseMatrix, DenseVector
+
+    if k < 1:
+        raise ValueError(f"fit_pca: k must be at least 1, got {k}")
+    parts = (
+        df.select(F.col(array_col).cast("array<double>"))
+        .mapInArrow(
+            _comoments,
+            "n long, mean array<double>, m2 array<double>, err string",
+        )
+        .collect()
+    )
+    bad = next((r["err"] for r in parts if r["err"]), None)
+    if bad is None and len({len(r["mean"]) for r in parts}) > 1:
+        bad = "holds arrays of different lengths"
+    if bad:
+        raise ValueError(f"fit_pca: column {array_col!r} {bad}")
+    acc = None
+    for r in parts:
+        d = len(r["mean"])
+        part = (
+            r["n"],
+            np.array(r["mean"]),
+            np.array(r["m2"]).reshape(d, d),
+        )
+        acc = part if acc is None else _merge_comoments(acc, part)
+    n = acc[0] if acc else 0
+    if n < 2:
+        raise ValueError(
+            f"fit_pca: needs at least 2 rows of {array_col!r}, got {n}"
+        )
+    d = len(acc[1])
+    if k > d:
+        raise ValueError(f"fit_pca: k must be at most d={d}, got {k}")
+    w, v = np.linalg.eigh(acc[2] / (n - 1))
+    top = np.argsort(w)[::-1][:k]
+    pc = v[:, top]
+    pc *= np.where(pc[np.abs(pc).argmax(axis=0), range(k)] < 0, -1.0, 1.0)
+    return PCAModel(
+        DenseMatrix(d, k, pc.ravel(order="F").tolist()),
+        DenseVector(w[top] / w.sum()),
+    )
+
+
+def pca_project(model: PCAModel, df: DataFrame, array_col: str = "embedding") -> DataFrame:
+    """R41 (README.md:421): mat.multiply(pc) — adds a ``pca`` Vector
+    column of the rows projected onto the principal subspace. Like
+    MLlib's ``PCAModel.transform`` it does not center. The projection is
+    k literal dot-product expressions over ``array_col`` wrapped in the
+    JVM ``array_to_vector``: no Python at action time."""
+    from functools import reduce
+    from operator import add
+
     from pyspark.ml.functions import array_to_vector
 
-    return df.withColumn(out, array_to_vector(F.col(array_col)))
-
-
-def fit_pca(df: DataFrame, array_col: str = "embedding", k: int = 20):
-    """R40 (README.md:410-418): top-k principal components.
-
-    ml.feature.PCA on a vector column — computes the covariance eigenbasis
-    distributed (one pass for the Gramian), matching
-    RowMatrix.computePrincipalComponents(20)."""
-    from pyspark.ml.feature import PCA
-
-    vecs = to_vector(df, array_col)
-    return PCA(k=k, inputCol="features", outputCol="pca").fit(vecs)
-
-
-def pca_project(model, df: DataFrame, array_col: str = "embedding") -> DataFrame:
-    """R41 (README.md:421): mat.multiply(pc) — project rows onto the
-    principal subspace."""
-    return model.transform(to_vector(df, array_col))
+    x = F.col(array_col)
+    dots = [
+        reduce(add, (x.getItem(i) * F.lit(float(c)) for i, c in enumerate(comp)))
+        for comp in model.pc.toArray().T
+    ]
+    return df.withColumn("pca", array_to_vector(F.array(*dots)))
 
 
 def quality_classifier_fit(

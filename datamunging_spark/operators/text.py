@@ -209,6 +209,7 @@ class LangClassifier(NamedTuple):
 
 def _softmax_fit_np(
     flat_idx,
+    counts,
     row_ptr,
     y,
     n_classes: int,
@@ -231,11 +232,11 @@ def _softmax_fit_np(
     gradient infinity-norm falls below ``tol·max(1, |f|)`` or after
     ``max_iter`` iterations; deterministic (zero init, no RNG).
 
-    Input is the sample's hashed gram indices in flat CSR form:
-    ``flat_idx`` (total_nnz int32 feature indices, duplicates = count
-    weight), ``row_ptr`` (n+1 offsets), ``y`` (n int labels). Memory is
-    O(nnz + n_classes·num_features). Returns ``(coef (C, F),
-    intercept (C,), n_iters)``."""
+    Input is the sample's hashed gram counts in flat CSR form:
+    ``flat_idx`` (total_nnz int32 feature indices), ``counts`` (the
+    count of each index in its row), ``row_ptr`` (n+1 offsets), ``y`` (n
+    int labels). Memory is O(nnz + n_classes·num_features). Returns
+    ``(coef (C, F), intercept (C,), n_iters)``."""
     import numpy as np
 
     n = len(row_ptr) - 1
@@ -243,6 +244,7 @@ def _softmax_fit_np(
     row_len = np.diff(row_ptr)
     nonempty = row_len > 0
     starts = np.asarray(row_ptr[:-1])[nonempty]
+    w = np.asarray(counts, float)
     Y = np.zeros((n, C))
     Y[np.arange(n), y] = 1.0
 
@@ -252,7 +254,7 @@ def _softmax_fit_np(
         # logits via segment sums over the flat gram stream
         logits = np.empty((n, C))
         for c in range(C):
-            vals = W[c, flat_idx]
+            vals = W[c, flat_idx] * w
             # reduceat over the non-empty rows' starts only: they are
             # strictly increasing and in range, while a trailing
             # zero-length row would start at len(vals) (IndexError)
@@ -271,7 +273,7 @@ def _softmax_fit_np(
         gW = np.empty_like(W)
         for c in range(C):
             gW[c] = np.bincount(
-                flat_idx, weights=np.repeat(A[:, c], row_len),
+                flat_idx, weights=np.repeat(A[:, c], row_len) * w,
                 minlength=Fdim,
             )
         gW += reg_param * W
@@ -410,30 +412,45 @@ def lang_classifier_fit(
             fraction=min(1.0, max_fit_rows / n_train),
             seed=seed,
         )
-    # ONE bounded collect of (hashed gram indices, label) — ints, not
-    # text; the same sample(fraction, seed) discipline as ivf_build
-    rows = train.select(
-        F.transform(
-            _lid_grams_col(text_col, gram),
-            lambda g: F.pmod(F.hash(g), F.lit(num_features)),
-        ).alias("_lid_idx"),
+    # ONE bounded collect through Arrow: each doc reduced in Spark to its
+    # distinct hashed gram indices and their counts (runs of the sorted
+    # index array), so the driver receives ints bounded by num_features
+    # per doc, not the doc's gram stream and never the text
+    s = F.col("_lid_s")
+    last = F.size(s) - 1
+    # 0-based index of each run's last element; get() is NULL past the end
+    run_ends = F.filter(
+        F.sequence(F.lit(0), last),
+        lambda i: (i == last) | (F.get(s, i) != F.get(s, i + 1)),
+    )
+    ends = F.col("_lid_end")
+    sample = train.select(
+        F.array_sort(
+            F.transform(
+                _lid_grams_col(text_col, gram),
+                lambda g: F.pmod(F.hash(g), F.lit(num_features)),
+            )
+        ).alias("_lid_s"),
         "_lid_label",
-    ).collect()
-    if not rows:
+    ).select(run_ends.alias("_lid_end"), "_lid_s", "_lid_label").select(
+        F.transform(ends, lambda e: F.get(s, e)).alias("_lid_idx"),
+        F.transform(
+            ends,
+            lambda e, j: e - F.coalesce(F.get(ends, j - 1), F.lit(-1)),
+        ).alias("_lid_cnt"),
+        "_lid_label",
+    ).toArrow()
+    if not sample.num_rows:
         raise ValueError("lang_classifier_fit: empty fit sample")
-    row_ptr = np.zeros(len(rows) + 1, dtype=np.int64)
-    row_ptr[1:] = np.cumsum([len(r["_lid_idx"]) for r in rows])
-    flat_idx = np.fromiter(
-        (i for r in rows for i in r["_lid_idx"]),
-        dtype=np.int32,
-        count=int(row_ptr[-1]),
-    )
-    y = np.fromiter(
-        (r["_lid_label"] for r in rows), dtype=np.int64, count=len(rows)
-    )
+    idx = sample.column("_lid_idx").combine_chunks()
+    row_ptr = idx.offsets.to_numpy().astype(np.int64)
+    row_ptr -= row_ptr[0]
+    flat_idx = idx.flatten().to_numpy().astype(np.int32)
+    counts = sample.column("_lid_cnt").combine_chunks().flatten().to_numpy()
+    y = sample.column("_lid_label").to_numpy().astype(np.int64)
     coef, intercept, _ = _softmax_fit_np(
-        flat_idx, row_ptr, y, len(labels), num_features, reg_param,
-        max_iter,
+        flat_idx, counts, row_ptr, y, len(labels), num_features,
+        reg_param, max_iter,
     )
     return LangClassifier(
         LangModelParams(coef, intercept, gram, num_features), labels

@@ -190,15 +190,18 @@ def test_session_new_ops_on_empty(spark, empty_docs):
 
 
 def test_vector_fit_ops_on_empty(spark):
-    """pq_fit and both ivf_build faces on an empty vector table raise a
-    clear error instead of a deep numpy/MLlib traceback."""
+    """pq_fit, fit_pca and both ivf_build faces on an empty vector table
+    raise a clear error instead of a deep numpy/MLlib traceback."""
     import pytest
 
+    from datamunging_spark.operators.ml import fit_pca
     from datamunging_spark.operators.similarity import ivf_build, pq_fit
 
     empty_vec = spark.createDataFrame([], "vec_id long, embedding array<double>")
     with pytest.raises(ValueError, match="empty"):
         pq_fit(empty_vec)
+    with pytest.raises(ValueError, match="at least 2 rows"):
+        fit_pca(empty_vec, k=2)
     empty_grouped = empty_vec.withColumn("grp", F.lit(None).cast("string"))
     for group_col in (None, "grp"):
         with pytest.raises(ValueError, match="empty corpus"):

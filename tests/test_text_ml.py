@@ -108,15 +108,94 @@ def test_word2vec_and_synonyms(tables):
     assert syn.count() == 3
 
 
-def test_pca_projection(tables):
-    emb = tables["embeddings"].limit(200)
-    model = fit_pca(emb, k=8)
-    projected = pca_project(model, emb)
-    row = projected.select("pca").first()
-    assert len(row["pca"]) == 8
-    # components explain decreasing variance
-    ev = list(model.explainedVariance)
-    assert ev == sorted(ev, reverse=True)
+def test_pca_projection(spark, tables):
+    """fit_pca / pca_project against an independent numpy PCA of the
+    collected matrix (np.cov + eigh): explained variance to 1e-9
+    relative, components and projections equal up to each component's
+    sign, and the sign rule holds. Run on 7 partitions and on a frame
+    with empty partitions, so the co-moment merge is exercised."""
+    import numpy as np
+
+    emb = tables["embeddings"]
+    X = np.array(
+        [r["embedding"] for r in emb.orderBy("vec_id").collect()], dtype=float
+    )
+    w, v = np.linalg.eigh(np.cov(X, rowvar=False))
+    top = np.argsort(w)[::-1][:8]
+    ref_ev, ref_pc = w[top] / w.sum(), v[:, top]
+    gappy = emb.repartition(7, F.col("vec_id") % 2)
+    assert 0 in gappy.rdd.glom().map(len).collect()
+    for df in (emb.repartition(7), gappy):
+        model = fit_pca(df, k=8)
+        ev = model.explainedVariance.toArray()
+        np.testing.assert_allclose(ev, ref_ev, rtol=1e-9)
+        assert list(ev) == sorted(ev, reverse=True)
+        pc = model.pc.toArray()
+        assert pc.shape == (X.shape[1], 8)
+        # sign rule: each component's largest-|.| entry is positive
+        assert (pc[np.abs(pc).argmax(axis=0), range(8)] > 0).all()
+        sign = np.sign(np.diag(ref_pc.T @ pc))
+        assert np.abs(pc - ref_pc * sign).max() < 1e-9
+        got = np.array([
+            r["pca"].toArray()
+            for r in pca_project(model, df).orderBy("vec_id").collect()
+        ])
+        want = X @ ref_pc * sign
+        assert np.abs(got - want).max() < 1e-9 * np.abs(want).max()
+
+
+def test_pca_rejects_bad_input(spark):
+    """Fewer than 2 rows, k outside [1, d], and a NULL array, a NULL
+    element or ragged widths raise ValueError (the last three naming
+    the column), within one Arrow batch and across partitions."""
+    good = [[1.0, 2.0, 3.0], [2.0, 0.0, 1.0], [0.0, 1.0, 5.0]]
+    schema = "id long, v array<double>"
+
+    def frame(vs):
+        return spark.createDataFrame(list(enumerate(vs)), schema)
+
+    with pytest.raises(ValueError, match="at least 2 rows"):
+        fit_pca(frame(good[:1]), "v", k=1)
+    for k in (0, 4):
+        with pytest.raises(ValueError, match="k must be"):
+            fit_pca(frame(good), "v", k=k)
+    for bad in ([None], [[1.0, None, 2.0]], [[1.0, 2.0]]):
+        df = frame(good + bad)
+        for d in (df.coalesce(1), df.repartition(4)):
+            with pytest.raises(ValueError, match="column 'v'"):
+                fit_pca(d, "v", k=2)
+
+
+#: Spark jobs on the sf0.001 embeddings: the fit is one Arrow pass and
+#: its collect; the projection adds no job of its own, so fit +
+#: project + count() is the fit plus the count's aggregate stage and
+#: result (one job each under AQE).
+ML_JOB_BUDGET = {"fit_pca": 1, "fit_pca+project+count": 3}
+
+
+def test_ml_job_budget(spark, tables):
+    """A job-count regression on the PCA recipe fails here: the fit
+    alone, and fit + projection + count(), must stay within
+    ``ML_JOB_BUDGET``."""
+    from test_retrieval import _jobs_of
+
+    emb = tables["embeddings"]
+    calls = {
+        "fit_pca": lambda: fit_pca(emb, k=8),
+        "fit_pca+project+count": lambda: pca_project(
+            fit_pca(emb, k=8), emb
+        ).count(),
+    }
+    jobs = {
+        op: _jobs_of(spark, call, f"ml-budget-{op}")
+        for op, call in calls.items()
+    }
+    over = {
+        op: (n, ML_JOB_BUDGET[op])
+        for op, n in jobs.items()
+        if n > ML_JOB_BUDGET[op]
+    }
+    assert not over, f"jobs over budget (got, budget): {over} of {jobs}"
 
 
 def test_chunk_documents_windows_and_overlap(spark):
@@ -742,8 +821,9 @@ def test_softmax_fit_np_contract():
     flat = np.fromiter((f for r in rows for f in r), dtype=np.int32)
     y = np.array(y)
 
-    W1, b1, it1 = _softmax_fit_np(flat, row_ptr, y, 3, 40, 0.01, 100)
-    W2, b2, it2 = _softmax_fit_np(flat, row_ptr, y, 3, 40, 0.01, 100)
+    ones = np.ones(len(flat))
+    W1, b1, it1 = _softmax_fit_np(flat, ones, row_ptr, y, 3, 40, 0.01, 100)
+    W2, b2, it2 = _softmax_fit_np(flat, ones, row_ptr, y, 3, 40, 0.01, 100)
     assert np.array_equal(W1, W2) and np.array_equal(b1, b2)  # determinism
     assert it1 == it2 < 100  # converged before the iteration cap
     # training accuracy on the separable plant
@@ -751,8 +831,17 @@ def test_softmax_fit_np_contract():
         np.add.reduceat(W1[c, flat], row_ptr[:-1]) + b1[c] for c in range(3)
     ]).T
     assert (logits.argmax(axis=1) == y).all()
+    # each row as distinct (index, count) pairs is the same objective
+    uniq = [np.unique(r, return_counts=True) for r in rows]
+    ptr_u = np.zeros(len(rows) + 1, dtype=np.int64)
+    ptr_u[1:] = np.cumsum([len(u) for u, _ in uniq])
+    Wu, bu, _ = _softmax_fit_np(
+        np.concatenate([u for u, _ in uniq]).astype(np.int32),
+        np.concatenate([c for _, c in uniq]), ptr_u, y, 3, 40, 0.01, 100,
+    )
+    assert np.abs(Wu - W1).max() < 1e-9 and np.abs(bu - b1).max() < 1e-9
     # stronger L2 shrinks the solution
-    W3, _, _ = _softmax_fit_np(flat, row_ptr, y, 3, 40, 1.0, 100)
+    W3, _, _ = _softmax_fit_np(flat, ones, row_ptr, y, 3, 40, 1.0, 100)
     assert np.linalg.norm(W3) < np.linalg.norm(W1)
     # zero-length rows, a trailing one included, are empty count rows:
     # the fit lands on a stationary point of the dense objective
@@ -761,7 +850,9 @@ def test_softmax_fit_np_contract():
     ptr_e = np.zeros(len(rows_e) + 1, dtype=np.int64)
     ptr_e[1:] = np.cumsum([len(r) for r in rows_e])
     flat_e = np.fromiter((f for r in rows_e for f in r), dtype=np.int32)
-    We, be, _ = _softmax_fit_np(flat_e, ptr_e, y_e, 3, 40, 0.01, 200)
+    We, be, _ = _softmax_fit_np(
+        flat_e, np.ones(len(flat_e)), ptr_e, y_e, 3, 40, 0.01, 200
+    )
     X = np.zeros((len(rows_e), 40))
     for i, r in enumerate(rows_e):
         np.add.at(X[i], r, 1.0)
