@@ -150,9 +150,9 @@ def _emit_words_fn(k: int, m: int):
     win is the REDUCE bound: one chunk's group is its ≤ words_per_chunk
     nonzero words — measured max group 1.05 M rows (17 MB) vs the old
     grouping's 34.8 M position rows (556 MB), which is what made dense
-    chunks OOM-prone before r10. Module-level so
-    tools/measure_bloom_build.py can drive the REAL emit path and read
-    its runtime shuffle metrics."""
+    chunks OOM-prone before r10. Module-level so a probe can drive the
+    REAL emit path and read its runtime shuffle metrics (the SCALE.md
+    r11 numbers were measured that way)."""
 
     def emit_words(batches):
         import numpy as np

@@ -239,9 +239,9 @@ def bpe_train(texts, n_merges: int) -> list:
 def pretoken_frequencies(df, text_col: str = "text"):
     """The distributed trainer's corpus pass as its own face: one JVM
     ``regexp_extract_all`` scan + map-side-combined count per distinct
-    pretoken → ``(_pt string, _f long)``. Shared with the scale probe
-    (tools/measure_bpe_train_scale.py) so the pipeline exists in one
-    place."""
+    pretoken → ``(_pt string, _f long)``. A face of its own so the
+    trainer and any scale probe (the SCALE.md distributed-BPE numbers)
+    share one pipeline."""
     from datamunging_spark.functions import BPE_ISH_PATTERN
 
     c = F.col(text_col)

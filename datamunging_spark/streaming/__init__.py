@@ -20,6 +20,17 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from datamunging_spark.sources.versioned import (
+    DeltaLog,
+    apply_delta,
+    base_cadence,
+    check_keep_last,
+    latest_table_version,
+    mark_committed,
+    vacuum_table_versions,
+    version_committed,
+)
+
 EVENTS_SCHEMA = StructType(
     [
         StructField("event_id", LongType()),
@@ -205,46 +216,32 @@ def incremental_dedup_stream(
     )
 
 
-# Marker + version-listing machinery is shared with the batch versioned-
-# table store (sources/versioned.py) — one durability contract for
-# streaming snapshots and batch table versions. Kept under the original
-# private names for this module's callers; the marker matters here
-# because write_snapshots writes content/ then signatures/ non-
-# atomically, and loading a torn version (content without signatures)
-# would silently drop the fuzzy-dedup history.
-from datamunging_spark.sources.versioned import (
-    latest_table_version as _latest_snapshot_version,
-    mark_committed as _mark_snapshot_committed,
-    version_committed as _snapshot_version_committed,
+# The span state's layout on the delta-log store: two append-only parts
+# under the snapshot pair's zero-padded v{batch_id} directories, covered
+# by the same commit marker as content/ and signatures/.
+_SPAN_LAYOUT = dict(
+    base=("span_fps", "span_texts"),
+    delta=("span_fps_delta", "span_texts_delta"),
+    replaced=None,
+    width=20,
 )
 
 
-def _delete_subdirs(spark: SparkSession, vpath: str, names) -> None:
-    """Remove leftover span-state directories from a torn write attempt
-    in the opposite base/delta mode — reconstruction must never mistake
-    a gutted base for real state."""
-    from datamunging_spark.sources.versioned import _fs
-
-    fs, jvm = _fs(spark, vpath)
-    for n in names:
-        p = jvm.org.apache.hadoop.fs.Path(f"{vpath}/{n}")
-        if fs.exists(p):
-            fs.delete(p, True)
-
-
-def _maybe_parquet(spark: SparkSession, path: str) -> DataFrame | None:
-    """Read a parquet directory, or None when it does not exist — how the
-    optional span-state directories load alongside a snapshot version.
-    Only the legitimately-missing-directory AnalysisException maps to
-    None (the ``read_snapshots`` contract, dedup.py): a corrupt footer /
-    permission / FS error must RAISE, not silently reset span history to
-    empty and stop cutting every previously-seen span."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        return spark.read.parquet(path)
-    except AnalysisException:
-        return None
+def _drain(stream: DataFrame, process, checkpoint_path, keep_last=None):
+    """Run ``process(batch_df, batch_id)`` on every micro-batch of
+    ``stream`` until the source is drained (``availableNow``), with the
+    query checkpointed at ``checkpoint_path`` when given. The face's
+    retention ``keep_last`` is checked before the query starts, so a bad
+    value fails before any version is written."""
+    check_keep_last(keep_last)
+    writer = stream.writeStream.foreachBatch(process).trigger(
+        availableNow=True
+    )
+    if checkpoint_path is not None:
+        writer = writer.option("checkpointLocation", checkpoint_path)
+    q = writer.start()
+    q.processAllAvailable()
+    q.stop()
 
 
 def streaming_ingest(
@@ -320,33 +317,21 @@ def streaming_ingest(
     ``v{batch_id}`` directory, covered by the same commit marker).
     Returns ``(snapshots, (span_fps, span_texts))`` when ``span=True``.
 
-    **Span state is a delta log (r9)**: each version persists only the
-    BATCH's increment (``span_fps_delta`` + ``span_texts_delta`` — the
-    operator's ``_return_fps`` fingerprint increment and the batch's
-    cleaned survivors), so the per-fold write is batch-sized, not
-    corpus-sized; the in-memory state between batches is the lazy union.
-    Loading reconstructs by unioning the newest FULL base (a version
-    carrying ``span_fps``/``span_texts``) with every later committed
-    version's deltas — old-layout stores, whose every version is a full
-    base, reload unchanged. A full base is compacted every
-    ``min(snapshots_keep_last, span_base_every)``-th fold (first fold
-    included): the retention cadence guarantees the retained tail-K
-    window always contains the base the deltas after it need — vacuum
-    can then delete older versions without orphaning state
-    (``snapshots_keep_last=1`` degenerates to the pre-r9
-    full-rewrite-per-version behavior) — while ``span_base_every``
-    (r11, default 64) bounds the reconstruction lineage INDEPENDENT of
-    retention: without it a retention-free store is a pure delta log
-    whose restart reload unions EVERY committed version — an
-    operational footgun for long-lived streams (r9 ADVICE). Set
-    ``span_base_every=None`` to opt back into the pure delta log,
-    accepting O(total folds) reload lineage; the base write itself
-    costs one full span-state rewrite per cadence window (amortized:
-    1/``span_base_every`` extra state writes). Base-vs-delta is decided
-    deterministically from the committed store, so torn-crash replays
-    converge (stale files from the other mode are deleted before the
-    write — changing ``snapshots_keep_last``/``span_base_every`` across
-    a restart cannot resurrect a torn base).
+    **Span state is a delta log (r9)**: the span state is two
+    append-only logs (``span_fps``, ``span_texts``) of the versioned
+    delta-log store (``sources/versioned.py``, "Versioned delta-log
+    store"). Most versions persist only the batch's increment
+    (``span_*_delta`` — the operator's ``_return_fps`` fingerprint
+    increment and the batch's cleaned survivors), so the per-fold write
+    is batch-sized, not corpus-sized; the in-memory state between
+    batches is the lazy union. A full base is compacted on the store's
+    cadence, ``min(snapshots_keep_last, span_base_every)`` (default
+    64): the head chain stays inside the retention window, and restart
+    reload unions at most one base plus the deltas after it. Set both
+    to None for a pure delta log (O(total folds) reload lineage).
+    Between folds the chain length is carried in memory, so a fold
+    without retention lists no versions. Old-layout stores, whose every
+    version is a full base, reload unchanged.
 
     **Retention** (``snapshots_keep_last``): every version holds the
     full exact/fuzzy snapshot pair (slim) plus the span delta; set
@@ -361,131 +346,86 @@ def streaming_ingest(
         read_snapshots,
         write_snapshots,
     )
+    from datamunging_spark.parallel import co_materialize
 
-    if span_base_every is not None and span_base_every < 1:
-        raise ValueError(
-            f"span_base_every must be >= 1 or None, got {span_base_every}"
-        )
-    start = snapshots if snapshots is not None else Snapshots(None, None)
+    cadence = base_cadence(
+        snapshots_keep_last, span_base_every, "span_base_every"
+    )
+    log = (
+        DeltaLog(snapshots_path, snapshots_keep_last, cadence, **_SPAN_LAYOUT)
+        if snapshots_path is not None
+        else None
+    )
     spark = docs_stream.sparkSession
+    # "span": the (fps, texts) state or None; "chain": the span log's
+    # head chain length, carried from the last read or write
     state = {
-        "snaps": start,
-        "span_fps": None,
-        "span_texts": None,
-        # batch increments stashed by _span_pass for the delta write
-        "span_fps_inc": None,
-        "span_texts_inc": None,
-        # committed versions folded since (and including) the last FULL
-        # span base — drives the deterministic base-compaction cadence
-        "since_base": 0,
+        "snaps": snapshots if snapshots is not None else Snapshots(None, None),
+        "span": None,
+        "chain": 0,
     }
 
-    def _load_span_state(sess, upto_v):
-        """Reconstruct the span state as of committed version
-        ``upto_v``: newest full base at or before it, plus every later
-        committed version's deltas, in version order. Old-layout stores
-        (every version a full base) reduce to 'read the latest'."""
-        from datamunging_spark.sources.versioned import (
-            list_table_versions,
-        )
+    def _load(sess, version):
+        state["snaps"] = read_snapshots(sess, log.vdir(version))
+        if span:
+            state["span"], state["chain"] = log.read(sess, version)
 
-        fps = texts = None
-        since = 0
-        for v in list_table_versions(sess, snapshots_path):
-            if v > upto_v:
-                break
-            vp = f"{snapshots_path}/v{v:020d}"
-            base = _maybe_parquet(sess, f"{vp}/span_fps")
-            if base is not None:
-                fps = base
-                texts = _maybe_parquet(sess, f"{vp}/span_texts")
-                since = 1
-                continue
-            d_fps = _maybe_parquet(sess, f"{vp}/span_fps_delta")
-            if d_fps is None:
-                continue  # pre-span or span-free version
-            d_texts = _maybe_parquet(sess, f"{vp}/span_texts_delta")
-            fps = d_fps if fps is None else fps.unionByName(d_fps)
-            texts = (
-                d_texts if texts is None else texts.unionByName(d_texts)
-            )
-            since += 1
-        state["span_fps"], state["span_texts"] = fps, texts
-        state["since_base"] = since
-
-    if snapshots_path is not None:
-        latest = _latest_snapshot_version(spark, snapshots_path)
+    if log is not None:
+        latest = latest_table_version(spark, snapshots_path)
         if latest is not None:
-            vpath = f"{snapshots_path}/v{latest:020d}"
-            start = read_snapshots(spark, vpath)
-            state["snaps"] = start
-            if span:
-                _load_span_state(spark, latest)
+            _load(spark, latest)
 
     def _span_pass(surv, bspark):
-        """Span-dedup the batch survivors against all prior micro-batches
-        and return the cleaned survivors; rolls the in-memory span state.
-        Bootstrap (no history yet) uses EMPTY history frames so the one
-        operator covers both cases (its empty-side behavior is pinned by
-        test_incremental_span_empty_sides)."""
+        """Span-dedup the batch survivors against all prior micro-batches;
+        returns the cleaned survivors and the batch's (fps, texts)
+        increment. Bootstrap (no history yet) uses EMPTY history frames
+        so the one operator covers both cases (its empty-side behavior is
+        pinned by test_incremental_span_empty_sides)."""
         from datamunging_spark.operators.spandedup import (
             incremental_span_dedup,
         )
 
-        kw = dict(span_kwargs or {})
-        hist_fps, hist_texts = state["span_fps"], state["span_texts"]
-        if hist_fps is None:
+        hist = state["span"]
+        if hist is None:
             id_field = surv.schema[id_col]
-            hist_fps = bspark.createDataFrame(
-                [],
-                StructType(
-                    [
-                        id_field,
-                        StructField("fp", LongType()),
-                        StructField("pos", IntegerType()),
-                    ]
+            hist = (
+                bspark.createDataFrame(
+                    [],
+                    StructType(
+                        [
+                            id_field,
+                            StructField("fp", LongType()),
+                            StructField("pos", IntegerType()),
+                        ]
+                    ),
+                ),
+                bspark.createDataFrame(
+                    [], StructType([id_field, surv.schema[text_col]])
                 ),
             )
-            hist_texts = bspark.createDataFrame(
-                [], StructType([id_field, surv.schema[text_col]])
-            )
         cleaned, fps_inc = incremental_span_dedup(
-            surv, hist_fps, hist_texts,
+            surv, *hist,
             text_col=text_col, id_col=id_col,
-            _return_fps=True, **kw,
+            _return_fps=True, **dict(span_kwargs or {}),
         )
         cleaned = cleaned.localCheckpoint()  # feeds sink + texts roll
         # materialize the fp increment once: it feeds the in-memory fold
         # AND the per-version delta write
         fps_inc = fps_inc.localCheckpoint()
-        texts_inc = cleaned.select(F.col(id_col), F.col(text_col))
-        state["span_fps_inc"], state["span_texts_inc"] = fps_inc, texts_inc
-        if state["span_fps"] is None:
-            new_fps, new_texts = fps_inc, texts_inc
-        else:
-            new_fps = state["span_fps"].unionByName(fps_inc)
-            new_texts = state["span_texts"].unionByName(texts_inc)
-        state["span_fps"] = new_fps
-        state["span_texts"] = new_texts
-        return cleaned
+        return cleaned, (fps_inc, cleaned.select(id_col, text_col))
 
     def _process(batch_df, batch_id):
-        if snapshots_path is not None:
-            vpath = f"{snapshots_path}/v{batch_id:020d}"
-            if _snapshot_version_committed(batch_df.sparkSession, vpath):
-                # replay of a batch whose state commit survived a crash
-                # (crash landed between the snapshot write and the
-                # streaming commit): state is already durable, and the
-                # survivor-sink append for this batch already happened —
-                # re-running would duplicate the sink AND self-overwrite
-                # the version this run's state was loaded from
-                # (overwrite deletes input files mid-scan). Full no-op.
-                state["snaps"] = read_snapshots(
-                    batch_df.sparkSession, vpath
-                )
-                if span:
-                    _load_span_state(batch_df.sparkSession, batch_id)
-                return
+        bspark = batch_df.sparkSession
+        if log is not None and version_committed(bspark, log.vdir(batch_id)):
+            # replay of a batch whose state commit survived a crash
+            # (crash landed between the snapshot write and the streaming
+            # commit): state is already durable, and the survivor-sink
+            # append for this batch already happened — re-running would
+            # duplicate the sink AND self-overwrite the version this
+            # run's state was loaded from (overwrite deletes input files
+            # mid-scan). Full no-op.
+            _load(bspark, batch_id)
+            return
         if not batch_df.head(1):
             return
         surv, snaps = ingest_batch(
@@ -497,96 +437,29 @@ def streaming_ingest(
             **ingest_kwargs,
         )
         if span:
-            surv = _span_pass(surv, batch_df.sparkSession)
+            surv, inc = _span_pass(surv, bspark)
         if survivors_path is not None:
             surv.write.mode("append").parquet(survivors_path)
-        if snapshots_path is not None:
-            vpath = f"{snapshots_path}/v{batch_id:020d}"
-            bspark = batch_df.sparkSession
-            write_snapshots(snaps, vpath)
+        if log is not None:
+            # the commit marker comes last: write_snapshots writes
+            # content/ then signatures/ non-atomically, and loading a
+            # torn version would silently drop the fuzzy-dedup history
+            vdir = log.vdir(batch_id)
+            write_snapshots(snaps, vdir)
             if span:
-                # mode("overwrite"), NOT the errorifexists default: a
-                # crash between these writes and the commit marker leaves
-                # a torn marker-less v{batch_id} on disk; the replayed
-                # batch (state reloaded from the PRIOR committed version,
-                # so never self-overwriting its own input) must converge,
-                # not throw PATH_ALREADY_EXISTS forever — the same
-                # replay-convergence contract as write_snapshots /
-                # write_table_version. Base-vs-delta is decided from
-                # since_base, itself reconstructed from the committed
-                # store — deterministic under replay; stale files of the
-                # OTHER mode (a torn attempt under a different
-                # snapshots_keep_last) are deleted so reconstruction can
-                # never pick up a gutted base.
-                cadence = min(
-                    (
-                        c
-                        for c in (snapshots_keep_last, span_base_every)
-                        if c is not None
-                    ),
-                    default=None,
+                # the store writes the span parts, then the commit
+                # marker (after content/ and signatures/), then vacuums
+                state["span"], state["chain"] = log.write(
+                    bspark, batch_id, state["chain"], state["span"], inc
                 )
-                make_base = cadence is not None and (
-                    state["since_base"] == 0
-                    or state["since_base"] + 1 >= cadence
-                )
-                from datamunging_spark.parallel import co_materialize
-
-                # fps/texts land in independent subdirs of the SAME
-                # uncommitted version dir — overlapped (guide §2.6);
-                # the commit marker below still follows BOTH writes, so
-                # the torn-write replay contract is unchanged
-                if make_base:
-                    _delete_subdirs(
-                        bspark, vpath,
-                        ("span_fps_delta", "span_texts_delta"),
+            else:
+                mark_committed(bspark, vdir)
+                if snapshots_keep_last is not None:
+                    vacuum_table_versions(
+                        bspark, snapshots_path, snapshots_keep_last
                     )
-                    co_materialize(
-                        lambda: state["span_fps"]
-                        .write.mode("overwrite")
-                        .parquet(f"{vpath}/span_fps"),
-                        lambda: state["span_texts"]
-                        .write.mode("overwrite")
-                        .parquet(f"{vpath}/span_texts"),
-                    )
-                else:
-                    _delete_subdirs(
-                        bspark, vpath, ("span_fps", "span_texts")
-                    )
-                    co_materialize(
-                        lambda: state["span_fps_inc"]
-                        .write.mode("overwrite")
-                        .parquet(f"{vpath}/span_fps_delta"),
-                        lambda: state["span_texts_inc"]
-                        .write.mode("overwrite")
-                        .parquet(f"{vpath}/span_texts_delta"),
-                    )
-            _mark_snapshot_committed(bspark, vpath)
-            state["snaps"] = read_snapshots(bspark, vpath)
-            if span:
-                if make_base:
-                    # full reload from the just-written base: plan depth
-                    # resets to one flat read
-                    _load_span_state(bspark, batch_id)
-                else:
-                    # delta fold: the in-memory union (prior disk-backed
-                    # state ∪ this batch's checkpointed increments) IS
-                    # the reconstruction — re-listing and re-probing
-                    # every committed version per fold would cost
-                    # O(total versions) each micro-batch (r9 review);
-                    # only the cadence counter advances
-                    state["since_base"] += 1
-            if snapshots_keep_last is not None:
-                from datamunging_spark.sources.versioned import (
-                    vacuum_table_versions,
-                )
-
-                vacuum_table_versions(
-                    bspark, snapshots_path, keep_last=snapshots_keep_last
-                )
+            state["snaps"] = read_snapshots(bspark, vdir)
         else:
-            from datamunging_spark.parallel import co_materialize
-
             # the per-batch state pins are independent materializations
             # — overlapped (guide §2.6) to cut the micro-batch's serial
             # job chain; pure localCheckpoints, no disk state machine
@@ -595,25 +468,16 @@ def streaming_ingest(
                 snaps.signatures.localCheckpoint,
             ]
             if span:
-                thunks += [
-                    state["span_fps"].localCheckpoint,
-                    state["span_texts"].localCheckpoint,
-                ]
+                state["span"] = apply_delta(state["span"], inc)
+                thunks += [f.localCheckpoint for f in state["span"]]
             done = co_materialize(*thunks)
             state["snaps"] = Snapshots(done[0], done[1])
             if span:
-                state["span_fps"], state["span_texts"] = done[2], done[3]
+                state["span"] = tuple(done[2:])
 
-    writer = docs_stream.writeStream.foreachBatch(_process).trigger(
-        availableNow=True
-    )
-    if checkpoint_path is not None:
-        writer = writer.option("checkpointLocation", checkpoint_path)
-    q = writer.start()
-    q.processAllAvailable()
-    q.stop()
+    _drain(docs_stream, _process, checkpoint_path, snapshots_keep_last)
     if span:
-        return state["snaps"], (state["span_fps"], state["span_texts"])
+        return state["snaps"], state["span"] or (None, None)
     return state["snaps"]
 
 
@@ -670,14 +534,13 @@ def streaming_phash_ingest(
     )
     from datamunging_spark.sources.versioned import (
         read_table_version,
-        vacuum_table_versions,
         write_table_version,
     )
 
     spark = media_stream.sparkSession
     start = hash_snapshot
     if snapshot_path is not None:
-        latest = _latest_snapshot_version(spark, snapshot_path)
+        latest = latest_table_version(spark, snapshot_path)
         if latest is not None:
             start = read_table_version(spark, snapshot_path, latest)
     state = {"snap": start}
@@ -685,7 +548,7 @@ def streaming_phash_ingest(
     def _process(batch_df: DataFrame, batch_id: int) -> None:
         if snapshot_path is not None:
             vpath = f"{snapshot_path}/v{int(batch_id) + 1}"
-            if _snapshot_version_committed(spark, vpath):
+            if version_committed(spark, vpath):
                 # replay of a batch whose snapshot version committed
                 # (crash landed between the snapshot write and the
                 # streaming commit): the state is already durable and
@@ -736,14 +599,7 @@ def streaming_phash_ingest(
             new_snap = new_snap.localCheckpoint()
         state["snap"] = new_snap
 
-    writer = media_stream.writeStream.foreachBatch(_process).trigger(
-        availableNow=True
-    )
-    if checkpoint_path is not None:
-        writer = writer.option("checkpointLocation", checkpoint_path)
-    q = writer.start()
-    q.processAllAvailable()
-    q.stop()
+    _drain(media_stream, _process, checkpoint_path, keep_last)
     return state["snap"]
 
 
@@ -802,9 +658,7 @@ def streaming_resolve(
     from datamunging_spark.operators.entity import incremental_resolve
     from datamunging_spark.sources.versioned import (
         batch_already_applied,
-        latest_table_version,
         read_table_version,
-        vacuum_table_versions,
         write_table_version,
     )
 
@@ -856,14 +710,7 @@ def streaming_resolve(
         else:
             state["hist"] = new_hist.localCheckpoint()
 
-    writer = records_stream.writeStream.foreachBatch(_process).trigger(
-        availableNow=True
-    )
-    if checkpoint_path is not None:
-        writer = writer.option("checkpointLocation", checkpoint_path)
-    q = writer.start()
-    q.processAllAvailable()
-    q.stop()
+    _drain(records_stream, _process, checkpoint_path, history_keep_last)
     return state["hist"]
 
 
@@ -901,7 +748,6 @@ def streaming_apply_changelog(
     """
     from datamunging_spark.sources.versioned import (
         batch_already_applied,
-        latest_table_version,
         roll_table_version,
     )
 
@@ -923,14 +769,7 @@ def streaming_apply_changelog(
             batch_id=batch_id,
         )
 
-    writer = changes_stream.writeStream.foreachBatch(_process).trigger(
-        availableNow=True
-    )
-    if checkpoint_path is not None:
-        writer = writer.option("checkpointLocation", checkpoint_path)
-    q = writer.start()
-    q.processAllAvailable()
-    q.stop()
+    _drain(changes_stream, _process, checkpoint_path)
     return latest_table_version(spark, table_path)
 
 
@@ -966,9 +805,7 @@ def _versioned_stream_fold(
     """
     from datamunging_spark.sources.versioned import (
         batch_already_applied,
-        latest_table_version,
         read_table_version,
-        vacuum_table_versions,
         write_table_version,
     )
 
@@ -997,14 +834,7 @@ def _versioned_stream_fold(
         )
         vacuum_table_versions(bspark, table_path, keep_last=keep_last)
 
-    writer = values_stream.writeStream.foreachBatch(_process).trigger(
-        availableNow=True
-    )
-    if checkpoint_path is not None:
-        writer = writer.option("checkpointLocation", checkpoint_path)
-    q = writer.start()
-    q.processAllAvailable()
-    q.stop()
+    _drain(values_stream, _process, checkpoint_path, keep_last)
     return latest_table_version(spark, table_path)
 
 
@@ -1155,19 +985,6 @@ def streaming_distinct_counts(
     )
 
 
-def _index_version_is_delta(spark: SparkSession, vpath: str) -> bool:
-    """A streaming-index version directory is a DELTA iff it carries a
-    ``postings_delta`` subdirectory; otherwise it is a full base (the
-    pre-r13 layout, where every version was a full base, classifies as
-    all-bases and reloads unchanged)."""
-    from datamunging_spark.sources.versioned import _fs
-
-    fs, jvm = _fs(spark, vpath)
-    return fs.exists(
-        jvm.org.apache.hadoop.fs.Path(f"{vpath}/postings_delta")
-    )
-
-
 def read_index_version(
     spark: SparkSession,
     table_path: str,
@@ -1175,67 +992,20 @@ def read_index_version(
     id_col: "str | list[str]" = "doc_id",
 ) -> DataFrame:
     """Reconstruct the postings table as of a committed version of a
-    :func:`streaming_index_ingest` store (default: latest): read the
-    newest FULL base at or before it, then fold each later committed
-    version's delta in order — anti-join its ``replaced_ids`` (batch-
-    sized, broadcast), union its ``postings_delta``. The fold replays
-    exactly :func:`~datamunging_spark.operators.retrieval.advance_index`
-    ``replace_ids=True``, so the reconstruction equals the full table
-    that a rewrite-per-version store would hold, with lineage bounded
-    by the base cadence (≤ ``min(keep_last, base_every)`` − 1 deltas).
-    Old-layout stores (every version a full base) reduce to 'read the
-    requested version'. Guaranteed readable: the HEAD (the cadence
-    keeps its base inside the retention window). A retained DELTA
-    older than the newest base may have lost its own base to vacuum —
-    such point-in-time reads raise FileNotFoundError with the
-    keep_last guidance rather than returning a partial index."""
-    from datamunging_spark.sources.versioned import list_table_versions
-
-    versions = list_table_versions(spark, table_path)
-    if version is None:
-        if not versions:
-            raise FileNotFoundError(
-                f"no committed versions under {table_path}"
-            )
-        version = versions[-1]
-    if version not in versions:
-        raise FileNotFoundError(
-            f"version v{version} not committed at {table_path}"
-        )
-    upto = [v for v in versions if v <= version]
-    base_v = None
-    for v in upto:
-        if not _index_version_is_delta(spark, f"{table_path}/v{v}"):
-            base_v = v
-    if base_v is None:
-        raise FileNotFoundError(
-            f"no full base at or before v{version} under {table_path} "
-            "— the base was vacuumed past the delta chain; raise "
-            "keep_last (the base cadence is min(keep_last, base_every))"
-        )
-    state = spark.read.parquet(f"{table_path}/v{base_v}")
-    cols = state.columns
-    for v in [v for v in upto if v > base_v]:
-        vp = f"{table_path}/v{v}"
-        replaced = spark.read.parquet(f"{vp}/replaced_ids")
-        delta = spark.read.parquet(f"{vp}/postings_delta")
-        if isinstance(id_col, str):
-            anti = state.join(
-                F.broadcast(replaced), id_col, "left_anti"
-            )
-        else:
-            # grouped stores replace on (group, id) — NULL is a real
-            # group, so the anti-join must be NULL-safe per key
-            r = replaced.select(
-                *[F.col(c).alias(f"_r_{c}") for c in id_col]
-            )
-            cond = None
-            for c in id_col:
-                eq = F.col(c).eqNullSafe(F.col(f"_r_{c}"))
-                cond = eq if cond is None else (cond & eq)
-            anti = state.join(F.broadcast(r), cond, "left_anti")
-        state = anti.select(*cols).unionByName(delta)
-    return state
+    :func:`streaming_index_ingest` store (default: latest) — the replay
+    of the versioned delta-log store (``sources/versioned.py``): the
+    newest full base at or before the version, then each later delta in
+    order (anti-join its ``replaced_ids``, NULL-safe per key column;
+    union its ``postings_delta``). The result equals the full table a
+    rewrite-per-version store would hold. Old-layout stores (every
+    version a full base) reduce to 'read the requested version'. The
+    head is always readable; a retained delta older than the newest base
+    may have lost its base to vacuum, and such a read raises
+    FileNotFoundError with the keep_last guidance rather than return a
+    partial index. ``id_col`` is kept for callers that name the store's
+    key: the replay keys on the columns each delta recorded in
+    ``replaced_ids`` (``[group_col, id_col]`` on grouped stores)."""
+    return DeltaLog(table_path).read(spark, version)[0][0]
 
 
 def streaming_index_ingest(
@@ -1257,35 +1027,23 @@ def streaming_index_ingest(
     of documents is signed with
     :func:`~datamunging_spark.operators.retrieval.inverted_index` (ONE
     batch-sized aggregate; history never rescanned) and rolled onto the
-    stored postings table with
+    stored postings table with the
     :func:`~datamunging_spark.operators.retrieval.advance_index`
-    ``replace_ids=True`` — so the searchable index is always one
+    ``replace_ids=True`` fold — so the searchable index is always one
     :func:`read_index_version` away, Lucene's segment-merge freshness
     model on the versioned store.
 
-    **The store is a delta log with base compaction (r13, the span-
-    family r9 shape)**: most folds persist only the BATCH's increment
-    (``postings_delta`` + ``replaced_ids`` under the version directory)
-    — a batch-sized write, so a month of micro-batches costs a month of
-    batch-sized deltas, not a month of full index rewrites. A FULL base
-    (the version directory as plain parquet, the pre-r13 layout — old
-    stores reload unchanged as all-bases) is compacted every
-    ``min(keep_last, base_every)``-th fold: the retention term
-    guarantees the HEAD's delta chain always has its base inside the
-    vacuumed tail-K window (``keep_last=2``, the default, alternates
-    base/delta — raise ``keep_last`` to amortize further), while
-    ``base_every`` (default 64) bounds the reconstruction lineage on
-    top of it. The retention term is NEVER optional —
-    ``base_every=None`` only removes the lineage bound; vacuum would
-    otherwise delete the only base out from under a pure delta chain
-    and brick the store. Base-vs-delta is decided from the COMMITTED
-    store alone and torn attempts are deleted whole before the write,
-    so crash replays converge on the same mode. Read the HEAD (or any
-    version whose base still survives retention — retained deltas
-    OLDER than the newest base lose their base to vacuum and raise;
-    the head chain is the guaranteed read) with
-    :func:`read_index_version`, which replays the delta chain
-    (broadcast anti-join + union per delta) onto the newest base.
+    **The store is a delta log (r13)** on the versioned delta-log store
+    (``sources/versioned.py``, "Versioned delta-log store"): most folds
+    persist only the batch's increment (``postings_delta`` +
+    ``replaced_ids`` under the version directory), so a month of
+    micro-batches costs a month of batch-sized deltas, not a month of
+    full index rewrites. A full base (the version directory as plain
+    parquet, the pre-r13 layout) is compacted on the store's cadence,
+    ``min(keep_last, base_every)``: ``keep_last=2``, the default,
+    alternates base/delta, and ``base_every`` (default 64) bounds the
+    replay lineage on top of the retention term, which is never
+    optional here. Read the head with :func:`read_index_version`.
 
     ``replace_ids=True`` is what makes the fold REPLAY-IDEMPOTENT (the
     streaming_distinct_counts algebra, ``skip_applied=False``): a
@@ -1367,22 +1125,17 @@ def streaming_index_ingest(
     from pyspark.sql import Window
 
     from datamunging_spark.operators.retrieval import (
-        advance_index,
         combine_index_stats,
         inverted_index,
         stats_from_postings,
     )
     from datamunging_spark.sources.versioned import (
-        latest_table_version,
         read_table_version,
-        vacuum_table_versions,
-        version_committed,
         write_table_version,
     )
 
     stats_path = f"{table_path}_stats"
     gb = [group_col] if group_col else []
-    rid = [group_col, id_col] if group_col else id_col
 
     def _resolve_batch(batch):
         if version_col is not None:
@@ -1441,13 +1194,12 @@ def streaming_index_ingest(
             .distinct()
         )
 
-    def _fold_stats(bspark, state, batch):
-        """Commit the next stats version BEFORE the scaffold commits
-        its postings version (same number — the postings store's
-        latest+1). Everything here is batch-sized or group-rows-sized
-        except the replaced-docs subtraction, a column-pruned (doc,
-        doc_len) semi-join pass over the history postings."""
-        next_v = (latest_table_version(bspark, table_path) or 0) + 1
+    def _fold_stats(bspark, state, batch, next_v):
+        """Commit stats version ``next_v`` BEFORE the postings store
+        commits the same version number. Everything here is batch-sized
+        or group-rows-sized except the replaced-docs subtraction, a
+        column-pruned (doc, doc_len) semi-join pass over the history
+        postings."""
         batch_stats = stats_from_postings(
             inverted_index(
                 batch, text_col, id_col, lowercase, group_col=group_col
@@ -1515,11 +1267,10 @@ def streaming_index_ingest(
             return
         bspark = batch_df.sparkSession
         latest = latest_table_version(bspark, table_path)
-        state = (
-            read_index_version(bspark, table_path, latest, rid)
-            if latest is not None
-            else None
+        parts, chain = (
+            log.read(bspark, latest) if latest is not None else (None, 0)
         )
+        state = parts[0] if parts is not None else None
         if state is not None:
             # the grouped face is schema-authoritative like positions/
             # field/pq_codes: a flag flip cannot silently degrade an
@@ -1555,97 +1306,33 @@ def streaming_index_ingest(
                     "writes"
                 )
         batch = _resolve_batch(batch_df)
-        if stats:
-            _fold_stats(bspark, state, batch)
         next_v = (latest or 0) + 1
-        vpath = f"{table_path}/v{next_v}"
-        # torn leftovers from a crashed attempt (possibly in the OTHER
-        # base/delta mode after a config change) must not pollute the
-        # rewrite — an uncommitted vpath is invisible, delete it whole
-        from datamunging_spark.sources.versioned import _fs
-
-        fs, jvm = _fs(bspark, vpath)
-        jp = jvm.org.apache.hadoop.fs.Path(vpath)
-        if fs.exists(jp):
-            fs.delete(jp, True)
-        # base-vs-delta decided from the COMMITTED store alone, so
-        # replays of the same batch converge on the same mode
-        committed = list_table_versions(bspark, table_path)
-        newest_base = None
-        for v in committed:
-            if not _index_version_is_delta(bspark, f"{table_path}/v{v}"):
-                newest_base = v
-        deltas_since = len(
-            [
-                v
-                for v in committed
-                if newest_base is None or v > newest_base
-            ]
-        )
-        # the RETENTION term is never optional: without it, vacuum
-        # deletes the only base out from under a pure delta chain and
-        # the store is permanently unreadable (the span-family cadence
-        # rule — min over the non-None bounds)
-        cadence = min(
-            c for c in (keep_last, base_every) if c is not None
-        )
-        write_base = (
-            state is None
-            or newest_base is None
-            or (cadence is not None and deltas_since + 1 >= cadence)
-        )
+        if stats:
+            _fold_stats(bspark, state, batch, next_v)
         # positionality: the flag decides the FIRST base; afterwards
-        # the stored schema is authoritative (advance_index detects it
-        # too, so a flag flip cannot degrade an existing store)
+        # the stored schema is authoritative, so a flag flip cannot
+        # degrade an existing store
         pos = (
             "positions" in state.columns if state is not None
             else positions
         )
-        if write_base:
-            folded = (
+        log.write(
+            bspark,
+            next_v,
+            chain,
+            parts,
+            (
                 inverted_index(
                     batch, text_col, id_col, lowercase, positions=pos,
                     group_col=group_col,
-                )
-                if state is None
-                else advance_index(
-                    state,
-                    batch,
-                    text_col=text_col,
-                    id_col=id_col,
-                    lowercase=lowercase,
-                    replace_ids=True,
-                    group_col=group_col,
-                )
-            )
-            write_table_version(folded, table_path, next_v)
-        else:
-            inverted_index(
-                batch, text_col, id_col, lowercase, positions=pos,
-                group_col=group_col,
-            ).write.mode("overwrite").parquet(f"{vpath}/postings_delta")
-            batch.select(*gb, F.col(id_col)).distinct().write.mode(
-                "overwrite"
-            ).parquet(f"{vpath}/replaced_ids")
-            _mark_snapshot_committed(bspark, vpath)
-        vacuum_table_versions(bspark, table_path, keep_last=keep_last)
-
-    if base_every is not None and base_every < 1:
-        raise ValueError(
-            f"base_every must be >= 1 or None, got {base_every}"
+                ),
+            ),
+            batch.select(*gb, F.col(id_col)).distinct(),
         )
-    from datamunging_spark.sources.versioned import list_table_versions
 
-    spark = docs_stream.sparkSession
-    writer = docs_stream.writeStream.foreachBatch(_process).trigger(
-        availableNow=True
-    )
-    if checkpoint_path is not None:
-        writer = writer.option("checkpointLocation", checkpoint_path)
-    q = writer.start()
-    q.processAllAvailable()
-    q.stop()
-    return latest_table_version(spark, table_path)
+    log = DeltaLog(table_path, keep_last, base_cadence(keep_last, base_every))
+    _drain(docs_stream, _process, checkpoint_path, keep_last)
+    return latest_table_version(docs_stream.sparkSession, table_path)
 
 
 def load_ivf_index(
@@ -1656,18 +1343,16 @@ def load_ivf_index(
     """Reassemble the :class:`~datamunging_spark.operators.similarity.
     IvfIndex` as of a committed version of a :func:`streaming_ivf_ingest`
     store (default: latest): the inverted lists reconstruct through
-    :func:`read_index_version` (same delta-log replay, id =
-    ``neighbor_id``), the frozen centroids + drift baseline through the
+    :func:`read_index_version` (same delta-log replay, keyed on
+    ``neighbor_id`` and, in a grouped store, the group), the frozen
+    centroids + drift baseline through the
     ``{table_path}_centers`` table (one bounded collect). Centroids are
     FROZEN for the store's lifetime, so any assigned version pairs with
     the one centers version."""
     from datamunging_spark.operators.similarity import (
         ivf_index_from_tables,
     )
-    from datamunging_spark.sources.versioned import (
-        latest_table_version,
-        read_table_version,
-    )
+    from datamunging_spark.sources.versioned import read_table_version
 
     cpath = f"{table_path}_centers"
     cv = latest_table_version(spark, cpath)
@@ -1676,17 +1361,9 @@ def load_ivf_index(
             f"no committed centers table under {cpath} — not a "
             "streaming_ivf_ingest store (or the first fold never ran)"
         )
-    centers_df = read_table_version(spark, cpath, cv)
-    # a grouped store replays its replace/delete folds on (group, id)
-    gcols = [
-        c
-        for c in centers_df.columns
-        if c not in ("cell", "center", "mean_fit_dist")
-    ]
-    rid = [gcols[0], "neighbor_id"] if gcols else "neighbor_id"
     return ivf_index_from_tables(
-        read_index_version(spark, table_path, version, rid),
-        centers_df,
+        read_index_version(spark, table_path, version),
+        read_table_version(spark, cpath, cv),
     )
 
 
@@ -1700,10 +1377,7 @@ def load_pq_codebook(spark: SparkSession, table_path: str):
     from datamunging_spark.operators.similarity import (
         pq_codebook_from_table,
     )
-    from datamunging_spark.sources.versioned import (
-        latest_table_version,
-        read_table_version,
-    )
+    from datamunging_spark.sources.versioned import read_table_version
 
     cbpath = f"{table_path}_codebook"
     cbv = latest_table_version(spark, cbpath)
@@ -1755,13 +1429,12 @@ def streaming_ivf_ingest(
     identity (replay-idempotent) and updated vectors supersede their
     old rows; a NULL-vector row is a DELETE.
 
-    **The store is the same delta-log with base compaction as
-    :func:`streaming_index_ingest`** (identical layout — deltas under
-    ``postings_delta``/``replaced_ids``, base cadence
-    ``min(keep_last, base_every)``, torn-attempt cleanup, committed-
-    store-only mode decisions), so each fold writes O(batch) vector
-    rows, not the accumulated corpus — at 100 TB of embeddings a full
-    rewrite per micro-batch would dominate everything. Read any
+    **The store is the same delta-log store as
+    :func:`streaming_index_ingest`** (``sources/versioned.py``,
+    "Versioned delta-log store"; identical layout and cadence
+    ``min(keep_last, base_every)``), so each fold writes O(batch)
+    vector rows, not the accumulated corpus — at 100 TB of embeddings a
+    full rewrite per micro-batch would dominate everything. Read any
     version back with :func:`load_ivf_index` and search it with
     ``ivf_search``.
 
@@ -1821,20 +1494,12 @@ def streaming_ivf_ingest(
         pq_codebook_table,
         pq_fit,
     )
+    from pyspark.sql import Window
+
     from datamunging_spark.sources.versioned import (
-        _fs,
-        latest_table_version,
-        list_table_versions,
         read_table_version,
-        vacuum_table_versions,
         write_table_version,
     )
-
-    if base_every is not None and base_every < 1:
-        raise ValueError(
-            f"base_every must be >= 1 or None, got {base_every}"
-        )
-    from pyspark.sql import Window
 
     cpath = f"{table_path}_centers"
     cbpath = f"{table_path}_codebook"
@@ -1862,19 +1527,26 @@ def streaming_ivf_ingest(
     # a numpy rebuild per fold otherwise)
     _cb_cache: dict = {}
 
-    def _load_cb(bspark):
+    def _load_cb(bspark, refit_from=None):
+        """``refit_from``: on the first list write (a crash landed
+        between the centers and list commits) a codebook that never
+        committed is refitted from the replayed batch — seeded, so it is
+        the identical codebook."""
         if "cb" not in _cb_cache:
             cbv = latest_table_version(bspark, cbpath)
-            if cbv is None:
+            if cbv is not None:
+                _cb_cache["cb"] = pq_codebook_from_table(
+                    read_table_version(bspark, cbpath, cbv)
+                )
+            elif refit_from is not None:
+                _cb_cache["cb"] = _fit_codebook(bspark, refit_from)
+            else:
                 raise ValueError(
                     "streaming_ivf_ingest: the store carries pq_codes "
                     f"but no codebook is committed under {cbpath} — "
                     "the codebook table was deleted; restore it or "
                     "rebuild the store"
                 )
-            _cb_cache["cb"] = pq_codebook_from_table(
-                read_table_version(bspark, cbpath, cbv)
-            )
         return _cb_cache["cb"]
 
     key_cols = ([group_col] if group_col else []) + [vec_id]
@@ -1989,16 +1661,11 @@ def streaming_ivf_ingest(
         batch_df = _resolve_batch(batch_df)
         cv = latest_table_version(bspark, cpath)
         mv = latest_table_version(bspark, table_path)
-        next_v = (mv or 0) + 1
-        vpath = f"{table_path}/v{next_v}"
-        # torn leftovers from a crashed attempt must not pollute the
-        # write — an uncommitted vpath is invisible, delete it whole
-        fs, jvm = _fs(bspark, vpath)
-        jp = jvm.org.apache.hadoop.fs.Path(vpath)
-        if fs.exists(jp):
-            fs.delete(jp, True)
+        replaced = batch_df.select(
+            *key_cols[:-1], F.col(vec_id).alias("neighbor_id")
+        ).distinct()
+        fit_src = batch_df.filter(F.col(vec_col).isNotNull())
         if cv is None:
-            fit_src = batch_df.filter(F.col(vec_col).isNotNull())
             if not fit_src.head(1):
                 # delete-only first batch: deletes against an empty
                 # store are no-ops and KMeans has nothing to fit on —
@@ -2017,54 +1684,27 @@ def streaming_ivf_ingest(
             write_table_version(ivf_centers_table(idx), cpath, 1)
             base = idx.assigned
             if codebook_m is not None:
-                cb = _fit_codebook(bspark, fit_src)
-                base = _with_codes(base, cb)
-            write_table_version(base, table_path, next_v)
-            vacuum_table_versions(
-                bspark, table_path, keep_last=keep_last
-            )
+                base = _with_codes(base, _fit_codebook(bspark, fit_src))
+            log.write(bspark, (mv or 0) + 1, 0, None, (base,), replaced)
             return
         centers = read_table_version(bspark, cpath, cv)
         _flag_check(centers)
-        if mv is None:
-            # crash landed between the centers commit and the first
-            # inverted-list write: re-sign this batch under the
-            # committed frozen centers and write the missing base
-            shell = ivf_index_from_tables(None, centers)
-            shell = _ensure_groups(shell, batch_df, cv)
-            first = _assign_rows(shell, batch_df)
-            if codebook_m is not None:
-                # seeded pq_fit on the SAME replayed batch refits the
-                # identical codebook, so a crash between the codebook
-                # and list commits converges either way
-                cbv = latest_table_version(bspark, cbpath)
-                cb = (
-                    pq_codebook_from_table(
-                        read_table_version(bspark, cbpath, cbv)
-                    )
-                    if cbv is not None
-                    else _fit_codebook(
-                        bspark,
-                        batch_df.filter(F.col(vec_col).isNotNull()),
-                    )
-                )
-                first = _with_codes(first, cb)
-            write_table_version(first, table_path, 1)
-            vacuum_table_versions(
-                bspark, table_path, keep_last=keep_last
-            )
-            return
-        state = read_index_version(
-            bspark,
-            table_path,
-            None,
-            [group_col, "neighbor_id"] if group_col else "neighbor_id",
+        # mv is None when a crash landed between the centers commit and
+        # the first list write: this batch is signed under the committed
+        # frozen centers onto an empty state
+        parts, chain = (
+            log.read(bspark, mv) if mv is not None else (None, 0)
         )
+        state = parts[0] if parts is not None else None
         # codes are schema-authoritative, like positionality in the
         # lexical loop: the store decides; a flag flip cannot retrofit
-        has_codes = "pq_codes" in state.columns
+        has_codes = (
+            "pq_codes" in state.columns
+            if state is not None
+            else codebook_m is not None
+        )
         if has_codes:
-            cb = _load_cb(bspark)
+            cb = _load_cb(bspark, fit_src if state is None else None)
         elif codebook_m is not None:
             raise ValueError(
                 "streaming_ivf_ingest: codebook_m given but the store "
@@ -2078,69 +1718,11 @@ def streaming_ivf_ingest(
         assigned = _assign_rows(idx, batch_df)
         if has_codes:
             assigned = _with_codes(assigned, cb)
-        replaced = batch_df.select(
-            *([group_col] if group_col else []),
-            F.col(vec_id).alias("neighbor_id"),
-        ).distinct()
-        # base-vs-delta decided from the COMMITTED store alone (the
-        # streaming_index_ingest cadence — retention term NON-optional,
-        # or vacuum deletes the only base under a pure delta chain)
-        committed = list_table_versions(bspark, table_path)
-        newest_base = None
-        for v in committed:
-            if not _index_version_is_delta(bspark, f"{table_path}/v{v}"):
-                newest_base = v
-        deltas_since = len(
-            [
-                v
-                for v in committed
-                if newest_base is None or v > newest_base
-            ]
-        )
-        cadence = min(
-            c for c in (keep_last, base_every) if c is not None
-        )
-        write_base = newest_base is None or (
-            cadence is not None and deltas_since + 1 >= cadence
-        )
-        if write_base:
-            if group_col is not None:
-                # (group, id) keys, NULL-safe — the grouped replay
-                # contract (read_index_version's list-key fold)
-                r = replaced.select(
-                    F.col(group_col).alias("_r_g"),
-                    F.col("neighbor_id").alias("_r_id"),
-                )
-                cond = F.col(group_col).eqNullSafe(
-                    F.col("_r_g")
-                ) & F.col("neighbor_id").eqNullSafe(F.col("_r_id"))
-                anti = state.join(F.broadcast(r), cond, "left_anti")
-            else:
-                anti = state.join(
-                    F.broadcast(replaced), "neighbor_id", "left_anti"
-                )
-            folded = anti.select(*state.columns).unionByName(assigned)
-            write_table_version(folded, table_path, next_v)
-        else:
-            assigned.write.mode("overwrite").parquet(
-                f"{vpath}/postings_delta"
-            )
-            replaced.write.mode("overwrite").parquet(
-                f"{vpath}/replaced_ids"
-            )
-            _mark_snapshot_committed(bspark, vpath)
-        vacuum_table_versions(bspark, table_path, keep_last=keep_last)
+        log.write(bspark, (mv or 0) + 1, chain, parts, (assigned,), replaced)
 
-    spark = vec_stream.sparkSession
-    writer = vec_stream.writeStream.foreachBatch(_process).trigger(
-        availableNow=True
-    )
-    if checkpoint_path is not None:
-        writer = writer.option("checkpointLocation", checkpoint_path)
-    q = writer.start()
-    q.processAllAvailable()
-    q.stop()
-    return latest_table_version(spark, table_path)
+    log = DeltaLog(table_path, keep_last, base_cadence(keep_last, base_every))
+    _drain(vec_stream, _process, checkpoint_path, keep_last)
+    return latest_table_version(vec_stream.sparkSession, table_path)
 
 
 def streaming_quantiles(

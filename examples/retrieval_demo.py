@@ -158,8 +158,10 @@ def main() -> None:
     v = streaming_index_ingest(
         stream, table, checkpoint_path=f"{workdir}/ckpt"
     )
-    # the store is a delta log: reconstruct via read_index_version and
-    # read the O(1) stats table that rode the fold — ANCHORED on the
+    # the store is the versioned delta-log store (sources/versioned.py):
+    # a full base every few folds, batch-sized deltas in between.
+    # Reconstruct via read_index_version (the store's replay) and read
+    # the O(1) stats table that rode the fold — ANCHORED on the
     # postings head (the stats store can run one version ahead in the
     # crash window, so never pair two unanchored 'latest' reads)
     live = read_index_version(spark, table, v)

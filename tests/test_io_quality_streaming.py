@@ -1456,20 +1456,28 @@ def test_streaming_ingest_span_state_is_delta_log(spark, tmp_path):
 
 
 def test_maybe_parquet_missing_is_none_corrupt_raises(spark, tmp_path):
-    """_maybe_parquet maps ONLY the missing-directory AnalysisException
-    to None (bootstrap); a directory with an unreadable file must raise
-    rather than silently reset span history to empty."""
-    from datamunging_spark.streaming import _maybe_parquet
+    """The span-state read maps ONLY missing span directories to None (a
+    span-free version: bootstrap); span directories with an unreadable
+    file must raise rather than silently reset span history to empty."""
+    from pathlib import Path
 
-    assert _maybe_parquet(spark, str(tmp_path / "nope")) is None
-    bad = tmp_path / "bad"
-    bad.mkdir()
-    (bad / "part-00000.parquet").write_bytes(b"this is not parquet")
+    from datamunging_spark.sources.versioned import DeltaLog, mark_committed
+    from datamunging_spark.streaming import _SPAN_LAYOUT
+
+    log = DeltaLog(str(tmp_path), **_SPAN_LAYOUT)
+    Path(log.vdir(0)).mkdir()
+    mark_committed(spark, log.vdir(0))
+    assert log.read(spark, 0)[0] is None
+    for part in _SPAN_LAYOUT["base"]:
+        bad = Path(log.vdir(1)) / part
+        bad.mkdir(parents=True)
+        (bad / "part-00000.parquet").write_bytes(b"this is not parquet")
+    mark_committed(spark, log.vdir(1))
     raised = False
     try:
-        df = _maybe_parquet(spark, str(bad))
+        df = log.read(spark, 1)[0]
         if df is not None:  # corruption may surface only at action time
-            df.collect()
+            df[0].collect()
     except Exception:
         raised = True
     # silently-None (or silently-readable) is exactly the regression
@@ -1484,8 +1492,10 @@ def test_streaming_ingest_span_base_cadence_without_retention(
     unbounded reload lineage — span_base_every compacts a full base on
     its own cadence (default 64; 3 here), so restart reconstruction
     unions at most one base + the deltas after it. With cadence 3 over
-    three folds: v0 base (first fold), v1 delta-only, v2 base again;
-    a fourth batch restarts from the v2 base + nothing and still cuts."""
+    three folds: v0 base (first fold), v1 and v2 deltas (a chain of
+    three versions); a fourth batch restarts from the v0 base + two
+    deltas, still cuts, and compacts v3 to a base (one more delta
+    would make the chain longer than 3)."""
     from datamunging_spark.streaming import streaming_ingest
 
     S = "cadence boilerplate sentence that repeats verbatim everywhere!!"
@@ -1526,9 +1536,9 @@ def test_streaming_ingest_span_base_cadence_without_retention(
     assert not (vdirs[0] / "span_fps_delta").exists()
     assert (vdirs[1] / "span_fps_delta").exists()  # mid-window: delta
     assert not (vdirs[1] / "span_fps").exists()
-    assert (vdirs[2] / "span_fps").exists()  # cadence hit: base again
-    assert not (vdirs[2] / "span_fps_delta").exists()
-    # restart reconstructs from the newest base alone and still cuts
+    assert (vdirs[2] / "span_fps_delta").exists()  # chain of 3: delta
+    assert not (vdirs[2] / "span_fps").exists()
+    # restart reconstructs from the base + deltas and still cuts
     spark.createDataFrame(
         [(30, "fourth doc late arrival. " * 3 + S)], ["doc_id", "text"]
     ).coalesce(1).write.parquet(str(src / "f3"))
@@ -1539,6 +1549,12 @@ def test_streaming_ingest_span_base_cadence_without_retention(
     )
     surv = {r.doc_id: r.text for r in spark.read.parquet(out).collect()}
     assert surv[1].endswith(S) and S not in surv[30]
+    vdirs = sorted(
+        p for p in (tmp_path / "c_snaps").iterdir() if p.name[0] == "v"
+    )
+    assert len(vdirs) == 4
+    assert (vdirs[3] / "span_fps").exists()  # cadence hit: base again
+    assert not (vdirs[3] / "span_fps_delta").exists()
     import pytest
 
     with pytest.raises(ValueError, match="span_base_every"):

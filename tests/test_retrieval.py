@@ -730,11 +730,11 @@ def test_streaming_index_delta_log_and_compaction(spark, tmp_path):
     replays the replace fold (including a delete-via-empty-text), and
     the versioned stats invariant holds throughout."""
     from datamunging_spark.sources.versioned import (
+        DeltaLog,
         list_table_versions,
         read_table_version,
     )
     from datamunging_spark.streaming import (
-        _index_version_is_delta,
         read_index_version,
         streaming_index_ingest,
     )
@@ -763,11 +763,7 @@ def test_streaming_index_delta_log_and_compaction(spark, tmp_path):
     )
     assert v == 5
     kinds = {
-        n: (
-            "delta"
-            if _index_version_is_delta(spark, f"{table}/v{n}")
-            else "base"
-        )
+        n: DeltaLog(table).kind(spark, n)
         for n in list_table_versions(spark, table)
     }
     assert kinds == {
@@ -1467,9 +1463,11 @@ def test_streaming_index_base_every_none_keeps_retention_bases(spark, tmp_path):
     term still compacts a base every keep_last-th fold, so vacuum can
     never delete the only base out from under the head (the r13
     review's data-loss finding)."""
-    from datamunging_spark.sources.versioned import list_table_versions
+    from datamunging_spark.sources.versioned import (
+        DeltaLog,
+        list_table_versions,
+    )
     from datamunging_spark.streaming import (
-        _index_version_is_delta,
         read_index_version,
         streaming_index_ingest,
     )
@@ -1495,8 +1493,7 @@ def test_streaming_index_base_every_none_keeps_retention_bases(spark, tmp_path):
     assert len(retained) == 2
     # the head is always readable: its base survives retention
     assert any(
-        not _index_version_is_delta(spark, f"{table}/v{n}")
-        for n in retained
+        DeltaLog(table).kind(spark, n) == "base" for n in retained
     )
     got = sorted(
         r.doc_id
